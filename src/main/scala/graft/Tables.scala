@@ -35,7 +35,18 @@ import org.apache.spark.sql.types._
   *
   * Scale note (100 TB posture): loaders return plain scans — no
   * caching, no repartition — so Catalyst can push filters/projections
-  * into the parquet reader of every query that composes them.
+  * into the parquet reader of every query that composes them. The one
+  * thing remembered across loads is each table's inferred parquet
+  * schema, since `spark.read.parquet` runs a one-task inference job on
+  * every call: [[read]] keeps one (fingerprint, schema) entry per
+  * path, and a load whose fingerprint matches passes the remembered
+  * schema to the reader, so no job runs. The fingerprint is the
+  * path's leaf files as sorted (path, length, modification time)
+  * triples plus the session's `spark.sql.parquet.*`,
+  * `spark.sql.legacy.parquet.*` and `spark.sql.timestampType` values;
+  * any rewrite of the table or flip of those confs infers again and
+  * replaces the entry. The kind checks and the timestamp normalization
+  * below run on every load, hit or miss.
   */
 object Tables {
   val DEC2: DecimalType = DecimalType(18, 2)
@@ -147,6 +158,43 @@ object Tables {
     "embeddings" -> Seq("vec_id" -> KInt, "embedding" -> KNumArr, "label" -> KInt),
   )
 
+  /** What a parquet schema inference depends on: the leaf files
+    * (path, length, modification time) and the inference confs. */
+  private type Fingerprint = (Seq[(String, Long, Long)], Seq[(String, String)])
+
+  private val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, (Fingerprint, StructType)]()
+
+  private def fingerprint(spark: SparkSession, path: String): Fingerprint = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted
+    val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.timestampType"
+    }.sorted
+    (files, confs)
+  }
+
+  /** `spark.read.parquet(path)` without the inference job when the
+    * path's fingerprint matches the memo entry. The fingerprint is
+    * taken BEFORE inferring: files replaced in between give an entry
+    * whose fingerprint no later listing can match, never a stale hit.
+    * A missing path is left to `spark.read.parquet`, which raises
+    * Spark's own error for it. */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val fp = try Some(fingerprint(spark, path))
+             catch { case _: java.io.FileNotFoundException => None }
+    fp.flatMap(f => Option(schemaMemo.get(path)).filter(_._1 == f)) match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        fp.foreach(f => schemaMemo.put(path, (f, df.schema)))
+        df
+    }
+  }
+
   private def read(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val expect = expectedCols(name)
     // nanosAsLong must be set BEFORE the scan is planned or a legacy
@@ -154,7 +202,7 @@ object Tables {
     // corpora and safe session-wide (see events scaladoc note).
     if (expect.exists(_._2 == KTs))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = readParquet(spark, s"$sfDir/$name.parquet")
     val problems = expect.flatMap { case (c, kind) =>
       df.schema.find(_.name == c) match {
         case None    => Some(s"$c: missing")

@@ -85,7 +85,8 @@ object PyBridge {
     SnapshotTable.create(spark, base, rows, keyCol, numBuckets)
 
   /** [[SnapshotTable.mergeInto]] (changes carry `keyCol`, an `op`
-    * column 'U'/'D', and the payload). Returns the new version. */
+    * column 'U'/'D', and the payload). Returns the new version. Any
+    * `op` other than 'U'/'D' throws and commits no version. */
   def snapshotMerge(spark: SparkSession, base: String, changes: DataFrame,
                     keyCol: String, numBuckets: Int): Int =
     SnapshotTable.mergeInto(spark, base, changes, keyCol, numBuckets)

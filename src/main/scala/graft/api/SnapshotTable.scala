@@ -1757,7 +1757,11 @@ object SnapshotTable {
     *
     * Copy-on-write: only buckets containing at least one change key
     * are read and rewritten; all other files are referenced
-    * unchanged in the new manifest. Returns the new version. */
+    * unchanged in the new manifest. Returns the new version.
+    *
+    * Contract: every row's `op` must be 'U' or 'D'. Any other value
+    * (null, 'I', 'u', ...) throws IllegalArgumentException and commits
+    * no version. */
   def mergeInto(spark: SparkSession, base: String, changes0: DataFrame,
                 keyCol0: String, numBuckets: Int,
                 protocol: CommitProtocol = CommitProtocol.LinkRename): Int = {

@@ -287,10 +287,16 @@ object GraphOps {
   private val derivedMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
+  /** Per memo key, the generation the last [[graphFamilyStage]] swap
+    * replaced: a reader may still hold it, so its checkpoint blocks are
+    * released one swap later, when it is two generations old. */
+  private val retired =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+
   private def memoized(spark: SparkSession, key: String)
                       (build: => DataFrame): DataFrame = {
-    derivedMemo.entrySet().removeIf(
-      e => e.getValue.sparkSession.sparkContext.isStopped)
+    Seq(derivedMemo, retired).foreach(_.entrySet().removeIf(
+      e => e.getValue.sparkSession.sparkContext.isStopped))
     val k = (spark, key)
     val hit = derivedMemo.get(k)
     if (hit != null) hit
@@ -357,15 +363,25 @@ object GraphOps {
       und.groupBy(col("x")).agg(count(lit(1)).as("d")).localCheckpoint()
     }
     val w = adamicAdarCandidates(e).localCheckpoint()
-    derivedMemo.put((spark, s"copurchase_edges:$sf"), e)
-    derivedMemo.put((spark, s"copurchase_deg:$sf"), d)
-    derivedMemo.put((spark, s"copurchase_wedges:$sf"), w)
+    swap(spark, s"copurchase_edges:$sf", e)
+    swap(spark, s"copurchase_deg:$sf", d)
+    swap(spark, s"copurchase_wedges:$sf", w)
     e.agg(count(lit(1)).as("n_edges"),
         sum(col("w")).as("support_sum"))
       .crossJoin(broadcast(d.agg(count(lit(1)).as("n_nodes"),
         sum(col("d")).as("degree_sum"))))
       .crossJoin(broadcast(w.agg(count(lit(1)).as("n_wedges"))))
   }
+
+  /** Installs `fresh` as the current generation of `key`, retires the
+    * one it replaces and releases the blocks of the one retired before
+    * (its checkpointed RDD; `Dataset.unpersist` would not reach them). */
+  private def swap(spark: SparkSession, key: String, fresh: DataFrame): Unit =
+    Option(derivedMemo.put((spark, key), fresh))
+      .flatMap(replaced => Option(retired.put((spark, key), replaced)))
+      .foreach(_.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      }.foreach(_.unpersist(blocking = false)))
 
   def graphAdamicAdar(spark: SparkSession, sf: String): DataFrame = {
     val e = edgesM(spark, sf)

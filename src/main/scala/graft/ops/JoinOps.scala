@@ -240,8 +240,16 @@ object JoinOps {
           .write.mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey")
           .option("path", s"$dir/orders_b").saveAsTable(s"graft_orders_b109_$run")
       }
-      try { Await.result(fl, Duration.Inf); Await.result(fo, Duration.Inf) }
-      finally pool.shutdown()
+      // observe BOTH writes before unwinding, so a failed write never
+      // leaves the other still writing into `dir`; then rethrow the
+      // first failure
+      try {
+        Seq(fl, fo).foreach(Await.ready(_, Duration.Inf))
+        Seq(fl, fo).foreach(_.value.get.get)
+      } finally {
+        pool.shutdown()
+        pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+      }
     }
     spark.table(s"graft_lineitem_b109_$run").hint("merge")
       .join(spark.table(s"graft_orders_b109_$run"),

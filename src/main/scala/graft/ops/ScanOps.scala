@@ -469,7 +469,8 @@ object ScanOps {
           java.nio.file.Files.write(p, graft.multimodal.BinaryDecode.syntheticPng(id))
         }
       }
-    val parsed = spark.read.format("binaryFile").load(s"$dir/*.png")
+    val parsed = spark.read.format("binaryFile")
+      .option("pathGlobFilter", "*.png").load(dir)
       .select(regexp_extract(col("path"), "doc_(\\d+)\\.png", 1)
                 .cast("long").as("doc_id"),
               col("content"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,16 +24,18 @@ class TablesSpec extends SparkSpec {
       (i, us, i % 3, s"type${i % 2}", i * 1.5, s"""{"k":$i}""")
     }
 
-  /** Write the sample as events.parquet under a fresh dir with `ts`
-    * encoded by `enc`, returning the dir usable as an sfDir. */
-  private def writeEvents(enc: String): String = {
+  /** Write the sample as events.parquet under `dir` (a fresh dir by
+    * default) with `ts` encoded by `enc`, returning the dir usable as
+    * an sfDir. */
+  private def writeEvents(enc: String,
+      dir: String = java.nio.file.Files.createTempDirectory("tables_spec_ev").toString): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(s"tables_spec_$enc").toString
     val base = sampleRows.toDF("event_id", "us", "user_id", "event_type", "value", "props")
     val ts = enc match {
       case "ns_long" => (col("us") * 1000L).as("ts")                       // legacy NANOS surfaced as ns-long
       case "us_ntz"  => timestamp_micros(col("us")).cast(TimestampNTZType).as("ts")
       case "us_utc"  => timestamp_micros(col("us")).as("ts")
+      case "string"  => col("us").cast("string").as("ts")                  // outside the KTs kind
     }
     base.select(col("event_id"), ts, col("user_id"), col("event_type"),
         col("value"), col("props"))
@@ -119,6 +122,12 @@ class TablesSpec extends SparkSpec {
     assert(e.getMessage.contains("r_name"), e.getMessage)
   }
 
+  test("loader contract: a missing table raises Spark's path error") {
+    val dir = java.nio.file.Files.createTempDirectory("tables_spec_none").toString
+    val e = intercept[org.apache.spark.sql.AnalysisException](Tables.region(spark, dir))
+    assert(e.getMessage.contains("region.parquet"), e.getMessage)
+  }
+
   test("graded corpus passes the kind contract for every table") {
     for (sf <- Seq(sf001, sf01)) {
       Seq(Tables.region(spark, sf), Tables.nation(spark, sf),
@@ -128,5 +137,103 @@ class TablesSpec extends SparkSpec {
         Tables.documents(spark, sf), Tables.embeddings(spark, sf))
         .foreach(df => assert(df.columns.nonEmpty))
     }
+  }
+
+  /** A small lineitem table under a fresh dir, returned as an sfDir. */
+  private def writeLineitem(): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tables_spec_li").toString
+    (1L to 20L).map(i => (i, i % 7, i % 3, 1, i * 1.0, i * 10.25, 0.05, 0.02, "N", "O",
+        1704067200000000L + i))
+      .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
+        "l_extendedprice", "l_discount", "l_tax", "l_returnflag", "l_linestatus", "us")
+      .withColumn("l_shipdate", timestamp_micros(col("us"))).drop("us")
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    dir
+  }
+
+  /** Runs `body` and counts the Spark jobs it launched on this thread:
+    * they carry a fresh local-property tag, and a tagged marker job run
+    * last proves the listener saw every earlier job (the listener bus
+    * delivers events in order). */
+  private def jobsLaunched[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("graft.test.tag")) match {
+          case Some(`tag`) => jobs.incrementAndGet(): Unit
+          case Some(t) if t == s"$tag:marker" => markerSeen.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.tag", tag)
+      val out = body
+      sc.setLocalProperty("graft.test.tag", s"$tag:marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job unseen")
+      (out, jobs.get)
+    } finally {
+      sc.setLocalProperty("graft.test.tag", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("schema memo: a repeat load of an unchanged table launches no Spark job") {
+    val dir = writeLineitem()
+    val (first, jobs1) = jobsLaunched(Tables.lineitem(spark, dir))
+    val (second, jobs2) = jobsLaunched(Tables.lineitem(spark, dir))
+    assert(jobs1 == 1, s"first load launched $jobs1 jobs")
+    assert(jobs2 == 0, s"repeat load launched $jobs2 jobs")
+    assert(first.schema == second.schema)
+    assert(first.collect().toSeq == second.collect().toSeq)
+  }
+
+  test("schema memo: a table overwritten in place is never read with its stale schema") {
+    val expected = sampleRows.map(r => (r._1, r._2)).sorted
+    val dir = writeEvents("us_utc")
+    assert(loaded(dir) == expected)
+    // a new ts encoding: the next load infers it and normalizes it again
+    writeEvents("ns_long", dir)
+    assert(loaded(dir) == expected)
+    // an out-of-kind type: the next load raises the drift error
+    writeEvents("string", dir)
+    val e = intercept[IllegalArgumentException](Tables.events(spark, dir))
+    assert(e.getMessage.contains("ts"), e.getMessage)
+  }
+
+  test("schema memo: flipping a parquet inference conf infers again") {
+    val dir = writeLineitem()
+    val key = "spark.sql.parquet.binaryAsString"
+    val before = spark.conf.getOption(key)
+    try {
+      Tables.lineitem(spark, dir)
+      assert(jobsLaunched(Tables.lineitem(spark, dir))._2 == 0)
+      spark.conf.set(key, (!spark.conf.get(key).toBoolean).toString)
+      assert(jobsLaunched(Tables.lineitem(spark, dir))._2 == 1)
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  test("schema memo: concurrent loads of one table agree") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val dir = writeLineitem()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val got = Await.result(Future.sequence((1 to 8).map(_ => Future {
+        val df = Tables.lineitem(spark, dir)
+        (df.schema, df.collect().toSeq)
+      })), 5.minutes)
+      val want = Tables.lineitem(spark, dir)
+      assert(got.forall(_ == ((want.schema, want.collect().toSeq))))
+    } finally pool.shutdown()
   }
 }
