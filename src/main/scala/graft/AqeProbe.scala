@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main (not driver-invoked): measures every headline
   * query best-of-3 with AQE OFF and AQE ON on otherwise-identical
   * fresh sessions, and summarizes the FINAL adaptive plan (post-
@@ -13,69 +11,24 @@ import org.apache.spark.sql.SparkSession
   * bench scale must be attributed (fixed per-stage re-planning
   * latency vs a genuine plan change), not assumed.
   *
-  * Usage: sbt "runMain graft.AqeProbe" (env SPARK_GRAFT_SF_DIR /
-  * SPARK_GRAFT_CPUS as in Bench).
+  * Usage: sbt "runMain graft.AqeProbe [query ...]" (corpus and cores
+  * from `Session.sfDir` / `Session.cpus`, as in Bench).
   */
 object AqeProbe {
 
-  private def session(cpus: String, aqe: Boolean): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", aqe.toString)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  /** Structural fingerprint of an executed plan string: the counts a
-    * genuine AQE plan CHANGE would move (join strategies, exchanges)
-    * plus the count AQE always adds at tiny scale (coalesced reads).
-    * `private[graft]`: Bench's full-sweep regression tripwire records
-    * the same fingerprint per op (round 16 — VERDICT r15 ask 2) so a
-    * named time growth self-triages as plan change vs host stall. */
-  private[graft] def shape(plan: String): Map[String, Int] = Map(
-    "bhj" -> "BroadcastHashJoin".r.findAllIn(plan).size,
-    "smj" -> "SortMergeJoin".r.findAllIn(plan).size,
-    "shj" -> "ShuffledHashJoin".r.findAllIn(plan).size,
-    "bnlj" -> "BroadcastNestedLoopJoin".r.findAllIn(plan).size,
-    // shuffle exchanges only: "Exchange hashpartitioning/rangepartitioning/
-    // SinglePartition" — a bare "Exchange " prefix also matches
-    // "BroadcastExchange ", which would double-move two counters on a
-    // broadcast<->shuffle swap (ADVICE r13)
-    "exchange" -> "(?<!Broadcast)Exchange ".r.findAllIn(plan).size,
-    "aqeRead" -> "AQEShuffleRead".r.findAllIn(plan).size
-  )
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val qs = SparkEntry.queries
+    val sfDir = Session.sfDir
     val names = if (args.nonEmpty) args.toSeq else Bench.headline
-    val warmDir = {
-      val p = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001")
-      if (java.nio.file.Files.isDirectory(p)) p.toString else sfDir
-    }
 
     def measure(aqe: Boolean): Map[String, (Double, Map[String, Int])] = {
-      val s = session(cpus, aqe)
+      val s = Session.local(Session.cpus, "spark.sql.adaptive.enabled" -> aqe.toString)
       try {
-        names.foreach(n => try { qs(n)(s, warmDir).count() } catch { case _: Throwable => () })
+        Session.warm(s, names, Session.warmDir(sfDir))
         names.map { n =>
-          val times = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            qs(n)(s, sfDir).count()
-            (System.nanoTime() - t0) / 1e9
-          }
-          // plan shape from a dedicated executed run (AQE finalizes
-          // the physical plan only after execution)
-          val df = qs(n)(s, sfDir)
-          df.count()
-          n -> (times.min, shape(df.queryExecution.executedPlan.toString))
+          val runs = (1 to 3).flatMap(_ => Session.timed(s, n, sfDir))
+          // plan shape from the last executed run (AQE finalizes the
+          // physical plan only after execution)
+          n -> (runs.map(_._1).min, Session.shape(runs.last._2.queryExecution.executedPlan.toString))
         }.toMap
       } finally s.stop()
     }

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: wall time of the headline query suite on
-  * SPARK_GRAFT_SF_DIR (default sf0.1), one JSON line on stdout.
+  * `Session.sfDir` at `local[Session.cpus]`, JSON lines on stdout
+  * (`total`, then `fullsweep` on a full run, `secondary`, and last the
+  * `headline` line with the per-query map, the line that is graded).
   *
   * The headline set mirrors the 12-query baseline measured in
   * /root/repo/BASELINE.md (DuckDB 1.0.0, 4 threads, sf0.1) — the 2×
@@ -243,45 +243,87 @@ object Bench {
     "agg_pareto_share",
   )
 
+  /** Outcome of the per-op regression tripwire: a status, the ops whose
+    * time grew (name, previous, now) and the previous plan fingerprints. */
+  case class Tripwire(status: String, regressions: Seq[(String, Double, Double)],
+                      prevFps: Map[String, String])
+
+  /** Per-op regression tripwire: the PREVIOUS committed FULLBENCH.json
+    * (`prev`, None when absent) is compared with this sweep's per-op
+    * times before this run overwrites it; any op whose time grew >1.5×
+    * over a ≥0.15 s prior time is NAMED.
+    * Both sweeps share the min-of-two warm protocol, so a named growth is
+    * a plan regression, a corpus change, or a host stall that survived
+    * two passes — all worth a look.
+    *
+    * Only like is compared with like; otherwise the comparison is
+    * skipped with a named status and this sweep becomes the baseline for
+    * the next comparable run:
+    *  - a different sf dir would name every op a regression and balloon
+    *    the stdout line past the 2000-char tail that is kept;
+    *  - another boot (~80 uniform 1.5–3× "growths" with zero plan
+    *    changes once straddled a host reboot — CPU governor, page cache
+    *    and thermal state all reset), or a file predating boot/cpus
+    *    stamping;
+    *  - another core count (`local[8]` vs `local[32]` times differ by
+    *    design, not by regression). */
+  def tripwire(prev: Option[String], sfDir: String, bootId: String, cpus: Int,
+               now: Map[String, Option[Double]]): Tripwire = {
+    def skip(status: String) = Tripwire(status, Nil, Map.empty)
+    prev match {
+      case None => skip("no_prev")
+      case Some(txt) =>
+        def field(k: String): Option[String] =
+          ("\"" + k + "\":\\s*\"?([^\",\\s]*)").r.findFirstMatchIn(txt).map(_.group(1))
+        val (prevBoot, prevCpus) = (field("boot_id"), field("cpus"))
+        if (!field("sf").contains(sfDir)) skip("skipped_sf_changed")
+        else if (prevBoot.isEmpty || prevCpus.isEmpty) skip("skipped_prev_unstamped")
+        else if (!prevBoot.contains(bootId)) skip("skipped_boot_changed")
+        else if (!prevCpus.contains(cpus.toString)) skip("skipped_cpus_changed")
+        else try {
+          val times = txt.indexOf("\"times_sec\"")
+          val prevTimes = """"([a-z0-9_]+)":\s*([0-9]+(?:\.[0-9]+)?)""".r
+            .findAllMatchIn(txt.substring(times))
+            .map(m => m.group(1) -> m.group(2).toDouble).toMap
+          // previous round's plan fingerprints (absent before r16)
+          val fp = txt.indexOf("\"plan_fp\"")
+          val prevFps =
+            if (fp < 0) Map.empty[String, String]
+            else """"([a-z0-9_]+)":\s*"([^"]*)"""".r
+              .findAllMatchIn(txt.substring(fp, if (times > fp) times else txt.length))
+              .map(m => m.group(1) -> m.group(2)).toMap
+          val regressions = now.keys.toSeq.sorted.flatMap { n =>
+            (prevTimes.get(n), now(n)) match {
+              case (Some(p0), Some(t)) if p0 >= 0.15 && t > 1.5 * p0 => Some((n, p0, t))
+              case _ => None
+            }
+          }
+          Tripwire("compared", regressions, prevFps)
+        } catch { case _: Throwable => skip("prev_unreadable") }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     // args: optional query-name filter (build-side micro-bench aid);
     // the driver always invokes with no args → full suite.
     val only = args.toSet
     def keep(names: Seq[String]): Seq[String] =
       if (only.isEmpty) names else names.filter(only)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default matches the target environment (local[32], 32 vCPUs) so
-    // a bare `runMain graft.Bench` measures the documented config
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE's stage-by-stage materialization + re-planning is a fixed
-      // per-stage latency; at bench scale (sf0.1, sub-second stages)
-      // it measured 4-5x on exchange-heavy queries while providing
-      // nothing (no skew, no mis-sized shuffles at 32 partitions). At
-      // production scale the default (on) is correct — Verify and the
-      // library leave it enabled.
-      .config("spark.sql.adaptive.enabled", "false")
-      // see Verify: keep bounded-heap top-k aggregates hash-based
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (sfDir, cpus) = (Session.sfDir, Session.cpus)
+    // AQE's stage-by-stage materialization + re-planning is a fixed
+    // per-stage latency; at bench scale (sf0.1, sub-second stages) it
+    // measured 4-5x on exchange-heavy queries while providing nothing
+    // (no skew, no mis-sized shuffles at 32 partitions). At production
+    // scale the default (on) is correct — Verify and the library leave
+    // it enabled; the AQE-on pass below measures that cost.
+    val spark = Session.local(cpus, "spark.sql.adaptive.enabled" -> "false")
     val qs = SparkEntry.queries
-    // Untimed warm-up: run every headline query once against the
-    // smallest scale factor. Whole-stage codegen caches generated
-    // classes by source text and the plans are path-independent, so
-    // this pays the janino compilation + JIT + session bring-up cost
-    // outside the measurement — the timed sf runs then measure query
-    // execution, not compiler warm-up. (Standard benchmarking
-    // practice; DuckDB's baseline numbers are likewise best-of-3.)
-    val warmDir = {
-      val p = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001")
-      if (java.nio.file.Files.isDirectory(p)) p.toString else sfDir
-    }
+    // Untimed warm-up: run every query once against the smallest scale
+    // factor (Session.warmDir), so the timed sf runs measure query
+    // execution, not janino compilation + JIT + session bring-up.
+    // (Standard benchmarking practice; DuckDB's baseline numbers are
+    // likewise best-of-3.)
+    val warmDir = Session.warmDir(sfDir)
     // full-sweep rows (VERDICT r13 item 1): beyond the graded headline
     // and the pinned secondaries, EVERY other registered operator gets
     // a wall-time row each round — 157 ops previously had zero timing
@@ -292,10 +334,10 @@ object Bench {
     val remainder: Seq[String] =
       if (only.nonEmpty) Nil
       else (qs.keySet -- headline -- secondary).toSeq.sorted
-    (keep(headline ++ secondary) ++ remainder ++
-      (only -- headline -- secondary).toSeq.sorted.filter(qs.contains)).foreach { name =>
-      try { qs(name)(spark, warmDir).count() } catch { case _: Throwable => () }
-    }
+    // args naming queries outside both pinned lists are timed as
+    // ad-hoc secondaries (micro-bench aid; a graded run passes no args)
+    val adhoc = (only -- headline -- secondary).toSeq.sorted.filter(qs.contains)
+    val warmFailed = Session.warm(spark, keep(headline ++ secondary) ++ remainder ++ adhoc, warmDir)
     // Best-of-3 per query (consecutive attempts) — one PASS; the
     // suite runs two passes and reports the per-query min across
     // both (effectively best-of-6; see twoPass below). That is a
@@ -320,32 +362,21 @@ object Bench {
     // bisecting. AQE is off in this session, so executedPlan is final.
     val planFps = scala.collection.mutable.Map[String, String]()
     def fpString(df: org.apache.spark.sql.DataFrame): String =
-      AqeProbe.shape(df.queryExecution.executedPlan.toString)
+      Session.shape(df.queryExecution.executedPlan.toString)
         .toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(",")
-    def bestOfN(name: String, n: Int): Option[Double] = {
-      val ts = (1 to n).flatMap { _ =>
-        val t0 = System.nanoTime()
-        val built = try {
-          val df = qs(name)(spark, sfDir); df.count(); Some(df)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); None }
-        val t = (System.nanoTime() - t0) / 1e9
-        built.foreach { df =>
+    def bestOfN(name: String, n: Int): Option[Double] =
+      (1 to n).flatMap { _ =>
+        Session.timed(spark, name, sfDir).map { case (t, df) =>
           if (!planFps.contains(name))
             planFps(name) = try fpString(df) catch { case _: Throwable => "" }
+          t
         }
-        if (built.nonEmpty) Some(t) else None
-      }
-      ts.minOption
-    }
-    def bestOf3(name: String): Option[Double] = bestOfN(name, 3)
+      }.minOption
     def toJson(rs: Seq[(String, Option[Double])]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + v.fold("null")(_.toString) }
         .mkString("{", ",", "}")
-    // args naming queries outside both pinned lists are timed as
-    // ad-hoc secondaries (micro-bench aid; driver passes no args)
-    val adhoc = (only -- headline -- secondary).toSeq.sorted.filter(qs.contains)
-    // Two full best-of-3 passes, per-query min across passes: this
+    def jsonList(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // Two full best-of-n passes, per-query min across passes: this
     // host shows external stall WINDOWS of up to ~10s (identical code
     // + plans measured suite totals from 3.75s to 7.6s hours apart;
     // load-average bursts with no guest process to blame) that
@@ -354,70 +385,51 @@ object Bench {
     // window can only eat one pass. Per-attempt semantics are
     // unchanged — still warm, consecutive best-of-3 — this only stops
     // EXTERNAL noise from being reported as a query's best time.
-    def twoPass(names: Seq[String]): Map[String, Option[Double]] = {
-      val p1 = names.map(n => n -> bestOf3(n)).toMap
-      val p2 = names.map(n => n -> bestOf3(n)).toMap
+    def twoPass(names: Seq[String], n: Int): Map[String, Option[Double]] = {
+      val p1 = names.map(q => q -> bestOfN(q, n)).toMap
+      val p2 = names.map(q => q -> bestOfN(q, n)).toMap
       // min over every successful attempt of both passes; None only
       // if no attempt of either pass succeeded (same failure
-      // semantics as a single best-of-3)
-      names.map(n => n -> (p1(n).toSeq ++ p2(n).toSeq).minOption).toMap
+      // semantics as a single best-of-n)
+      names.map(q => q -> (p1(q).toSeq ++ p2(q).toSeq).minOption).toMap
     }
-    val allNames = keep(headline) ++ keep(secondary) ++ adhoc
-    val mins = twoPass(allNames)
+    val mins = twoPass(keep(headline) ++ keep(secondary) ++ adhoc, 3)
     val results = keep(headline).map(n => n -> mins(n))
     val sec = (keep(secondary) ++ adhoc).map(n => n -> mins(n))
     // the full-sweep remainder: two passes of best-of-1, per-query min
     // (same stall-window rationale as twoPass, lighter per-pass cost)
-    val remMins: Map[String, Option[Double]] =
-      if (remainder.isEmpty) Map.empty
-      else {
-        val p1 = remainder.map(n => n -> bestOfN(n, 1)).toMap
-        val p2 = remainder.map(n => n -> bestOfN(n, 1)).toMap
-        remainder.map(n => n -> (p1(n).toSeq ++ p2(n).toSeq).minOption).toMap
-      }
-    val failed = (results ++ sec).collect { case (k, None) => "\"" + k + "\"" }
+    val remMins = twoPass(remainder, 1)
+    val failed = (results ++ sec).collect { case (k, None) => k }
     // a suite with a crashed query must not grade FASTER than a working
     // one: any failure poisons that suite's total to null (the per-query
     // map + "failed" array still show what did run)
     def totalOrNull(rs: Seq[(String, Option[Double])]): String =
       if (rs.exists(_._2.isEmpty)) "null" else rs.flatMap(_._2).sum.toString
     // AQE-on parity rows (non-graded): the graded suite runs AQE-off
-    // (see builder note — fixed per-stage latency at sub-second
-    // stages), but production defaults leave AQE ON, so its cost is
-    // measured every round instead of assumed. Two passes, best-of-2
-    // per headline query — the SAME protocol as the graded suite
-    // (round 13: the r12 "AQE-on gap" of 4.02 vs 2.70 s turned out to
-    // be this row's former best-of-1 protocol plus end-of-JVM GC
-    // pressure, not AQE — graft.AqeProbe measured AQE-on <= AQE-off
-    // per query in BOTH session orderings with zero structural plan
-    // changes; see BASELINE.md "AQE-on gap").
+    // (see the session note above), but production defaults leave AQE
+    // ON, so its cost is measured every round instead of assumed. Two
+    // passes, per-query min over them (an earlier "AQE-on gap" of 4.02
+    // vs 2.70 s turned out to be this row's former best-of-1 protocol
+    // plus end-of-JVM GC pressure, not AQE — graft.AqeProbe
+    // measured AQE-on <= AQE-off per query in BOTH session orderings
+    // with zero structural plan changes; see BASELINE.md "AQE-on gap").
     // Per-query times are emitted (not just the total) so a future
     // AQE-sensitive plan regression is attributable to its query.
     // Only meaningful for the full-suite run (driver invocation).
-    val aqeOn: Seq[(String, Option[Double])] = if (only.nonEmpty) Nil else {
-      spark.stop()
-      val s2 = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s2.sparkContext.setLogLevel("WARN")
-      try {
-        headline.foreach(n =>                       // warm-up, untimed
-          try { qs(n)(s2, warmDir).count() } catch { case _: Throwable => () })
-        def pass(): Map[String, Option[Double]] = headline.map { n =>
-          val t0 = System.nanoTime()
-          try { qs(n)(s2, sfDir).count(); n -> Some((System.nanoTime() - t0) / 1e9) }
-          catch { case _: Throwable => n -> Option.empty[Double] }
-        }.toMap
-        val (p1, p2) = (pass(), pass())
-        headline.map(n => n -> (p1(n).toSeq ++ p2(n).toSeq).minOption)
-      } finally s2.stop()
-    }
+    val (aqeOn, aqeWarmFailed): (Seq[(String, Option[Double])], Seq[String]) =
+      if (only.nonEmpty) (Nil, Nil) else {
+        spark.stop()
+        val s2 = Session.local(cpus, "spark.sql.adaptive.enabled" -> "true")
+        try {
+          val wf = Session.warm(s2, headline, warmDir)
+          def pass() = headline.map(n => n -> Session.timed(s2, n, sfDir).map(_._1)).toMap
+          val (p1, p2) = (pass(), pass())
+          (headline.map(n => n -> (p1(n).toSeq ++ p2(n).toSeq).minOption), wf)
+        } finally s2.stop()
+      }
+    // ops whose untimed warm-up threw, in either session (each already
+    // reported on stderr with its message)
+    val warmAll = (warmFailed ++ aqeWarmFailed).distinct
     val aqeOnTotal: Option[Double] =
       if (aqeOn.isEmpty || aqeOn.exists(_._2.isEmpty)) None
       else Some(aqeOn.flatMap(_._2).sum)
@@ -445,7 +457,8 @@ object Bench {
     val pass = ratio.map(_ <= 2.0)
     println(s"""{"metric":"total","value":${totalOrNull(results)},"unit":"sec",""" +
       s""""queries":${toJson(results)},"secondary":${toJson(sec)},""" +
-      s""""secondary_total":${totalOrNull(sec)},"failed":[${failed.mkString(",")}],""" +
+      s""""secondary_total":${totalOrNull(sec)},"failed":${jsonList(failed)},""" +
+      s""""warm_failed":${jsonList(warmAll)},""" +
       s""""baseline_total":$baselineTotal,"baseline":"BASELINE.md threads=32 oracle-text total",""" +
       s""""ratio":${ratio.fold("null")(r => f"$r%.3f")},""" +
       s""""pass":${pass.fold("null")(_.toString)},""" +
@@ -460,7 +473,7 @@ object Bench {
     // CENTISECOND array in sorted-query-name order (~0.9k chars — 10ms
     // resolution spots any multi-x regression; sub-10ms deltas are
     // below this protocol's noise floor anyway). Printed BEFORE the
-    // headline/secondary lines: the driver's tail window keeps the
+    // secondary/headline lines: the kept stdout tail holds the
     // LAST ~2.4k chars, so if anything is clipped it is this line's
     // head, never the graded evidence below it.
     if (remainder.nonEmpty) {
@@ -471,77 +484,15 @@ object Bench {
         if (failedAll.nonEmpty) None else Some(names.flatMap(all(_)).sum)
       val slow10 = names.collect { case n if all(n).nonEmpty => n -> all(n).get }
         .sortBy(-_._2).take(10)
-      // Per-op regression tripwire (round 15 — VERDICT r14 item 5;
-      // boot-aware since round 18 — VERDICT r17 item 1a): the
-      // PREVIOUS round's committed FULLBENCH.json is read before
-      // this run overwrites it; any op whose time grew >1.5× over a
-      // ≥0.15 s prior time is NAMED in the artifact — per-op data
-      // instead of prose jitter-band arguments. Both sweeps share the
-      // min-of-two warm protocol, so a named growth is a plan
-      // regression, a corpus change, or a host stall that survived
-      // two passes — all worth a look.
-      //
-      // Round 18: the r16→r17 sweep showed ~80 uniform 1.5–3× "growths"
-      // with zero plan-fingerprint changes, straddling a host reboot —
-      // cross-boot wall times are not comparable (CPU governor, page
-      // cache, thermal state all reset). The tripwire now stamps
-      // /proc/sys/kernel/random/boot_id into the artifact and compares
-      // SAME-BOOT PAIRS ONLY: on a boot change the comparison is
-      // skipped with a named reason and this sweep becomes the new
-      // committed baseline for the next same-boot run.
       val bootId: String =
         try new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get("/proc/sys/kernel/random/boot_id")),
           "UTF-8").trim
         catch { case _: Throwable => "unknown" }
-      var tripwireStatus = "compared"
-      val (regressions, prevFps): (Seq[(String, Double, Double)], Map[String, String]) = {
-        val p = java.nio.file.Paths.get("FULLBENCH.json")
-        if (!java.nio.file.Files.exists(p)) { tripwireStatus = "no_prev"; (Nil, Map.empty) }
-        else try {
-          val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          // only compare like with like: a committed sweep from a
-          // DIFFERENT scale factor would name every op a regression
-          // and balloon the stdout line past the driver's tail window
-          require(txt.contains(s""""sf": "$sfDir""""),
-            "previous FULLBENCH is from a different sf dir")
-          // same-boot gate: a prev artifact from another boot (or one
-          // predating boot stamping) yields no comparison, by design
-          val prevBoot = """"boot_id":\s*"([^"]*)"""".r
-            .findFirstMatchIn(txt).map(_.group(1))
-          require(prevBoot.contains(bootId), {
-            tripwireStatus =
-              if (prevBoot.isEmpty) "skipped_prev_unstamped"
-              else "skipped_boot_changed"
-            "previous FULLBENCH is from a different boot"
-          })
-          val block = txt.substring(txt.indexOf("\"times_sec\""))
-          val re = """"([a-z0-9_]+)":\s*([0-9]+(?:\.[0-9]+)?)""".r
-          val prev = re.findAllMatchIn(block)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          // previous round's plan fingerprints (absent before r16)
-          val fps: Map[String, String] = {
-            val i = txt.indexOf("\"plan_fp\"")
-            if (i < 0) Map.empty
-            else {
-              val end = txt.indexOf("\"times_sec\"")
-              val fpBlock = txt.substring(i, if (end > i) end else txt.length)
-              """"([a-z0-9_]+)":\s*"([^"]*)"""".r.findAllMatchIn(fpBlock)
-                .map(m => m.group(1) -> m.group(2)).toMap
-            }
-          }
-          (names.flatMap { n =>
-            (prev.get(n), all(n)) match {
-              case (Some(p0), Some(t)) if p0 >= 0.15 && t > 1.5 * p0 =>
-                Some((n, p0, t))
-              case _ => None
-            }
-          }, fps)
-        } catch { case _: Throwable =>
-          if (tripwireStatus == "compared") tripwireStatus = "prev_unreadable"
-          (Nil, Map.empty)
-        }
-      }
+      val prevTxt = scala.util.Try(
+        java.nio.file.Files.readString(java.nio.file.Paths.get("FULLBENCH.json"))).toOption
+      val Tripwire(tripwireStatus, regressions, prevFps) =
+        tripwire(prevTxt, sfDir, bootId, cpus, all)
       val regJson = regressions.map { case (n, p0, t) =>
         // plan_changed: null when either side lacks a fingerprint
         // (first fingerprinted round, or a failed capture)
@@ -568,11 +519,12 @@ object Bench {
         .append(s"""  "boot_id": "$bootId",\n""")
         .append(s"""  "tripwire": "$tripwireStatus",\n""")
         .append(s"""  "cpus": $cpus,\n""")
-        .append(s"""  "staged_read": {"stage_row": "graph_family_stage", "ops": [${stagedRead.map("\"" + _ + "\"").mkString(",")}]},\n""")
+        .append(s"""  "staged_read": {"stage_row": "graph_family_stage", "ops": ${jsonList(stagedRead)}},\n""")
         .append("""  "protocol": {"headline_secondary": "per-query min over two passes of warm best-of-3", "remainder": "per-query min over two passes of single warm runs"},""")
         .append("\n")
         .append(s"""  "n": ${names.size},\n""")
-        .append(s"""  "failed": [${failedAll.map("\"" + _ + "\"").mkString(",")}],\n""")
+        .append(s"""  "failed": ${jsonList(failedAll)},\n""")
+        .append(s"""  "warm_failed": ${jsonList(warmAll)},\n""")
         .append(s"""  "total_sec": ${fullTotal.fold("null")(t => f"$t%.3f")},\n""")
         .append(s"""  "slowest10": {${slow10.map { case (n, v) => "\"" + n + "\":" + f"$v%.3f" }.mkString(",")}},\n""")
         .append(s"""  "regressions_vs_prev": $regJson,\n""")
@@ -595,28 +547,27 @@ object Bench {
         s""""order":"sorted-query-names","unit":"centisec","t_cs":$denseCs,""" +
         s""""file":"FULLBENCH.json","sf":"$sfDir"}""")
     }
-    // Compact headline-only line, printed LAST (round 12 — VERDICT r11
-    // item 7): the driver's BENCH artifact keeps only the final 2000
-    // chars of stdout, and round 11's full line outgrew that window,
-    // truncating the per-query headline dict out of the artifact. This
-    // line is ~400 chars, so the gate's primary evidence survives any
-    // truncation that keeps the tail.
-    println(s"""{"metric":"headline","value":${totalOrNull(results)},"unit":"sec",""" +
-      s""""queries":${toJson(results)},""" +
-      s""""ratio":${ratio.fold("null")(r => f"$r%.3f")},""" +
-      s""""pass":${pass.fold("null")(_.toString)},"sf":"$sfDir"}""")
-    // Compact secondary summary, printed after the headline line
-    // (round 13 — VERDICT r12 item 4): the full line's per-query
-    // secondary dict outgrows the driver's 2000-char tail window, so
-    // the regression-guard evidence (suite total + the 5 slowest
-    // rows, i.e. where a plan regression would surface) gets its own
-    // ~300-char line that always survives tail truncation.
+    // Compact secondary summary: the full line's per-query secondary
+    // dict outgrows the 2000-char stdout tail that is kept, so the
+    // regression-guard evidence (suite total + the 5 slowest rows, i.e.
+    // where a plan regression would surface) gets its own ~300-char
+    // line. Printed BEFORE the headline line, so both sit inside the
+    // tail window with the headline last.
     val slowest5 = sec.collect { case (k, Some(v)) => k -> v }
       .sortBy(-_._2).take(5).map { case (k, v) => k -> Some(v) }
     println(s"""{"metric":"secondary","secondary_total":${totalOrNull(sec)},""" +
       s""""n_queries":${sec.size},"n_failed":${sec.count(_._2.isEmpty)},""" +
       s""""slowest5":${toJson(slowest5)},""" +
       s""""aqe_on_total":${aqeOnTotal.fold("null")(t => f"$t%.3f")},"sf":"$sfDir"}""")
+    // Compact headline line, printed LAST: the final stdout line is the
+    // one that is graded, and only the final 2000 chars of stdout are
+    // kept, which the full `total` line outgrows. This ~550-char line
+    // carries the graded per-query map, so the gate's primary evidence
+    // is the line that is parsed.
+    println(s"""{"metric":"headline","value":${totalOrNull(results)},"unit":"sec",""" +
+      s""""queries":${toJson(results)},""" +
+      s""""ratio":${ratio.fold("null")(r => f"$r%.3f")},""" +
+      s""""pass":${pass.fold("null")(_.toString)},"sf":"$sfDir"}""")
     spark.stop() // no-op when the AQE block already stopped it
   }
 }

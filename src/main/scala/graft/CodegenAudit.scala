@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Build-side audit: run every graded query at sf0.001 with
   * `spark.sql.codegen.fallback=false`, so any stage whose generated
@@ -17,15 +16,7 @@ import org.apache.spark.sql.SparkSession
   * non-codegen form (none today) would be documented here. */
 object CodegenAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(4, "spark.sql.codegen.fallback" -> "false")
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq
                 else SparkEntry.queries.keys.toSeq.sorted

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Data-path comparator (round 17 — VERDICT r16 item 2b).
   *
   * The headline 2x gate at sf0.1 is dominated by fixed local-mode
@@ -45,29 +43,16 @@ object DatapathBench {
   def main(args: Array[String]): Unit = {
     val lo = sys.env.getOrElse("SPARK_GRAFT_SF_LO", "/root/testdata/sf0.01")
     val hi = sys.env.getOrElse("SPARK_GRAFT_SF_HI", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false") // match Bench
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Session.cpus
+    val spark = Session.local(cpus, "spark.sql.adaptive.enabled" -> "false") // match Bench
     spark.sparkContext.setLogLevel("ERROR")
-    val qs = SparkEntry.queries
     def bestOf3(name: String, dir: String): Double =
-      (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        qs(name)(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+      (1 to 3).flatMap(_ => Session.timed(spark, name, dir)).map(_._1).min
     // one untimed warm pass (codegen + JIT) at the LO point per op,
     // then the two timed points back-to-back so the session state the
     // slope subtracts away is as identical as possible
     val rows = ops.map { name =>
-      qs(name)(spark, lo).count()
+      Session.warm(spark, Seq(name), lo)
       val tLo = bestOf3(name, lo)
       val tHi = bestOf3(name, hi)
       (name, tLo, tHi, tHi - tLo)

@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ListenerBusShim
 
 /** Optimization-round measurement aid (guide §1): time named operators
   * in isolation AND count the Spark jobs/stages each invocation
@@ -15,29 +15,19 @@ import org.apache.spark.sql.SparkSession
   *     GRAFT_PLAN_DIR=plans/r18 GRAFT_PLAN_SUFFIX=_before \
   *     sbt "runMain graft.OpProbe etl_snapshot_merge_timetravel ..."
   *
-  * Session config matches graft.Bench (AQE off, 32 shuffle
-  * partitions) so its times read on the same scale as FULLBENCH rows.
-  * One warm pass at sf0.001 (codegen/JIT), then best-of-3 timed runs;
-  * jobs/stages are counted on the LAST timed run (identical plans →
-  * identical counts on every warm run).
+  * Runs in Bench's session (AQE off, one shuffle partition per core),
+  * so its times read on the same scale as FULLBENCH rows. One warm pass
+  * at sf0.001 (codegen/JIT), then best-of-3 timed runs; jobs/stages are
+  * counted on the LAST timed run, after draining the listener bus.
   */
 object OpProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: OpProbe <op> [<op> ...]")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = Session.sfDir
+    val warmDir = Session.warmDir(sfDir)
     val planDir = sys.env.get("GRAFT_PLAN_DIR")
     val planSuffix = sys.env.getOrElse("GRAFT_PLAN_SUFFIX", "")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus, "spark.sql.adaptive.enabled" -> "false")
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -46,48 +36,30 @@ object OpProbe {
       override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
         { stages.incrementAndGet(); () }
     })
-    val qs = SparkEntry.queries
-    val warmDir = {
-      val p = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001")
-      if (java.nio.file.Files.isDirectory(p)) p.toString else sfDir
-    }
     args.foreach { name =>
-      require(qs.contains(name), s"unknown op $name")
-      try { qs(name)(spark, warmDir).count() }
-      catch { case e: Throwable =>
-        System.err.println(s"[probe] warm $name failed: ${e.getMessage}") }
-      val runs = (1 to 3).map { _ =>
+      require(SparkEntry.queries.contains(name), s"unknown op $name")
+      Session.warm(spark, Seq(name), warmDir)
+      val runs = (1 to 3).flatMap { _ =>
+        ListenerBusShim.drain(spark.sparkContext)
         jobs.set(0); stages.set(0)
-        val t0 = System.nanoTime()
-        val df = qs(name)(spark, sfDir)
-        df.count()
-        val t = (System.nanoTime() - t0) / 1e9
-        // the listener posts asynchronously; keep the old 200 ms floor
-        // (so a slow bus can never yield a 0-job read the stability
-        // poll would accept), THEN poll until the counters stop moving
-        // (two consecutive identical reads 100 ms apart) instead of
-        // trusting the fixed sleep alone, which under-reported on a
-        // loaded host (ADVICE r18) — waitUntilEmpty is private[spark]
-        Thread.sleep(200)
-        var prev = (-1, -1)
-        var cur = (jobs.get(), stages.get())
-        var spins = 20
-        while (prev != cur && spins > 0) {
-          Thread.sleep(100); prev = cur
-          cur = (jobs.get(), stages.get()); spins -= 1
+        Session.timed(spark, name, sfDir).map { case (t, df) =>
+          ListenerBusShim.drain(spark.sparkContext)
+          (t, jobs.get(), stages.get(), df)
         }
-        (t, jobs.get(), stages.get(), df)
       }
-      val best = runs.map(_._1).min
-      val (_, j, s, df) = runs.last
-      planDir.foreach { dir =>
-        val p = java.nio.file.Paths.get(dir)
-        java.nio.file.Files.createDirectories(p)
-        java.nio.file.Files.write(p.resolve(s"$name$planSuffix.txt"),
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
+      if (runs.isEmpty) println(s"""{"op":"$name","failed":true}""")
+      else {
+        val best = runs.map(_._1).min
+        val (_, j, s, df) = runs.last
+        planDir.foreach { dir =>
+          val p = java.nio.file.Paths.get(dir)
+          java.nio.file.Files.createDirectories(p)
+          java.nio.file.Files.write(p.resolve(s"$name$planSuffix.txt"),
+            df.queryExecution.explainString(
+              org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
+        }
+        println(f"""{"op":"$name","best_sec":$best%.3f,"jobs":$j,"stages":$s}""")
       }
-      println(f"""{"op":"$name","best_sec":$best%.3f,"jobs":$j,"stages":$s}""")
     }
     spark.stop()
   }

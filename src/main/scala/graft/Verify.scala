@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,7 @@ object Verify {
     // build-side iteration filter; the driver always passes exactly 2.
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); Spark 4 refuses it
-      // unless read as long (Tables.events converts ns→µs).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // keep bounded-heap top-k aggregates hash-based (default
-      // fallback is 128 groups — far too conservative for k-element
-      // buffers); session-builder-time so no query mutates shared conf
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus) // Spark's default AQE (on)
     new java.io.File(outDir).mkdirs()
     // 12 queries in flight (round 19 — raised from 4 in the
     // gate-budget pass): Spark schedules concurrent jobs from separate

@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType}
   *
   * Register with
   * `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * or `.withExtensions(new GraftExtensions)` on a session builder.
   * This is the supported way to ship Catalyst extensions in a
   * library: no fork of Spark, functions resolve through the normal
   * registry, and plans containing them survive every optimizer rule.
