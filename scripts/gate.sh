@@ -20,3 +20,13 @@ line = json.loads(sys.stdin.read())
 if line.get("metric") != "headline" or not line.get("queries"):
     sys.exit("gate: last Bench line is not a headline metric with a non-empty queries map")
 '
+# FULLBENCH's staged_read list is derived from graft.Staged's read
+# counts: one consumer of each stage family must be in it, or the
+# derivation is broken
+python3 -c '
+import json, sys
+ops = json.load(open("FULLBENCH.json"))["staged_read"]["ops"]
+missing = [o for o in ("graph_adamic_adar", "dedup_simhash_band") if o not in ops]
+if missing:
+    sys.exit("gate: FULLBENCH staged_read.ops lacks %s" % ", ".join(missing))
+'

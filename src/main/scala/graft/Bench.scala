@@ -364,9 +364,17 @@ object Bench {
     def fpString(df: org.apache.spark.sql.DataFrame): String =
       Session.shape(df.queryExecution.executedPlan.toString)
         .toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(",")
+    // Stages each op's timed calls read (the `Staged.reads` hits
+    // between before and after; ops run one at a time, so the
+    // difference belongs to that call) — FULLBENCH's `staged_read`.
+    val stagesRead = scala.collection.mutable.Map[String, Set[String]]()
     def bestOfN(name: String, n: Int): Option[Double] =
       (1 to n).flatMap { _ =>
-        Session.timed(spark, name, sfDir).map { case (t, df) =>
+        val before = Staged.reads
+        val run = Session.timed(spark, name, sfDir)
+        val read = Staged.reads.collect { case (s, c) if c > before.getOrElse(s, 0L) => s }
+        if (read.nonEmpty) stagesRead(name) = stagesRead.getOrElse(name, Set.empty) ++ read
+        run.map { case (t, df) =>
           if (!planFps.contains(name))
             planFps(name) = try fpString(df) catch { case _: Throwable => "" }
           t
@@ -504,22 +512,25 @@ object Bench {
         f""""$n": {"prev": $p0%.3f, "now": $t%.3f, "ratio": ${t / p0}%.2f, "plan_changed": $pc}"""
       }.mkString("{", ",", "}")
       // staged-read disclosure (round 19 — VERDICT r18 bench-integrity
-      // item): these ops read the graph-family memo staged by
-      // graph_family_stage (its own timed row carries the build cost —
-      // the op invalidates and rebuilds the memo every invocation), so
-      // their per-op rows measure the staged-read consumer, NOT the
-      // edge/degree/wedge lineage. Disclosed here so nobody mistakes a
-      // staged-read row for the full lineage cost.
-      val stagedRead = Seq("graph_adamic_adar", "graph_jaccard_links",
-        "graph_kcore", "graph_degree_assortativity",
-        "graph_clustering_coefficient")
+      // item): these ops' timed calls read a table staged in
+      // graft.Staged, so their per-op rows measure the staged-read
+      // consumer, NOT the lineage that built the stage. Each stage
+      // names the op whose own timed row carries its build cost
+      // (graph_family_stage rebuilds and swaps the co-purchase stages
+      // every invocation), or null when no op prices it yet.
+      val stagedBy = Map("copurchase_edges" -> "graph_family_stage",
+        "copurchase_deg" -> "graph_family_stage",
+        "copurchase_wedges" -> "graph_family_stage")
+      val stageRow = stagesRead.values.flatten.toSeq.distinct.sorted.map(st =>
+        "\"" + st + "\": " + stagedBy.get(st).fold("null")("\"" + _ + "\""))
+        .mkString("{", ", ", "}")
       val fileJson = new StringBuilder
       fileJson.append("{\n")
         .append(s"""  "sf": "$sfDir",\n""")
         .append(s"""  "boot_id": "$bootId",\n""")
         .append(s"""  "tripwire": "$tripwireStatus",\n""")
         .append(s"""  "cpus": $cpus,\n""")
-        .append(s"""  "staged_read": {"stage_row": "graph_family_stage", "ops": ${jsonList(stagedRead)}},\n""")
+        .append(s"""  "staged_read": {"stage_row": $stageRow, "ops": ${jsonList(stagesRead.keys.toSeq.sorted)}},\n""")
         .append("""  "protocol": {"headline_secondary": "per-query min over two passes of warm best-of-3", "remainder": "per-query min over two passes of single warm runs"},""")
         .append("\n")
         .append(s"""  "n": ${names.size},\n""")

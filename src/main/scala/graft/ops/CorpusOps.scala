@@ -126,7 +126,7 @@ object CorpusOps {
     * is a partial-able `max_by` over a struct, no window. Oracle:
     * recursive-CTE closure + the same quality SQL + row_number. */
   def dedupKeepBest(spark: SparkSession, sf: String): DataFrame = {
-    // shared prefix: the memoized pair/component tables (see
+    // shared prefix: the staged pair/component tables (see
     // LlmOps.simhashComponents) — #91 and this op cluster identically
     val comp = LlmOps.simhashComponents(spark, sf)
     val q = LlmOps.qualityPerDoc(spark, sf)

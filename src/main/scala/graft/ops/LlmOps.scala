@@ -100,61 +100,8 @@ object LlmOps {
   def textSimhash(spark: SparkSession, sf: String): DataFrame =
     simhashDf(spark, sf).orderBy(col("doc_id"))
 
-  // ---------------------------------------------------------------
-  // Shared simhash-pair / component prefix (round 15, VERDICT r14):
-  // #72 dedup_simhash_band, #91 dedup_cluster_components and #114
-  // dedup_keep_best all consume the SAME verified near-dup pair
-  // table — and the latter two the same connected components over it
-  // — but each op recomputed the full word-fan-out + band-join
-  // pipeline (~1.5 s/op at sf0.1). The derived tables are memoized
-  // per (live session, corpus dir) and localCheckpoint'd: pair and
-  // component counts are near-dup-scale (orders of magnitude below
-  // the corpus), so the pinned blocks are metadata-size. At 100 TB
-  // this is the standard "stage the verified-pairs table once, let
-  // every downstream dedup policy read it" pattern — a parquet stage
-  // in production, a session-scoped checkpoint here. Results are
-  // deterministic, so memoization cannot change any graded hash.
-  // ---------------------------------------------------------------
-
-  // Keyed on the SparkSession REFERENCE (SparkSession does not
-  // override equals/hashCode, so tuple equality is identity equality
-  // for the session slot) — ADVICE r15: identityHashCode(spark) is
-  // not unique, and a collision between two live sessions would have
-  // returned a checkpointed DataFrame bound to the wrong session. The
-  // strong ref does not leak: stopped sessions are evicted on every
-  // access (below), and the cached DataFrames reference their session
-  // anyway.
-  private val derivedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Memoize a derived table per (live session, key). NOT
-    * computeIfAbsent: a builder may itself consult the memo
-    * (simhashComponents builds FROM verifiedSimhashPairs), and nesting
-    * computeIfAbsent on one ConcurrentHashMap is forbidden by its
-    * contract — when both keys land in the same bin the JDK throws
-    * IllegalStateException("Recursive update") (caught by review,
-    * round 15). get-then-putIfAbsent tolerates re-entrancy; the race
-    * cost is at worst one redundant build whose loser's checkpoint is
-    * dropped unreferenced — correctness is unaffected (deterministic
-    * results). */
-  private def memoized(spark: SparkSession, key: String)
-                      (build: => DataFrame): DataFrame = {
-    // drop entries of stopped sessions — their cached blocks died with
-    // the context, so a long-lived JVM cannot accumulate stale handles
-    derivedMemo.entrySet().removeIf(
-      e => e.getValue.sparkSession.sparkContext.isStopped)
-    val k = (spark, key)
-    val hit = derivedMemo.get(k)
-    if (hit != null) hit
-    else {
-      val built = build.localCheckpoint()
-      val prev = derivedMemo.putIfAbsent(k, built)
-      if (prev != null) prev else built
-    }
-  }
-
-  /** Unmemoized pair builder — ScaleStressSpec measures THIS (the
-    * memoized surface would make the gated 1×/10× wall-clock ratio
+  /** Unstaged pair builder — ScaleStressSpec measures THIS (the
+    * staged surface would make the gated 1×/10× wall-clock ratio
     * vacuous after the first run). */
   private[graft] def buildVerifiedSimhashPairs(spark: SparkSession, sf: String): DataFrame = {
     val sh = simhashDf(spark, sf)
@@ -175,17 +122,21 @@ object LlmOps {
   }
 
   /** Exact-verified simhash near-dup pairs (d1 < d2, hamming ≤ 3) —
-    * the shared prefix of #72/#91/#114, computed once per (session,
-    * corpus). Band-LSH candidates (4 × 16-bit bands, pigeonhole-
-    * complete for hamming ≤ 3) verified by exact `bit_count`. */
+    * the shared prefix of #72/#91/#114, staged once per (session,
+    * corpus) in [[graft.Staged]] (round 15, VERDICT r14): each of the
+    * three ops recomputed the full word-fan-out + band-join pipeline
+    * (~1.5 s/op at sf0.1), and the pair table is near-dup-scale, orders
+    * of magnitude below the corpus. Band-LSH candidates (4 × 16-bit
+    * bands, pigeonhole-complete for hamming ≤ 3) verified by exact
+    * `bit_count`. */
   private[graft] def verifiedSimhashPairs(spark: SparkSession, sf: String): DataFrame =
-    memoized(spark, s"simhash_pairs|$sf")(buildVerifiedSimhashPairs(spark, sf))
+    graft.Staged(spark, "simhash_pairs", sf)(buildVerifiedSimhashPairs(spark, sf))
 
   /** Connected components over [[verifiedSimhashPairs]] — the shared
-    * (node, component) table #91 and #114 both cluster on, computed
+    * (node, component) table #91 and #114 both cluster on, staged
     * once per (session, corpus). */
   private[graft] def simhashComponents(spark: SparkSession, sf: String): DataFrame =
-    memoized(spark, s"simhash_cc|$sf") {
+    graft.Staged(spark, "simhash_cc", sf) {
       graft.api.Transforms.connectedComponents(
         verifiedSimhashPairs(spark, sf).select(col("d1"), col("d2")),
         maxIters = 64)
@@ -328,7 +279,7 @@ object LlmOps {
     * counts are Σ over per-doc counts, and the classifier needs
     * exactly its distinct (doc, gram) rows, so the old separate
     * `distinct()` pass and second explode scan are gone; round 16
-    * memoized that prefix per session×corpus — see [[perDocGramMemo]]
+    * staged that prefix per session×corpus — see [[perDocGramMemo]]
     * — so repeat invocations skip the fan-out entirely). The learned
     * profile is ≤ 20·|langs| rows and rides a BROADCAST into the
     * classification join; the per-doc argmax is a partial-able
@@ -357,9 +308,9 @@ object LlmOps {
       .orderBy(col("true_lang"), col("pred_lang"))
   }
 
-  /** Unmemoized per-doc trigram-count builder — the gram-scale shared
+  /** Unstaged per-doc trigram-count builder — the gram-scale shared
     * prefix of #75 (one explode over every document's characters + one
-    * gram-keyed shuffle). ScaleStressSpec measures THIS: the memoized
+    * gram-keyed shuffle). ScaleStressSpec measures THIS: the staged
     * surface would make the gated 1×/10× wall-clock ratio a checkpoint
     * re-read (the r15 simhash precedent). */
   private[graft] def buildPerDocGram(spark: SparkSession, sf: String): DataFrame =
@@ -370,18 +321,14 @@ object LlmOps {
       .groupBy(col("doc_id"), col("lang"), col("g"))
       .agg(count(lit(1)).as("c"))
 
-  /** Per-doc trigram counts, memoized per (live session, corpus dir)
-    * — round 16 (VERDICT r15 ask 3): #75 recomputed the full trigram
-    * fan-out every invocation (~3.7 s at sf0.1, the slowest stable op
-    * in the sweep) even though the derived table is deterministic.
-    * Same posture as the simhash pair memo: a parquet feature stage
-    * in a 100 TB production pipeline, a session-scoped localCheckpoint
-    * here. The pinned block is per-doc-distinct-gram scale (bounded by
-    * corpus character volume; ~tens of MB at sf0.1) and is evicted
-    * with the session like every derivedMemo entry. Deterministic, so
-    * no graded hash can change. */
+  /** Per-doc trigram counts, staged per (live session, corpus dir) in
+    * [[graft.Staged]] — round 16 (VERDICT r15 ask 3): #75 recomputed
+    * the full trigram fan-out every invocation (~3.7 s at sf0.1, the
+    * slowest stable op in the sweep) even though the derived table is
+    * deterministic. The pinned block is per-doc-distinct-gram scale
+    * (bounded by corpus character volume; ~tens of MB at sf0.1). */
   private def perDocGramMemo(spark: SparkSession, sf: String): DataFrame =
-    memoized(spark, s"perdoc_gram|$sf")(buildPerDocGram(spark, sf))
+    graft.Staged(spark, "perdoc_gram", sf)(buildPerDocGram(spark, sf))
 
   /** (doc_id, quality) projection of #76's score — shared with #114
     * dedup_keep_best (CorpusOps), which ranks cluster members by it.
