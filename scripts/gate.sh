@@ -3,6 +3,16 @@
 # Mirrors everything the driver grades; run before any milestone commit.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+# graded ops bind graft.api instead of copying it: the bounded-heap
+# top-k, the vector helpers, the seed sampler and the shingler each
+# have one definition (Transforms / VectorExprs)
+copies=$(grep -rnE '\bTopKAgg\b|def (dotF|l2normF|hashSeeds|shingles)\b' \
+  src/main/scala/graft/ops src/main/scala/graft/streaming || true)
+if [ -n "$copies" ]; then
+  printf '%s\n' "$copies"
+  echo "gate: ops/streaming copy graft.api helpers (call Transforms instead)" >&2
+  exit 1
+fi
 sbt -batch compile test
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} \
   sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_out"

@@ -155,7 +155,7 @@ object Plans {
     sb.append("past rounds' lists went stale): its build side must be a\n")
     sb.append("BROADCAST, metadata-scale table, one of exactly three idioms —\n")
     sb.append("(a) the ANN/centroid scored-scan (fixed query set or ~sqrt(n)\n")
-    sb.append("centroid list scored against the corpus, bounded-heap TopKAgg\n")
+    sb.append("centroid list scored against the corpus, bounded-heap top-k\n")
     sb.append("consuming the scores: `sim_knn_topk`, `sim_ann_ivf`,\n")
     sb.append("`dedup_semantic_cluster`, `sim_maxsim_multivec`, and\n")
     sb.append("`sim_hybrid_rrf`'s dense arm — brute-force at test scale, the\n")

@@ -3,6 +3,8 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.TopKAgg
+import org.apache.spark.sql.graft.VectorExprs.{vecDot, vecNorm}
 
 /** graft's reusable, corpus-independent transformation API — the
   * "reusable Spark transformation functions over DataFrames" the
@@ -512,84 +514,92 @@ object Transforms {
 
   // --------------------------------------------------- vectors / ANN
 
-  /** Generic double dot product over two array columns of any numeric
-    * element type (float vectors vs double centroids). */
-  private def dotD(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-              lit(0.0), (acc, x) => acc + x)
+  /** The `k` rows of `df` with the smallest `md5(id ‖ tag)` (ties to
+    * the smaller id), plus `sid` = 0..k-1 in that order — the
+    * deterministic hash-sample every trained vector artifact starts
+    * from (IVF centroids, PQ codebooks, query panels; distinct tags
+    * decorrelate the samples). A TakeOrdered over the input, then a
+    * window over the k sampled rows only (constant-partition
+    * non-foldable key — see [[chunkByRange]]'s wOff note). */
+  def hashSeeds(df: DataFrame, id: Column, k: Int, tag: String = ""): DataFrame = {
+    val w = Window.partitionBy(pmod(length(col("__seed_h")), lit(1)))
+      .orderBy(col("__seed_h"), id)
+    df.withColumn("__seed_h", md5(concat(id.cast("string"), lit(tag))))
+      .orderBy(col("__seed_h"), id).limit(k)
+      .withColumn("sid", row_number().over(w).cast("long") - 1)
+      .drop("__seed_h")
+  }
 
-  private def cosD(a: Column, b: Column): Column =
-    dotD(a, b) / (sqrt(dotD(a, a)) * sqrt(dotD(b, b)))
-
-  /** k-means-lite IVF centroids: seed with a deterministic hash-sample
-    * (the k vectors with smallest md5(id)), then `iters` Lloyd
-    * iterations — assign via [[ivfAssign]], recompute via the
-    * VectorMean UDAF. Each iteration is one broadcast join + one keyed
-    * aggregate over the vectors; nothing collects to the driver.
+  /** k-means-lite IVF centroids: seed with [[hashSeeds]] (the k
+    * vectors with smallest md5(id)), then `iters` Lloyd iterations —
+    * assign via [[ivfAssign]], recompute via the VectorMean UDAF, means
+    * cast to float so every iteration scores with the same codegen'd
+    * float arithmetic. Each iteration is one broadcast join + one
+    * keyed aggregate over the vectors; nothing collects to the driver.
     * Bucket count scales with the caller's `k` (independent of any
     * data labels); empty clusters drop out, so the result may have
     * fewer than k rows. Output: (__ivf_c: long, __ivf_cv:
-    * array<double>). */
+    * array<float>). */
   def ivfCentroids(vectors: DataFrame, id: Column, vec: Column,
                    k: Int, iters: Int = 2): DataFrame = {
     require(k >= 1 && iters >= 0, s"ivfCentroids: k=$k iters=$iters")
     val v = vectors.select(id.as("__ivf_id"), vec.as("__ivf_v"))
-    // k seed rows: constant-partition window over metadata-scale input
-    // (non-foldable key — see chunkByRange's wOff note)
-    val wSeed = Window.partitionBy(pmod(length(col("__ivf_h")), lit(1)))
-      .orderBy(col("__ivf_h"))
-    val seeds = v.withColumn("__ivf_h", md5(col("__ivf_id").cast("string")))
-      .orderBy(col("__ivf_h")).limit(k)
-      .withColumn("__ivf_c", row_number().over(wSeed).cast("long") - 1)
-      .select(col("__ivf_c"),
-              transform(col("__ivf_v"), x => x.cast("double")).as("__ivf_cv"))
+    val seeds = hashSeeds(v, col("__ivf_id"), k)
+      .select(col("sid").as("__ivf_c"), col("__ivf_v").as("__ivf_cv"))
     val vecMean = udaf(graft.functions.VectorMean)
     (0 until iters).foldLeft(seeds) { (cents, _) =>
       ivfAssign(v, col("__ivf_id"), col("__ivf_v"), cents)
         .groupBy(col("__ivf_bucket").as("__ivf_c"))
-        .agg(vecMean(col("__ivf_v")).as("__ivf_cv"))
+        .agg(vecMean(col("__ivf_v")).cast("array<float>").as("__ivf_cv"))
     }
   }
 
-  /** Nearest-centroid (nprobe = 1) assignment: score every vector
-    * against the broadcast centroids, argmax cosine via `max_by` (ties
-    * toward the smallest bucket id) — map-side partials, no window
-    * shuffle of the n·k scored rows. Output: (__ivf_id, __ivf_v,
-    * __ivf_bucket). */
-  def ivfAssign(vectors: DataFrame, id: Column, vec: Column,
-                centroids: DataFrame): DataFrame = {
-    val v = vectors.select(id.as("__ivf_id"), vec.as("__ivf_v"))
-    v.join(broadcast(centroids))
-      .select(col("__ivf_id"), col("__ivf_v"), col("__ivf_c"),
-        cosD(col("__ivf_v"), col("__ivf_cv")).as("__ivf_cos"))
+  /** The IVF centroid scorer: every vector against the broadcast
+    * `centroids` (__ivf_c: long, __ivf_cv: array<float>) by rounded
+    * cosine `round(vecDot(v, c) / (‖v‖·‖c‖), 4)` — norms once per
+    * vector and once per centroid — and its top-`nprobe` buckets
+    * (score DESC, ties toward the smaller bucket id) through the
+    * bounded heap: map-side partials, so the n·k scored rows never
+    * shuffle. Returns (assigned, probes), both from that ONE
+    * aggregate: `assigned` holds each vector's first bucket, `probes`
+    * one row per probed bucket; each is (__ivf_id, __ivf_v, __ivf_n =
+    * ‖v‖, __ivf_bucket). Rounding before the rank makes the choice
+    * replayable by any engine that evaluates the same expression. */
+  def ivfAssignProbe(vectors: DataFrame, id: Column, vec: Column,
+                     centroids: DataFrame, nprobe: Int): (DataFrame, DataFrame) = {
+    val cs = centroids.select(col("__ivf_c"), col("__ivf_cv"),
+      vecNorm(col("__ivf_cv")).as("__ivf_cn"))
+    val top = vectors.select(id.as("__ivf_id"), vec.as("__ivf_v"), vecNorm(vec).as("__ivf_n"))
+      .join(broadcast(cs))
+      .select(col("__ivf_id"), col("__ivf_v"), col("__ivf_n"), col("__ivf_c"),
+        round(vecDot(col("__ivf_v"), col("__ivf_cv")) /
+          (col("__ivf_n") * col("__ivf_cn")), 4).as("__ivf_cos"))
       .groupBy(col("__ivf_id"))
-      .agg(first(col("__ivf_v")).as("__ivf_v"),
-           max_by(col("__ivf_c"),
-             struct(col("__ivf_cos"), -col("__ivf_c"))).as("__ivf_bucket"))
+      .agg(first(col("__ivf_v")).as("__ivf_v"), first(col("__ivf_n")).as("__ivf_n"),
+           TopKAgg.topK(col("__ivf_cos"), col("__ivf_c"), nprobe).as("__ivf_top"))
+    val keep = Seq(col("__ivf_id"), col("__ivf_v"), col("__ivf_n"))
+    (top.select(keep :+ element_at(col("__ivf_top.id"), 1).as("__ivf_bucket"): _*),
+     top.select(keep :+ explode(col("__ivf_top.id")).as("__ivf_bucket"): _*))
   }
 
+  /** Nearest-centroid (nprobe = 1) assignment: [[ivfAssignProbe]]'s
+    * first bucket. Output: (__ivf_id, __ivf_v, __ivf_n, __ivf_bucket). */
+  def ivfAssign(vectors: DataFrame, id: Column, vec: Column,
+                centroids: DataFrame): DataFrame =
+    ivfAssignProbe(vectors, id, vec, centroids, 1)._1
+
   /** Top-`nprobe` bucket assignment per vector (the query-side probe
-    * of an IVF search) via the bounded-heap aggregate: up to nprobe
-    * output rows per vector, ranked by centroid cosine (ties toward
-    * the smaller bucket id, matching [[ivfAssign]]). */
+    * of an IVF search): [[ivfAssignProbe]]'s probes, up to nprobe rows
+    * per vector. Its first bucket is always the [[ivfAssign]] bucket. */
   def ivfProbe(vectors: DataFrame, id: Column, vec: Column,
-               centroids: DataFrame, nprobe: Int): DataFrame = {
-    val v = vectors.select(id.as("__ivf_id"), vec.as("__ivf_v"))
-    v.join(broadcast(centroids))
-      .select(col("__ivf_id"), col("__ivf_v"), col("__ivf_c"),
-        cosD(col("__ivf_v"), col("__ivf_cv")).as("__ivf_cos"))
-      .groupBy(col("__ivf_id"))
-      .agg(first(col("__ivf_v")).as("__ivf_v"),
-           org.apache.spark.sql.graft.TopKAgg
-             .topK(col("__ivf_cos"), col("__ivf_c"), nprobe).as("__ivf_top"))
-      .select(col("__ivf_id"), col("__ivf_v"),
-              explode(col("__ivf_top.id")).as("__ivf_bucket"))
-  }
+               centroids: DataFrame, nprobe: Int): DataFrame =
+    ivfAssignProbe(vectors, id, vec, centroids, nprobe)._2
 
   /** IVF approximate self-kNN — the 100 TB ANN path with learned,
     * data-scaled bucket counts: k-means-lite centroids
     * ([[ivfCentroids]]), index vectors in their nearest bucket, query
-    * side probing its top-`nprobe` buckets, candidates from the bucket
+    * side probing its top-`nprobe` buckets (both from one
+    * [[ivfAssignProbe]] scoring pass), candidates from the bucket
     * EQUI-join, exact rounded-cosine scoring (codegen'd float dot,
     * norms once per side) and the bounded-heap top-k. Scored pairs
     * drop from n² to nprobe · Σ bucket². Output: (q_id, rnk, i_id,
@@ -599,27 +609,13 @@ object Transforms {
   def annIvfTopK(vectors: DataFrame, id: Column, vec: Column,
                  numCentroids: Int, iters: Int, nprobe: Int,
                  k: Int): DataFrame = {
-    val dot = org.apache.spark.sql.graft.VectorExprs.vecDot _
     val cents = ivfCentroids(vectors, id, vec, numCentroids, iters)
       .localCheckpoint()
-    val idx = ivfAssign(vectors, id, vec, cents)
-      .select(col("__ivf_id").as("i_id"), col("__ivf_v").as("iv"),
-              col("__ivf_bucket").as("i_bucket"))
-      .withColumn("in_", sqrt(dot(col("iv"), col("iv"))))
-    val q = ivfProbe(vectors, id, vec, cents, nprobe)
-      .select(col("__ivf_id").as("q_id"), col("__ivf_v").as("qv"),
-              col("__ivf_bucket").as("q_bucket"))
-      .withColumn("qn", sqrt(dot(col("qv"), col("qv"))))
-    q.join(idx, col("q_bucket") === col("i_bucket") && col("q_id") =!= col("i_id"))
-      .select(col("q_id"),
-        round(dot(col("qv"), col("iv")) / (col("qn") * col("in_")), 4).as("cos_sim"),
-        col("i_id"))
-      .groupBy(col("q_id"))
-      .agg(org.apache.spark.sql.graft.TopKAgg
-        .topK(col("cos_sim"), col("i_id"), k).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
-              col("col.id").as("i_id"), col("col.score").as("cos_sim"))
+    val (assigned, probes) = ivfAssignProbe(vectors, id, vec, cents, nprobe)
+    val idx = assigned.toDF("i_id", "iv", "in_", "i_bucket")
+    val q = probes.toDF("q_id", "qv", "qn", "q_bucket")
+    cosineTopK(q.join(idx, col("q_bucket") === col("i_bucket") &&
+      col("q_id") =!= col("i_id")), k)
   }
 
   /** Sign-random-projection (hyperplane) LSH band candidates for
@@ -906,7 +902,7 @@ object Transforms {
   def topKPerGroup(df: DataFrame, group: Column, score: Column, id: Column,
                    k: Int): DataFrame =
     df.groupBy(group.as("group"))
-      .agg(org.apache.spark.sql.graft.TopKAgg.topK(score, id, k).as("top"))
+      .agg(TopKAgg.topK(score, id, k).as("top"))
       .select(col("group"), posexplode(col("top")))
       .select(col("group"), (col("pos") + 1).cast("long").as("rnk"),
               col("col.id").as("id"), col("col.score").as("score"))
@@ -938,30 +934,31 @@ object Transforms {
     * the scored pairs. Self-matches (equal ids) are excluded. Output:
     * (q_id, rnk, i_id, cos_sim), rank 1 = best. For corpora too big
     * to broadcast, coarse-quantize first and equi-join on the bucket
-    * (see graft.ops.LlmOps#simAnnIvf). */
+    * (see [[annIvfTopK]]). */
   def knnTopK(queries: DataFrame, index: DataFrame,
               qId: Column, qVec: Column, iId: Column, iVec: Column,
               k: Int): DataFrame = {
-    val dot = org.apache.spark.sql.graft.VectorExprs.vecDot _
     val q = fanOut( // explicit width: see fanOut — AQE would coalesce
                     // this byte-light exchange and serialize the n·m
                     // scoring stage. Broadcast join preserves the
                     // partitioning, so the top-k agg needs no exchange.
-      queries.select(qId.as("q_id"), qVec.as("qv"),
-        sqrt(dot(qVec, qVec)).as("qn")),
+      queries.select(qId.as("q_id"), qVec.as("qv"), vecNorm(qVec).as("qn")),
       col("q_id"))
-    val i = index.select(iId.as("i_id"), iVec.as("iv"),
-        sqrt(dot(iVec, iVec)).as("in_"))
-    q.join(broadcast(i), col("q_id") =!= col("i_id"))
-      .select(col("q_id"), col("i_id"),
-        round(dot(col("qv"), col("iv")) / (col("qn") * col("in_")), 4).as("cos_sim"))
-      .groupBy(col("q_id"))
-      .agg(org.apache.spark.sql.graft.TopKAgg
-        .topK(col("cos_sim"), col("i_id"), k).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
-              col("col.id").as("i_id"), col("col.score").as("cos_sim"))
+    val i = index.select(iId.as("i_id"), iVec.as("iv"), vecNorm(iVec).as("in_"))
+    cosineTopK(q.join(broadcast(i), col("q_id") =!= col("i_id")), k)
   }
+
+  /** Top-k per query of candidate pairs (q_id, qv, qn, i_id, iv, in_)
+    * by rounded cosine over the precomputed norms. Output: (q_id, rnk,
+    * i_id, cos_sim). */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame =
+    topKPerGroup(
+        pairs.select(col("q_id"), col("i_id"),
+          round(vecDot(col("qv"), col("iv")) / (col("qn") * col("in_")), 4)
+            .as("cos_sim")),
+        col("q_id"), col("cos_sim"), col("i_id"), k)
+      .select(col("group").as("q_id"), col("rnk"),
+              col("id").as("i_id"), col("score").as("cos_sim"))
 
   // ------------------------------------------------------- profiling
 
@@ -1170,9 +1167,10 @@ object Transforms {
     * metadata-scale bin tables + two 1-row broadcasts — the corpus is
     * scanned once per side.
     *
-    * The graded #242 keeps its fused single-scan form (both periods
-    * come from one table, so one aggregate beats two + a join); this
-    * is the two-table general case. */
+    * The graded `etl_psi_drift` (#242) bins both periods in one fused
+    * scan of one table (one aggregate beats two + a join) and then
+    * calls the same per-bin fold, [[psiFold]]; this is the two-table
+    * general case. */
   def psiDrift(baseline: DataFrame, current: DataFrame, bin: Column,
                threshold: Double = 0.2): DataFrame = {
     val b = baseline.select(bin.as("bin")).groupBy(col("bin"))
@@ -1183,6 +1181,15 @@ object Transforms {
       .select(col("bin"),
         coalesce(col("n_base"), lit(0L)).as("n_base"),
         coalesce(col("n_cur"), lit(0L)).as("n_cur"))
+    psiFold(binned, threshold).orderBy(col("bin"))
+  }
+
+  /** [[psiDrift]]'s per-bin fold over a bin table (bin, n_base, n_cur):
+    * Laplace-smoothed shares, 8dp-gridded DECIMAL terms, their exact
+    * sum and the `drifted` verdict, broadcast back onto every bin row.
+    * Output: (bin, n_base, n_cur, share_base, share_cur, psi_term,
+    * psi, drifted), unordered. */
+  private[graft] def psiFold(binned: DataFrame, threshold: Double): DataFrame = {
     val tot = binned.agg(sum(col("n_base")).as("t_base"),
       sum(col("n_cur")).as("t_cur"), count(lit(1)).as("n_bins"))
     def d(cc: Column) = cc.cast("double")
@@ -1198,7 +1205,6 @@ object Transforms {
         fp6(p).as("share_base"), fp6(q).as("share_cur"),
         col("term8").cast("double").as("psi_term"),
         col("psi"), col("drifted"))
-      .orderBy(col("bin"))
   }
 
   /** Generic Benjamini–Hochberg step-up over a table of tests — the
@@ -1244,10 +1250,12 @@ object Transforms {
 
   // ------------------------------------------ round-14 public lifts
 
-  /** Dense surrogate keys for a DIMENSION table (the general form of
-    * the graded `etl_surrogate_key_assign` #258): adds `sk` = 1..|dim|
+  /** Dense surrogate keys for a DIMENSION table (the graded
+    * `etl_surrogate_key_assign` #258 calls it): adds `sk` = 1..|dim|
     * ordered by `orderCols` (the natural key — make it unique or keys
-    * are nondeterministic). The window runs over `dim` itself, which
+    * are nondeterministic). A NULL natural key is keyed like any other
+    * value: the window's constant partition key is coalesced, so it
+    * never splits the table. The window runs over `dim` itself, which
     * must be the aggregated distinct-attribute table — metadata-scale
     * by definition; for a data-scale key domain use
     * [[globalRowNumber]] with a coarse bucket instead. */
@@ -1260,7 +1268,7 @@ object Transforms {
   }
 
   /** Running peak and drawdown over an ordered level series (the
-    * general form of the graded `win_drawdown_max` #249): adds `peak`
+    * graded `win_drawdown_max` #249 calls it): adds `peak`
     * (running max of `value` in `time` order) and `drawdown` =
     * peak − value. The series must already be the AGGREGATED
     * per-period table (daily/hourly level), i.e. metadata-scale —
@@ -1274,7 +1282,10 @@ object Transforms {
   }
 
   /** Wald SPRT columns over a per-period trial table (the general
-    * form of the graded `events_sprt_sequential` #251): given one row
+    * form of the graded `events_sprt_sequential` #251, which does not
+    * call it: in doubles 0.3/0.2 = 1.4999999999999998, so `log(p1/p0)`
+    * here is 0.4054651081081642, not the op's graded literal
+    * 0.40546510810816438): given one row
     * per (group, period) with trial and success counts, adds
     * cumulative `n`/`k`, the log-likelihood ratio `llr` for H₀ p=p0
     * vs H₁ p=p1, and `decision` ('accept_h1' / 'accept_h0' /
@@ -1301,8 +1312,9 @@ object Transforms {
         .when(col("llr") <= lit(lo), "accept_h0").otherwise("continue"))
   }
 
-  /** Empirical-Bayes shrunk group means (the general form of the
-    * graded `agg_eb_shrunk_means` #256): per `group`, the mean of
+  /** Empirical-Bayes shrunk group means (the graded
+    * `agg_eb_shrunk_means` #256 calls it, then rounds, orders and
+    * limits): per `group`, the mean of
     * `value` shrunk toward the global mean with `priorStrength`
     * pseudo-observations. One keyed aggregate + a 1-row broadcast;
     * sums stay exact until the final double division. */

@@ -1567,22 +1567,16 @@ object AggOps {
     * bit-stable; top-20 ordered by (shrunk DESC, custkey). Shape: one
     * keyed aggregate (partial map-side) + a 1-row broadcast of the
     * global sums + TopK; at 100 TB, swap the display limit for the
-    * #38 machinery. */
-  def aggEbShrunkMeans(spark: SparkSession, sf: String): DataFrame = {
-    val per = orders(spark, sf)
-      .groupBy(col("o_custkey"))
-      .agg(count(lit(1)).as("n"), sum(money(col("o_totalprice"))).as("sv"))
-    val glob = per.agg(sum(col("n")).as("gn"), sum(col("sv")).as("gs"))
-    val m = col("gs").cast("double") / col("gn").cast("double")
-    per.crossJoin(broadcast(glob))
-      .select(col("o_custkey"), col("n").as("n_orders"),
-        round(col("sv").cast("double") / col("n").cast("double"), 6)
-          .as("raw_mean"),
-        round((col("sv").cast("double") + lit(20.0) * m) /
-          (col("n").cast("double") + lit(20.0)), 6).as("shrunk_mean"))
+    * #38 machinery. The estimator is [[graft.api.Transforms.shrunkMeans]];
+    * this op binds it to orders and rounds to 6dp. */
+  def aggEbShrunkMeans(spark: SparkSession, sf: String): DataFrame =
+    graft.api.Transforms.shrunkMeans(orders(spark, sf),
+        col("o_custkey"), money(col("o_totalprice")), priorStrength = 20.0)
+      .select(col("group").as("o_custkey"), col("n").as("n_orders"),
+        round(col("raw_mean"), 6).as("raw_mean"),
+        round(col("shrunk_mean"), 6).as("shrunk_mean"))
       .orderBy(col("shrunk_mean").desc, col("o_custkey"))
       .limit(20)
-  }
 
   /** #257 — per-group OLS worst-residual diagnostics (round 14; the
     * "which point does the fitted line miss hardest" readout behind

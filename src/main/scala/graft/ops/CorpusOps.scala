@@ -669,25 +669,6 @@ object CorpusOps {
       .orderBy(col("q_id"), col("rnk"))
   }
 
-  /** #277 — sparse TF-IDF cosine retrieval (round 16; the classical
-    * vector-space-model ranking beside #189's BM25 — the SPARSE twin
-    * of #62's dense cosine kNN, and the lexical arm a production
-    * hybrid stack fuses with dense scores via #188's RRF): for the
-    * same 8-doc hash-sampled query panel as #189, score every corpus
-    * document sharing at least one informative term with the query by
-    * cos(q,d) = Σ_t w_qt·w_dt / (‖w_q‖·‖w_d‖), w = tf·ln(N/df),
-    * top-5 per query. Candidate generation is the inverted-index
-    * equi-join on the term (posting-list intersection — Σ df², never
-    * an all-pairs doc scan), and corpus-wide stopwords (df = N, idf
-    * 0) are dropped BEFORE the join — the df-cap every production
-    * inverted index applies, here exact since their weight is
-    * identically zero. Determinism: weights 6dp-rounded to
-    * DECIMAL(20,6) before any summation (the #189 policy), dot
-    * products and squared norms summed as exact DECIMAL(38,12),
-    * cosine one double expression 4dp-displayed, ties to the smaller
-    * doc_id. Shape: two keyed corpus aggregates (tf, df) + the
-    * posting join keyed on term + a per-query top-5 window over the
-    * candidate set (8 query partitions — bounded). */
   /** #277's query panel + (doc, term, w) weight table, the shared
     * machinery of the graded op and the gated Zipfian scale pin (so
     * the pin measures the op's REAL candidate stage, not a replica
@@ -720,21 +701,43 @@ object CorpusOps {
   private[graft] def sparseCosineCandidates(spark: SparkSession, sf: String,
       capStopwords: Boolean = true): DataFrame = {
     val (q, wts) = sparseCosineWeights(spark, sf, capStopwords)
+    sparseCosineCandidates(q, wts)
+  }
+
+  private def sparseCosineCandidates(q: DataFrame, wts: DataFrame): DataFrame = {
     val qw = wts.join(broadcast(q), col("doc_id") === col("q_id"))
       .select(col("q_id"), col("term"), col("w").as("wq"))
     wts.join(broadcast(qw), "term")
       .where(col("doc_id") =!= col("q_id"))
   }
 
+  /** #277 — sparse TF-IDF cosine retrieval (round 16; the classical
+    * vector-space-model ranking beside #189's BM25 — the SPARSE twin
+    * of #62's dense cosine kNN, and the lexical arm a production
+    * hybrid stack fuses with dense scores via #188's RRF): for the
+    * same 8-doc hash-sampled query panel as #189, score every corpus
+    * document sharing at least one informative term with the query by
+    * cos(q,d) = Σ_t w_qt·w_dt / (‖w_q‖·‖w_d‖), w = tf·ln(N/df),
+    * top-5 per query. Candidate generation is the inverted-index
+    * equi-join on the term (posting-list intersection — Σ df², never
+    * an all-pairs doc scan), and corpus-wide stopwords (df = N, idf
+    * 0) are dropped BEFORE the join — the df-cap every production
+    * inverted index applies, here exact since their weight is
+    * identically zero. Determinism: weights 6dp-rounded to
+    * DECIMAL(20,6) before any summation (the #189 policy), dot
+    * products and squared norms summed as exact DECIMAL(38,12),
+    * cosine one double expression 4dp-displayed, ties to the smaller
+    * doc_id. Shape: two keyed corpus aggregates (tf, df) + the
+    * posting join keyed on term ([[sparseCosineCandidates]], the
+    * stage the Zipfian scale pin counts) + a per-query bounded-heap
+    * top-5 over the scored candidates (map-side partials, no window
+    * sort). */
   def simSparseCosineTopk(spark: SparkSession, sf: String): DataFrame = {
     val (q, wts) = sparseCosineWeights(spark, sf, capStopwords = true)
     val norms = wts.groupBy(col("doc_id"))
       .agg(sum(dec(col("w") * col("w"), 38, 12)).as("nrm2"))
       .where(col("nrm2") > 0)
-    val qw = wts.join(broadcast(q), col("doc_id") === col("q_id"))
-      .select(col("q_id"), col("term"), col("w").as("wq"))
-    val dots = wts.join(broadcast(qw), "term")
-      .where(col("doc_id") =!= col("q_id"))
+    val dots = sparseCosineCandidates(q, wts)
       .groupBy(col("q_id"), col("doc_id"))
       .agg(sum(dec(col("w") * col("wq"), 38, 12)).as("dp"))
     val scored = dots
@@ -745,12 +748,10 @@ object CorpusOps {
         round(col("dp").cast("double")
           / (sqrt(col("qn2").cast("double"))
              * sqrt(col("nrm2").cast("double"))), 4).as("cos_sim"))
-    val win = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("doc_id"))
-    scored.withColumn("rnk", row_number().over(win))
-      .where(col("rnk") <= 5)
-      .select(col("q_id"), col("rnk").cast("int").as("rnk"),
-              col("doc_id"), col("cos_sim"))
+    graft.api.Transforms
+      .topKPerGroup(scored, col("q_id"), col("cos_sim"), col("doc_id"), 5)
+      .select(col("group").as("q_id"), col("rnk").cast("int").as("rnk"),
+              col("id").as("doc_id"), col("score").as("cos_sim"))
       .orderBy(col("q_id"), col("rnk"))
   }
 

@@ -1461,7 +1461,8 @@ object EtlOps {
     * drift verdict compares that exact sum to the 0.2 literal.
     * Shape: ONE keyed corpus aggregate to the ≤~30-row bin table +
     * two 1-row broadcasts — at 100 TB only the binned aggregate
-    * touches the corpus. */
+    * touches the corpus. The fold from bin counts to PSI is
+    * [[graft.api.Transforms.psiDrift]]'s own (`psiFold`). */
   def etlPsiDrift(spark: SparkSession, sf: String): DataFrame = {
     val o = orders(spark, sf)
       .select(to_date(col("o_orderdate")).as("day"),
@@ -1472,24 +1473,12 @@ object EtlOps {
       .withColumn("pre", datediff(col("day"), col("d0")) * 2 <
         datediff(col("d1"), col("d0")) + 1)
       .groupBy(col("bin"))
-      .agg(sum(when(col("pre"), 1L).otherwise(0L)).as("n_pre"),
-           sum(when(!col("pre"), 1L).otherwise(0L)).as("n_post"))
-    val tot = binned.agg(sum(col("n_pre")).as("t_pre"),
-      sum(col("n_post")).as("t_post"), count(lit(1)).as("n_bins"))
-    def d(c: Column) = c.cast("double")
-    val p = (d(col("n_pre")) + 1.0) / (d(col("t_pre")) + d(col("n_bins")))
-    val q = (d(col("n_post")) + 1.0) / (d(col("t_post")) + d(col("n_bins")))
-    def grid8(c: Column) = round(c, 8).cast("decimal(18,8)")
-    val terms = binned.crossJoin(broadcast(tot))
-      .withColumn("term8", grid8((p - q) * log(p / q)))
-    val psi = terms.agg(sum(col("term8")).cast("double").as("psi"))
-      .withColumn("drifted", col("psi") > lit(0.2))
-    def fp6(c: Column) = floor(c * 1000000 + 0.5) / 1000000.0
-    terms.crossJoin(broadcast(psi))
-      .select(col("bin"), col("n_pre"), col("n_post"),
-        fp6(p).as("share_pre"), fp6(q).as("share_post"),
-        col("term8").cast("double").as("psi_term"),
-        col("psi"), col("drifted"))
+      .agg(sum(when(col("pre"), 1L).otherwise(0L)).as("n_base"),
+           sum(when(!col("pre"), 1L).otherwise(0L)).as("n_cur"))
+    graft.api.Transforms.psiFold(binned, threshold = 0.2)
+      .select(col("bin"), col("n_base").as("n_pre"), col("n_cur").as("n_post"),
+        col("share_base").as("share_pre"), col("share_cur").as("share_post"),
+        col("psi_term"), col("psi"), col("drifted"))
       .orderBy(col("bin"))
   }
 
@@ -1658,15 +1647,13 @@ object EtlOps {
     * table only — metadata-scale by definition (a dimension IS the
     * distinct-attribute table; facts never enter a window). For a
     * data-scale key domain (e.g. per-document ids) the #130/#204
-    * distributed-rank machinery is the documented swap. */
+    * distributed-rank machinery is the documented swap. The keys come
+    * from [[graft.api.Transforms.surrogateKeys]]. */
   def etlSurrogateKeyAssign(spark: SparkSession, sf: String): DataFrame = {
     val dim = documents(spark, sf)
       .groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("n_docs"))
-    val w = Window
-      .partitionBy(pmod(length(col("source")), lit(1)) * lit(0))
-      .orderBy(col("source"), col("lang"))
-    dim.withColumn("sk", row_number().over(w).cast("long"))
+    graft.api.Transforms.surrogateKeys(dim, col("source"), col("lang"))
       .select(col("sk"), col("source"), col("lang"), col("n_docs"))
       .orderBy(col("sk"))
   }

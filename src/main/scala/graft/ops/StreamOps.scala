@@ -63,7 +63,7 @@ object StreamOps {
     * every streaming dashboard — per tumbling window, WHO dominated):
     * per 1-day window, the top-3 users by exact spend. Two-level
     * aggregate: (window, user) exact-DECIMAL pre-aggregate, then the
-    * bounded-heap TopKAgg per window (score DESC, id ASC ties —
+    * bounded-heap top-k per window (score DESC, id ASC ties —
     * identical to the oracle's row_number). Streaming form: the same
     * two-level aggregate under a watermark; StreamingSpec proves the
     * chunked MemoryStream replay equals this batch result. At 100 TB

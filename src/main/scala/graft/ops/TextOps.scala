@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import scala.collection.immutable.ListMap
 import graft.Tables._
+import graft.api.Transforms.shingles
+import org.apache.spark.sql.graft.VectorExprs.vecNorm
 
 /** SURVEY §2.J — LLM-data-pipeline operators (#56–#64): tokenization,
   * text stats, shingling, exact + MinHash-LSH near-dedup, cosine
@@ -35,10 +37,6 @@ object TextOps {
   /** split-on-space tokens. */
   private def words: Column = split(col("text"), " ")
 
-  /** 3-gram shingles via sequence+transform (native UDTF-style
-    * expansion; requires >= 3 tokens, enforced by the caller). */
-  private def shingles: Column = graft.api.Transforms.shingles(col("words"), 3)
-
   /** Exact double dot product of two (float- or double-typed) array
     * columns: sequential left fold, deterministic element order. */
   private def dot(a: Column, b: Column): Column =
@@ -46,15 +44,6 @@ object TextOps {
               lit(0.0), (acc, x) => acc + x)
 
   private def l2norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Codegen'd float-float dot product — bit-identical to [[dot]]
-    * (same left-to-right double accumulation) but a tight primitive
-    * loop with no intermediate array; see
-    * [[org.apache.spark.sql.graft.FloatVecDot]]. */
-  private def dotF(a: Column, b: Column): Column =
-    org.apache.spark.sql.graft.VectorExprs.vecDot(a, b)
-
-  private def l2normF(a: Column): Column = sqrt(dotF(a, a))
 
   /** #56 — tokenize + explode + global top-50 word frequencies. */
   def textTokenizeWordcount(spark: SparkSession, sf: String): DataFrame =
@@ -80,7 +69,7 @@ object TextOps {
     documents(spark, sf)
       .withColumn("words", words)
       .where(size(col("words")) >= 3)
-      .select(col("doc_id"), explode(shingles).as("shingle"))
+      .select(col("doc_id"), explode(shingles(col("words"), 3)).as("shingle"))
       .groupBy(col("doc_id"), col("shingle"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("doc_id"), col("shingle"))
@@ -115,7 +104,7 @@ object TextOps {
       .transform(graft.api.Transforms.fanOut(_, col("doc_id")))
       .withColumn("words", words)
       .where(size(col("words")) >= 3)
-      .withColumn("shingles", shingles)
+      .withColumn("shingles", shingles(col("words"), 3))
     graft.api.Transforms
       .minhashSignaturesAgg(base, col("doc_id"), col("shingles"), 4)
       .withColumnRenamed("id", "doc_id")
@@ -153,7 +142,7 @@ object TextOps {
       .withColumn("words", words)
       .where(size(col("words")) >= 3)
       .select(col("doc_id"),
-        explode_outer(array_distinct(shingles)).as("shingle"))
+        explode_outer(array_distinct(shingles(col("words"), 3))).as("shingle"))
     val sizes = sh.groupBy(col("doc_id")).agg(count(col("shingle")).as("nsh"))
     val inter = sh.join(broadcast(cands), col("doc_id") === col("d1"))
       .select(col("d1"), col("d2"), col("shingle"))
@@ -226,7 +215,7 @@ object TextOps {
       .select(col("cand_label"), col("cvec"), l2norm(col("cvec")).as("cnrm"))
     val vecs = embeddings(spark, sf)
       .select(col("vec_id"), col("label").as("true_label"), col("embedding"),
-              l2normF(col("embedding")).as("vnrm"))
+              vecNorm(col("embedding")).as("vnrm"))
     val w = Window.partitionBy(col("vec_id")).orderBy(col("cos_sim").desc, col("cand_label"))
     vecs.join(broadcast(cents))
       .select(col("vec_id"), col("true_label"), col("cand_label"),
@@ -274,7 +263,7 @@ object TextOps {
     val bigrams = documents(spark, sf)
       .withColumn("words", words)
       .where(size(col("words")) >= 2)
-      .select(explode(graft.api.Transforms.shingles(col("words"), 2)).as("bg"))
+      .select(explode(shingles(col("words"), 2)).as("bg"))
       .select(element_at(split(col("bg"), " "), 1).as("w1"),
               element_at(split(col("bg"), " "), 2).as("w2"))
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n"))
@@ -305,7 +294,7 @@ object TextOps {
       .transform(graft.api.Transforms.fanOut(_, col("doc_id")))
       .withColumn("words", words)
       .where(size(col("words")) >= 3)
-      .select(col("doc_id"), explode(shingles).as("shingle"))
+      .select(col("doc_id"), explode(shingles(col("words"), 3)).as("shingle"))
       .distinct()
     val unique1 = count(when(col("gram_docs") === 1, lit(1)))
     grams
@@ -371,7 +360,7 @@ object TextOps {
       .join(embeddings(spark, sf), col("doc_id") === col("vec_id"))
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
         size(words).as("n_tokens"), col("label"),
-        round(l2normF(col("embedding")), 4).as("vec_norm"))
+        round(vecNorm(col("embedding")), 4).as("vec_norm"))
       .orderBy(col("doc_id"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = ListMap(

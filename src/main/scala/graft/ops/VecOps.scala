@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.collection.immutable.ListMap
 import graft.Tables._
-import org.apache.spark.sql.graft.TopKAgg
+import graft.api.Transforms.{hashSeeds, topKPerGroup}
+import org.apache.spark.sql.graft.VectorExprs.vecDot
 
 /** SURVEY §2 — round-7 vector-index operators (#136–#138): product
   * quantization with asymmetric-distance search, the two-stage
@@ -39,30 +40,12 @@ object VecOps {
   private val K = 16
   private val NQ = 8
 
-  private def dotF(a: Column, b: Column): Column =
-    org.apache.spark.sql.graft.VectorExprs.vecDot(a, b)
-
-  private def l2normF(a: Column): Column = sqrt(dotF(a, a))
-
   /** Squared L2 distance between two float vectors, summed in array
     * order (double accumulator — same HOF-fold policy as #61/#133). */
   private def l2sq(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => {
       val d = x.cast("double") - y.cast("double"); d * d
     }), lit(0.0), _ + _)
-
-  /** The k corpus vectors with the smallest md5(vec_id || tag) —
-    * deterministic hash-sample (the #79 seed pattern; distinct tags
-    * decorrelate the codebook / query / centroid samples). Adds
-    * `sid` = 0..k-1 in md5 order. The window runs over k rows only
-    * (constant-partition non-foldable key, see #79). */
-  private def hashSeeds(emb: DataFrame, k: Int, tag: String): DataFrame = {
-    val w = Window.partitionBy(pmod(length(col("h")), lit(1)))
-      .orderBy(col("h"), col("vec_id"))
-    emb.withColumn("h", md5(concat(col("vec_id").cast("string"), lit(tag))))
-      .orderBy(col("h"), col("vec_id")).limit(k)
-      .withColumn("sid", row_number().over(w).cast("long") - 1)
-  }
 
   /** All M sub-vectors of an embedding column, as (sub, svec) rows. */
   private def subvecs(vec: Column): Column =
@@ -73,7 +56,7 @@ object VecOps {
     * codebook, kept exposed for the reconstruction-error property
     * test). */
   private[graft] def seedCodebook(emb: DataFrame): DataFrame =
-    hashSeeds(emb, K, "#cb")
+    hashSeeds(emb, col("vec_id"), K, "#cb")
       .select(col("sid").as("code"), subvecs(col("embedding")).as(Seq("sub", "cvec")))
       .select(col("code"), col("sub"),
         transform(col("cvec"), x => x.cast("double")).as("cvec"))
@@ -116,11 +99,11 @@ object VecOps {
       Array.tabulate(M)(s => Array.tabulate(SUBDIM)(i => v(s * SUBDIM + i).toDouble))
     // two metadata-scale collects: 16 seed rows, ≤2048 training rows
     val seeds: Array[(Long, Array[Array[Double]])] =
-      hashSeeds(emb, K, "#cb").orderBy(col("sid"))
+      hashSeeds(emb, col("vec_id"), K, "#cb").orderBy(col("sid"))
         .select(col("sid"), col("embedding")).collect()
         .map(r => (r.getLong(0), subs(r.getSeq[Float](1).toArray)))
     val train: Array[Array[Array[Double]]] =
-      hashSeeds(emb, TRAIN_N, "#tr").orderBy(col("sid"))
+      hashSeeds(emb, col("vec_id"), TRAIN_N, "#tr").orderBy(col("sid"))
         .select(col("embedding")).collect()
         .map(r => subs(r.getSeq[Float](0).toArray))
     var cb: Array[Seq[(Long, Array[Double])]] =
@@ -226,7 +209,7 @@ object VecOps {
     val cb = trainedCodebook(emb)
     val enc = pqEncode(emb, cb)
     val lut = pqLut(emb, cb, nq)
-    val qIds = hashSeeds(emb, nq, "#q").select(col("vec_id").as("q_id"))
+    val qIds = hashSeeds(emb, col("vec_id"), nq, "#q").select(col("vec_id").as("q_id"))
     // a query's two probed buckets are distinct and each index vector
     // sits in exactly one bucket, so (q_id, i_id) pairs are unique
     val cand = probes.select(col("vec_id").as("q_id"), col("bucket"))
@@ -234,25 +217,13 @@ object VecOps {
       .join(assigned.select(col("vec_id").as("i_id"), col("bucket")), "bucket")
       .where(col("q_id") =!= col("i_id"))
       .select(col("q_id"), col("i_id"))
-    cand.join(enc.withColumnRenamed("vec_id", "i_id"), "i_id")
+    val scored = cand.join(enc.withColumnRenamed("vec_id", "i_id"), "i_id")
       .join(broadcast(lut), Seq("q_id", "sub", "code"))
       .groupBy(col("q_id"), col("i_id"))
       .agg(round(sum(col("pd")), 4).as("adc"))
-      .groupBy(col("q_id"))
-      .agg(org.apache.spark.sql.graft.TopKAgg
-        .topK(-col("adc"), col("i_id"), 5).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("int").as("rnk"),
-              col("col.id").as("vec_id"), (-col("col.score")).as("adc_dist"))
-      .orderBy(col("q_id"), col("rnk"))
+    adcTop5(scored, col("i_id"))
   }
 
-  /** [[simAnnPq]]'s machinery with the query count as a parameter —
-    * the graded operator binds nq = NQ = 8 (byte-identical output);
-    * the recall pins run the SAME geometry at nq = 64 so the
-    * ≥10×-chance floor rests on ~320 ground-truth slots instead of 40
-    * (round 12 — VERDICT r11 item 2: the 8-query pin passed by exactly
-    * one hit). */
   /** PQ encode stage: nearest codeword per (vector, subspace); the
     * n·M·K scored rows collapse map-side (min_by partials), shuffling
     * only n·M rows. Output: (vec_id, sub, code). */
@@ -268,28 +239,36 @@ object VecOps {
     * distances (unrounded; only the final sum is rounded). Output:
     * (q_id, sub, code, pd). */
   private def pqLut(emb: DataFrame, cb: DataFrame, nq: Int): DataFrame =
-    hashSeeds(emb, nq, "#q")
+    hashSeeds(emb, col("vec_id"), nq, "#q")
       .select(col("vec_id").as("q_id"), subvecs(col("embedding")).as(Seq("sub", "qsub")))
       .join(broadcast(cb), "sub")
       .select(col("q_id"), col("sub"), col("code"), l2sq(col("qsub"), col("cvec")).as("pd"))
 
+  /** [[simAnnPq]]'s machinery with the query count as a parameter —
+    * the graded operator binds nq = NQ = 8 (byte-identical output);
+    * the recall pins run the SAME geometry at nq = 64 so the
+    * ≥10×-chance floor rests on ~320 ground-truth slots instead of 40
+    * (round 12 — VERDICT r11 item 2: the 8-query pin passed by exactly
+    * one hit). */
   private[graft] def pqTopK(emb: DataFrame, nq: Int): DataFrame = {
     // codebook: Lloyd-refined 16 codewords × 8 subspaces ≤ 128 rows
     val cb = trainedCodebook(emb)
     val enc = pqEncode(emb, cb)
     val lut = pqLut(emb, cb, nq)
-    enc.join(broadcast(lut), Seq("sub", "code"))
+    adcTop5(enc.join(broadcast(lut), Seq("sub", "code"))
       .where(col("q_id") =!= col("vec_id"))
       .groupBy(col("q_id"), col("vec_id"))
-      .agg(round(sum(col("pd")), 4).as("adc"))
-      // smallest estimated distance first: negate for the max-heap
-      .groupBy(col("q_id"))
-      .agg(TopKAgg.topK(-col("adc"), col("vec_id"), 5).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("int").as("rnk"),
-              col("col.id").as("vec_id"), (-col("col.score")).as("adc_dist"))
-      .orderBy(col("q_id"), col("rnk"))
+      .agg(round(sum(col("pd")), 4).as("adc")), col("vec_id"))
   }
+
+  /** Top-5 per query by ADC distance over (q_id, <id>, adc) — smallest
+    * estimated distance first (negated for the max-heap), ties to the
+    * smaller id. Output: (q_id, rnk, vec_id, adc_dist). */
+  private def adcTop5(scored: DataFrame, id: Column): DataFrame =
+    topKPerGroup(scored, col("q_id"), -col("adc"), id, 5)
+      .select(col("group").as("q_id"), col("rnk").cast("int").as("rnk"),
+              col("id").as("vec_id"), (-col("score")).as("adc_dist"))
+      .orderBy(col("q_id"), col("rnk"))
 
   // ---------------------------------------------------------------
   // #137 two-stage quantized rerank
@@ -322,20 +301,19 @@ object VecOps {
       .select(col("vec_id"),
         transform(col("__xd"), v => round(v / col("__scale"))).as("qcodes"),
         col("__scale").as("qs"))
-    val qs8 = hashSeeds(emb, NQ, "#rq")
+    val qs8 = hashSeeds(emb, col("vec_id"), NQ, "#rq")
       .select(col("vec_id").as("q_id"),
         transform(col("embedding"), v => v.cast("double")).as("qv"))
     // stage 1: int8 approximate dot, bounded-heap shortlist of 16
-    val short = db.join(broadcast(qs8), col("q_id") =!= col("vec_id"))
+    val stage1 = db.join(broadcast(qs8), col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"),
         round(col("qs") * aggregate(zip_with(col("qcodes"), col("qv"),
           (c, q) => c * q), lit(0.0), _ + _), 4).as("approx_dot"))
-      .groupBy(col("q_id"))
-      .agg(TopKAgg.topK(col("approx_dot"), col("vec_id"), 16).as("top"))
-      .select(col("q_id"), explode(col("top")).as("t"))
-      .select(col("q_id"), col("t.id").as("vec_id"), col("t.score").as("approx_dot"))
+    val short = topKPerGroup(stage1, col("q_id"), col("approx_dot"), col("vec_id"), 16)
+      .select(col("group").as("q_id"), col("id").as("vec_id"),
+              col("score").as("approx_dot"))
     // stage 2: exact float rerank of the 128 shortlist rows
-    val qv = hashSeeds(emb, NQ, "#rq")
+    val qv = hashSeeds(emb, col("vec_id"), NQ, "#rq")
       .select(col("vec_id").as("q_id"), col("embedding").as("qemb"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("exact_dot").desc, col("vec_id"))
@@ -343,7 +321,7 @@ object VecOps {
       .join(broadcast(qv), "q_id")
       .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
       .select(col("q_id"), col("vec_id"), col("approx_dot"),
-        round(dotF(col("qemb"), col("embedding")), 4).as("exact_dot"))
+        round(vecDot(col("qemb"), col("embedding")), 4).as("exact_dot"))
       .withColumn("rnk", row_number().over(w).cast("int"))
       .where(col("rnk") <= 5)
       .select(col("q_id"), col("rnk"), col("vec_id"),
@@ -376,21 +354,11 @@ object VecOps {
   def dedupSemanticCluster(spark: SparkSession, sf: String): DataFrame = {
     val emb = embeddings(spark, sf)
     val k = math.ceil(math.sqrt(emb.count().toDouble)).toInt
-    val cents = hashSeeds(emb, k, "#sd")
-      .select(col("sid").as("cl"), col("embedding").as("cvec"),
-              l2normF(col("embedding")).as("cnrm"))
-    val assigned = emb
-      .select(col("vec_id"), col("embedding"), l2normF(col("embedding")).as("vnrm"))
-      .join(broadcast(cents))
-      .select(col("vec_id"), col("embedding"), col("vnrm"),
-        round(dotF(col("embedding"), col("cvec")) / (col("vnrm") * col("cnrm")), 4)
-          .as("cos_c"),
-        col("cl"))
-      .groupBy(col("vec_id"))
-      .agg(first(col("embedding")).as("embedding"), first(col("vnrm")).as("vnrm"),
-           TopKAgg.topK(col("cos_c"), col("cl"), 1).as("top1"))
-      .select(col("vec_id"), col("embedding"), col("vnrm"),
-              element_at(col("top1.id"), 1).as("bucket"))
+    val cents = hashSeeds(emb, col("vec_id"), k, "#sd")
+      .select(col("sid").as("__ivf_c"), col("embedding").as("__ivf_cv"))
+    val assigned = graft.api.Transforms
+      .ivfAssign(emb, col("vec_id"), col("embedding"), cents)
+      .toDF("vec_id", "embedding", "vnrm", "bucket")
     val a = graft.api.Transforms.fanOut(
       assigned.toDF("a_id", "ea", "na", "bucket"), col("bucket"))
     val b = assigned.toDF("b_id", "eb", "nb", "bucket_b")
@@ -401,7 +369,7 @@ object VecOps {
     // all-false at the production τ = 0.99).
     val maxSim = a.join(b, col("bucket") === col("bucket_b") && col("a_id") < col("b_id"))
       .select(col("b_id").as("vec_id"),
-        round(dotF(col("ea"), col("eb")) / (col("na") * col("nb")), 4).as("cos"))
+        round(vecDot(col("ea"), col("eb")) / (col("na") * col("nb")), 4).as("cos"))
       .groupBy(col("vec_id"))
       .agg(max(col("cos")).as("max_sim"))
     assigned.select(col("vec_id"), col("bucket"))
@@ -443,17 +411,15 @@ object VecOps {
     val d = e.where(col("vec_id") % 10 =!= 0)
       .select(col("vec_id").as("did") +: toks(col("embedding"), "d"): _*)
     val score = (0 until 4).map(i =>
-      greatest((0 until 4).map(j => dotF(col(s"q$i"), col(s"d$j"))): _*))
+      greatest((0 until 4).map(j => vecDot(col(s"q$i"), col(s"d$j"))): _*))
       .reduce(_ + _)
-    graft.api.Transforms.fanOut(d, col("did"))
+    val scored = graft.api.Transforms.fanOut(d, col("did"))
       .join(broadcast(q))
       .select(col("qid"), col("did"),
               (floor(score * 10000 + 0.5) / 10000.0).as("maxsim"))
-      .groupBy(col("qid"))
-      .agg(TopKAgg.topK(col("maxsim"), col("did"), 3).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), (col("pos") + 1).cast("long").as("rnk"),
-              col("col.id").as("did"), col("col.score").as("maxsim"))
+    topKPerGroup(scored, col("qid"), col("maxsim"), col("did"), 3)
+      .select(col("group").as("qid"), col("rnk"),
+              col("id").as("did"), col("score").as("maxsim"))
       .orderBy(col("qid"), col("rnk"))
   }
 
@@ -569,7 +535,7 @@ object VecOps {
     * query — an equi-join on the bucket, never an n² scan (the #74
     * dedup geometry, pointed at top-k retrieval); the ≤bucket-sized
     * candidate set is reranked by exact rounded cosine, top-5 per
-    * query via the bounded-heap TopKAgg (ties to the smaller id =
+    * query via the bounded-heap top-k (ties to the smaller id =
     * the oracle's row_number order).
     *
     * Determinism contract — the whole index is replayable arithmetic:
@@ -651,11 +617,9 @@ object VecOps {
       .select(col("q_id"),
         graft.api.Transforms.cosine(col("qv"), col("iv")).as("cos_sim"),
         col("i_id"))
-    rer.groupBy(col("q_id"))
-      .agg(TopKAgg.topK(col("cos_sim"), col("i_id"), 5).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("int").as("rnk"),
-              col("col.id").as("i_id"), col("col.score").as("cos_sim"))
+    topKPerGroup(rer, col("q_id"), col("cos_sim"), col("i_id"), 5)
+      .select(col("group").as("q_id"), col("rnk").cast("int").as("rnk"),
+              col("id").as("i_id"), col("score").as("cos_sim"))
       .orderBy(col("q_id"), col("rnk"))
   }
 

@@ -310,19 +310,17 @@ object WindowOps {
     * at display. Shape: one keyed corpus aggregate (partial,
     * map-side) then windows over the DAILY series — metadata-scale
     * (one row per ship day, bounded by the calendar), the #199/#195
-    * posture; the per-year fold is a partial-able aggregate. */
+    * posture; the per-year fold is a partial-able aggregate. The
+    * running peak and drawdown are [[graft.api.Transforms.drawdown]]. */
   def winDrawdownMax(spark: SparkSession, sf: String): DataFrame = {
     val daily = lineitem(spark, sf)
       .groupBy(to_date(col("l_shipdate")).as("day"))
       .agg(sum(money(col("l_extendedprice"))).as("rev"))
-    val w = Window.partitionBy(pmod(length(col("day").cast("string")), lit(1)))
-      .orderBy(col("day")).rowsBetween(Window.unboundedPreceding, 0)
-    daily
-      .withColumn("dd", max(col("rev")).over(w) - col("rev"))
+    graft.api.Transforms.drawdown(daily, col("day"), col("rev"))
       .groupBy(year(col("day")).as("yr"))
       .agg(count(lit(1)).as("n_days"),
-        max(col("dd")).cast("double").as("max_drawdown"),
-        min_by(col("day"), struct(-col("dd"), col("day")))
+        max(col("drawdown")).cast("double").as("max_drawdown"),
+        min_by(col("day"), struct(-col("drawdown"), col("day")))
           .cast("timestamp").as("trough_day"))
       .orderBy(col("yr"))
   }

@@ -339,13 +339,10 @@ object EventStreams {
     * finisher ∘ stateful-half, so StreamingSpec's chunked replay +
     * finisher must equal the batch result EXACTLY. */
   def topkSpendFinish(windowUserSpend: DataFrame): DataFrame =
-    windowUserSpend
-      .groupBy(col("w"))
-      .agg(org.apache.spark.sql.graft.TopKAgg
-        .topK(col("spend"), col("user_id"), 3).as("top"))
-      .select(col("w.start").as("day_start"), posexplode(col("top")))
-      .select(col("day_start"), (col("pos") + 1).cast("int").as("rnk"),
-              col("col.id").as("user_id"), col("col.score").as("spend"))
+    graft.api.Transforms
+      .topKPerGroup(windowUserSpend, col("w"), col("spend"), col("user_id"), 3)
+      .select(col("group.start").as("day_start"), col("rnk").cast("int").as("rnk"),
+              col("id").as("user_id"), col("score").as("spend"))
 }
 
 /** One consecutive same-user event-type pair emitted by

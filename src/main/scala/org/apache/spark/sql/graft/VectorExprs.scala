@@ -236,6 +236,9 @@ object VectorExprs {
     ExpressionUtils.column(
       FloatVecDot(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 
+  /** L2 norm of an ArrayType(FloatType) column: `sqrt(vecDot(a, a))`. */
+  def vecNorm(a: Column): Column = org.apache.spark.sql.functions.sqrt(vecDot(a, a))
+
   /** Fused unrounded cosine similarity of two float-array columns. */
   def vecCosine(a: Column, b: Column): Column =
     ExpressionUtils.column(

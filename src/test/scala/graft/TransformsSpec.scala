@@ -172,6 +172,32 @@ class TransformsSpec extends SparkSpec {
     assert(rs(1) > rs.head, s"second probe should add recall here: $rs")
   }
 
+  test("ivfAssign and ivfProbe share one rounded-cosine scorer") {
+    import spark.implicits._
+    // both centroids sit at cosine 0.8000 to v after 4dp rounding, but
+    // the LARGER id is ahead unrounded (0.80003 vs 0.80000): rounding
+    // before the rank must hand the tie to the smaller id
+    val v = Seq((7L, Seq(1.0f, 0.0f))).toDF("vid", "v")
+    val cents = Seq((0L, Seq(0.8f, 0.6f)), (1L, Seq(0.80003f, 0.59996f)))
+      .toDF("__ivf_c", "__ivf_cv")
+    val assigned = Transforms.ivfAssign(v, col("vid"), col("v"), cents)
+      .select(col("__ivf_bucket")).as[Long].collect().toSeq
+    val probed = Transforms.ivfProbe(v, col("vid"), col("v"), cents, 2)
+      .select(col("__ivf_bucket")).as[Long].collect().toSeq
+    assert(assigned == Seq(0L), s"ivfAssign: $assigned")
+    assert(probed == Seq(0L, 1L), s"ivfProbe: $probed")
+    // on the corpus, every vector's assigned bucket is its first probe
+    val emb = Tables.embeddings(spark, sf001)
+    val cs = Transforms.ivfCentroids(emb, col("vec_id"), col("embedding"), 8, iters = 1)
+      .localCheckpoint()
+    val a = Transforms.ivfAssign(emb, col("vec_id"), col("embedding"), cs)
+      .select(col("__ivf_id"), col("__ivf_bucket")).as[(Long, Long)].collect().toMap
+    val firstProbe = Transforms.ivfProbe(emb, col("vec_id"), col("embedding"), cs, 3)
+      .select(col("__ivf_id"), col("__ivf_bucket")).as[(Long, Long)].collect()
+      .groupBy(_._1).view.mapValues(_.head._2).toMap
+    assert(a.nonEmpty && a == firstProbe)
+  }
+
   test("chunkByRange keeps rows with a NULL bucket (null-safe join)") {
     import spark.implicits._
     val df = (Seq[java.lang.Long](null) ++ (1 to 50).map(i => java.lang.Long.valueOf(i)))
@@ -571,6 +597,18 @@ class TransformsSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("sk"), r.getString(0), r.getString(1)))
     assert(out.toSeq == Seq((1L, "api", "en"), (2L, "api", "fr"),
       (3L, "web", "de"), (4L, "web", "en")))
+  }
+
+  test("surrogateKeys keys NULL natural keys densely with the rest") {
+    import spark.implicits._
+    val dim = Seq[(String, String)](("web", "en"), (null, "fr"), ("api", "de"),
+        (null, "de")).toDF("source", "lang")
+    val out = Transforms.surrogateKeys(dim, col("source"), col("lang"))
+      .select(col("sk"), col("source"), col("lang")).as[(Long, String, String)]
+      .collect().sortBy(_._1).toSeq
+    assert(out.map(_._1) == (1L to 4L))
+    assert(out == Seq((1L, null, "de"), (2L, null, "fr"), (3L, "api", "de"),
+      (4L, "web", "en")))
   }
 
   test("drawdown computes the running peak and peak-minus-value") {
