@@ -13,6 +13,17 @@ if [ -n "$copies" ]; then
   echo "gate: ops/streaming copy graft.api helpers (call Transforms instead)" >&2
   exit 1
 fi
+# one scratch-dir function: only graft.Tables.scratch reads
+# java.io.tmpdir; and one commit protocol: SnapshotTable.commit's
+# link/rename publish, with no pluggable CommitProtocol seam
+strays=$( { grep -rln 'java\.io\.tmpdir' src/main/scala/graft |
+            grep -vx 'src/main/scala/graft/Tables\.scala'
+            grep -rn 'CommitProtocol' src; } || true)
+if [ -n "$strays" ]; then
+  printf '%s\n' "$strays"
+  echo "gate: java.io.tmpdir outside Tables.scratch, or a CommitProtocol reference" >&2
+  exit 1
+fi
 sbt -batch compile test
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} \
   sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_out"

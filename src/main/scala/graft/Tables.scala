@@ -90,9 +90,15 @@ object Tables {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete(): Unit
   }
-  /** Register `path` for best-effort recursive deletion at JVM exit;
-    * returns it for inline use. */
-  def registerScratch(path: String): String = {
+  /** A fresh scratch dir `<java.io.tmpdir>/<prefix>_<uuid8>` (not yet
+    * created), registered for best-effort recursive deletion at JVM
+    * exit. Fresh per call: a fixed path would let a concurrent caller
+    * (parallel test suites; Verify's thread pool; a Bench run
+    * overlapping a Verify run) overwrite files under a still-lazy
+    * DataFrame — the #109 rationale, applied to every fixture sink. */
+  def scratch(prefix: String): String = {
+    val path = s"${System.getProperty("java.io.tmpdir")}/${prefix}_" +
+      java.util.UUID.randomUUID().toString.replace("-", "").take(8)
     scratchHookInstalled
     scratchPaths.add(path)
     path

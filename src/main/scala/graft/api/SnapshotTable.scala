@@ -21,18 +21,22 @@ import org.apache.spark.sql.functions._
   * }}}
   *
   * The COMMIT POINT is the manifest file: data files are fully
-  * written first, then the manifest is published via an atomic
-  * `create(..., overwrite = false)` — a version exists iff its
-  * manifest does, so a reader never observes a half-written version
-  * and a crashed writer leaves only unreferenced data files (GC'able
-  * by listing files absent from every manifest). Two writers racing
-  * to publish the same version: exactly one `create` succeeds, the
-  * loser gets `VersionConflictException` and must retry on top of the
-  * new latest — optimistic concurrency, the delta/iceberg protocol.
-  * The claim is atomic but the content write is not: manifests carry
-  * a line-count trailer, and readers wait out the claim→close window
-  * (see `commit`/`manifestLines`) instead of acting on a truncated
-  * file list.
+  * written first, then the manifest is published by a link/rename
+  * publish — the full payload goes to a hidden temp file, which is
+  * hard-linked (local) or renamed (HDFS) onto `manifest/v<N>` in ONE
+  * atomic, fail-if-exists metadata op (see `commit`). A version
+  * exists iff its manifest does, so a reader never observes a
+  * half-written version and a crashed writer leaves only
+  * unreferenced data files (GC'able by listing files absent from
+  * every manifest). Two writers racing to publish the same version:
+  * exactly one link/rename succeeds, the loser gets
+  * `VersionConflictException` and must retry on top of the new
+  * latest — optimistic concurrency, the delta/iceberg protocol.
+  * Every manifest ends in a `#eof <n>` line-count trailer, and a
+  * reader accepts a manifest only when the trailer matches (see
+  * `manifestLines`): the trailer is the seal for the `CREATE_NEW`
+  * fallback on filesystems without hard links, which creates the
+  * file and writes it in two steps.
   *
   * Scale posture: a manifest holds one line per live FILE (= per
   * bucket per rewrite), i.e. metadata-scale — reading it on the
@@ -42,8 +46,8 @@ import org.apache.spark.sql.functions._
   * carried into the new manifest BY REFERENCE. At 100 TB the bucket
   * count is sized so one bucket ≈ one task's worth of data (e.g.
   * 64 ki buckets for ~1.5 GiB each) and the same layout works
-  * verbatim; the one environment caveat is the publish step — HDFS
-  * `create(overwrite=false)` is atomic, S3 needs a catalog CAS
+  * verbatim; the one environment caveat is the publish step — it
+  * needs rename-no-replace (local or HDFS); S3 needs a catalog CAS
   * (documented non-goal here, same reason iceberg has a catalog).
   *
   * Readers resolve a manifest ONCE per query plan (snapshot
@@ -62,141 +66,6 @@ object SnapshotTable {
     * caller, not spin the retry loop. */
   final class ConstraintViolationException(msg: String)
       extends RuntimeException(msg)
-
-  /** How a fully-composed manifest payload becomes version N — the
-    * pluggable single-winner publish step (round 16, VERDICT r15 ask
-    * 5: the documented S3 caveat as code, not prose). The contract
-    * every implementation must honor: exactly one concurrent caller
-    * per target succeeds; every other raises
-    * [[VersionConflictException]]; and a reader that sees the target
-    * EXIST can rely on [[manifestLines]]' completeness rules (either
-    * the content landed atomically with the claim, or the EofMarker
-    * trailer seals it). */
-  sealed trait CommitProtocol {
-    def publish(f: FileSystem, target: Path, payload: Array[Byte]): Unit
-  }
-
-  object CommitProtocol {
-
-    /** Default: content and claim land in ONE atomic metadata op —
-      * `Files.createLink` on local paths (kernel-atomic,
-      * fail-if-exists; falls back to an atomic CREATE_NEW write on
-      * filesystems without hard links), `FileSystem.rename` elsewhere
-      * (atomic at the HDFS namenode, false when the destination
-      * exists). The strongest protocol wherever rename-no-replace
-      * exists — use it on HDFS and local stores. */
-    case object LinkRename extends CommitProtocol {
-      def publish(f: FileSystem, target: Path, payload: Array[Byte]): Unit =
-        linkRenamePublish(f, target, payload)
-    }
-
-    /** Lock-file emulation for stores WITHOUT atomic rename-no-replace
-      * (the documented S3 posture): claim an adjacent
-      * `.lock-<target>` via fail-if-exists create — on S3 this maps
-      * to a conditional PUT (`If-None-Match: *`, supported natively
-      * since 2024) — re-check the target under the lock, write the
-      * full payload (the EofMarker trailer is the completeness seal a
-      * reader overlapping this non-atomic content write relies on),
-      * then release the lock. A claimant that CRASHES mid-publish
-      * leaves (a) a committed target plus a stale lock — harmless,
-      * later writers of that version conflict on the target check —
-      * (b) a lock with no target, or (c) a CLAIMED-BUT-EMPTY target
-      * (died between create and the content write; review r17), both
-      * of which would wedge the version: locks AND empty targets
-      * older than `staleLockMs` are therefore broken by the next
-      * writer, the lock-break guarded against deleting a freshly
-      * re-created lock by an mtime identity re-check (size the window
-      * to your longest publish latency, the same contract as vacuum's
-      * `orphanMinAgeMs`). */
-    final case class LockFile(staleLockMs: Long = 5L * 60 * 1000)
-        extends CommitProtocol {
-      def publish(f: FileSystem, target: Path, payload: Array[Byte]): Unit = {
-        val lock = new Path(target.getParent, s".lock-${target.getName}")
-        def conflict(): Nothing = throw new VersionConflictException(
-          s"version already committed at $target")
-        def targetCommitted(): Boolean =
-          try f.getFileStatus(target).getLen > 0
-          catch { case _: java.io.FileNotFoundException => false }
-        if (targetCommitted()) conflict()
-        // break a stale claim (crashed writer) past the age window.
-        // TOCTOU guard (review r17): between observing staleness and
-        // deleting, ANOTHER writer may break the lock and claim a
-        // FRESH one — an unconditional delete would remove the live
-        // winner's lock and admit two publishers. Re-stat immediately
-        // before the delete and only remove the lock if its mtime is
-        // STILL the stale one we observed (a re-created lock carries
-        // a fresh mtime, so identity-by-mtime distinguishes them).
-        try {
-          val seen = f.getFileStatus(lock).getModificationTime
-          if (seen <= System.currentTimeMillis() - staleLockMs &&
-              f.getFileStatus(lock).getModificationTime == seen)
-            f.delete(lock, false)
-        } catch { case _: java.io.FileNotFoundException => () }
-        if (!atomicClaim(f, lock)) conflict()
-        var published = false
-        try {
-          // lost an earlier race: the winner published between our
-          // pre-check and our claim of the (now re-created) lock.
-          // Crash-case (c) recovery (review r17): a previous LockFile
-          // writer that died between create(target) and the content
-          // write leaves a CLAIMED-BUT-EMPTY target — readers reject
-          // it (no trailer, no content) and writers would conflict on
-          // it forever, wedging the version. Under the held lock, an
-          // EMPTY target older than the stale window is that crash's
-          // debris, not a commit — remove it and publish. (A NONEMPTY
-          // trailer-less target is indistinguishable from a legacy
-          // manifest and is honored as a conflict; a torn nonempty
-          // write needs a partial flush of one small buffer, the
-          // documented torn-page residual.)
-          if (targetCommitted()) conflict()
-          try {
-            val st = f.getFileStatus(target) // exists but empty
-            if (st.getLen == 0 &&
-                st.getModificationTime <= System.currentTimeMillis() - staleLockMs)
-              f.delete(target, false)
-            else conflict()
-          } catch { case _: java.io.FileNotFoundException => () }
-          val out = try f.create(target, /* overwrite = */ false) catch {
-            case _: org.apache.hadoop.fs.FileAlreadyExistsException => conflict()
-            case e: java.io.IOException =>
-              if (f.exists(target)) conflict() else throw e
-          }
-          try out.write(payload) finally out.close()
-          published = true
-        } finally {
-          // release whether we published or conflicted; if the JVM
-          // dies before this line, the stale-lock break above unwedges
-          // the version for the next writer
-          try f.delete(lock, false)
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-        assert(published)
-      }
-    }
-
-    /** Atomic fail-if-exists claim of an empty marker file. Local
-      * paths use NIO `createFile` (open(O_CREAT|O_EXCL) — atomic at
-      * the kernel; Hadoop's RawLocalFileSystem `create(overwrite =
-      * false)` is check-then-act and can admit two winners under true
-      * contention). Other schemes use `FileSystem.create(overwrite =
-      * false)`, atomic at the HDFS namenode and a conditional PUT on
-      * object stores that support it. Returns false when the marker
-      * already exists. */
-    private def atomicClaim(f: FileSystem, p: Path): Boolean = {
-      val uri = p.toUri
-      if (uri.getScheme == null || uri.getScheme == "file") {
-        try { java.nio.file.Files.createFile(
-          java.nio.file.Paths.get(uri.getPath)); true }
-        catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      } else {
-        try { f.create(p, /* overwrite = */ false).close(); true }
-        catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-          case e: java.io.IOException => if (f.exists(p)) false else throw e
-        }
-      }
-    }
-  }
 
   /** Bucket assignment: stable hash of the key, NOT dependent on
     * partition count or row order. Must be the same expression for
@@ -248,24 +117,22 @@ object SnapshotTable {
       }
   }
 
-  /** Trailing manifest marker: `create(overwrite=false)` is an atomic
-    * EXISTENCE claim (single winner) but not an atomic CONTENT
-    * publish — a reader overlapping the winner's write could observe
-    * a truncated manifest (caught live by the true-contention race
-    * spec: a racing `mergeInto` read a half-written manifest and
-    * would have dropped every file the missing tail referenced). The
-    * marker carries the line count, so [[manifestLines]] can tell
-    * "complete" from "in-flight" and wait out the handful of
-    * milliseconds between claim and close. */
+  /** Trailing manifest marker `#eof <n>`, n = the number of data
+    * lines: the completeness seal [[manifestLines]] checks. The
+    * link/rename publish lands claim and content in one metadata op,
+    * so there it is belt; the `CREATE_NEW` fallback for filesystems
+    * without hard links creates the file and writes it in two steps,
+    * and the trailer is what lets a reader overlapping that write tell
+    * "complete" from "in-flight" instead of acting on a truncated file
+    * list. */
   private val EofMarker = "#eof "
 
   /** Publish `lines` as version `version`. Single-winner AND
-    * all-or-nothing (round 15 — ADVICE r14 closed the claim→content
-    * window): the full payload is written to a hidden temp file
-    * first, then published in ONE atomic metadata operation, so a
-    * crashed writer can never leave a claimed-but-empty version that
-    * wedges the version number forever (the pre-r15 failure mode —
-    * `createFile` claim, then crash before the content write).
+    * all-or-nothing: the full payload (sealed by the [[EofMarker]]
+    * trailer) is written to a hidden `.tmp-` file first, then
+    * published in ONE atomic metadata operation, so a crashed writer
+    * can never leave a claimed-but-empty version that wedges the
+    * version number forever.
     *
     *   - LOCAL (`file:`) paths publish via `Files.createLink(target,
     *     tmp)` — link(2) is kernel-atomic and fails with
@@ -278,50 +145,37 @@ object SnapshotTable {
     *     target)` — atomic at the namenode and false when the
     *     destination exists, the classic committer pattern.
     *
-    * The [[EofMarker]] trailer is still written (belt for
-    * eventually-consistent stores and for readers of manifests
-    * produced by older writers — see [[manifestLines]]). The loser's
-    * temp file is deleted before raising the conflict.
+    * The loser's temp file is deleted before raising the conflict.
     * `private[graft]` so the single-winner property is testable. */
   private[graft] def commit(spark: SparkSession, base: String, version: Int,
-                            lines: Seq[String],
-                            protocol: CommitProtocol = CommitProtocol.LinkRename): Unit = {
+                            lines: Seq[String]): Unit = {
     val f = fs(spark, base)
     val p = manifestPath(base, version)
     f.mkdirs(p.getParent)
     val payload = (lines :+ s"$EofMarker${lines.size}")
       .mkString("\n").getBytes("UTF-8")
-    protocol.publish(f, p, payload)
-  }
-
-  /** The [[CommitProtocol.LinkRename]] publish body (pre-r16 this WAS
-    * `commit`; the protocol seam extracted it verbatim). */
-  private def linkRenamePublish(f: FileSystem, p: Path,
-                                payload: Array[Byte]): Unit = {
-    val version = p.getName
-    val tmpName = s".tmp-$version-${java.util.UUID.randomUUID().toString.take(8)}"
+    val tmpName = s".tmp-v$version-${java.util.UUID.randomUUID().toString.take(8)}"
     val uri = p.toUri
     if (uri.getScheme == null || uri.getScheme == "file") {
       val jp = java.nio.file.Paths.get(uri.getPath)
       val jtmp = jp.getParent.resolve(tmpName)
       // finally, not just the FAEE arm: ANY publish failure must not
-      // leave .tmp litter behind (review, round 15); the link either
-      // landed (tmp is a second name for the manifest — safe to drop)
-      // or it didn't (tmp is garbage)
+      // leave .tmp litter behind; the link either landed (tmp is a
+      // second name for the manifest — safe to drop) or it didn't
+      // (tmp is garbage)
       try {
         java.nio.file.Files.write(jtmp, payload)
         try java.nio.file.Files.createLink(jp, jtmp) catch {
           case e: java.nio.file.FileAlreadyExistsException =>
             throw new VersionConflictException(
-              s"version $version already committed at $p: $e")
+              s"version v$version already committed at $p: $e")
           // Filesystems without hard links (CIFS/FAT/some FUSE or
           // overlay mounts) fail link(2) with UOE or a generic
-          // FileSystemException (ADVICE r15) — fall back to a single
-          // atomic-create write (CREATE_NEW: still single-winner) of
-          // the full payload. This is the r14-format publish: the
-          // claim and the content land in one write() call rather
-          // than one metadata op, and the EofMarker trailer remains
-          // the completeness seal readers check on that path.
+          // FileSystemException — fall back to an atomic-create write
+          // (CREATE_NEW: still single-winner) of the full payload. The
+          // claim and the content land in two steps here, not one
+          // metadata op, so the EofMarker trailer is the completeness
+          // seal readers check on this path.
           case linkFail @ (_: UnsupportedOperationException |
                            _: java.nio.file.FileSystemException) =>
             try java.nio.file.Files.write(jp, payload,
@@ -330,7 +184,7 @@ object SnapshotTable {
             catch {
               case e: java.nio.file.FileAlreadyExistsException =>
                 throw new VersionConflictException(
-                  s"version $version already committed at $p: $e")
+                  s"version v$version already committed at $p: $e")
               case scala.util.control.NonFatal(e) =>
                 e.addSuppressed(linkFail); throw e
             }
@@ -343,9 +197,9 @@ object SnapshotTable {
         val out = f.create(tmp, /* overwrite = */ true)
         try out.write(payload) finally out.close()
         // A failed rename is a LOST RACE only when the destination
-        // exists (ADVICE r15): an IOException or a false return for
-        // any other reason (transient namenode fault, permissions) is
-        // an infrastructure failure and must surface as such — a
+        // exists: an IOException or a false return for any other
+        // reason (transient namenode fault, permissions) is an
+        // infrastructure failure and must surface as such — a
         // retryingCommit caller would otherwise rebase and re-attempt
         // forever against a store that cannot publish.
         val renameErr: Option[java.io.IOException] =
@@ -353,7 +207,7 @@ object SnapshotTable {
           catch { case e: java.io.IOException => Some(e) }
         if (!won) {
           if (f.exists(p)) throw new VersionConflictException(
-            s"version $version already committed at $p")
+            s"version v$version already committed at $p")
           else throw renameErr.getOrElse(new java.io.IOException(
             s"rename $tmp -> $p returned false but destination is absent"))
         }
@@ -367,87 +221,36 @@ object SnapshotTable {
 
   /** Create the table as version 0 (fails if any version exists). */
   def create(spark: SparkSession, base: String, rows: DataFrame,
-             keyCol: String, numBuckets: Int,
-             protocol: CommitProtocol = CommitProtocol.LinkRename): Unit = {
+             keyCol: String, numBuckets: Int): Unit = {
     require(latestVersion(spark, base) < 0, s"table already exists at $base")
     commit(spark, base, 0,
       headersOf(None, Nil, Some((numBuckets, keyCol))) ++
-        writeDataFiles(spark, base, rows, keyCol, numBuckets), protocol)
+        writeDataFiles(spark, base, rows, keyCol, numBuckets))
   }
 
-  /** Read a manifest. Under the round-15 protocol a manifest is
-    * complete the instant it exists (claim and content land in one
-    * atomic link/rename — see [[commit]]), so the trailer check is
-    * pure belt. Manifests from OLDER writers still need care:
-    *
-    *   - r14-format (trailer, claim-then-write): a matching
-    *     [[EofMarker]] trailer means complete; a mismatch means an
-    *     in-flight or crashed r14 writer — wait out the bounded
-    *     window, then fail loudly rather than read a truncated list.
-    *   - pre-trailer LEGACY (no marker at all, ADVICE r14): a
-    *     NONEMPTY trailer-less manifest is accepted as
-    *     legacy-complete once two consecutive reads agree — old
-    *     tables stay readable forever, including after newer
-    *     trailered versions are committed beside them. An EMPTY
-    *     trailer-less manifest is NOT accepted (review tightened
-    *     this, round 15): that is the exact signature of an r14
-    *     writer that crashed between its atomic claim and its single
-    *     content write — treating it as an empty table would let
-    *     mergeInto silently REPLACE the table's content; it waits out
-    *     the bounded window and fails loudly instead (the pre-r15
-    *     contract). The residual blind spot — an r14 single write
-    *     truncated mid-payload to a nonempty prefix — requires a
-    *     partial write() of one small buffer, which no local
-    *     filesystem produces short of a torn page. */
+  /** Read a manifest: its data lines once the [[EofMarker]] trailer
+    * matches their count. A manifest published by the link/rename
+    * path is complete the instant it exists, so the first read
+    * returns. A missing or mismatched trailer means a `CREATE_NEW`
+    * fallback write still in flight (or a writer that crashed inside
+    * it): poll for a bounded 2 s window, then fail loudly rather than
+    * hand a truncated file list to a caller — a `mergeInto` acting on
+    * one would silently drop every file the missing tail referenced,
+    * and an EMPTY file treated as an empty table would let it REPLACE
+    * the table's content. */
   private def manifestLines(spark: SparkSession, base: String, version: Int): Seq[String] = {
     val p = manifestPath(base, version)
     val f = fs(spark, base)
     require(f.exists(p), s"no committed version $version at $base")
-    // (data lines, marker seen, marker matches)
-    def readOnce(): (Seq[String], Boolean, Boolean) = {
+    var left = 40
+    while (left > 0) {
       val in = f.open(p)
       val all = try scala.io.Source.fromInputStream(in, "UTF-8")
         .getLines().toList.filter(_.nonEmpty) finally in.close()
       val (data, markers) = all.partition(!_.startsWith(EofMarker))
-      val ok = markers.lastOption
-        .flatMap(m => m.stripPrefix(EofMarker).trim.toIntOption)
-        .contains(data.size)
-      (data, markers.nonEmpty, ok)
-    }
-    // Legacy (trailer-less) acceptance fingerprint: the data lines
-    // PLUS the file's length and mtime. ADVICE r15 tightened this
-    // gate: two agreeing reads 50 ms apart could still accept the
-    // flushed nonempty PREFIX of an r14 writer that crashed
-    // mid-payload. Acceptance now requires five consecutive agreeing
-    // reads (~200 ms span) whose byte length and modification time
-    // never move — a file that is still being appended to (or whose
-    // metadata churns) resets the streak, so the partial-prefix
-    // window shrinks from "one 50 ms gap" to "frozen for the full
-    // observation span with frozen stat()".
-    def statOf(): Option[(Long, Long)] =
-      try { val s = f.getFileStatus(p); Some((s.getLen, s.getModificationTime)) }
-      catch { case scala.util.control.NonFatal(_) => None }
-    // A LIVE LockFile publisher mid-content-write is indistinguishable
-    // from a legacy manifest by content alone (trailer-less, and a
-    // flushed prefix can hold still for the full observation span if
-    // the writer stalls) — but it holds its `.lock-v<N>` for the whole
-    // write, so trailer-less acceptance additionally requires the lock
-    // to be ABSENT (round 16, part of the CommitProtocol seam).
-    val lock = new Path(p.getParent, s".lock-${p.getName}")
-    def lockHeld(): Boolean =
-      try f.exists(lock) catch { case scala.util.control.NonFatal(_) => false }
-    var prev: Option[(Seq[String], Option[(Long, Long)])] = None
-    var streak = 0
-    var left = 40
-    while (left > 0) {
-      val st = statOf()
-      val (data, sawMarker, ok) = readOnce()
-      if (ok) return data
-      if (!sawMarker && data.nonEmpty && st.isDefined && !lockHeld() &&
-          prev.contains((data, st))) streak += 1
-      else streak = 0
-      if (streak >= 4) return data
-      prev = if (sawMarker) None else Some((data, st))
+      if (markers.lastOption
+            .flatMap(m => m.stripPrefix(EofMarker).trim.toIntOption)
+            .contains(data.size)) return data
       left -= 1
       if (left > 0) Thread.sleep(50)
     }
@@ -542,8 +345,8 @@ object SnapshotTable {
   /** One manifest read, fully parsed. Every operation below derives
     * what it needs from ONE of these instead of re-reading the
     * manifest per derived view (review r17: `asOf` was paying two
-    * GET+parse+completeness passes, `addColumn` four — on object
-    * storage or a legacy trailer-less manifest each pass is real
+    * GET+parse+completeness passes, `addColumn` four — on remote
+    * storage or a manifest still being sealed each pass is real
     * latency, and the manifest is immutable per (base, version), so
     * a single read is trivially consistent). */
   private def parsedManifestAll(spark: SparkSession, base: String,
@@ -773,8 +576,7 @@ object SnapshotTable {
     * column is always nullable (a NOT NULL add would require a
     * backfill — a different command). */
   def addColumn(spark: SparkSession, base: String, colName: String,
-                ddlType: String,
-                protocol: CommitProtocol = CommitProtocol.LinkRename): Int = {
+                ddlType: String): Int = {
     val v = latestVersion(spark, base)
     require(v >= 0, s"no table at $base")
     val m = parsedManifestAll(spark, base, v)
@@ -797,7 +599,7 @@ object SnapshotTable {
         nullable = true))
     commit(spark, base, v + 1,
       headersOf(Some(widened), m.colMap, m.buckets, m.checks, m.cdf) ++
-        m.fileLines, protocol)
+        m.fileLines)
     v + 1
   }
 
@@ -815,8 +617,7 @@ object SnapshotTable {
     * check). Rename-back (`to` == the physical name) simply drops the
     * mapping entry. */
   def renameColumn(spark: SparkSession, base: String, from: String,
-                   to: String,
-                   protocol: CommitProtocol = CommitProtocol.LinkRename): Int = {
+                   to: String): Int = {
     requireHeaderSafe(to)
     val v = latestVersion(spark, base)
     require(v >= 0, s"no table at $base")
@@ -848,7 +649,7 @@ object SnapshotTable {
       (if (to == physName) Nil else Seq((physName, to)))
     commit(spark, base, v + 1,
       headersOf(m.schema, newMap, m.buckets, m.checks, m.cdf) ++
-        m.fileLines, protocol)
+        m.fileLines)
     v + 1
   }
 
@@ -867,9 +668,7 @@ object SnapshotTable {
     * the header rides every commit like schema/rename metadata, and
     * time travel sees each version's own constraint set. */
   def addCheckConstraint(spark: SparkSession, base: String, name: String,
-                         checkExpr: String,
-                         protocol: CommitProtocol = CommitProtocol.LinkRename)
-      : Int = {
+                         checkExpr: String): Int = {
     requireHeaderSafe(name)
     require(!checkExpr.contains('\t') && !checkExpr.contains('\n') &&
             checkExpr.nonEmpty,
@@ -889,16 +688,15 @@ object SnapshotTable {
       "existing rows violate it; no version was committed")
     commit(spark, base, v + 1,
       headersOf(m.schema, m.colMap, m.buckets,
-        m.checks :+ ((name, checkExpr)), m.cdf) ++ m.fileLines, protocol)
+        m.checks :+ ((name, checkExpr)), m.cdf) ++ m.fileLines)
     v + 1
   }
 
   /** DROP CONSTRAINT: publish v+1 without the named CHECK header — a
     * pure metadata commit. Loud on an unknown name (a typo'd drop
     * that "succeeds" leaves the caller believing enforcement ended). */
-  def dropCheckConstraint(spark: SparkSession, base: String, name: String,
-                          protocol: CommitProtocol = CommitProtocol.LinkRename)
-      : Int = {
+  def dropCheckConstraint(spark: SparkSession, base: String,
+                          name: String): Int = {
     val v = latestVersion(spark, base)
     require(v >= 0, s"no table at $base")
     val m = parsedManifestAll(spark, base, v)
@@ -906,7 +704,7 @@ object SnapshotTable {
       s"no CHECK constraint $name on $base")
     commit(spark, base, v + 1,
       headersOf(m.schema, m.colMap, m.buckets,
-        m.checks.filterNot(_._1 == name), m.cdf) ++ m.fileLines, protocol)
+        m.checks.filterNot(_._1 == name), m.cdf) ++ m.fileLines)
     v + 1
   }
 
@@ -924,16 +722,14 @@ object SnapshotTable {
     * bootstraps from `asOf(enablingVersion)` and streams from there,
     * exactly Delta CDF's contract. Write cost while on: O(change set)
     * per commit; readers scan files and never re-diff versions. */
-  def enableChangeFeed(spark: SparkSession, base: String,
-                       protocol: CommitProtocol = CommitProtocol.LinkRename)
-      : Int = {
+  def enableChangeFeed(spark: SparkSession, base: String): Int = {
     val v = latestVersion(spark, base)
     require(v >= 0, s"no table at $base")
     val m = parsedManifestAll(spark, base, v)
     require(!m.cdf, s"change feed already enabled on $base")
     commit(spark, base, v + 1,
       headersOf(m.schema, m.colMap, m.buckets, m.checks, cdf = true) ++
-        m.fileLines, protocol)
+        m.fileLines)
     v + 1
   }
 
@@ -1030,14 +826,13 @@ object SnapshotTable {
     * the union of SURVIVING manifests — restore re-references the old
     * files in the newest manifest, which every retention window
     * keeps). */
-  def restore(spark: SparkSession, base: String, toVersion: Int,
-              protocol: CommitProtocol = CommitProtocol.LinkRename): Int = {
+  def restore(spark: SparkSession, base: String, toVersion: Int): Int = {
     val v = latestVersion(spark, base)
     require(v >= 0, s"no table at $base")
     require(toVersion >= 0 && toVersion <= v,
       s"cannot restore $base to version $toVersion (latest is $v)")
     commit(spark, base, v + 1,
-      manifestLines(spark, base, toVersion), protocol)
+      manifestLines(spark, base, toVersion))
     v + 1
   }
 
@@ -1146,8 +941,7 @@ object SnapshotTable {
     * the clone still references and breaks it, so source retention
     * must cover the lifetime of any clone taken from it. */
   def cloneShallow(spark: SparkSession, srcBase: String, dstBase: String,
-                   version: Int = -1,
-                   protocol: CommitProtocol = CommitProtocol.LinkRename): Int = {
+                   version: Int = -1): Int = {
     // a clone nested under the source's directory tree (or vice versa)
     // would let the clone's vacuum candidate walk see the other
     // table's files, breaking the "clone vacuum can never touch source
@@ -1173,7 +967,7 @@ object SnapshotTable {
       .makeQualified(srcP).toString
     commit(spark, dstBase, 0,
       Seq(s"$ParentHeader$srcUri\t$v") ++
-        manifestLines(spark, srcBase, v), protocol)
+        manifestLines(spark, srcBase, v))
     0
   }
 
@@ -1201,8 +995,7 @@ object SnapshotTable {
     * version while the parent references it — production flows
     * re-compact the parent (one [[compact]]) to re-home the data, then
     * drop the branch. Returns the parent's new version. */
-  def mergeBack(spark: SparkSession, branchBase: String,
-                protocol: CommitProtocol = CommitProtocol.LinkRename): Int = {
+  def mergeBack(spark: SparkSession, branchBase: String): Int = {
     val branchHead = latestVersion(spark, branchBase)
     require(branchHead >= 0, s"no table at $branchBase")
     val v0 = manifestLines(spark, branchBase, 0)
@@ -1223,7 +1016,7 @@ object SnapshotTable {
     // (visible when branchHead == 0 — a no-commit branch's head IS v0)
     commit(spark, parentBase, parentHead + 1,
       manifestLines(spark, branchBase, branchHead)
-        .filterNot(_.startsWith(ParentHeader)), protocol)
+        .filterNot(_.startsWith(ParentHeader)))
     parentHead + 1
   }
 
@@ -1305,33 +1098,34 @@ object SnapshotTable {
     val dataDir = new Path(s"$base/data")
     var deleted = 0
     val ageCutoff = System.currentTimeMillis() - orphanMinAgeMs
+    // tolerant deletes and listings: a concurrent writer's entries can
+    // vanish between list and delete — skip, never crash; a file
+    // missed this pass is a candidate for the next vacuum
+    def tryDelete(p: Path): Boolean =
+      try f.delete(p, false)
+      catch { case scala.util.control.NonFatal(_) => false }
+    def list(dir: Path): List[org.apache.hadoop.fs.FileStatus] =
+      try f.listStatus(dir).toList
+      catch { case scala.util.control.NonFatal(_) => Nil }
+    // every entry under `dir`, directories included, any depth
+    def walkAll(dir: Path): List[org.apache.hadoop.fs.FileStatus] =
+      list(dir).flatMap(s =>
+        if (s.isDirectory) s :: walkAll(s.getPath) else List(s))
     // writers KILLED mid-publish (process death skips even commit's
-    // finally) leave .tmp-v* claims-in-progress — and, under the
-    // LockFile protocol, .lock-v* claims — in manifest/; sweep the
-    // aged ones here (a stale lock whose version DID commit is pure
-    // litter, and one whose version did not is equally collectable —
-    // the next writer would break it anyway). Live publishers' files
-    // are milliseconds old and spared by the same guard.
-    (try f.listStatus(new Path(s"$base/manifest")).toList
-     catch { case scala.util.control.NonFatal(_) => Nil })
+    // finally) leave .tmp-v* payloads in manifest/; sweep the aged
+    // ones here. Live publishers' files are milliseconds old and
+    // spared by the same guard.
+    list(new Path(s"$base/manifest"))
       .filter(s => !s.isDirectory &&
-        (s.getPath.getName.startsWith(".tmp-") ||
-         s.getPath.getName.startsWith(".lock-")) &&
+        s.getPath.getName.startsWith(".tmp-") &&
         s.getModificationTime <= ageCutoff)
-      .foreach { s =>
-        val ok = try f.delete(s.getPath, false)
-                 catch { case scala.util.control.NonFatal(_) => false }
-        if (ok) deleted += 1
-      }
+      .foreach(s => if (tryDelete(s.getPath)) deleted += 1)
     if (f.exists(dataDir)) {
       // Tolerant recursive walk (replaces f.listFiles(recursive):
       // caught live by the true-contention race spec): a CONCURRENT
-      // writer's commit-protocol scratch (`_temporary`) churns
-      // underneath the listing, and any entry can vanish between
-      // list and stat — skip, never crash. A file missed this pass
-      // is simply a candidate for the next vacuum. `_temporary` /
-      // hidden subtrees yield victims only when the WHOLE subtree is
-      // stale — its newest entry (any depth) older than the age guard
+      // writer's Spark output scratch (`_temporary`) churns
+      // underneath the listing. `_temporary` / hidden subtrees yield
+      // victims only when the WHOLE subtree is stale — its newest entry (any depth) older than the age guard
       // (round 15, ADVICE r14; review tightened the gate: the top
       // dir's own mtime is NOT refreshed by deep churn under POSIX —
       // only direct-child create/delete — so a dir-mtime gate would
@@ -1340,10 +1134,6 @@ object SnapshotTable {
       // in the scratch for the full window). A crashed writer's
       // scratch goes whole-subtree stale and is collected; the
       // pre-r15 unconditional skip leaked it forever.
-      def walkAll(dir: Path): List[org.apache.hadoop.fs.FileStatus] =
-        (try f.listStatus(dir).toList
-         catch { case scala.util.control.NonFatal(_) => Nil })
-          .flatMap(s => if (s.isDirectory) s :: walkAll(s.getPath) else List(s))
       // Whole-stale hidden subtrees yield BOTH their files (any
       // extension — everything under a scratch tree frozen past the
       // age guard is a dead writer's litter) and their directory
@@ -1356,39 +1146,31 @@ object SnapshotTable {
       val staleScratchFiles = scala.collection.mutable.ListBuffer[Path]()
       val staleScratchDirs = scala.collection.mutable.ListBuffer[Path]()
       def walk(dir: Path): List[org.apache.hadoop.fs.FileStatus] =
-        (try f.listStatus(dir).toList
-         catch { case scala.util.control.NonFatal(_) => Nil })
-          .flatMap { s =>
-            val n = s.getPath.getName
-            if (s.isDirectory) {
-              if (n == "_temporary" || n.startsWith(".")) {
-                val sub = walkAll(s.getPath)
-                val newest = (s.getModificationTime ::
-                  sub.map(_.getModificationTime)).max
-                if (newest <= ageCutoff) {
-                  staleScratchFiles ++= sub.filterNot(_.isDirectory)
-                    .map(_.getPath).filterNot(p => live.contains(p.toString))
-                  staleScratchDirs += s.getPath
-                  staleScratchDirs ++= sub.filter(_.isDirectory).map(_.getPath)
-                }
-                Nil
-              } else walk(s.getPath)
-            } else List(s)
-          }
+        list(dir).flatMap { s =>
+          val n = s.getPath.getName
+          if (s.isDirectory) {
+            if (n == "_temporary" || n.startsWith(".")) {
+              val sub = walkAll(s.getPath)
+              val newest = (s.getModificationTime ::
+                sub.map(_.getModificationTime)).max
+              if (newest <= ageCutoff) {
+                staleScratchFiles ++= sub.filterNot(_.isDirectory)
+                  .map(_.getPath).filterNot(p => live.contains(p.toString))
+                staleScratchDirs += s.getPath
+                staleScratchDirs ++= sub.filter(_.isDirectory).map(_.getPath)
+              }
+              Nil
+            } else walk(s.getPath)
+          } else List(s)
+        }
       val victims = walk(dataDir)
         .filter(s => s.getPath.getName.endsWith(".parquet") &&
           !live.contains(s.getPath.toString) &&
           s.getModificationTime <= ageCutoff)
         .map(_.getPath) ++ staleScratchFiles
-      victims.foreach { p =>
-        val ok = try f.delete(p, false)
-                 catch { case scala.util.control.NonFatal(_) => false }
-        if (ok) deleted += 1
-      }
-      staleScratchDirs.sortBy(-_.depth).foreach { d =>
-        try f.delete(d, false)   // non-recursive: fails iff non-empty
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
+      victims.foreach(p => if (tryDelete(p)) deleted += 1)
+      // non-recursive: fails iff non-empty
+      staleScratchDirs.sortBy(-_.depth).foreach(tryDelete)
     }
     // change-feed files: same live-set rule — a cdc file referenced
     // by any SURVIVING manifest stays (a follower may still be
@@ -1400,27 +1182,13 @@ object SnapshotTable {
         .filter(v => f.exists(manifestPath(base, v)))
         .flatMap(v => parsedManifestAll(spark, base, v).cdcFiles)
         .toSet
-      def walkCdc(dir: Path): List[org.apache.hadoop.fs.FileStatus] =
-        (try f.listStatus(dir).toList
-         catch { case scala.util.control.NonFatal(_) => Nil })
-          .flatMap(s =>
-            if (s.isDirectory) walkCdc(s.getPath) else List(s))
-      walkCdc(cdcDir)
-        .filter(s => s.getPath.getName.endsWith(".parquet") &&
+      walkAll(cdcDir)
+        .filter(s => !s.isDirectory && s.getPath.getName.endsWith(".parquet") &&
           !liveCdc.contains(s.getPath.toString) &&
           s.getModificationTime <= ageCutoff)
-        .foreach { s =>
-          val ok = try f.delete(s.getPath, false)
-                   catch { case scala.util.control.NonFatal(_) => false }
-          if (ok) deleted += 1
-        }
-      (try f.listStatus(cdcDir).toList
-       catch { case scala.util.control.NonFatal(_) => Nil })
-        .filter(_.isDirectory)
-        .foreach { d =>
-          try f.delete(d.getPath, false) // non-recursive: iff emptied
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
+        .foreach(s => if (tryDelete(s.getPath)) deleted += 1)
+      // non-recursive: removes a per-commit dir iff emptied
+      list(cdcDir).filter(_.isDirectory).foreach(d => tryDelete(d.getPath))
     }
     (dropped.size, deleted)
   }
@@ -1485,8 +1253,7 @@ object SnapshotTable {
     * binning (ntileBySketch) — exact ranks keep the graded layout
     * deterministic. */
   def optimizeCluster(spark: SparkSession, base: String, keyCol0: String,
-                      clusterCol0: String, numBuckets: Int, subFiles: Int,
-                      protocol: CommitProtocol = CommitProtocol.LinkRename): Int = {
+                      clusterCol0: String, numBuckets: Int, subFiles: Int): Int = {
     val v = latestVersion(spark, base)
     require(v >= 0, s"no table at $base")
     require(subFiles >= 1, s"subFiles must be >= 1, got $subFiles")
@@ -1546,8 +1313,7 @@ object SnapshotTable {
     // declared (evolved) schema + rename map ride every commit forward
     commit(spark, base, v + 1,
       headersOf(schema0, meta.colMap, Some((numBuckets, keyCol)),
-        meta.checks, meta.cdf) ++ lines,
-      protocol)
+        meta.checks, meta.cdf) ++ lines)
     v + 1
   }
 
@@ -1700,8 +1466,7 @@ object SnapshotTable {
     * at a time off-peak; the commit is the same atomic manifest
     * publish as any write. */
   def compact(spark: SparkSession, base: String, keyCol: String,
-              numBuckets: Int,
-              protocol: CommitProtocol = CommitProtocol.LinkRename): Int = {
+              numBuckets: Int): Int = {
     val v = latestVersion(spark, base)
     require(v >= 0, s"no table at $base")
     val m = parsedManifestAll(spark, base, v)
@@ -1716,7 +1481,7 @@ object SnapshotTable {
     commit(spark, base, v + 1,
       headersOf(m.schema, m.colMap, Some((numBuckets, physKey)),
         m.checks, m.cdf) ++
-      writeDataFiles(spark, base, rows, physKey, numBuckets), protocol)
+      writeDataFiles(spark, base, rows, physKey, numBuckets))
     v + 1
   }
 
@@ -1733,8 +1498,7 @@ object SnapshotTable {
     * buckets get hot" maintenance action — one table-scale shuffle,
     * the same cost class as OPTIMIZE. */
   def rebucket(spark: SparkSession, base: String, keyCol: String,
-               newNumBuckets: Int,
-               protocol: CommitProtocol = CommitProtocol.LinkRename): Int = {
+               newNumBuckets: Int): Int = {
     val v = latestVersion(spark, base)
     require(v >= 0, s"no table at $base")
     require(newNumBuckets >= 1, s"numBuckets must be >= 1, got $newNumBuckets")
@@ -1745,7 +1509,7 @@ object SnapshotTable {
         s"table $base is bucketed by $recordedKey; rebucket must keep " +
         s"the key column (got $physKey)")
     }
-    compact(spark, base, keyCol, newNumBuckets, protocol)
+    compact(spark, base, keyCol, newNumBuckets)
   }
 
   /** MERGE `changes` into the latest version, publishing latest+1.
@@ -1763,8 +1527,7 @@ object SnapshotTable {
     * (null, 'I', 'u', ...) throws IllegalArgumentException and commits
     * no version. */
   def mergeInto(spark: SparkSession, base: String, changes0: DataFrame,
-                keyCol0: String, numBuckets: Int,
-                protocol: CommitProtocol = CommitProtocol.LinkRename): Int = {
+                keyCol0: String, numBuckets: Int): Int = {
     val v = latestVersion(spark, base)
     require(v >= 0, s"no table at $base")
     val meta = parsedManifestAll(spark, base, v)
@@ -1916,7 +1679,7 @@ object SnapshotTable {
     commit(spark, base, v + 1,
       headersOf(declared, meta.colMap,
         Some((numBuckets, keyCol)), meta.checks, meta.cdf) ++
-        cdcLines ++ newLines, protocol)
+        cdcLines ++ newLines)
     v + 1
     } finally { ch0.unpersist(); () }
   }
@@ -1941,8 +1704,7 @@ object SnapshotTable {
     * (current version, 0, total). */
   def deleteRange(spark: SparkSession, base: String, keyCol: String,
                   statsCol: String, lo: java.math.BigDecimal,
-                  hi: java.math.BigDecimal, numBuckets: Int,
-                  protocol: CommitProtocol = CommitProtocol.LinkRename)
+                  hi: java.math.BigDecimal, numBuckets: Int)
       : (Int, Int, Int) = {
     val v = latestVersion(spark, base)
     require(v >= 0, s"no table at $base")
@@ -1982,7 +1744,7 @@ object SnapshotTable {
       commit(spark, base, v + 1,
         headersOf(m.schema, m.colMap,
           Some((numBuckets, physKey)), m.checks, m.cdf) ++
-          cdcLines ++ newLines, protocol)
+          cdcLines ++ newLines)
       (v + 1, candidates.size, skipped.size)
     } finally { if (m.cdf) { rows.unpersist(); () } }
   }

@@ -379,11 +379,8 @@ object EtlOps {
     * content-preserving, so the aggregate equals the same off the
     * documents parquet. */
   def etlCompactSmallFiles(spark: SparkSession, sf: String): DataFrame = {
-    // per-invocation dirs — the #109 concurrent-caller rationale
-    val tmp = System.getProperty("java.io.tmpdir")
-    val run = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val smallDir = s"$tmp/graft_small_files_$run"
-    val compactDir = s"$tmp/graft_compacted_$run"
+    val smallDir = graft.Tables.scratch("graft_small_files")
+    val compactDir = graft.Tables.scratch("graft_compacted")
     documents(spark, sf).repartition(32)
       .write.mode("overwrite").parquet(smallDir)
     spark.read.parquet(smallDir).coalesce(4)
@@ -888,19 +885,16 @@ object EtlOps {
     * into a fresh 16-bucket SnapshotTable, then ONE MERGE with
     * updates (%7=1: status→'X', price+100), deletes (%7=2) and
     * inserts (the held-out %5=0, %7=3 keys). Returns the table base
-    * path with versions 0 and 1 committed. Both graded ops derive
-    * their oracle from this single derivation. */
-  private def buildSnapshotOrders(spark: SparkSession, sf: String): String = {
-    val tmp = System.getProperty("java.io.tmpdir")
-    val run = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val base = s"$tmp/graft_snaptbl_$run"
+    * path with versions 0 and 1 committed. The snapshot ops and
+    * StreamOps' change-feed op (#305) build on it, and their oracles
+    * derive from this single derivation. */
+  private[ops] def buildSnapshotOrders(spark: SparkSession, sf: String): String = {
     // Each invocation builds a fresh table on purpose — the secondary
     // bench times the MERGE's copy-on-write cost, so a cached table
     // would silently un-measure it. The shared scratch registry keeps
     // repeated runs from accumulating orders-sized temp copies across
-    // JVMs (each JVM deletes every fixture it wrote when it exits)
-    // without adding one shutdown-hook Thread per invocation.
-    graft.Tables.registerScratch(base)
+    // JVMs (each JVM deletes every fixture it wrote when it exits).
+    val base = graft.Tables.scratch("graft_snaptbl")
     val o = orders(spark, sf).select(col("o_orderkey"), col("o_orderstatus"),
       money(col("o_totalprice")).as("o_price"))
     val v0rows = o.where(col("o_orderkey") % 5 =!= 0)
@@ -920,10 +914,10 @@ object EtlOps {
     * persist all paid 3x the scan tasks). A single projection with
     * the same residue-class arms emits the identical row multiset
     * (mergeInto is orderless), so every graded output and oracle is
-    * untouched. Shared by [[buildSnapshotOrders]] (~18 graded ops)
-    * and the change-feed fixture in StreamOps — one definition, so
-    * the two snapshot fixtures cannot drift. */
-  private[ops] def ordersChangeSet(o: DataFrame): DataFrame = {
+    * untouched. Used by [[buildSnapshotOrders]], the one
+    * snapshot-orders fixture (the snapshot ops and the change-feed
+    * op in StreamOps). */
+  private def ordersChangeSet(o: DataFrame): DataFrame = {
     val k = col("o_orderkey")
     val isUpd = k % 5 =!= 0 && k % 7 === 1
     val isDel = k % 5 =!= 0 && k % 7 === 2
@@ -2056,8 +2050,7 @@ object EtlOps {
   def etlSnapshotCloneBranch(spark: SparkSession, sf: String): DataFrame = {
     import graft.api.SnapshotTable
     val base = buildSnapshotOrders(spark, sf)
-    val dst = s"${base}_branch"
-    graft.Tables.registerScratch(dst)
+    val dst = graft.Tables.scratch("graft_snaptbl_branch")
     SnapshotTable.cloneShallow(spark, base, dst)
     require(SnapshotTable.liveFiles(spark, dst, 0) ==
             SnapshotTable.liveFiles(spark, base, 1),
@@ -2101,10 +2094,8 @@ object EtlOps {
   def etlSnapshotBranchMergeback(spark: SparkSession, sf: String): DataFrame = {
     import graft.api.SnapshotTable
     val base = buildSnapshotOrders(spark, sf)
-    val dst = s"${base}_mb"
-    val dst2 = s"${base}_mb2"
-    graft.Tables.registerScratch(dst)
-    graft.Tables.registerScratch(dst2)
+    val dst = graft.Tables.scratch("graft_snaptbl_mb")
+    val dst2 = graft.Tables.scratch("graft_snaptbl_mb2")
     SnapshotTable.cloneShallow(spark, base, dst)
     SnapshotTable.cloneShallow(spark, base, dst2) // same branch point (v1)
     val changes = SnapshotTable.asOf(spark, dst, 0)
@@ -2443,8 +2434,7 @@ object EtlOps {
     }
     def stageAuditPublish(tag: String, mk: DataFrame => DataFrame)
         : Boolean = {
-      val br = s"${base}_wap_$tag"
-      graft.Tables.registerScratch(br)
+      val br = graft.Tables.scratch(s"graft_snaptbl_wap_$tag")
       SnapshotTable.cloneShallow(spark, base, br)
       SnapshotTable.mergeInto(spark, br,
         mk(SnapshotTable.asOf(spark, br, 0)), "o_orderkey",

@@ -207,13 +207,10 @@ object JoinOps {
     // unique layout per invocation: the table name only scaffolds the
     // bucketed read (never in the output), and a fixed name would let
     // a concurrent caller (parallel test suites; Verify's thread pool)
-    // overwrite the files under a still-lazy DataFrame
-    val run = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    // files registered for exit-time deletion (review r17: this was
-    // the one fixture family with NO cleanup — a lineitem-sized copy
-    // leaked per invocation); the catalog entries die with the session
-    val dir = graft.Tables.registerScratch(
-      s"${System.getProperty("java.io.tmpdir")}/graft_bucketed_109_$run")
+    // overwrite the files under a still-lazy DataFrame. Files are
+    // deleted at JVM exit; the catalog entries die with the session
+    val dir = graft.Tables.scratch("graft_bucketed_109")
+    val run = dir.takeRight(8) // its uuid suffix names the session tables
     // the two layout writes are INDEPENDENT jobs — overlap them from a
     // 2-thread pool (guide §2.6: submit independent actions
     // concurrently so the second job's tasks back-fill the first's
@@ -325,13 +322,8 @@ object JoinOps {
     * (plan-asserted in PlanShapeSpec). Oracle: the same aggregate
     * with the year predicate applied statically. */
   def joinPartitionPruned(spark: SparkSession, sf: String): DataFrame = {
-    // per-invocation dirs: a fixed path would let a concurrent caller
-    // (parallel test suites; Verify's thread pool) overwrite the files
-    // under a still-lazy DataFrame (the #109 rationale)
-    val tmp = System.getProperty("java.io.tmpdir")
-    val run = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val factDir = s"$tmp/graft_dpp_fact_$run"
-    val dimDir = s"$tmp/graft_dpp_dim_$run"
+    val factDir = graft.Tables.scratch("graft_dpp_fact")
+    val dimDir = graft.Tables.scratch("graft_dpp_dim")
     orders(spark, sf)
       .withColumn("order_year", year(col("o_orderdate")))
       .write.mode("overwrite").partitionBy("order_year").parquet(factDir)

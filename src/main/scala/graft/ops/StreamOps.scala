@@ -290,10 +290,7 @@ object StreamOps {
     * lives in the TABLE (bounded by live keys); per batch the sink
     * pays the guard read + MERGE of touched buckets only. */
   def streamSnapshotSink(spark: SparkSession, sf: String): DataFrame = {
-    val tmp = System.getProperty("java.io.tmpdir")
-    val run = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val base = s"$tmp/graft_streamsink_$run"
-    graft.Tables.registerScratch(base)
+    val base = graft.Tables.scratch("graft_streamsink")
     val ev = events(spark, sf).select(col("user_id"), col("event_type"),
       col("value"), col("ts"), col("event_id"))
     val mm = ev.agg(min(unix_micros(col("ts"))).as("lo"),
@@ -350,21 +347,9 @@ object StreamOps {
     * metadata. */
   def streamSnapshotChangeFeed(spark: SparkSession, sf: String): DataFrame = {
     import graft.api.SnapshotTable
-    val tmp = System.getProperty("java.io.tmpdir")
-    val run = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val base = s"$tmp/graft_cdf_$run"
-    graft.Tables.registerScratch(base)
-    val o = orders(spark, sf).select(col("o_orderkey"),
-      col("o_orderstatus"), money(col("o_totalprice")).as("o_price"))
-    val v0rows = o.where(col("o_orderkey") % 5 =!= 0)
-    SnapshotTable.create(spark, base, v0rows, "o_orderkey",
-      numBuckets = 16)
-    // v1: the standard upd/del/ins merge — BEFORE the feed is on.
-    // One shared single-pass projection (EtlOps.ordersChangeSet, the
-    // round-19 rewrite of the three-arm unionAll) so this fixture and
-    // buildSnapshotOrders cannot drift.
-    SnapshotTable.mergeInto(spark, base, EtlOps.ordersChangeSet(o),
-      "o_orderkey", numBuckets = 16)
+    // v0 + v1 (the standard upd/del/ins merge) — BEFORE the feed is
+    // on: the shared snapshot-orders fixture, 16 buckets
+    val base = EtlOps.buildSnapshotOrders(spark, sf)
     val vOn = SnapshotTable.enableChangeFeed(spark, base)
     require(vOn == 2, s"enable must commit latest+1, got $vOn")
     // (a) v1's delta was never materialized — crossing it must refuse

@@ -342,8 +342,7 @@ class Round16OpsSpec extends SparkSpec {
 
   test("optimize-cluster (#286): MERGE after a clustered rewrite stays correct; layout is sub-filed") {
     import graft.api.SnapshotTable
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_optclus_" +
-      java.util.UUID.randomUUID().toString.take(8)
+    val base = graft.Tables.scratch("graft_optclus")
     val rows = Tables.orders(spark, sf001)
       .select(col("o_orderkey"), col("o_orderstatus"),
         col("o_totalprice").cast("decimal(18,2)").as("o_price"))

@@ -11,8 +11,7 @@ import graft.api.SnapshotTable
 class Round18OpsSpec extends SparkSpec {
 
   private def freshBase(tag: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_r18_${tag}_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+    graft.Tables.scratch(s"graft_r18_$tag")
 
   private def fixture(): DataFrame =
     spark.range(0, 100)

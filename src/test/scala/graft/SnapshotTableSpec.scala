@@ -11,9 +11,7 @@ import graft.api.SnapshotTable
   * single-winner publishing, and invisibility of unpublished data. */
 class SnapshotTableSpec extends SparkSpec {
 
-  private def freshBase(): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_snapspec_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+  private def freshBase(): String = graft.Tables.scratch("graft_snapspec")
 
   /** keys 0..99, val = key*10, grp = key%3 — small enough to reason
     * about exactly, keyed like a real table. */
@@ -81,8 +79,8 @@ class SnapshotTableSpec extends SparkSpec {
     val base = freshBase()
     SnapshotTable.create(spark, base, fixture(), "k", numBuckets = 8)
     // two optimistic writers both computed their merge on top of v0
-    // and race to publish v1 — exactly one create(overwrite=false)
-    // may win
+    // and race to publish v1 — exactly one link/rename publish may
+    // win
     SnapshotTable.commit(spark, base, 1, Seq("0\tfile:/nonexistent-a"))
     val ex = intercept[SnapshotTable.VersionConflictException] {
       SnapshotTable.commit(spark, base, 1, Seq("0\tfile:/nonexistent-b"))
@@ -290,20 +288,11 @@ class SnapshotTableSpec extends SparkSpec {
     assert(SnapshotTable.asOf(spark, base, 0).count() == 1, "v0 still readable")
   }
 
-  /** The protocol matrix (round 16 — VERDICT r15 ask 5): every
-    * true-contention race below runs under BOTH publish protocols —
-    * the link/rename default and the lock-file (S3 conditional-put
-    * emulation) path. */
-  private val protocols: Seq[(String, SnapshotTable.CommitProtocol)] = Seq(
-    "link-rename" -> SnapshotTable.CommitProtocol.LinkRename,
-    "lock-file" -> SnapshotTable.CommitProtocol.LockFile())
-
-  protocols.foreach { case (ptag, proto) =>
-  test(s"TRUE concurrent commit race [$ptag]: two threads publish the same version, exactly one wins") {
+  test("TRUE concurrent commit race [link-rename]: two threads publish the same version, exactly one wins") {
     // VERDICT r13 item 5 (part 1): the single-winner property under
     // REAL threads, not a deterministic interleave — both writers
     // aligned on a barrier, both publish v1, the protocol's atomic
-    // claim arbitrates.
+    // publish arbitrates.
     val base = freshBase()
     SnapshotTable.create(spark, base, fixture(), "k", numBuckets = 8)
     val barrier = new java.util.concurrent.CyclicBarrier(2)
@@ -313,7 +302,7 @@ class SnapshotTableSpec extends SparkSpec {
       val t = new Thread(() => {
         try {
           barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
-          SnapshotTable.commit(spark, base, 1, Seq(s"0\tfile:/race-$tag"), proto)
+          SnapshotTable.commit(spark, base, 1, Seq(s"0\tfile:/race-$tag"))
         } catch {
           case _: SnapshotTable.VersionConflictException =>
             conflicts.incrementAndGet()
@@ -331,10 +320,8 @@ class SnapshotTableSpec extends SparkSpec {
     assert(line == "0\tfile:/race-a" || line == "0\tfile:/race-b",
       s"winner's manifest intact, not interleaved: $line")
   }
-  } // protocols
 
-  protocols.foreach { case (ptag, proto) =>
-  test(s"TRUE concurrent writers [$ptag]: racing mergeInto via retryingCommit lands both changes; guarded vacuum mid-race spares in-flight files") {
+  test("TRUE concurrent writers [link-rename]: racing mergeInto via retryingCommit lands both changes; guarded vacuum mid-race spares in-flight files") {
     // VERDICT r13 item 5 (part 2): the full optimistic-concurrency
     // story under real contention — two threads merge DISJOINT key
     // ranges through retryingCommit while the main thread repeatedly
@@ -367,7 +354,7 @@ class SnapshotTableSpec extends SparkSpec {
             // merge against the new latest, per the protocol
             val ch = keys.map(k => (k.toLong, "U", k * 10L + bump, tag))
               .toDF("k", "op", "v", "grp")
-            SnapshotTable.mergeInto(spark, base, ch, "k", numBuckets = 8, proto)
+            SnapshotTable.mergeInto(spark, base, ch, "k", numBuckets = 8)
           }
         } catch { case t2: Throwable => errs.add(t2) }
       }, s"graft-merge-$tag")
@@ -421,7 +408,6 @@ class SnapshotTableSpec extends SparkSpec {
       assert(SnapshotTable.asOf(spark, base, v).count() == 100,
         s"v$v readable after orphan collection"))
   }
-  } // protocols
 
   test("compact bin-packs the layout; vacuum reclaims the old files; content preserved") {
     val base = freshBase()
@@ -451,26 +437,6 @@ class SnapshotTableSpec extends SparkSpec {
     assert(after == before, "compaction + vacuum preserve content exactly")
   }
 
-  test("legacy trailer-less manifest stays readable (ADVICE r14: no format lock-out)") {
-    val base = freshBase()
-    SnapshotTable.create(spark, base, fixture(), "k", numBuckets = 8)
-    // rewrite v0 as a pre-trailer writer would have left it: data
-    // lines only, no '#eof' marker
-    val mf = new java.io.File(s"$base/manifest/v0")
-    val legacy = scala.io.Source.fromFile(mf).getLines().toList
-      .filterNot(_.startsWith("#"))
-    val w = new java.io.PrintWriter(mf)
-    try w.write(legacy.mkString("\n")) finally w.close()
-    assert(SnapshotTable.asOf(spark, base, 0).count() == 100,
-      "legacy manifest must read as complete, not as a crashed writer")
-    // and it stays mergeable: the next commit reads the legacy
-    // manifest to partition touched/untouched buckets
-    import spark.implicits._
-    val v1 = SnapshotTable.mergeInto(spark, base,
-      Seq((5L, "U", 999L, "u")).toDF("k", "op", "v", "grp"), "k", 8)
-    assert(v1 == 1 && SnapshotTable.asOf(spark, base, 1).count() == 100)
-  }
-
   test("publish is all-or-nothing: a lost commit leaves no residue and no wedged version") {
     val base = freshBase()
     SnapshotTable.create(spark, base, fixture(), "k", numBuckets = 8)
@@ -490,14 +456,25 @@ class SnapshotTableSpec extends SparkSpec {
   test("empty trailer-less manifest (a crashed claim) fails loudly instead of reading as empty") {
     val base = freshBase()
     SnapshotTable.create(spark, base, fixture(), "k", numBuckets = 8)
-    // the r14 claim-then-crash signature: version file exists, zero
+    // a manifest counts only once its '#eof <n>' trailer seals it.
+    // (1) the claim-then-crash signature: version file exists, zero
     // content — must NOT be accepted as an empty table (a mergeInto
     // reading it as empty would silently replace the table)
     assert(new java.io.File(s"$base/manifest/v1").createNewFile())
-    val e = intercept[IllegalStateException] {
-      SnapshotTable.asOf(spark, base, 1).count()
+    // (2) a NONEMPTY trailer-less manifest: v0's file lines with no
+    // trailer — what a crashed or stalled CREATE_NEW fallback write
+    // leaves, and no graft writer publishes; accepting it could hand
+    // a truncated file list to a mergeInto
+    val mf2 = new java.io.File(s"$base/manifest/v2")
+    val w = new java.io.PrintWriter(mf2)
+    try w.write(manifestLines(base, 0).mkString("\n")) finally w.close()
+    assert(manifestLines(base, 2).nonEmpty)
+    Seq(1, 2).foreach { v =>
+      val e = intercept[IllegalStateException] {
+        SnapshotTable.asOf(spark, base, v).count()
+      }
+      assert(e.getMessage.contains("incomplete"), s"v$v: ${e.getMessage}")
     }
-    assert(e.getMessage.contains("incomplete"), e.getMessage)
     assert(SnapshotTable.asOf(spark, base, 0).count() == 100,
       "other versions unaffected")
   }
@@ -593,39 +570,6 @@ class SnapshotTableSpec extends SparkSpec {
     assert(SnapshotTable.asOf(spark, base, 0).count() == 100)
   }
 
-  test("legacy trailer-less acceptance requires a frozen file: an appending writer is not accepted early (ADVICE r15)") {
-    val base = freshBase()
-    SnapshotTable.create(spark, base, fixture(), "k", numBuckets = 8)
-    val mf = new java.io.File(s"$base/manifest/v0")
-    val full = scala.io.Source.fromFile(mf).getLines().toList
-    // pure file lines: an r14-era legacy manifest carries no metadata
-    // headers (#buckets arrived in r18), so the staged lookalike must
-    // not either
-    val dataLines = full.filterNot(_.startsWith("#"))
-    assert(dataLines.size >= 2, "fixture must span multiple buckets")
-    // stage an r14-crash lookalike: a trailer-less PREFIX that keeps
-    // growing — a reader polling it must NOT accept any prefix while
-    // appends continue, and must accept the final frozen content
-    val legacyV = new java.io.File(s"$base/manifest/v1")
-    def writeLines(ls: Seq[String]): Unit = {
-      val w = new java.io.FileWriter(legacyV)
-      try w.write(ls.mkString("\n")) finally w.close()
-    }
-    writeLines(dataLines.take(1))
-    val appender = new Thread(() => {
-      // grow the file every 60 ms for ~0.5 s, ending at the full list
-      (2 to dataLines.size).foreach { n =>
-        Thread.sleep(60); writeLines(dataLines.take(n))
-      }
-    })
-    appender.start()
-    val got = SnapshotTable.liveFiles(spark, base, 1)
-    appender.join()
-    assert(got.size == dataLines.size,
-      s"reader accepted a growing prefix: got ${got.size} of ${dataLines.size} lines")
-    assert(SnapshotTable.asOf(spark, base, 1).count() == 100)
-  }
-
   test("PROPERTY: vacuum under a live writer never eats a referenced file across 100+ real interleavings") {
     // round 16 (VERDICT r15 ask 7): the newest-entry _temporary gate
     // and the age guard, exercised against a GENUINELY live writer —
@@ -700,104 +644,28 @@ class SnapshotTableSpec extends SparkSpec {
     info(s"$vacuums vacuums over $rounds commits, $collected aged files collected")
   }
 
-  test("lock-file protocol: a live lock conflicts, a stale lock is broken, an aged lock is vacuumed") {
-    val base = freshBase()
-    SnapshotTable.create(spark, base, fixture(), "k", numBuckets = 8,
-      SnapshotTable.CommitProtocol.LockFile())
-    // a LIVE lock (fresh mtime — a publisher mid-flight) must raise a
-    // conflict so retryingCommit rebases instead of corrupting v1
-    val lock = new java.io.File(s"$base/manifest/.lock-v1")
-    assert(lock.createNewFile())
-    intercept[SnapshotTable.VersionConflictException] {
-      SnapshotTable.commit(spark, base, 1, Seq("0\tfile:/x"),
-        SnapshotTable.CommitProtocol.LockFile())
-    }
-    assert(!new java.io.File(s"$base/manifest/v1").exists,
-      "conflicted writer must not publish")
-    // the SAME lock aged past the window is a crashed claimant: the
-    // next writer breaks it and publishes
-    val hourMs = 60L * 60 * 1000
-    assert(lock.setLastModified(System.currentTimeMillis() - 2 * hourMs))
-    SnapshotTable.commit(spark, base, 1, Seq("0\tfile:/y"),
-      SnapshotTable.CommitProtocol.LockFile(staleLockMs = hourMs))
-    assert(manifestLines(base, 1) == Seq("0\tfile:/y"),
-      "stale lock broken, publish lands")
-    assert(!lock.exists, "broken lock released after publish")
-    // a lock orphaned AFTER its version committed (crash between
-    // write and release) is harmless litter — vacuum sweeps it once
-    // aged, and never a fresh one
-    val orphan = new java.io.File(s"$base/manifest/.lock-v0")
-    assert(orphan.createNewFile())
-    val (_, d1) = SnapshotTable.vacuum(spark, base, 1000, orphanMinAgeMs = hourMs)
-    assert(orphan.exists, s"fresh lock spared (deleted=$d1)")
-    assert(orphan.setLastModified(System.currentTimeMillis() - 2 * hourMs))
-    SnapshotTable.vacuum(spark, base, 1000, orphanMinAgeMs = hourMs)
-    assert(!orphan.exists, "aged orphaned lock swept")
-    assert(SnapshotTable.asOf(spark, base, 0).count() == 100)
-  }
-
-  test("lock-file protocol: a crashed claimant's EMPTY target is healed, a committed one conflicts") {
-    // review r17 crash case (c): a LockFile writer that died between
-    // create(target) and the content write leaves a claimed-but-empty
-    // manifest — pre-fix, every later writer conflicted on it and
-    // every reader rejected it, wedging the version forever. An empty
-    // target AGED past the stale window is debris: the next writer
-    // heals it and publishes. A FRESH empty target (possible live
-    // publisher) and any NONEMPTY target still conflict.
-    val base = freshBase()
-    SnapshotTable.create(spark, base, fixture(), "k", numBuckets = 8,
-      SnapshotTable.CommitProtocol.LockFile())
-    val hourMs = 60L * 60 * 1000
-    val wedged = new java.io.File(s"$base/manifest/v1")
-    assert(wedged.createNewFile()) // claimed, zero bytes, no lock
-    // fresh empty target: could be a live writer that just claimed —
-    // conflict, don't touch it
-    intercept[SnapshotTable.VersionConflictException] {
-      SnapshotTable.commit(spark, base, 1, Seq("0\tfile:/x"),
-        SnapshotTable.CommitProtocol.LockFile(staleLockMs = hourMs))
-    }
-    assert(wedged.exists && wedged.length == 0)
-    // aged empty target: crash debris — healed and published over
-    assert(wedged.setLastModified(System.currentTimeMillis() - 2 * hourMs))
-    SnapshotTable.commit(spark, base, 1, Seq("0\tfile:/y"),
-      SnapshotTable.CommitProtocol.LockFile(staleLockMs = hourMs))
-    assert(manifestLines(base, 1) == Seq("0\tfile:/y"),
-      "aged empty claim healed, publish lands")
-    // a COMMITTED (nonempty) target always conflicts, aged or not
-    assert(new java.io.File(s"$base/manifest/v1")
-      .setLastModified(System.currentTimeMillis() - 2 * hourMs))
-    intercept[SnapshotTable.VersionConflictException] {
-      SnapshotTable.commit(spark, base, 1, Seq("0\tfile:/z"),
-        SnapshotTable.CommitProtocol.LockFile(staleLockMs = hourMs))
-    }
-    assert(manifestLines(base, 1) == Seq("0\tfile:/y"))
-  }
-
-  test("lock-file protocol: reader overlapping the non-atomic content write waits for the trailer") {
-    // the LockFile publish is claim-then-write (the r14 shape): a
-    // reader that opens the manifest mid-write must wait out the
-    // window via the EofMarker trailer, never return a prefix
+  test("a reader overlapping a CREATE_NEW write gets the sealed list, not a prefix") {
+    // the no-hard-link fallback publishes by creating the manifest and
+    // then writing it: a reader that opens it mid-write must wait out
+    // the window via the EofMarker trailer, never return a prefix
     val base = freshBase()
     SnapshotTable.create(spark, base, fixture(), "k", numBuckets = 8)
     val mf = new java.io.File(s"$base/manifest/v1")
     val lines = manifestLines(base, 0)
-    // stage the mid-write state by hand: held lock + a FLUSHED,
-    // MOTIONLESS trailer-less prefix — exactly what a reader sees
-    // when the publisher stalls mid-write; without the lock gate the
-    // frozen-file rule would accept the prefix after ~200 ms
-    val lock = new java.io.File(s"$base/manifest/.lock-v1")
-    assert(lock.createNewFile())
+    assert(lines.size >= 3, "fixture must span several buckets")
+    // stage the mid-write state by hand: a FLUSHED, MOTIONLESS
+    // trailer-less prefix — exactly what a reader sees when the
+    // publisher stalls mid-write
     val w = new java.io.FileWriter(mf)
     w.write(lines.take(2).mkString("\n")); w.flush()
     val got = new java.util.concurrent.atomic.AtomicReference[Seq[String]](null)
     val r2 = new Thread(() => got.set(SnapshotTable.liveFiles(spark, base, 1)))
     r2.start()
-    Thread.sleep(500) // reader polls the stalled prefix well past 5 reads
-    assert(got.get == null, "reader must not accept a locked trailer-less prefix")
+    Thread.sleep(500) // the reader polls the stalled prefix ~10 times
+    assert(got.get == null, "reader must not accept a trailer-less prefix")
     w.write("\n" + lines.drop(2).mkString("\n") +
       s"\n#eof ${lines.size}")
     w.close()
-    assert(lock.delete())
     r2.join(5000)
     assert(!r2.isAlive && got.get != null, "reader must complete")
     assert(got.get.size == lines.size,

@@ -1146,9 +1146,7 @@ class StreamingSpec extends SparkSpec {
 
   test("snapshot-cdc streaming source (#305): version offsets, per-commit batches, incremental pickup, no redelivery") {
     import graft.api.SnapshotTable
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_cdcsrc_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    graft.Tables.registerScratch(base)
+    val base = graft.Tables.scratch("graft_cdcsrc")
     import spark.implicits._
     SnapshotTable.create(spark,
       base, spark.range(0, 50).select(col("id").as("k"),
