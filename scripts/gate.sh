@@ -24,6 +24,18 @@ if [ -n "$strays" ]; then
   echo "gate: java.io.tmpdir outside Tables.scratch, or a CommitProtocol reference" >&2
   exit 1
 fi
+# one parquet reader in SnapshotTable: every read of table or cdc
+# files goes through readFiles, which reads schema-first whenever the
+# manifest declares a schema
+reads=$(awk '/def readFiles\(/ { inside = 1; next }
+             /^ *([a-z]+(\[[a-z]+\])? )*def / { inside = 0 }
+             /spark\.read([^A-Za-z0-9_]|$)/ && !inside { print FILENAME ":" FNR ": " $0 }' \
+  src/main/scala/graft/api/SnapshotTable.scala)
+if [ -n "$reads" ]; then
+  printf '%s\n' "$reads"
+  echo "gate: SnapshotTable reads parquet outside readFiles" >&2
+  exit 1
+fi
 sbt -batch compile test
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} \
   sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_out"

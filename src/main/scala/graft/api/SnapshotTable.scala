@@ -219,13 +219,38 @@ object SnapshotTable {
     }
   }
 
-  /** Create the table as version 0 (fails if any version exists). */
+  /** Create the table as version 0 (fails if any version exists). The
+    * manifest declares `rows`' schema (see [[SchemaHeader]]), so every
+    * later read of this table is schema-first and opens no footer to
+    * learn its columns. */
   def create(spark: SparkSession, base: String, rows: DataFrame,
              keyCol: String, numBuckets: Int): Unit = {
     require(latestVersion(spark, base) < 0, s"table already exists at $base")
     commit(spark, base, 0,
-      headersOf(None, Nil, Some((numBuckets, keyCol))) ++
+      headersOf(Some(asRead(rows.schema)), Nil, Some((numBuckets, keyCol))) ++
         writeDataFiles(spark, base, rows, keyCol, numBuckets))
+  }
+
+  /** `st` as the parquet reader reports it back: every field nullable
+    * at every depth, field metadata dropped — the schema a manifest
+    * declares for files written from `st`. Refuses names a header line
+    * cannot carry (a tab or newline would split the line). */
+  private def asRead(st: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map { f =>
+        require(!f.name.contains('\t') && !f.name.contains('\n'),
+          s"invalid column name '${f.name}': a tab or newline cannot be " +
+          "recorded in the manifest's schema header")
+        StructField(f.name, nullable(f.dataType), nullable = true)
+      })
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+        valueContainsNull = true)
+      case other => other
+    }
+    nullable(st).asInstanceOf[StructType]
   }
 
   /** Read a manifest: its data lines once the [[EofMarker]] trailer
@@ -258,11 +283,17 @@ object SnapshotTable {
       s"manifest $p is incomplete after 2s — in-flight or crashed writer")
   }
 
-  /** Header prefix for manifest metadata lines (round 17, schema
-    * evolution): lines starting '#' (other than the [[EofMarker]]
-    * trailer) are manifest METADATA, not file references — readers of
-    * the file list skip them via [[fileLines]]. Pre-r17 manifests
-    * contain none, so every reader is backward compatible. */
+  /** The table's DECLARED schema, `#schema\t<ddl>` in PHYSICAL column
+    * names. [[create]] writes it (the rows' schema as the parquet
+    * reader reports it, see [[asRead]]), [[addColumn]] widens it, and
+    * every other commit carries it forward through [[headersOf]], so
+    * every read of a graft-created table is schema-first and launches
+    * no footer-inference job. Lines starting '#' (other than the
+    * [[EofMarker]] trailer) are manifest METADATA, not file references
+    * — readers of the file list skip them via [[fileLines]]. Manifests
+    * written without it (hand-built fixtures, tables created before
+    * `create` recorded it) still read: their schema is inferred from
+    * the files' footers. */
   private val SchemaHeader = "#schema\t"
 
   /** Header prefix for the COLUMN NAME MAPPING (round 17, RENAME
@@ -327,12 +358,28 @@ object SnapshotTable {
     * delta is empty). */
   private val CdcFileHeader = "#cdcfile\t"
 
-  /** Parsed manifest metadata: raw data-file lines, the declared
-    * (evolved) schema in PHYSICAL column names, the physical→logical
-    * rename mapping (empty = identity), the recorded bucket
-    * addressing (numBuckets, physical key column) when the table was
-    * written by an r18+ writer, the CHECK constraints in force, the
-    * change-feed flag, and THIS commit's cdc file references. */
+  /** The schema of THIS commit's cdc files, `#cdcschema\t<ddl>` (the
+    * delta's schema, all nullable), written beside its
+    * [[CdcFileHeader]] lines so [[changeFeed]] reads them schema-first.
+    * Per commit like the file references: an ADD COLUMN between two
+    * commits gives their deltas different widths. */
+  private val CdcSchemaHeader = "#cdcschema\t"
+
+  /** Parsed manifest metadata:
+    *  - `fileLines`: the raw data-file lines;
+    *  - `schema`: the declared schema in PHYSICAL column names — set
+    *    by [[create]] and widened by [[addColumn]]; None only on a
+    *    manifest written without it, whose readers infer it from the
+    *    files (see [[SchemaHeader]]);
+    *  - `colMap`: the physical→logical rename mapping (empty =
+    *    identity);
+    *  - `buckets`: the recorded bucket addressing (numBuckets, physical
+    *    key column), None on manifests without the header;
+    *  - `checks`: the CHECK constraints in force;
+    *  - `cdf`: the change-feed flag;
+    *  - `cdcFiles`, `cdcSchema`: THIS commit's cdc file references and
+    *    their schema (None when the commit wrote no cdc files or its
+    *    manifest predates the header). */
   private[graft] final case class ManifestMeta(
       fileLines: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType],
@@ -340,7 +387,8 @@ object SnapshotTable {
       buckets: Option[(Int, String)] = None,
       checks: Seq[(String, String)] = Nil,
       cdf: Boolean = false,
-      cdcFiles: Seq[String] = Nil)
+      cdcFiles: Seq[String] = Nil,
+      cdcSchema: Option[org.apache.spark.sql.types.StructType] = None)
 
   /** One manifest read, fully parsed. Every operation below derives
     * what it needs from ONE of these instead of re-reading the
@@ -352,9 +400,10 @@ object SnapshotTable {
   private def parsedManifestAll(spark: SparkSession, base: String,
       version: Int): ManifestMeta = {
     val all = manifestLines(spark, base, version)
-    val schema = all.find(_.startsWith(SchemaHeader))
+    def ddlOf(header: String) = all.find(_.startsWith(header))
       .map(l => org.apache.spark.sql.types.StructType.fromDDL(
-        l.stripPrefix(SchemaHeader)))
+        l.stripPrefix(header)))
+    val schema = ddlOf(SchemaHeader)
     val cm = all.find(_.startsWith(ColMapHeader)).toSeq
       .flatMap(_.stripPrefix(ColMapHeader).split(',').toSeq)
       .filter(_.nonEmpty)
@@ -375,7 +424,7 @@ object SnapshotTable {
     val cdcF = all.filter(_.startsWith(CdcFileHeader))
       .map(_.stripPrefix(CdcFileHeader))
     ManifestMeta(all.filterNot(_.startsWith("#")), schema, cm, bk, cks,
-      cdf, cdcF)
+      cdf, cdcF, ddlOf(CdcSchemaHeader))
   }
 
   private def parsedManifest(spark: SparkSession, base: String, version: Int)
@@ -459,11 +508,11 @@ object SnapshotTable {
   private def fileLines(spark: SparkSession, base: String, version: Int): Seq[String] =
     parsedManifest(spark, base, version)._1
 
-  /** The version's DECLARED schema, present iff [[addColumn]] (or a
-    * later write carrying it forward) pinned one. Versions committed
-    * before any evolution have no declaration — their schema is
-    * whatever their files carry, which is exactly what time travel
-    * should return. */
+  /** The version's DECLARED schema in physical column names: what
+    * [[create]] recorded, as widened by any [[addColumn]] up to this
+    * version — so time travel returns each version's own schema. None
+    * only for a manifest written without the header, whose schema is
+    * whatever its files carry (see [[SchemaHeader]]). */
   def declaredSchema(spark: SparkSession, base: String, version: Int)
       : Option[org.apache.spark.sql.types.StructType] =
     parsedManifest(spark, base, version)._2
@@ -474,13 +523,16 @@ object SnapshotTable {
 
   private def pathOf(line: String): String = line.split('\t')(1)
 
-  /** Schema-first read of a resolved file list: files written BEFORE
-    * an ADD COLUMN lack the new column and null-fill — the parquet
-    * reader's missing-column semantics, the same mechanism
-    * iceberg/delta use, so evolution never rewrites data. An
-    * emptied-but-evolved version still knows its schema and returns
-    * the empty frame (the schema-less empty case fails loudly: zero
-    * files carry no schema to read with). */
+  /** The one parquet reader of this object. Schema-first under a
+    * declared schema — no job is launched to plan it, and files
+    * written BEFORE an ADD COLUMN lack the new column and null-fill
+    * (the parquet reader's missing-column semantics, the same
+    * mechanism iceberg/delta use, so evolution never rewrites data). A
+    * declared schema over zero files returns the typed empty frame.
+    * `None` (a manifest without the header, see [[SchemaHeader]])
+    * infers the schema from a footer, one Spark job; the schema-less
+    * empty case fails loudly — zero files carry no schema to read
+    * with. */
   private def readFiles(spark: SparkSession, files: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
     schema match {
@@ -571,8 +623,9 @@ object SnapshotTable {
     * whose change set carries the column writes it physically for the
     * buckets it rewrites; [[compact]]/[[optimizeCluster]] materialize
     * it everywhere they rewrite. Time travel to pre-evolution
-    * versions returns THEIR schema (no declaration line → the files'
-    * own schema), the iceberg snapshot-schema contract. The new
+    * versions returns THEIR schema (their own declaration line, or the
+    * files' own schema on a manifest without one), the iceberg
+    * snapshot-schema contract. The new
     * column is always nullable (a NOT NULL add would require a
     * backfill — a different command). */
   def addColumn(spark: SparkSession, base: String, colName: String,
@@ -581,7 +634,7 @@ object SnapshotTable {
     require(v >= 0, s"no table at $base")
     val m = parsedManifestAll(spark, base, v)
     val cur = m.schema
-      .getOrElse(spark.read.parquet(m.fileLines.map(pathOf): _*).schema)
+      .getOrElse(readFiles(spark, m.fileLines.map(pathOf), None).schema)
     // collision checks against BOTH name spaces: the logical names a
     // user sees, and the physical names still present in old data
     // files (adding `a` after `a`→`b` was renamed would make new
@@ -739,10 +792,11 @@ object SnapshotTable {
     parsedManifestAll(spark, base, version).cdf
 
   /** Persist a commit's change set as cdc parquet files and return
-    * their manifest reference lines (empty when the feed is off or
-    * the delta is empty). The `_SUCCESS` marker is dropped at write
-    * time so a fully-consumed commit dir can empty out and be swept
-    * by [[vacuum]]'s dir pass. */
+    * their manifest lines: the [[CdcSchemaHeader]] and one reference
+    * per file (empty when the feed is off or the delta wrote no file).
+    * The `_SUCCESS` marker is dropped at write time so a
+    * fully-consumed commit dir can empty out and be swept by
+    * [[vacuum]]'s dir pass. */
   private def writeCdcFiles(spark: SparkSession, base: String,
                             meta: ManifestMeta,
                             delta: DataFrame): Seq[String] =
@@ -754,10 +808,12 @@ object SnapshotTable {
       val f = fs(spark, base)
       try f.delete(new Path(s"$dir/_SUCCESS"), false)
       catch { case scala.util.control.NonFatal(_) => () }
-      f.listStatus(new Path(dir)).toSeq
+      val refs = f.listStatus(new Path(dir)).toSeq
         .filter(s => !s.isDirectory &&
           s.getPath.getName.endsWith(".parquet"))
         .map(s => s"$CdcFileHeader${s.getPath.toString}")
+      if (refs.isEmpty) Nil
+      else s"$CdcSchemaHeader${asRead(delta.schema).toDDL}" +: refs
     }
 
   /** CHANGE FEED read — the materialized row deltas of versions
@@ -789,10 +845,11 @@ object SnapshotTable {
     }
     val mHead = metas.lastOption.map(_._2)
       .getOrElse(parsedManifestAll(spark, base, vTo))
-    // target shape from the table itself — ONE driver-side footer read
-    // at most, then a LocalRelation empty frame: the feed's PLAN must
-    // reference only cdc files (delta-bounded scan, spec-pinned), and
-    // an all-metadata range still returns a typed empty feed
+    // target shape from the table itself — its declared schema (one
+    // footer read only on a manifest without one), then a
+    // LocalRelation empty frame: the feed's PLAN must reference only
+    // cdc files (delta-bounded scan, spec-pinned), and an
+    // all-metadata range still returns a typed empty feed
     val payloadSchema = applyRenames(
       readFiles(spark, mHead.fileLines.map(pathOf).take(1), mHead.schema)
         .limit(0), mHead.colMap).schema
@@ -808,7 +865,7 @@ object SnapshotTable {
           org.apache.spark.sql.types.IntegerType, nullable = true)))
     metas.filter(_._2.cdcFiles.nonEmpty).foldLeft(empty) {
       case (acc, (v, m)) =>
-        val d = applyRenames(spark.read.parquet(m.cdcFiles: _*),
+        val d = applyRenames(readFiles(spark, m.cdcFiles, m.cdcSchema),
             mHead.colMap)
           .withColumn("_commit_version", lit(v))
         // ADD COLUMN evolution: older deltas lack the new column and
@@ -862,14 +919,14 @@ object SnapshotTable {
     if (from.isEmpty && to.isEmpty) {
       // Both versions reference zero files (e.g. diff of an emptied
       // table against itself): the delta is definitionally empty —
-      // short-circuit instead of calling spark.read.parquet() with no
-      // paths (which throws). When a DECLARED schema exists (evolved
-      // table), the empty frame carries the key's REAL type and the
-      // real payload structs, so unions with non-empty diffs of the
-      // same table stay schema-compatible (review r17: the hardcoded
-      // StringType key broke exactly that); without any declaration
-      // zero files carry no schema and the degenerate shape below is
-      // the best recoverable one.
+      // short-circuit instead of a parquet read of no paths (which
+      // throws). When a DECLARED schema exists, the empty frame
+      // carries the key's REAL type and the real payload structs, so
+      // unions with non-empty diffs of the same table stay
+      // schema-compatible (review r17: the hardcoded StringType key
+      // broke exactly that); without any declaration zero files carry
+      // no schema and the degenerate shape below is the best
+      // recoverable one.
       import org.apache.spark.sql.types._
       val declared = (if (vTo >= vFrom) toSchema.orElse(fromSchema)
                       else fromSchema.orElse(toSchema))
@@ -892,23 +949,16 @@ object SnapshotTable {
     // snapshots-with-current-schema convention for CDC), else the
     // files' inferred schema. Without this alignment a diff straddling
     // an ADD COLUMN would compare structs of different widths. Both
-    // declarations came free with the already-parsed manifests (every
-    // commit path carries the header forward, so the fallback is
-    // defense against hand-built manifests, not a reachable path).
+    // declarations came free with the already-parsed manifests ([[create]]
+    // writes the header and every commit carries it forward, so the
+    // fallback serves manifests written without one).
     val (later, earlier) =
       if (vTo >= vFrom) (toSchema, fromSchema) else (fromSchema, toSchema)
-    val schema = later.orElse(earlier).getOrElse {
-      val any = (from ++ to).headOption.map(pathOf).toSeq
-      spark.read.parquet(any: _*).schema
-    }
-    def readSide(lines: Set[String]): DataFrame = {
-      val paths = lines.map(_.split('\t')(1)).toSeq
-      val raw =
-        if (paths.isEmpty) spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        else spark.read.schema(schema).parquet(paths: _*)
-      applyRenames(raw, laterMap)
-    }
+    val schema = later.orElse(earlier).getOrElse(
+      readFiles(spark, (from ++ to).headOption.map(pathOf).toSeq, None).schema)
+    def readSide(lines: Set[String]): DataFrame =
+      applyRenames(readFiles(spark, lines.toSeq.map(pathOf), Some(schema)),
+        laterMap)
     val payload = schema.fieldNames
       .map(p => toLogical(p, laterMap))
       .filter(_ != keyCol).toSeq

@@ -50,13 +50,15 @@ object EtlPipeline {
     df
   }
 
+  /** The quarantine predicate: a row missing its key, timestamp,
+    * meter or value, or with a negative value. Never null. */
+  private val bad = col("reading_id").isNull || col("ts").isNull ||
+    col("meter_id").isNull || col("value").isNull || col("value") < 0
+
   /** Row-level QA: rows missing key/timestamp or with negative values
     * are quarantined, not fatal (the reference logged-and-skipped). */
-  def split(parsed: DataFrame): (DataFrame, DataFrame) = {
-    val bad = col("reading_id").isNull || col("ts").isNull ||
-      col("meter_id").isNull || col("value").isNull || col("value") < 0
+  def split(parsed: DataFrame): (DataFrame, DataFrame) =
     (parsed.where(!bad), parsed.where(bad))
-  }
 
   /** Normalize: exact-decimal unit conversion to kWh + earliest-wins
     * dedup per (meter, ts) — duplicate interval readings are the
@@ -79,10 +81,21 @@ object EtlPipeline {
   /** Load: upsert onto the existing sink (last-write-wins by
     * reading_id, new batch wins) and overwrite the date-partitioned
     * parquet — rerunning the same batch converges (Luigi-target
-    * idempotence). Returns per-stage counts. */
+    * idempotence). Returns per-stage counts.
+    *
+    * The existing sink is read with the schema this method writes —
+    * `normalize`'s columns plus `reading_date: date` — so planning the
+    * read opens no footer. A sink whose columns have other types (not
+    * written by this method) fails when it is read.
+    *
+    * `ingested`, `quarantined` and `deduped` come from ONE aggregate
+    * over the parsed batch: its row count, its bad rows, and its
+    * distinct (meter_id, ts) pairs among the valid rows — `normalize`
+    * keeps exactly one row per such pair, and valid rows have both
+    * non-null. `loaded` counts the staged sink rows. */
   def run(spark: SparkSession, rawDir: String, sinkDir: String): Summary = {
     val parsed = parse(spark, rawDir)
-    val (valid, rejects) = split(parsed)
+    val (valid, _) = split(parsed)
     val normalized = normalize(valid)
 
     // first run == sink path absent, checked explicitly. A transient
@@ -91,9 +104,12 @@ object EtlPipeline {
     // as if nothing had been loaded.
     val sinkPath = new org.apache.hadoop.fs.Path(sinkDir)
     val fs = sinkPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val sinkSchema = StructType(
+      normalized.schema.fields.map(_.copy(nullable = true)) :+
+        StructField("reading_date", DateType))
     val existing =
       if (fs.exists(sinkPath))
-        Some(spark.read.parquet(sinkDir)
+        Some(spark.read.schema(sinkSchema).parquet(sinkDir)
           .select(normalized.columns.map(col): _*)
           .withColumn("__version", lit(1)))
       else None
@@ -113,7 +129,10 @@ object EtlPipeline {
     val loaded = staged.count()
     staged.write.mode("overwrite")
       .partitionBy("reading_date").parquet(sinkDir)
-    Summary(parsed.count(), rejects.count(), normalized.count(), loaded)
+    val counts = parsed.agg(count(lit(1)), count_if(bad),
+      count_distinct(when(!bad, col("meter_id")), when(!bad, col("ts"))))
+      .head()
+    Summary(counts.getLong(0), counts.getLong(1), counts.getLong(2), loaded)
   }
 }
 

@@ -236,7 +236,7 @@ class CorpusOpsSpec extends SparkSpec {
       (2L, shared, "en", "t", shared.length.toLong),
       (3L, null.asInstanceOf[String], "en", "t", 0L),
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("sent_global_spec").toString
+    val dir = tempDir("sent_global_spec")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = CorpusOps.dedupSentenceGlobal(spark, dir).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap

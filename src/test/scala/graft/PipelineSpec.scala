@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.pipeline.{EtlPipeline, SchemaValidator}
 
@@ -17,8 +15,8 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("pipeline: quarantine, dedup, unit conversion, partitioned load") {
-    val raw = Files.createTempDirectory("graft_raw").toString
-    val sink = Files.createTempDirectory("graft_sink").toString + "/readings"
+    val raw = tempDir("graft_raw")
+    val sink = tempDir("graft_sink") + "/readings"
     writeRawCsv(raw, Seq(
       (1L, "2024-01-01 00:00:00", 10L, "electricity", 5.00),
       (2L, "2024-01-01 00:00:00", 10L, "electricity", 5.00),  // dup (meter, ts)
@@ -42,8 +40,8 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("pipeline re-run is idempotent; delta batch upserts last-write-wins") {
-    val raw = Files.createTempDirectory("graft_raw2").toString
-    val sink = Files.createTempDirectory("graft_sink2").toString + "/readings"
+    val raw = tempDir("graft_raw2")
+    val sink = tempDir("graft_sink2") + "/readings"
     writeRawCsv(raw, Seq(
       (1L, "2024-01-01 00:00:00", 10L, "electricity", 5.00),
       (2L, "2024-01-01 01:00:00", 10L, "electricity", 6.00)))
@@ -59,6 +57,48 @@ class PipelineSpec extends SparkSpec {
     val out = spark.read.parquet(sink)
     val v2 = out.where(col("reading_id") === 2).head
     assert(v2.getDecimal(v2.fieldIndex("kwh")).doubleValue() == 9.99) // new batch won
+  }
+
+  test("one counting pass: Summary equals the three recounts; a re-run plans and loads in 4 jobs") {
+    import spark.implicits._
+    val raw = tempDir("graft_raw3")
+    val sink = tempDir("graft_sink3") + "/readings"
+    Seq[(Option[Long], Option[String], Option[Long], String, Option[Double])](
+      (Some(1L), Some("2024-01-01 00:00:00"), Some(10L), "electricity", Some(5.0)),
+      // the same (meter, ts) delivered as both fuels, and again: dedup
+      // keeps one row per (meter, ts) whatever the fuel
+      (Some(2L), Some("2024-01-01 00:00:00"), Some(10L), "natural_gas", Some(1.0)),
+      (Some(3L), Some("2024-01-01 00:00:00"), Some(10L), "natural_gas", Some(1.0)),
+      (Some(4L), Some("2024-01-01 01:00:00"), Some(10L), "natural_gas", Some(2.0)),
+      (Some(5L), Some("2024-01-01 01:00:00"), Some(11L), "electricity", Some(3.0)),
+      (Some(6L), Some("2024-01-01 01:00:00"), Some(11L), "natural_gas", Some(3.0)),
+      // one row per quarantine reason
+      (None, Some("2024-01-02 00:00:00"), Some(12L), "electricity", Some(1.0)),
+      (Some(8L), None, Some(12L), "electricity", Some(1.0)),
+      (Some(9L), Some("2024-01-02 00:00:00"), None, "electricity", Some(1.0)),
+      (Some(10L), Some("2024-01-02 00:00:00"), Some(12L), "electricity", None),
+      (Some(11L), Some("2024-01-02 00:00:00"), Some(12L), "electricity", Some(-1.0)),
+      // a bad row sharing a valid row's (meter, ts) adds no dedup group
+      (Some(12L), Some("2024-01-01 00:00:00"), Some(10L), "electricity", Some(-2.0))
+    ).toDF("reading_id", "ts", "meter_id", "fuel", "value")
+      .withColumn("ts", col("ts").cast("timestamp"))
+      .coalesce(1).write.mode("overwrite").option("header", "true").csv(raw)
+    val s = EtlPipeline.run(spark, raw, sink)
+    val parsed = EtlPipeline.parse(spark, raw)
+    val (valid, rejects) = EtlPipeline.split(parsed)
+    assert(s == EtlPipeline.Summary(parsed.count(), rejects.count(),
+      EtlPipeline.normalize(valid).count(), s.loaded))
+    assert(s == EtlPipeline.Summary(ingested = 12, quarantined = 6, deduped = 3, loaded = 3))
+    // a re-run over the existing sink, in a session with the graded
+    // setting AQE off (with AQE on every shuffle stage is a job of its
+    // own): the sink read plans from the declared schema, so the jobs
+    // are the checkpoint, the load count, the sink write and the one
+    // counting aggregate
+    val graded = spark.newSession()
+    graded.conf.set("spark.sql.adaptive.enabled", "false")
+    val (again, jobs) = jobsLaunched(EtlPipeline.run(graded, raw, sink))
+    assert(again == s)
+    assert(jobs <= 4, s"re-run launched $jobs jobs")
   }
 
   test("schema validator fails fast on missing or mistyped columns") {

@@ -15,7 +15,7 @@ class Round17OpsSpec extends SparkSpec {
     val df = EtlOps.etlSnapshotStatsPruned(spark, sf001)
     // the graded op's inline requires already ran; rebuild a table
     // here to hold the base dir open for footer inspection
-    val base = java.nio.file.Files.createTempDirectory("graft_stats_spec").toString
+    val base = tempDir("graft_stats_spec")
     val o = Tables.orders(spark, sf001).select(col("o_orderkey"),
       Tables.money(col("o_totalprice")).as("o_price"))
     graft.api.SnapshotTable.create(spark, base, o, "o_orderkey", numBuckets = 4)
@@ -71,7 +71,7 @@ class Round17OpsSpec extends SparkSpec {
 
   test("schema evolution (#292): per-version schemas, boundary diff, maintenance materialization") {
     import graft.api.SnapshotTable
-    val base = java.nio.file.Files.createTempDirectory("graft_evo_spec").toString
+    val base = tempDir("graft_evo_spec")
     val o = Tables.orders(spark, sf001)
       .select(col("o_orderkey"), Tables.money(col("o_totalprice")).as("o_price"))
     SnapshotTable.create(spark, base, o, "o_orderkey", numBuckets = 4)
@@ -126,7 +126,7 @@ class Round17OpsSpec extends SparkSpec {
 
   test("review r17: asOfRange is schema-first over mixed pre/post-evolution files; merge guards evolved columns") {
     import graft.api.SnapshotTable
-    val base = java.nio.file.Files.createTempDirectory("graft_evo_range").toString
+    val base = tempDir("graft_evo_range")
     val o = Tables.orders(spark, sf001)
       .select(col("o_orderkey"), Tables.money(col("o_totalprice")).as("o_price"))
     SnapshotTable.create(spark, base, o, "o_orderkey", numBuckets = 4)
@@ -176,7 +176,7 @@ class Round17OpsSpec extends SparkSpec {
   }
 
   test("manifest stats (#291): stats ride a merge by reference; rewritten buckets degrade safely") {
-    val base = java.nio.file.Files.createTempDirectory("graft_stats_merge").toString
+    val base = tempDir("graft_stats_merge")
     val o = Tables.orders(spark, sf001).select(col("o_orderkey"),
       Tables.money(col("o_totalprice")).as("o_price"))
     graft.api.SnapshotTable.create(spark, base, o, "o_orderkey", numBuckets = 4)
@@ -211,7 +211,7 @@ class Round17OpsSpec extends SparkSpec {
 
   test("restore (#293): metadata-only undo, history intact, restored files survive vacuum, merge-on-top works") {
     import graft.api.SnapshotTable
-    val base = java.nio.file.Files.createTempDirectory("graft_restore").toString
+    val base = tempDir("graft_restore")
     val o = Tables.orders(spark, sf001)
       .select(col("o_orderkey"), Tables.money(col("o_totalprice")).as("o_price"))
     SnapshotTable.create(spark, base, o, "o_orderkey", numBuckets = 4)
@@ -253,7 +253,7 @@ class Round17OpsSpec extends SparkSpec {
 
   test("rename column (#294): logical surface everywhere — CDC, range reads, stats, rename-back, collisions") {
     import graft.api.SnapshotTable
-    val base = java.nio.file.Files.createTempDirectory("graft_rename").toString
+    val base = tempDir("graft_rename")
     val o = Tables.orders(spark, sf001)
       .select(col("o_orderkey"), Tables.money(col("o_totalprice")).as("o_price"))
     SnapshotTable.create(spark, base, o, "o_orderkey", numBuckets = 4)
@@ -303,7 +303,7 @@ class Round17OpsSpec extends SparkSpec {
 
   test("rename + add column (#292×#294): evolution and mapping compose in both orders") {
     import graft.api.SnapshotTable
-    val base = java.nio.file.Files.createTempDirectory("graft_rename_add").toString
+    val base = tempDir("graft_rename_add")
     val o = Tables.orders(spark, sf001)
       .select(col("o_orderkey"), Tables.money(col("o_totalprice")).as("o_price"))
     SnapshotTable.create(spark, base, o, "o_orderkey", numBuckets = 4)
@@ -336,7 +336,7 @@ class Round17OpsSpec extends SparkSpec {
 
   test("delete where (#295): null rows survive, stats-less tables rewrite everything, no-match bands publish nothing") {
     import graft.api.SnapshotTable
-    val base = java.nio.file.Files.createTempDirectory("graft_delete").toString
+    val base = tempDir("graft_delete")
     val o = Tables.orders(spark, sf001)
       .select(col("o_orderkey"),
         // null out a cohort's price: DELETE's three-valued WHERE must
@@ -385,7 +385,7 @@ class Round17OpsSpec extends SparkSpec {
 
   test("review r17b: header-unsafe column names are refused at the evolution doors; probes cast to the table's key type") {
     import graft.api.SnapshotTable
-    val base = java.nio.file.Files.createTempDirectory("graft_safety").toString
+    val base = tempDir("graft_safety")
     val o = Tables.orders(spark, sf001)
       .select(col("o_orderkey"), Tables.money(col("o_totalprice")).as("o_price"))
     SnapshotTable.create(spark, base, o, "o_orderkey", numBuckets = 8)
@@ -413,7 +413,7 @@ class Round17OpsSpec extends SparkSpec {
 
   test("point lookup (#297): absent keys read empty through the same pruned path") {
     import graft.api.SnapshotTable
-    val base = java.nio.file.Files.createTempDirectory("graft_lookup").toString
+    val base = tempDir("graft_lookup")
     val o = Tables.orders(spark, sf001)
       .select(col("o_orderkey"), Tables.money(col("o_totalprice")).as("o_price"))
     SnapshotTable.create(spark, base, o, "o_orderkey", numBuckets = 8)
@@ -440,7 +440,7 @@ class Round17OpsSpec extends SparkSpec {
 
   test("CDC follower (#298): deltas compose forwards AND rewind backwards across the whole history") {
     import graft.api.SnapshotTable
-    val base = java.nio.file.Files.createTempDirectory("graft_follow").toString
+    val base = tempDir("graft_follow")
     val o = Tables.orders(spark, sf001)
       .select(col("o_orderkey"), Tables.money(col("o_totalprice")).as("o_price"))
     SnapshotTable.create(spark, base, o, "o_orderkey", numBuckets = 4)
@@ -484,8 +484,8 @@ class Round17OpsSpec extends SparkSpec {
 
   test("shallow clone (#299): branch isolation, clone-side vacuum safety, and the source-retention hazard") {
     import graft.api.SnapshotTable
-    val src = java.nio.file.Files.createTempDirectory("graft_clone_src").toString
-    val dst = java.nio.file.Files.createTempDirectory("graft_clone_dst").toString + "/t"
+    val src = tempDir("graft_clone_src")
+    val dst = tempDir("graft_clone_dst") + "/t"
     val o = Tables.orders(spark, sf001)
       .select(col("o_orderkey"), Tables.money(col("o_totalprice")).as("o_price"))
     SnapshotTable.create(spark, src, o, "o_orderkey", numBuckets = 4)

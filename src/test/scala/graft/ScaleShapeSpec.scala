@@ -119,7 +119,7 @@ class ScaleShapeSpec extends SparkSpec {
   }
 
   test("dynamic partition pruning fires on a partitioned fact join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val dir = tempDir("graft_dpp")
     Tables.orders(spark, sf001)
       .withColumn("order_year", year(col("o_orderdate")))
       .write.mode("overwrite").partitionBy("order_year").parquet(dir)
@@ -129,7 +129,7 @@ class ScaleShapeSpec extends SparkSpec {
     // which fact partitions matter -> DPP inserts a runtime filter.
     // The dim must be a file source: a local relation folds the filter
     // away before the PartitionPruning rule can see it.
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_dpp_dim").toString
+    val dimDir = tempDir("graft_dpp_dim")
     Seq((1995, "old"), (1996, "old"), (2000, "new"))
       .toDF("dim_year", "era").write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir)
@@ -187,7 +187,7 @@ class ScaleShapeSpec extends SparkSpec {
   }
 
   test("bucketed tables join without a shuffle exchange") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_buckets").toString
+    val wh = tempDir("graft_buckets")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       Tables.orders(spark, sf001).select(col("o_orderkey"), col("o_custkey"))

@@ -671,4 +671,51 @@ class SnapshotTableSpec extends SparkSpec {
     assert(got.get.size == lines.size,
       s"reader returned the sealed list, not the prefix: ${got.get.size} of ${lines.size}")
   }
+
+  test("create records the schema: asOf and changeFeed plan with 0 jobs and equal the inference fallback") {
+    // every shape the declared schema must report as the parquet
+    // reader does: non-nullable top-level columns, a decimal, a
+    // timestamp, and nested array/struct/map types
+    val rows = fixture().select(col("k"), col("v"), col("grp"),
+      (col("k") / 7).cast("decimal(28,6)").as("kwh"),
+      timestamp_seconds(col("k") * 900).as("ts"),
+      array(col("v"), lit(1L)).as("arr"),
+      struct(col("v").as("a"), col("grp").as("b")).as("st"),
+      map(col("grp"), col("v")).as("mp"))
+    def changes(keys: Seq[Long], op: String) =
+      rows.where(col("k").isin(keys: _*))
+        .withColumn("v", col("v") + 1).withColumn("op", lit(op))
+    val base = freshBase()
+    SnapshotTable.create(spark, base, rows, "k", numBuckets = 8)
+    val v0 = SnapshotTable.enableChangeFeed(spark, base)
+    SnapshotTable.mergeInto(spark, base,
+      changes(Seq(1L, 2L, 3L), "U").unionByName(changes(Seq(4L), "D")), "k", 8)
+    val v2 = SnapshotTable.mergeInto(spark, base,
+      changes(Seq(2L, 40L), "U").unionByName(changes(Seq(5L, 6L), "D")), "k", 8)
+    // the same table, published under a second base with every
+    // #schema/#cdcschema line stripped: the reads infer from footers
+    val stripped = freshBase()
+    (0 to v2).foreach { v =>
+      val raw = scala.io.Source.fromFile(s"$base/manifest/v$v").getLines().toList
+      SnapshotTable.commit(spark, stripped, v, raw.filterNot(l =>
+        l.startsWith("#eof ") || l.startsWith("#schema\t") ||
+          l.startsWith("#cdcschema\t")))
+    }
+    def rowsOf(df: DataFrame) = df.collect().map(_.toSeq.map {
+      case m: scala.collection.Map[_, _] => m.toSeq.sortBy(_.toString)
+      case x => x
+    }.toString).sorted.toSeq
+    Seq[(String, String => DataFrame)](
+      "asOf" -> (b => SnapshotTable.asOf(spark, b, v2)),
+      "changeFeed" -> (b => SnapshotTable.changeFeed(spark, b, v0, v2))
+    ).foreach { case (name, read) =>
+      val (declared, jobs) = jobsLaunched(read(base))
+      assert(jobs == 0, s"$name launched $jobs jobs to plan")
+      val (inferred, inferJobs) = jobsLaunched(read(stripped))
+      assert(inferJobs > 0, s"$name over the stripped manifests must infer")
+      assert(declared.schema == inferred.schema, name)
+      assert(rowsOf(declared) == rowsOf(inferred), name)
+    }
+    assert(SnapshotTable.changeFeed(spark, base, v0, v2).count() == 8)
+  }
 }

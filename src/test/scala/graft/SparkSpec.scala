@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (built once per test JVM). */
 object SparkSpec {
   lazy val session: SparkSession = Session.local(4, "spark.sql.warehouse.dir" ->
-    java.nio.file.Files.createTempDirectory("graft_wh").toString)
+    Tables.scratch("graft_wh"))
 }
 
 trait SparkSpec extends AnyFunSuite {
@@ -22,6 +22,14 @@ trait SparkSpec extends AnyFunSuite {
     * count shrinks. */
   def sized(full: Long, quick: Long): Long =
     if (sys.env.get("GRAFT_FULL_TESTS").contains("1")) full else quick
+
+  /** A fresh, existing dir from [[Tables.scratch]]: deleted when the
+    * test JVM exits, so a run leaves nothing in the tmpdir. */
+  def tempDir(prefix: String): String = {
+    val dir = Tables.scratch(prefix)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    dir
+  }
 
   /** Runs `body` and counts the Spark jobs it launched on this thread:
     * they carry a fresh local-property tag, and a tagged marker job run

@@ -366,7 +366,7 @@ class StreamingSpec extends SparkSpec {
   test("foreachBatch upsert sink: last-write-wins table across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fbatch").toString
+    val dir = tempDir("graft_fbatch")
     val (tbl, ckpt) = (s"$dir/table", s"$dir/ckpt")
     val in = MemoryStream[EventRow]
     // the foreachBatch escape hatch: each micro-batch MERGES into a
@@ -415,7 +415,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.api.SnapshotTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc_snap").toString
+    val dir = tempDir("graft_cdc_snap")
     val (base, base2, ckpt) = (s"$dir/tbl", s"$dir/tbl_oneshot", s"$dir/ckpt")
     def seed() = Seq((1L, 10L, "a"), (2L, 20L, "b"), (3L, 30L, "c")).toDF("k", "v", "grp")
     SnapshotTable.create(spark, base, seed(), "k", numBuckets = 4)
@@ -467,7 +467,7 @@ class StreamingSpec extends SparkSpec {
   test("file sink + checkpoint: restart resumes exactly-once") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream")
     val (sink, ckpt) = (s"$dir/sink", s"$dir/ckpt")
     val in = MemoryStream[EventRow]
 
@@ -495,7 +495,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file-source streaming: readStream over parquet equals the batch result") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fsrc").toString
+    val dir = tempDir("graft_fsrc")
     val batch = Tables.events(spark, sf001)
       .select("event_id", "ts", "user_id", "event_type", "value")
     batch.write.mode("overwrite").parquet(dir)
@@ -587,7 +587,7 @@ class StreamingSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx = s.sqlContext
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_markov_resume").toString
+    val dir = tempDir("graft_markov_resume")
     val (sink, ckpt) = (s"$dir/sink", s"$dir/ckpt")
     val in = MemoryStream[EventRow]
     def start() = EventStreams.markovPairsTws(in.toDS())
@@ -1097,7 +1097,7 @@ class StreamingSpec extends SparkSpec {
       .select("event_id", "ts", "user_id", "event_type", "value")
       .as[EventRow].collect().toSeq
     val chunks = (0 until 3).map(r => all.filter(_.event_id % 3 == r))
-    val base = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val base = tempDir("graft_sink")
     val in = MemoryStream[EventRow]
     val fn: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (b, _) => graft.ops.StreamOps.snapshotSinkApply(s, base, b.toDF(), 8)

@@ -27,7 +27,7 @@ class TablesSpec extends SparkSpec {
     * default) with `ts` encoded by `enc`, returning the dir usable as
     * an sfDir. */
   private def writeEvents(enc: String,
-      dir: String = java.nio.file.Files.createTempDirectory("tables_spec_ev").toString): String = {
+      dir: String = tempDir("tables_spec_ev")): String = {
     import spark.implicits._
     val base = sampleRows.toDF("event_id", "us", "user_id", "event_type", "value", "props")
     val ts = enc match {
@@ -58,7 +58,7 @@ class TablesSpec extends SparkSpec {
 
   test("events loader: a ts drift outside the kind set fails at load, naming the column") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("tables_spec_bad").toString
+    val dir = tempDir("tables_spec_bad")
     sampleRows.toDF("event_id", "us", "user_id", "event_type", "value", "props")
       .select(col("event_id"), col("us").cast("string").as("ts"), col("user_id"),
         col("event_type"), col("value"), col("props"))
@@ -74,7 +74,7 @@ class TablesSpec extends SparkSpec {
     // IllegalArgumentException as any contract drift — not a separate
     // exception type deeper in the loader.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("tables_spec_date").toString
+    val dir = tempDir("tables_spec_date")
     sampleRows.toDF("event_id", "us", "user_id", "event_type", "value", "props")
       .select(col("event_id"), timestamp_micros(col("us")).cast(DateType).as("ts"),
         col("user_id"), col("event_type"), col("value"), col("props"))
@@ -93,7 +93,7 @@ class TablesSpec extends SparkSpec {
     import spark.implicits._
     val us0 = 1704067200000000L // 2024-01-01T00:00:00Z
     for (enc <- Seq("ns_long", "us_ntz", "us_utc")) {
-      val dir = java.nio.file.Files.createTempDirectory(s"tables_spec_ord_$enc").toString
+      val dir = tempDir(s"tables_spec_ord_$enc")
       val base = Seq((1L, 1L, "O", 10.0, us0, "1-URGENT"))
         .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "us", "o_orderpriority")
       val od = enc match {
@@ -113,7 +113,7 @@ class TablesSpec extends SparkSpec {
 
   test("loader contract: a missing column fails at load with the table named") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("tables_spec_miss").toString
+    val dir = tempDir("tables_spec_miss")
     Seq((1, "AFRICA")).toDF("r_regionkey", "wrong_name")
       .write.mode("overwrite").parquet(s"$dir/region.parquet")
     val e = intercept[IllegalArgumentException](Tables.region(spark, dir))
@@ -122,7 +122,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("loader contract: a missing table raises Spark's path error") {
-    val dir = java.nio.file.Files.createTempDirectory("tables_spec_none").toString
+    val dir = tempDir("tables_spec_none")
     val e = intercept[org.apache.spark.sql.AnalysisException](Tables.region(spark, dir))
     assert(e.getMessage.contains("region.parquet"), e.getMessage)
   }
@@ -141,7 +141,7 @@ class TablesSpec extends SparkSpec {
   /** A small lineitem table under a fresh dir, returned as an sfDir. */
   private def writeLineitem(): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("tables_spec_li").toString
+    val dir = tempDir("tables_spec_li")
     (1L to 20L).map(i => (i, i % 7, i % 3, 1, i * 1.0, i * 10.25, 0.05, 0.02, "N", "O",
         1704067200000000L + i))
       .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
