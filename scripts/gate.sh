@@ -36,6 +36,23 @@ if [ -n "$reads" ]; then
   echo "gate: SnapshotTable reads parquet outside readFiles" >&2
   exit 1
 fi
+# EtlPipeline.run counts through observed metrics of the jobs it runs
+# anyway, so the pipeline has no driver action of its own; and a
+# commit's cdc files are written only by writeDataAndCdcFiles, which
+# runs that write alongside the data write and joins it on every path
+serial=$( { grep -HnE '\.(count|collect|head|first)\(\)|\.take\(' \
+              src/main/scala/graft/pipeline/EtlPipeline.scala
+            find src/main/scala -name '*.scala' -exec awk '
+              FNR == 1 { inside = 0 }
+              /def writeDataAndCdcFiles\(/ { inside = 1; next }
+              /^ *([a-z]+(\[[a-z]+\])? )*def / { inside = 0 }
+              /writeCdcFiles\(/ && !/def writeCdcFiles\(/ && !inside {
+                print FILENAME ":" FNR ": " $0 }' {} +; } || true)
+if [ -n "$serial" ]; then
+  printf '%s\n' "$serial"
+  echo "gate: a driver action in EtlPipeline.scala, or writeCdcFiles called outside writeDataAndCdcFiles" >&2
+  exit 1
+fi
 sbt -batch compile test
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} \
   sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_out"

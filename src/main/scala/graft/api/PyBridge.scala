@@ -173,7 +173,8 @@ object PyBridge {
     Transforms.profileApprox(df, Transforms.profileSpec(df))
 
   /** [[SnapshotTable.restore]]: publish latest+1 carrying an earlier
-    * version's manifest verbatim — the metadata-only undo. */
+    * version's files and metadata — the metadata-only undo. The
+    * change feed refuses the restore's version. */
   def snapshotRestore(spark: SparkSession, base: String, toVersion: Int): Int =
     SnapshotTable.restore(spark, base, toVersion)
 

@@ -365,6 +365,22 @@ object SnapshotTable {
     * commits gives their deltas different widths. */
   private val CdcSchemaHeader = "#cdcschema\t"
 
+  /** One-commit marker `#cdcgap`: this commit changed the table's
+    * content without recording its delta. [[restore]], [[cloneShallow]]
+    * and [[mergeBack]] publish ANOTHER version's manifest, whose
+    * [[CdcFileHeader]] lines describe that version's delta, not the
+    * carry's own (a restore's delta is the diff from the version it
+    * replaces); they drop those lines and write this marker instead
+    * (see [[carried]]), and [[changeFeed]] refuses a range containing
+    * a marked version. Never carried forward. */
+  private val CdcGapHeader = "#cdcgap"
+
+  /** Another version's manifest lines as a carry commit's own: its
+    * per-commit cdc lines dropped, the [[CdcGapHeader]] marker added. */
+  private def carried(lines: Seq[String]): Seq[String] =
+    CdcGapHeader +: lines.filterNot(l => l == CdcGapHeader ||
+      l.startsWith(CdcFileHeader) || l.startsWith(CdcSchemaHeader))
+
   /** Parsed manifest metadata:
     *  - `fileLines`: the raw data-file lines;
     *  - `schema`: the declared schema in PHYSICAL column names — set
@@ -379,7 +395,9 @@ object SnapshotTable {
     *  - `cdf`: the change-feed flag;
     *  - `cdcFiles`, `cdcSchema`: THIS commit's cdc file references and
     *    their schema (None when the commit wrote no cdc files or its
-    *    manifest predates the header). */
+    *    manifest predates the header);
+    *  - `cdcGap`: THIS commit carried another version's manifest and
+    *    recorded no delta (see [[CdcGapHeader]]). */
   private[graft] final case class ManifestMeta(
       fileLines: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType],
@@ -388,7 +406,8 @@ object SnapshotTable {
       checks: Seq[(String, String)] = Nil,
       cdf: Boolean = false,
       cdcFiles: Seq[String] = Nil,
-      cdcSchema: Option[org.apache.spark.sql.types.StructType] = None)
+      cdcSchema: Option[org.apache.spark.sql.types.StructType] = None,
+      cdcGap: Boolean = false)
 
   /** One manifest read, fully parsed. Every operation below derives
     * what it needs from ONE of these instead of re-reading the
@@ -424,7 +443,7 @@ object SnapshotTable {
     val cdcF = all.filter(_.startsWith(CdcFileHeader))
       .map(_.stripPrefix(CdcFileHeader))
     ManifestMeta(all.filterNot(_.startsWith("#")), schema, cm, bk, cks,
-      cdf, cdcF, ddlOf(CdcSchemaHeader))
+      cdf, cdcF, ddlOf(CdcSchemaHeader), all.contains(CdcGapHeader))
   }
 
   private def parsedManifest(spark: SparkSession, base: String, version: Int)
@@ -793,28 +812,71 @@ object SnapshotTable {
 
   /** Persist a commit's change set as cdc parquet files and return
     * their manifest lines: the [[CdcSchemaHeader]] and one reference
-    * per file (empty when the feed is off or the delta wrote no file).
-    * The `_SUCCESS` marker is dropped at write time so a
-    * fully-consumed commit dir can empty out and be swept by
-    * [[vacuum]]'s dir pass. */
+    * per file (empty when the delta wrote no file). The `_SUCCESS`
+    * marker is dropped at write time so a fully-consumed commit dir
+    * can empty out and be swept by [[vacuum]]'s dir pass. Called only
+    * from [[writeDataAndCdcFiles]]. */
   private def writeCdcFiles(spark: SparkSession, base: String,
-                            meta: ManifestMeta,
-                            delta: DataFrame): Seq[String] =
-    if (!meta.cdf) Nil
-    else {
-      val dir = s"$base/cdc/" +
-        java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      delta.write.parquet(dir)
-      val f = fs(spark, base)
-      try f.delete(new Path(s"$dir/_SUCCESS"), false)
-      catch { case scala.util.control.NonFatal(_) => () }
-      val refs = f.listStatus(new Path(dir)).toSeq
-        .filter(s => !s.isDirectory &&
-          s.getPath.getName.endsWith(".parquet"))
-        .map(s => s"$CdcFileHeader${s.getPath.toString}")
-      if (refs.isEmpty) Nil
-      else s"$CdcSchemaHeader${asRead(delta.schema).toDDL}" +: refs
+                            delta: DataFrame): Seq[String] = {
+    val dir = s"$base/cdc/" +
+      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+    delta.write.parquet(dir)
+    val f = fs(spark, base)
+    try f.delete(new Path(s"$dir/_SUCCESS"), false)
+    catch { case scala.util.control.NonFatal(_) => () }
+    val refs = f.listStatus(new Path(dir)).toSeq
+      .filter(s => !s.isDirectory &&
+        s.getPath.getName.endsWith(".parquet"))
+      .map(s => s"$CdcFileHeader${s.getPath.toString}")
+    if (refs.isEmpty) Nil
+    else s"$CdcSchemaHeader${asRead(delta.schema).toDDL}" +: refs
+  }
+
+  /** Name of the thread [[writeDataAndCdcFiles]] writes cdc files on. */
+  private[graft] val CdcWriterThread = "graft-snapshot-cdc-writer"
+
+  /** A commit's two writes: its data files ([[writeDataFiles]] of
+    * `rows`) and, when the feed is on (`meta.cdf`), its cdc files
+    * ([[writeCdcFiles]] of `delta`), returned as (data lines, cdc
+    * lines). Neither write reads what the other writes, so the cdc
+    * write runs on its own thread, [[CdcWriterThread]], while the
+    * data write runs on the caller's: the commit waits for the longer
+    * write, not for both in turn. The thread is created by the caller,
+    * so it inherits the caller's Spark local properties (job group,
+    * job tags, tracing ids) and its jobs are cancelled and attributed
+    * with the caller's. It is joined on every path before this
+    * returns or throws; when either write failed, the data write's
+    * failure (else the cdc write's) is thrown with the other added as
+    * suppressed, and the caller commits nothing. A failed write leaves
+    * only files no manifest references, which [[vacuum]] collects.
+    * With the feed off no thread is started. `private[graft]` so the
+    * join is testable. */
+  private[graft] def writeDataAndCdcFiles(spark: SparkSession, base: String,
+      meta: ManifestMeta, rows: DataFrame, keyCol: String,
+      numBuckets: Int, delta: DataFrame): (Seq[String], Seq[String]) = {
+    import scala.util.{Failure, Success, Try}
+    if (!meta.cdf) return (writeDataFiles(spark, base, rows, keyCol, numBuckets), Nil)
+    @volatile var cdc: Try[Seq[String]] = null
+    val writer = new Thread(() => cdc =
+      try Success(writeCdcFiles(spark, base, delta))
+      catch { case e: Throwable => Failure(e) }, CdcWriterThread)
+    writer.setDaemon(true)
+    writer.start()
+    val data = try Try(writeDataFiles(spark, base, rows, keyCol, numBuckets))
+    finally {
+      var interrupted = false
+      while (writer.isAlive)
+        try writer.join() catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread().interrupt()
     }
+    (data, cdc) match {
+      case (Success(d), Success(c)) => (d, c)
+      case _ =>
+        val errors = Seq(data, cdc).collect { case Failure(e) => e }
+        errors.tail.foreach(errors.head.addSuppressed)
+        throw errors.head
+    }
+  }
 
   /** CHANGE FEED read — the materialized row deltas of versions
     * (vFrom, vTo], one row per change-set row, in vTo's LOGICAL
@@ -823,8 +885,12 @@ object SnapshotTable {
     * when any version in the range predates [[enableChangeFeed]]
     * (its delta was never materialized — re-diffing here would hide
     * an O(two-version join) under a feed read; use [[diff]]
-    * explicitly if that is what you want). Versions with no cdc
-    * files (metadata/maintenance commits) contribute zero rows.
+    * explicitly if that is what you want), and equally loud, naming
+    * the version, when one was published by [[restore]],
+    * [[cloneShallow]] or [[mergeBack]]: those carry another version's
+    * files and record no delta of their own (see [[CdcGapHeader]]).
+    * Versions with no cdc files (metadata/maintenance commits)
+    * contribute zero rows.
     * Scale: a pruned parquet scan of exactly the change files —
     * follower cost is O(delta), never O(table), and the per-version
     * file lists are manifest metadata. */
@@ -842,6 +908,12 @@ object SnapshotTable {
         s"change feed is not enabled at version $v of $base: deltas " +
         "are materialized only for commits made after " +
         "enableChangeFeed(); bootstrap from asOf and stream from there")
+    }
+    metas.find(_._2.cdcGap).foreach { case (v, _) =>
+      throw new IllegalStateException(
+        s"version $v of $base carries another version's manifest " +
+        "(restore, cloneShallow or mergeBack) and recorded no delta; " +
+        s"bootstrap from asOf($v) and stream from there")
     }
     val mHead = metas.lastOption.map(_._2)
       .getOrElse(parsedManifestAll(spark, base, vTo))
@@ -875,9 +947,11 @@ object SnapshotTable {
   }
 
   /** RESTORE to an earlier version (Delta `RESTORE TABLE … VERSION AS
-    * OF`): publish latest+1 carrying `toVersion`'s manifest VERBATIM —
-    * file lines, stats, schema and rename headers — a pure metadata
-    * commit, O(manifest). History is preserved: the intermediate
+    * OF`): publish latest+1 carrying `toVersion`'s manifest — file
+    * lines, stats, schema and rename headers verbatim; its cdc lines
+    * are replaced by the [[CdcGapHeader]] marker, since they record
+    * `toVersion`'s delta, not the restore's — a pure metadata commit,
+    * O(manifest). History is preserved: the intermediate
     * versions remain time-travelable, and the restored files become
     * live again, so a later [[vacuum]] keeps them (its live set is
     * the union of SURVIVING manifests — restore re-references the old
@@ -888,8 +962,7 @@ object SnapshotTable {
     require(v >= 0, s"no table at $base")
     require(toVersion >= 0 && toVersion <= v,
       s"cannot restore $base to version $toVersion (latest is $v)")
-    commit(spark, base, v + 1,
-      manifestLines(spark, base, toVersion))
+    commit(spark, base, v + 1, carried(manifestLines(spark, base, toVersion)))
     v + 1
   }
 
@@ -1008,16 +1081,16 @@ object SnapshotTable {
       s"table already exists at $dstBase")
     val v = if (version >= 0) version else latestVersion(spark, srcBase)
     require(v >= 0, s"no table at $srcBase")
-    // verbatim carry — file lines (absolute paths), stats, schema and
-    // rename headers all transfer, exactly like [[restore]] — plus the
-    // branch-point header, read back by [[mergeBack]]. v0 is immutable
-    // once committed, so the branch point needs no carry-forward
-    // through later branch commits: mergeBack always reads it from v0.
+    // carry — file lines (absolute paths), stats, schema and rename
+    // headers transfer verbatim, cdc lines do not, exactly like
+    // [[restore]] — plus the branch-point header, read back by
+    // [[mergeBack]]. v0 is immutable once committed, so the branch
+    // point needs no carry-forward through later branch commits:
+    // mergeBack always reads it from v0.
     val srcUri = srcP.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .makeQualified(srcP).toString
     commit(spark, dstBase, 0,
-      Seq(s"$ParentHeader$srcUri\t$v") ++
-        manifestLines(spark, srcBase, v))
+      s"$ParentHeader$srcUri\t$v" +: carried(manifestLines(spark, srcBase, v)))
     0
   }
 
@@ -1030,7 +1103,9 @@ object SnapshotTable {
     * branch's v0 records its branch point; if the parent's head is
     * still that version, the branch head's manifest (file lines +
     * schema/colmap/buckets headers, verbatim — absolute paths make
-    * cross-base references first-class, same as the clone itself)
+    * cross-base references first-class, same as the clone itself; its
+    * cdc lines, the branch head's own delta, become the
+    * [[CdcGapHeader]] marker)
     * commits as the parent's next version, so the parent's content
     * AFTER the merge equals the branch's head exactly — as if every
     * branch commit had been made on the parent directly. If the
@@ -1065,8 +1140,8 @@ object SnapshotTable {
     // carrying it into the parent would mislabel the parent a branch
     // (visible when branchHead == 0 — a no-commit branch's head IS v0)
     commit(spark, parentBase, parentHead + 1,
-      manifestLines(spark, branchBase, branchHead)
-        .filterNot(_.startsWith(ParentHeader)))
+      carried(manifestLines(spark, branchBase, branchHead)
+        .filterNot(_.startsWith(ParentHeader))))
     parentHead + 1
   }
 
@@ -1575,7 +1650,14 @@ object SnapshotTable {
     *
     * Contract: every row's `op` must be 'U' or 'D'. Any other value
     * (null, 'I', 'u', ...) throws IllegalArgumentException and commits
-    * no version. */
+    * no version.
+    *
+    * With the change feed on, the change set's cdc files are written
+    * on a thread of their own while the touched buckets are rewritten
+    * (see [[writeDataAndCdcFiles]]); the version is committed only when
+    * both writes succeeded. A failed write throws and commits nothing:
+    * it leaves only data or cdc files no manifest references, which
+    * [[vacuum]] collects. */
   def mergeInto(spark: SparkSession, base: String, changes0: DataFrame,
                 keyCol0: String, numBuckets: Int): Int = {
     val v = latestVersion(spark, base)
@@ -1716,20 +1798,19 @@ object SnapshotTable {
     }
     // inserts landing in untouched buckets: merged includes them via
     // the change set itself (an insert's bucket is by definition in
-    // changedBuckets, so its bucket's file — if any — was touched)
-    val newLines = untouched ++
-      writeDataFiles(spark, base, merged, keyCol, numBuckets)
-        // an empty merged bucket writes nothing; deletes that empty a
-        // bucket thus drop its file from the manifest, as they must
-    // change feed: the writer already holds the delta — persist it
-    // now (O(change set)) and reference it from THIS commit's
-    // manifest, so the commit and its change record are atomic; a
-    // lost commit race leaves only unreferenced files (vacuumable)
-    val cdcLines = writeCdcFiles(spark, base, meta, changes)
+    // changedBuckets, so its bucket's file — if any — was touched); an
+    // empty merged bucket writes nothing, so deletes that empty a
+    // bucket drop its file from the manifest, as they must. Change
+    // feed: the writer already holds the delta — persist it alongside
+    // the data files (O(change set)) and reference it from THIS
+    // commit's manifest, so the commit and its change record are
+    // atomic; a lost commit race leaves only unreferenced files
+    val (dataLines, cdcLines) = writeDataAndCdcFiles(spark, base, meta,
+      merged, keyCol, numBuckets, changes)
     commit(spark, base, v + 1,
       headersOf(declared, meta.colMap,
         Some((numBuckets, keyCol)), meta.checks, meta.cdf) ++
-        cdcLines ++ newLines)
+        cdcLines ++ untouched ++ dataLines)
     v + 1
     } finally { ch0.unpersist(); () }
   }
@@ -1751,7 +1832,11 @@ object SnapshotTable {
     * Delta runs OPTIMIZE before bulk deletes. `keyCol`/`statsCol` are
     * LOGICAL names. Returns (new version, files rewritten, files
     * skipped); a band no file can match publishes nothing and returns
-    * (current version, 0, total). */
+    * (current version, 0, total). With the change feed on, the 'D'
+    * cdc files are written on a thread of their own while the
+    * survivors are rewritten, and a failed write commits nothing and
+    * leaves only unreferenced files for [[vacuum]], as in
+    * [[mergeInto]]. */
   def deleteRange(spark: SparkSession, base: String, keyCol: String,
                   statsCol: String, lo: java.math.BigDecimal,
                   hi: java.math.BigDecimal, numBuckets: Int)
@@ -1780,21 +1865,18 @@ object SnapshotTable {
     try {
       // three-valued WHERE: a null statsCol makes the predicate UNKNOWN,
       // and DELETE removes only rows where it is TRUE — nulls survive
-      val survivors = rows.where(
-        !coalesce(col(physStats).between(lit(lo), lit(hi)), lit(false)))
-      val newLines = skipped ++
-        writeDataFiles(spark, base, survivors, physKey, numBuckets)
+      val inBand = coalesce(col(physStats).between(lit(lo), lit(hi)), lit(false))
       // change feed: deletes surface as 'D' rows carrying the deleted
       // row's values (Delta CDF's delete pre-image) — served from the
-      // persisted candidate read, paid only when the feed is on
-      val cdcLines = writeCdcFiles(spark, base, m,
-        rows.where(coalesce(col(physStats).between(lit(lo), lit(hi)),
-            lit(false)))
-          .withColumn("op", lit("D")))
+      // persisted candidate read alongside the survivor rewrite, paid
+      // only when the feed is on
+      val (dataLines, cdcLines) = writeDataAndCdcFiles(spark, base, m,
+        rows.where(!inBand), physKey, numBuckets,
+        rows.where(inBand).withColumn("op", lit("D")))
       commit(spark, base, v + 1,
         headersOf(m.schema, m.colMap,
           Some((numBuckets, physKey)), m.checks, m.cdf) ++
-          cdcLines ++ newLines)
+          cdcLines ++ skipped ++ dataLines)
       (v + 1, candidates.size, skipped.size)
     } finally { if (m.cdf) { rows.unpersist(); () } }
   }

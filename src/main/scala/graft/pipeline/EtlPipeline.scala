@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.api.Transforms
@@ -88,15 +88,25 @@ object EtlPipeline {
     * read opens no footer. A sink whose columns have other types (not
     * written by this method) fails when it is read.
     *
-    * `ingested`, `quarantined` and `deduped` come from ONE aggregate
-    * over the parsed batch: its row count, its bad rows, and its
-    * distinct (meter_id, ts) pairs among the valid rows — `normalize`
-    * keeps exactly one row per such pair, and valid rows have both
-    * non-null. `loaded` counts the staged sink rows. */
+    * Two Spark jobs with AQE off (with AQE on, each shuffle stage is a
+    * job of its own): the `localCheckpoint` that materializes the
+    * upsert, and the sink write. Nothing is counted by a job of its
+    * own — every `Summary` field is an observed metric
+    * (`Dataset.observe`) of the checkpoint job, read once the write
+    * has returned:
+    *  - `ingested`: `count(1)` over the parsed batch;
+    *  - `quarantined`: `count_if` of the quarantine predicate over the
+    *    parsed batch;
+    *  - `deduped`: `count(1)` over `normalize`'s output;
+    *  - `loaded`: `count(1)` over the staged sink rows.
+    * The observations are unnamed (each gets a unique name), so
+    * concurrent runs in one session never share one. */
   def run(spark: SparkSession, rawDir: String, sinkDir: String): Summary = {
+    val (batch, deduped, loaded) = (Observation(), Observation(), Observation())
     val parsed = parse(spark, rawDir)
+      .observe(batch, count(lit(1)).as("n"), count_if(bad).as("bad"))
     val (valid, _) = split(parsed)
-    val normalized = normalize(valid)
+    val normalized = normalize(valid).observe(deduped, count(lit(1)).as("n"))
 
     // first run == sink path absent, checked explicitly. A transient
     // FS error, permission failure, or corrupt footer must FAIL the
@@ -125,14 +135,12 @@ object EtlPipeline {
     // sink can be overwritten while (logically) being read from — the
     // read-modify-overwrite cycle every idempotent upsert sink needs.
     val staged = merged.withColumn("reading_date", to_date(col("ts")))
+      .observe(loaded, count(lit(1)).as("n"))
       .localCheckpoint()
-    val loaded = staged.count()
     staged.write.mode("overwrite")
       .partitionBy("reading_date").parquet(sinkDir)
-    val counts = parsed.agg(count(lit(1)), count_if(bad),
-      count_distinct(when(!bad, col("meter_id")), when(!bad, col("ts"))))
-      .head()
-    Summary(counts.getLong(0), counts.getLong(1), counts.getLong(2), loaded)
+    def n(o: Observation, metric: String = "n") = o.get(metric).asInstanceOf[Long]
+    Summary(n(batch), n(batch, "bad"), n(deduped), n(loaded))
   }
 }
 

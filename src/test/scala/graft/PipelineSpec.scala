@@ -59,7 +59,7 @@ class PipelineSpec extends SparkSpec {
     assert(v2.getDecimal(v2.fieldIndex("kwh")).doubleValue() == 9.99) // new batch won
   }
 
-  test("one counting pass: Summary equals the three recounts; a re-run plans and loads in 4 jobs") {
+  test("one counting pass: Summary equals the three recounts; a re-run plans and loads in 2 jobs") {
     import spark.implicits._
     val raw = tempDir("graft_raw3")
     val sink = tempDir("graft_sink3") + "/readings"
@@ -89,16 +89,55 @@ class PipelineSpec extends SparkSpec {
     assert(s == EtlPipeline.Summary(parsed.count(), rejects.count(),
       EtlPipeline.normalize(valid).count(), s.loaded))
     assert(s == EtlPipeline.Summary(ingested = 12, quarantined = 6, deduped = 3, loaded = 3))
-    // a re-run over the existing sink, in a session with the graded
-    // setting AQE off (with AQE on every shuffle stage is a job of its
-    // own): the sink read plans from the declared schema, so the jobs
-    // are the checkpoint, the load count, the sink write and the one
-    // counting aggregate
+    // a re-run over the existing sink in the default session (AQE on)
+    // counts the same through its observed metrics
+    assert(EtlPipeline.run(spark, raw, sink) == s)
+    // and in a session with the graded setting AQE off (with AQE on
+    // every shuffle stage is a job of its own): the sink read plans
+    // from the declared schema and every count is observed, so the
+    // jobs are the checkpoint and the sink write
     val graded = spark.newSession()
     graded.conf.set("spark.sql.adaptive.enabled", "false")
     val (again, jobs) = jobsLaunched(EtlPipeline.run(graded, raw, sink))
     assert(again == s)
-    assert(jobs <= 4, s"re-run launched $jobs jobs")
+    assert(jobs <= 2, s"re-run launched $jobs jobs")
+  }
+
+  test("an empty batch observes zero counts, with and without AQE") {
+    val raw = tempDir("graft_raw_empty")
+    java.nio.file.Files.write(java.nio.file.Paths.get(raw, "part-0.csv"),
+      "reading_id,ts,meter_id,fuel,value\n".getBytes("UTF-8"))
+    val noAqe = spark.newSession()
+    noAqe.conf.set("spark.sql.adaptive.enabled", "false")
+    val loadedRaw = tempDir("graft_raw_two")
+    writeRawCsv(loadedRaw, Seq(
+      (1L, "2024-01-01 00:00:00", 10L, "electricity", 5.00),
+      (2L, "2024-01-01 01:00:00", 10L, "electricity", 6.00)))
+    Seq(spark, noAqe).foreach { session =>
+      val sink = tempDir("graft_sink_empty") + "/readings"
+      assert(EtlPipeline.run(session, raw, sink) == EtlPipeline.Summary(0, 0, 0, 0))
+      // onto an existing sink: the empty side of the upsert's union
+      EtlPipeline.run(session, loadedRaw, sink)
+      assert(EtlPipeline.run(session, raw, sink) == EtlPipeline.Summary(0, 0, 0, 2))
+    }
+  }
+
+  test("concurrent runs into different sinks each count their own batch") {
+    def batch(n: Int, bad: Int) =
+      (1 to n).map(i => (i.toLong, s"2024-01-01 ${"%02d".format(i % 24)}:00:00",
+        10L + i / 24, "electricity", if (i <= bad) -1.0 else 1.0))
+    val runs = Seq((9, 2), (30, 5)).map { case (n, bad) =>
+      val raw = tempDir("graft_raw_conc")
+      writeRawCsv(raw, batch(n, bad))
+      (raw, tempDir("graft_sink_conc") + "/readings",
+        EtlPipeline.Summary(n, bad, n - bad, n - bad))
+    }
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val summaries = Await.result(Future.sequence(runs.map { case (raw, sink, _) =>
+      Future(EtlPipeline.run(spark, raw, sink))
+    }), scala.concurrent.duration.Duration(5, "min"))
+    assert(summaries == runs.map(_._3))
   }
 
   test("schema validator fails fast on missing or mistyped columns") {

@@ -718,4 +718,100 @@ class SnapshotTableSpec extends SparkSpec {
     }
     assert(SnapshotTable.changeFeed(spark, base, v0, v2).count() == 8)
   }
+
+  private def cdcWriterAlive(): Boolean = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.getName == SnapshotTable.CdcWriterThread && t.isAlive)
+  }
+
+  // feed on, the data or the cdc write fails: a regular file planted
+  // where its directory goes. The table is a shallow clone, so its own
+  // base holds neither directory yet and reads go to the source's files
+  for ((writer, dir) <- Seq("mergeInto" -> "cdc", "mergeInto" -> "data",
+                            "deleteRange" -> "cdc", "deleteRange" -> "data"))
+    test(s"feed on, a failed $dir write in $writer commits nothing and leaves no cdc writer alive") {
+      import spark.implicits._
+      val src = freshBase()
+      SnapshotTable.create(spark, src, fixture(), "k", numBuckets = 4)
+      val base = freshBase()
+      SnapshotTable.cloneShallow(spark, src, base)
+      val v = SnapshotTable.enableChangeFeed(spark, base)
+      def write(): Int =
+        if (writer == "mergeInto")
+          SnapshotTable.mergeInto(spark, base,
+            Seq((5L, "U", 999L, "u"), (7L, "D", 0L, "")).toDF("k", "op", "v", "grp"),
+            "k", numBuckets = 4)
+        else SnapshotTable.deleteRange(spark, base, "k", "v",
+          java.math.BigDecimal.ZERO, java.math.BigDecimal.valueOf(100), numBuckets = 4)._1
+      val planted = new java.io.File(s"$base/$dir")
+      assert(planted.createNewFile())
+      intercept[org.apache.hadoop.fs.ParentNotDirectoryException](write())
+      assert(!cdcWriterAlive(), "the cdc writer thread outlived a failed write")
+      assert(SnapshotTable.latestVersion(spark, base) == v)
+      // the failure left the table intact: the same write then commits
+      assert(planted.delete())
+      assert(write() == v + 1)
+      assert(!cdcWriterAlive())
+      val feed = SnapshotTable.changeFeed(spark, base, v, v + 1)
+      assert(feed.count() == (if (writer == "mergeInto") 2 else 11))
+    }
+
+  test("a failed data write returns only after the concurrent cdc write has ended") {
+    val base = freshBase()
+    assert(new java.io.File(base).mkdirs() && new java.io.File(s"$base/data").createNewFile())
+    val slow = udf { (k: Long) => Thread.sleep(1000); k }
+    val t0 = System.nanoTime()
+    intercept[org.apache.hadoop.fs.ParentNotDirectoryException] {
+      SnapshotTable.writeDataAndCdcFiles(spark, base,
+        SnapshotTable.ManifestMeta(Nil, None, Nil, cdf = true), fixture(), "k", 4,
+        spark.range(1).select(slow(col("id")).as("k")))
+    }
+    assert(!cdcWriterAlive(), "the cdc writer thread outlived a failed data write")
+    assert(System.nanoTime() - t0 >= 1000L * 1000 * 1000)
+    // the cdc write itself succeeded: its files exist, referenced by no manifest
+    assert(new java.io.File(s"$base/cdc").listFiles().length == 1)
+  }
+
+  test("restore, cloneShallow and mergeBack record no delta: changeFeed refuses their versions") {
+    import spark.implicits._
+    def kv(rows: (Long, Long, String)*) = rows.toDF("k", "v", "op")
+    val base = freshBase()
+    SnapshotTable.create(spark, base, kv((1L, 10L, "U"), (2L, 20L, "U")).drop("op"),
+      "k", numBuckets = 2)
+    val vOn = SnapshotTable.enableChangeFeed(spark, base)
+    val v2 = SnapshotTable.mergeInto(spark, base, kv((1L, 11L, "U")), "k", 2)
+    // restore to the head (content unchanged), then to the pre-merge
+    // version (k=1 back to 10): neither may replay v2's delta
+    val v3 = SnapshotTable.restore(spark, base, v2)
+    val v4 = SnapshotTable.restore(spark, base, vOn)
+    assert(SnapshotTable.liveFiles(spark, base, v3) == SnapshotTable.liveFiles(spark, base, v2))
+    assert(SnapshotTable.liveFiles(spark, base, v4) == SnapshotTable.liveFiles(spark, base, vOn))
+    assert(SnapshotTable.asOf(spark, base, v4).where(col("k") === 1)
+      .head.getLong(1) == 10L)
+    assert(SnapshotTable.changeFeed(spark, base, vOn, v2)
+      .select("op", "k", "v", "_commit_version").collect().map(_.toString).toSeq ==
+      Seq(s"[U,1,11,$v2]"))
+    def refused(from: Int, to: Int): String =
+      intercept[IllegalStateException](SnapshotTable.changeFeed(spark, base, from, to))
+        .getMessage
+    Seq(v3, v4).foreach { v =>
+      assert(refused(v - 1, v).contains(s"version $v "), v)
+    }
+    assert(refused(vOn, v4).contains(s"version $v3 "))
+    // a merge after the restores feeds again
+    val v5 = SnapshotTable.mergeInto(spark, base, kv((2L, 21L, "U")), "k", 2)
+    assert(SnapshotTable.changeFeed(spark, base, v4, v5).count() == 1)
+    // a branch's v0 carries no cdc reference, and a fast-forward
+    // merge-back publishes the branch head's files without its delta
+    val br = freshBase()
+    SnapshotTable.cloneShallow(spark, base, br)
+    assert(!scala.io.Source.fromFile(s"$br/manifest/v0").getLines()
+      .exists(l => l.startsWith("#cdcfile") || l.startsWith("#cdcschema")))
+    SnapshotTable.mergeInto(spark, br, kv((1L, 12L, "U")), "k", 2)
+    val v6 = SnapshotTable.mergeBack(spark, br)
+    assert(SnapshotTable.asOf(spark, base, v6).where(col("k") === 1)
+      .head.getLong(1) == 12L)
+    assert(refused(v5, v6).contains(s"version $v6 "))
+  }
 }
