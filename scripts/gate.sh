@@ -36,6 +36,20 @@ if [ -n "$reads" ]; then
   echo "gate: SnapshotTable reads parquet outside readFiles" >&2
   exit 1
 fi
+# one manifest format: #schema and #buckets are required on read, so
+# readFiles always gets a schema and ManifestMeta holds neither as an
+# Option (no footer-inference or caller-trusted-bucket branch)
+legacy=$(awk '/readFiles\(.*None/ { print FILENAME ":" FNR ": " $0 }
+              /case class ManifestMeta\(/ { inside = 1 }
+              inside && /(schema|buckets): *Option\[/ {
+                print FILENAME ":" FNR ": " $0 }
+              inside && /\)$/ { inside = 0 }' \
+  src/main/scala/graft/api/SnapshotTable.scala)
+if [ -n "$legacy" ]; then
+  printf '%s\n' "$legacy"
+  echo "gate: SnapshotTable reads a manifest without #schema or #buckets" >&2
+  exit 1
+fi
 # EtlPipeline.run counts through observed metrics of the jobs it runs
 # anyway, so the pipeline has no driver action of its own; and a
 # commit's cdc files are written only by writeDataAndCdcFiles, which

@@ -243,13 +243,13 @@ object PyBridge {
     SnapshotTable.rebucket(spark, base, keyCol, newNumBuckets)
 
   /** The bucket addressing `[numBuckets, logicalKeyCol]` recorded in a
-    * version's manifest, or null for pre-r18 manifests (caller-trusted
-    * legacy contract). Arrays cross py4j cleanly; the count parses
+    * version's manifest. Arrays cross py4j cleanly; the count parses
     * back with int(). */
   def snapshotRecordedBuckets(spark: SparkSession, base: String,
-                              version: Int): Array[String] =
-    SnapshotTable.recordedBuckets(spark, base, version)
-      .map { case (n, k) => Array(n.toString, k) }.orNull
+                              version: Int): Array[String] = {
+    val (n, k) = SnapshotTable.recordedBuckets(spark, base, version)
+    Array(n.toString, k)
+  }
 
   /** [[SnapshotTable.addCheckConstraint]]: record a CHECK constraint
     * every future merge enforces; refuses (ConstraintViolationException)

@@ -20,6 +20,14 @@ import org.apache.spark.sql.functions._
   *                                                   per-file column stats — see fileEntries)
   * }}}
   *
+  * Besides its file lines a manifest carries header lines starting
+  * '#'. Required on every manifest, and a read refuses one without
+  * them: `#schema` (the declared schema), `#buckets` (the bucket
+  * addressing) and the closing `#eof` trailer. Optional: `#colmap`
+  * (renames), `#check` (constraints), `#cdf` (change feed on),
+  * `#cdcfile` lines with their `#cdcschema` (this commit's delta),
+  * `#cdcgap` and `#parent` (a clone's branch point).
+  *
   * The COMMIT POINT is the manifest file: data files are fully
   * written first, then the manifest is published by a link/rename
   * publish — the full payload goes to a hidden temp file, which is
@@ -227,7 +235,7 @@ object SnapshotTable {
              keyCol: String, numBuckets: Int): Unit = {
     require(latestVersion(spark, base) < 0, s"table already exists at $base")
     commit(spark, base, 0,
-      headersOf(Some(asRead(rows.schema)), Nil, Some((numBuckets, keyCol))) ++
+      headersOf(ManifestMeta(Nil, asRead(rows.schema), Nil, (numBuckets, keyCol))) ++
         writeDataFiles(spark, base, rows, keyCol, numBuckets))
   }
 
@@ -290,10 +298,7 @@ object SnapshotTable {
     * every read of a graft-created table is schema-first and launches
     * no footer-inference job. Lines starting '#' (other than the
     * [[EofMarker]] trailer) are manifest METADATA, not file references
-    * — readers of the file list skip them via [[fileLines]]. Manifests
-    * written without it (hand-built fixtures, tables created before
-    * `create` recorded it) still read: their schema is inferred from
-    * the files' footers. */
+    * — [[parsedManifestAll]] separates them from the file lines. */
   private val SchemaHeader = "#schema\t"
 
   /** Header prefix for the COLUMN NAME MAPPING (round 17, RENAME
@@ -303,8 +308,8 @@ object SnapshotTable {
     * — and every read renames physical→logical at the plan boundary,
     * the iceberg column-mapping posture (theirs rides field ids; a
     * stable physical name is the dependency-free equivalent for a
-    * parquet-only table). Pre-r17 manifests carry no mapping, so
-    * logical == physical everywhere and every reader is unchanged. */
+    * parquet-only table). A manifest without it maps no names, so
+    * logical == physical. */
   private val ColMapHeader = "#colmap\t"
 
   /** Header for the table's BUCKET ADDRESSING (round 18 — ADVICE r17):
@@ -318,8 +323,7 @@ object SnapshotTable {
     * Every commit now records the addressing; every bucket-addressed
     * read/write validates the caller's count against it and fails
     * loudly on mismatch. [[rebucket]] is the one door that changes
-    * it. Pre-r18 manifests carry no header → caller-trusted, the old
-    * contract, so existing tables stay readable. */
+    * it. */
   private val BucketsHeader = "#buckets\t"
 
   /** Header for a CHECK constraint (round 18; Delta's `ALTER TABLE …
@@ -384,25 +388,22 @@ object SnapshotTable {
   /** Parsed manifest metadata:
     *  - `fileLines`: the raw data-file lines;
     *  - `schema`: the declared schema in PHYSICAL column names — set
-    *    by [[create]] and widened by [[addColumn]]; None only on a
-    *    manifest written without it, whose readers infer it from the
-    *    files (see [[SchemaHeader]]);
+    *    by [[create]] and widened by [[addColumn]];
     *  - `colMap`: the physical→logical rename mapping (empty =
     *    identity);
     *  - `buckets`: the recorded bucket addressing (numBuckets, physical
-    *    key column), None on manifests without the header;
+    *    key column);
     *  - `checks`: the CHECK constraints in force;
     *  - `cdf`: the change-feed flag;
     *  - `cdcFiles`, `cdcSchema`: THIS commit's cdc file references and
-    *    their schema (None when the commit wrote no cdc files or its
-    *    manifest predates the header);
+    *    their schema (None when the commit wrote no cdc files);
     *  - `cdcGap`: THIS commit carried another version's manifest and
     *    recorded no delta (see [[CdcGapHeader]]). */
   private[graft] final case class ManifestMeta(
       fileLines: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType],
+      schema: org.apache.spark.sql.types.StructType,
       colMap: Seq[(String, String)],
-      buckets: Option[(Int, String)] = None,
+      buckets: (Int, String),
       checks: Seq[(String, String)] = Nil,
       cdf: Boolean = false,
       cdcFiles: Seq[String] = Nil,
@@ -415,14 +416,18 @@ object SnapshotTable {
     * GET+parse+completeness passes, `addColumn` four — on remote
     * storage or a manifest still being sealed each pass is real
     * latency, and the manifest is immutable per (base, version), so
-    * a single read is trivially consistent). */
+    * a single read is trivially consistent). A manifest without a
+    * required header (`#schema`, `#buckets`, or `#cdcschema` beside
+    * `#cdcfile` lines) is refused with an `IllegalStateException`
+    * naming the version, the base and the header. */
   private def parsedManifestAll(spark: SparkSession, base: String,
       version: Int): ManifestMeta = {
     val all = manifestLines(spark, base, version)
-    def ddlOf(header: String) = all.find(_.startsWith(header))
-      .map(l => org.apache.spark.sql.types.StructType.fromDDL(
-        l.stripPrefix(header)))
-    val schema = ddlOf(SchemaHeader)
+    def required(header: String): String = all.find(_.startsWith(header))
+      .getOrElse(throw new IllegalStateException(
+        s"manifest v$version of $base has no ${header.trim} header"))
+      .stripPrefix(header)
+    def ddl(body: String) = org.apache.spark.sql.types.StructType.fromDDL(body)
     val cm = all.find(_.startsWith(ColMapHeader)).toSeq
       .flatMap(_.stripPrefix(ColMapHeader).split(',').toSeq)
       .filter(_.nonEmpty)
@@ -430,67 +435,53 @@ object SnapshotTable {
         val i = p.indexOf('=')
         (p.substring(0, i), p.substring(i + 1))
       }
-    val bk = all.find(_.startsWith(BucketsHeader)).map { l =>
-      val parts = l.stripPrefix(BucketsHeader).split('\t')
-      (parts(0).toInt, parts(1))
-    }
+    val bk = required(BucketsHeader).split('\t')
     val cks = all.filter(_.startsWith(CheckHeader)).map { l =>
       val body = l.stripPrefix(CheckHeader)
       val i = body.indexOf('\t')
       (body.substring(0, i), body.substring(i + 1))
     }
-    val cdf = all.contains(CdfHeader)
     val cdcF = all.filter(_.startsWith(CdcFileHeader))
       .map(_.stripPrefix(CdcFileHeader))
-    ManifestMeta(all.filterNot(_.startsWith("#")), schema, cm, bk, cks,
-      cdf, cdcF, ddlOf(CdcSchemaHeader), all.contains(CdcGapHeader))
+    val cdcSchema =
+      if (cdcF.isEmpty) None else Some(ddl(required(CdcSchemaHeader)))
+    ManifestMeta(all.filterNot(_.startsWith("#")), ddl(required(SchemaHeader)),
+      cm, (bk(0).toInt, bk(1)), cks, all.contains(CdfHeader), cdcF, cdcSchema,
+      all.contains(CdcGapHeader))
   }
 
-  private def parsedManifest(spark: SparkSession, base: String, version: Int)
-      : (Seq[String], Option[org.apache.spark.sql.types.StructType]) = {
-    val m = parsedManifestAll(spark, base, version)
-    (m.fileLines, m.schema)
-  }
-
-  /** The metadata header lines a commit must carry forward: the
-    * declared schema (if any) and the rename mapping (if any). Every
-    * commit path routes through this so no maintenance operation can
-    * silently drop an evolution. */
-  private def headersOf(
-      schema: Option[org.apache.spark.sql.types.StructType],
-      colMap: Seq[(String, String)],
-      buckets: Option[(Int, String)] = None,
-      checks: Seq[(String, String)] = Nil,
-      cdf: Boolean = false): Seq[String] =
-    schemaHeaderOf(schema) ++ (
-      if (colMap.isEmpty) Nil
-      else Seq(ColMapHeader + colMap.map { case (p, l) => s"$p=$l" }
+  /** The metadata header lines a commit carries forward from `m`: its
+    * declared schema, rename mapping, bucket addressing, CHECK
+    * constraints and change-feed flag (per-commit cdc lines are not
+    * carried). Every commit path routes through this so no
+    * maintenance operation can silently drop an evolution. */
+  private def headersOf(m: ManifestMeta): Seq[String] =
+    Seq(s"$SchemaHeader${m.schema.toDDL}") ++ (
+      if (m.colMap.isEmpty) Nil
+      else Seq(ColMapHeader + m.colMap.map { case (p, l) => s"$p=$l" }
         .mkString(","))) ++
-    buckets.map { case (n, k) => s"$BucketsHeader$n\t$k" }.toSeq ++
-    checks.map { case (n, e) => s"$CheckHeader$n\t$e" } ++
-    (if (cdf) Seq(CdfHeader) else Nil)
+    Seq(s"$BucketsHeader${m.buckets._1}\t${m.buckets._2}") ++
+    m.checks.map { case (n, e) => s"$CheckHeader$n\t$e" } ++
+    (if (m.cdf) Seq(CdfHeader) else Nil)
 
   /** Validate a caller-supplied bucket count against the manifest's
-    * recorded addressing (no-op for pre-r18 manifests, which carry
-    * none — the caller-trusted legacy contract). */
+    * recorded addressing. */
   private def requireBucketsMatch(m: ManifestMeta, numBuckets: Int,
                                   base: String): Unit =
-    m.buckets.foreach { case (n, _) =>
-      require(n == numBuckets,
-        s"table $base is bucketed numBuckets=$n (recorded in its " +
-        s"manifest); caller passed $numBuckets — a mismatched count " +
-        s"would hash keys into the wrong buckets. Use rebucket() to " +
-        s"change the addressing.")
-    }
+    require(m.buckets._1 == numBuckets,
+      s"table $base is bucketed numBuckets=${m.buckets._1} (recorded in " +
+      s"its manifest); caller passed $numBuckets — a mismatched count " +
+      s"would hash keys into the wrong buckets. Use rebucket() to " +
+      s"change the addressing.")
 
   /** The bucket addressing (numBuckets, LOGICAL key column) recorded
-    * in a committed version's manifest, if written by an r18+ writer.
-    * Public so point-lookup/guard-read planners can derive the
-    * addressing from the table instead of trusting configuration. */
+    * in a committed version's manifest. Public so point-lookup/
+    * guard-read planners can derive the addressing from the table
+    * instead of trusting configuration. */
   def recordedBuckets(spark: SparkSession, base: String,
-                      version: Int): Option[(Int, String)] = {
+                      version: Int): (Int, String) = {
     val m = parsedManifestAll(spark, base, version)
-    m.buckets.map { case (n, k) => (n, toLogical(k, m.colMap)) }
+    (m.buckets._1, toLogical(m.buckets._2, m.colMap))
   }
 
   /** Rename physical columns to their logical names (identity when
@@ -523,50 +514,33 @@ object SnapshotTable {
       s"invalid column name '$name': must be nonempty and contain " +
       "none of ',', '=', tab, newline (manifest header encoding)")
 
-  /** Data-file lines of a manifest (metadata headers stripped). */
-  private def fileLines(spark: SparkSession, base: String, version: Int): Seq[String] =
-    parsedManifest(spark, base, version)._1
-
   /** The version's DECLARED schema in physical column names: what
     * [[create]] recorded, as widened by any [[addColumn]] up to this
-    * version — so time travel returns each version's own schema. None
-    * only for a manifest written without the header, whose schema is
-    * whatever its files carry (see [[SchemaHeader]]). */
+    * version — so time travel returns each version's own schema. */
   def declaredSchema(spark: SparkSession, base: String, version: Int)
-      : Option[org.apache.spark.sql.types.StructType] =
-    parsedManifest(spark, base, version)._2
-
-  private def schemaHeaderOf(
-      schema: Option[org.apache.spark.sql.types.StructType]): Seq[String] =
-    schema.toSeq.map(st => s"$SchemaHeader${st.toDDL}")
+      : org.apache.spark.sql.types.StructType =
+    parsedManifestAll(spark, base, version).schema
 
   private def pathOf(line: String): String = line.split('\t')(1)
 
-  /** The one parquet reader of this object. Schema-first under a
-    * declared schema — no job is launched to plan it, and files
-    * written BEFORE an ADD COLUMN lack the new column and null-fill
-    * (the parquet reader's missing-column semantics, the same
-    * mechanism iceberg/delta use, so evolution never rewrites data). A
-    * declared schema over zero files returns the typed empty frame.
-    * `None` (a manifest without the header, see [[SchemaHeader]])
-    * infers the schema from a footer, one Spark job; the schema-less
-    * empty case fails loudly — zero files carry no schema to read
-    * with. */
+  /** The one parquet reader of this object, schema-first: no job is
+    * launched to plan it, and files written BEFORE an ADD COLUMN lack
+    * the new column and null-fill (the parquet reader's
+    * missing-column semantics, the same mechanism iceberg/delta use,
+    * so evolution never rewrites data). Zero files give the typed
+    * empty frame. */
   private def readFiles(spark: SparkSession, files: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
-    schema match {
-      case Some(st) if files.isEmpty =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-      case Some(st) => spark.read.schema(st).parquet(files: _*)
-      case None     => spark.read.parquet(files: _*)
-    }
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.read.schema(schema).parquet(files: _*)
 
   /** Live data-file paths of a committed version (manifest-resolved)
     * — the maintenance-observability surface compaction and its specs
     * read file counts from. */
   def liveFiles(spark: SparkSession, base: String, version: Int): Seq[String] =
-    fileLines(spark, base, version).map(pathOf)
+    parsedManifestAll(spark, base, version).fileLines.map(pathOf)
 
   /** The table's bucket-addressing expression, public so callers can
     * compute which buckets a key set touches (iceberg exposes its
@@ -587,20 +561,13 @@ object SnapshotTable {
     // bucket ids derived under a DIFFERENT addressing than this
     // version's recorded count are out of range or silently wrong —
     // catch the detectable half loudly (ADVICE r17)
-    m.buckets.foreach { case (n, _) =>
-      require(buckets.forall(b => b >= 0 && b < n),
-        s"bucket ids ${buckets.filterNot(b => b >= 0 && b < n)} out of " +
-        s"range for $base (recorded numBuckets=$n at v$version)")
-    }
+    val n = m.buckets._1
+    require(buckets.forall(b => b >= 0 && b < n),
+      s"bucket ids ${buckets.filterNot(b => b >= 0 && b < n)} out of " +
+      s"range for $base (recorded numBuckets=$n at v$version)")
     val kept = m.fileLines.map(parseEntry)
       .filter(e => buckets.contains(e.bucket)).map(_.path)
-    val df =
-      if (kept.nonEmpty || m.schema.isDefined) readFiles(spark, kept, m.schema)
-      // empty-result schema from ONE file's footer, not a full-table
-      // listing — a lookup MISS must stay bucket-priced (review r17)
-      else readFiles(spark, m.fileLines.headOption.map(pathOf).toSeq, None)
-        .limit(0)
-    applyRenames(df, m.colMap)
+    applyRenames(readFiles(spark, kept, m.schema), m.colMap)
   }
 
   /** The distinct bucket ids a frame of probe keys touches, computed
@@ -617,9 +584,7 @@ object SnapshotTable {
     val m = parsedManifestAll(spark, base, version)
     requireBucketsMatch(m, numBuckets, base)
     val phys = toPhysical(keyCol, m.colMap)
-    val schema = m.schema.getOrElse(
-      readFiles(spark, m.fileLines.headOption.map(pathOf).toSeq, None).schema)
-    val keyType = schema.fields.find(_.name == phys).map(_.dataType)
+    val keyType = m.schema.fields.find(_.name == phys).map(_.dataType)
       .getOrElse(throw new IllegalArgumentException(
         s"no column $keyCol on $base"))
     keys.select(bucketOf0(col(keyCol).cast(keyType), numBuckets).as("b"))
@@ -642,9 +607,8 @@ object SnapshotTable {
     * whose change set carries the column writes it physically for the
     * buckets it rewrites; [[compact]]/[[optimizeCluster]] materialize
     * it everywhere they rewrite. Time travel to pre-evolution
-    * versions returns THEIR schema (their own declaration line, or the
-    * files' own schema on a manifest without one), the iceberg
-    * snapshot-schema contract. The new
+    * versions returns THEIR schema (their own declaration line), the
+    * iceberg snapshot-schema contract. The new
     * column is always nullable (a NOT NULL add would require a
     * backfill — a different command). */
   def addColumn(spark: SparkSession, base: String, colName: String,
@@ -653,7 +617,6 @@ object SnapshotTable {
     require(v >= 0, s"no table at $base")
     val m = parsedManifestAll(spark, base, v)
     val cur = m.schema
-      .getOrElse(readFiles(spark, m.fileLines.map(pathOf), None).schema)
     // collision checks against BOTH name spaces: the logical names a
     // user sees, and the physical names still present in old data
     // files (adding `a` after `a`→`b` was renamed would make new
@@ -669,9 +632,7 @@ object SnapshotTable {
       cur.fields :+ org.apache.spark.sql.types.StructField(
         colName, org.apache.spark.sql.types.DataType.fromDDL(ddlType),
         nullable = true))
-    commit(spark, base, v + 1,
-      headersOf(Some(widened), m.colMap, m.buckets, m.checks, m.cdf) ++
-        m.fileLines)
+    commit(spark, base, v + 1, headersOf(m.copy(schema = widened)) ++ m.fileLines)
     v + 1
   }
 
@@ -694,9 +655,7 @@ object SnapshotTable {
     val v = latestVersion(spark, base)
     require(v >= 0, s"no table at $base")
     val m = parsedManifestAll(spark, base, v)
-    val phys = m.schema.map(_.fieldNames.toSeq)
-      .getOrElse(readFiles(spark, m.fileLines.map(pathOf), None)
-        .schema.fieldNames.toSeq)
+    val phys = m.schema.fieldNames.toSeq
     val logical = phys.map(p => toLogical(p, m.colMap))
     require(logical.contains(from), s"no column $from on $base")
     val physName = toPhysical(from, m.colMap)
@@ -719,9 +678,7 @@ object SnapshotTable {
     }
     val newMap = m.colMap.filterNot(_._1 == physName) ++
       (if (to == physName) Nil else Seq((physName, to)))
-    commit(spark, base, v + 1,
-      headersOf(m.schema, newMap, m.buckets, m.checks, m.cdf) ++
-        m.fileLines)
+    commit(spark, base, v + 1, headersOf(m.copy(colMap = newMap)) ++ m.fileLines)
     v + 1
   }
 
@@ -759,8 +716,7 @@ object SnapshotTable {
       s"cannot add CHECK constraint $name ($checkExpr) to $base: " +
       "existing rows violate it; no version was committed")
     commit(spark, base, v + 1,
-      headersOf(m.schema, m.colMap, m.buckets,
-        m.checks :+ ((name, checkExpr)), m.cdf) ++ m.fileLines)
+      headersOf(m.copy(checks = m.checks :+ ((name, checkExpr)))) ++ m.fileLines)
     v + 1
   }
 
@@ -775,8 +731,7 @@ object SnapshotTable {
     require(m.checks.exists(_._1 == name),
       s"no CHECK constraint $name on $base")
     commit(spark, base, v + 1,
-      headersOf(m.schema, m.colMap, m.buckets,
-        m.checks.filterNot(_._1 == name), m.cdf) ++ m.fileLines)
+      headersOf(m.copy(checks = m.checks.filterNot(_._1 == name))) ++ m.fileLines)
     v + 1
   }
 
@@ -799,9 +754,7 @@ object SnapshotTable {
     require(v >= 0, s"no table at $base")
     val m = parsedManifestAll(spark, base, v)
     require(!m.cdf, s"change feed already enabled on $base")
-    commit(spark, base, v + 1,
-      headersOf(m.schema, m.colMap, m.buckets, m.checks, cdf = true) ++
-        m.fileLines)
+    commit(spark, base, v + 1, headersOf(m.copy(cdf = true)) ++ m.fileLines)
     v + 1
   }
 
@@ -917,14 +870,12 @@ object SnapshotTable {
     }
     val mHead = metas.lastOption.map(_._2)
       .getOrElse(parsedManifestAll(spark, base, vTo))
-    // target shape from the table itself — its declared schema (one
-    // footer read only on a manifest without one), then a
-    // LocalRelation empty frame: the feed's PLAN must reference only
-    // cdc files (delta-bounded scan, spec-pinned), and an
-    // all-metadata range still returns a typed empty feed
-    val payloadSchema = applyRenames(
-      readFiles(spark, mHead.fileLines.map(pathOf).take(1), mHead.schema)
-        .limit(0), mHead.colMap).schema
+    // target shape from the table's declared schema in vTo's logical
+    // names, as a LocalRelation empty frame: the feed's PLAN must
+    // reference only cdc files (delta-bounded scan, spec-pinned), and
+    // an all-metadata range still returns a typed empty feed
+    val payload = mHead.schema.fields
+      .map(f => f.copy(name = toLogical(f.name, mHead.colMap), nullable = true))
     // local-list constructor → a LocalRelation leaf: no RDD, no file,
     // and the streaming shim can mark it for the DSv1 source path
     val empty = spark.createDataFrame(
@@ -932,12 +883,12 @@ object SnapshotTable {
       org.apache.spark.sql.types.StructType(
         org.apache.spark.sql.types.StructField("op",
           org.apache.spark.sql.types.StringType, nullable = true) +:
-        payloadSchema.fields.map(_.copy(nullable = true)) :+
+        payload :+
         org.apache.spark.sql.types.StructField("_commit_version",
           org.apache.spark.sql.types.IntegerType, nullable = true)))
     metas.filter(_._2.cdcFiles.nonEmpty).foldLeft(empty) {
       case (acc, (v, m)) =>
-        val d = applyRenames(readFiles(spark, m.cdcFiles, m.cdcSchema),
+        val d = applyRenames(readFiles(spark, m.cdcFiles, m.cdcSchema.get),
             mHead.colMap)
           .withColumn("_commit_version", lit(v))
         // ADD COLUMN evolution: older deltas lack the new column and
@@ -982,55 +933,20 @@ object SnapshotTable {
            keyCol: String): DataFrame = {
     val fromMeta = parsedManifestAll(spark, base, vFrom)
     val toMeta = parsedManifestAll(spark, base, vTo)
-    val (fromSchema, toSchema) = (fromMeta.schema, toMeta.schema)
     val from = fromMeta.fileLines.toSet
     val to = toMeta.fileLines.toSet
-    // both sides surface the LATER version's logical names (the same
-    // read-with-current-schema convention as the width alignment
-    // below), so a CDC consumer straddling a RENAME sees one name
-    val laterMap = (if (vTo >= vFrom) toMeta else fromMeta).colMap
-    if (from.isEmpty && to.isEmpty) {
-      // Both versions reference zero files (e.g. diff of an emptied
-      // table against itself): the delta is definitionally empty —
-      // short-circuit instead of a parquet read of no paths (which
-      // throws). When a DECLARED schema exists, the empty frame
-      // carries the key's REAL type and the real payload structs, so
-      // unions with non-empty diffs of the same table stay
-      // schema-compatible (review r17: the hardcoded StringType key
-      // broke exactly that); without any declaration zero files carry
-      // no schema and the degenerate shape below is the best
-      // recoverable one.
-      import org.apache.spark.sql.types._
-      val declared = (if (vTo >= vFrom) toSchema.orElse(fromSchema)
-                      else fromSchema.orElse(toSchema))
-      val physKey = toPhysical(keyCol, laterMap)
-      val keyType = declared.flatMap(_.fields.find(_.name == physKey))
-        .map(_.dataType).getOrElse(StringType)
-      val payloadStruct = declared
-        .map(st => StructType(st.fields.filter(_.name != physKey).map(f =>
-          f.copy(name = toLogical(f.name, laterMap)))))
-        .getOrElse(StructType(Nil))
-      val s = StructType(Seq(
-        StructField(keyCol, keyType), StructField("change", StringType),
-        StructField("before", payloadStruct),
-        StructField("after", payloadStruct)))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-    }
-    // both sides read under ONE schema — the LATER version's declared
-    // schema when evolution has pinned one (iceberg's read-old-
-    // snapshots-with-current-schema convention for CDC), else the
-    // files' inferred schema. Without this alignment a diff straddling
-    // an ADD COLUMN would compare structs of different widths. Both
-    // declarations came free with the already-parsed manifests ([[create]]
-    // writes the header and every commit carries it forward, so the
-    // fallback serves manifests written without one).
-    val (later, earlier) =
-      if (vTo >= vFrom) (toSchema, fromSchema) else (fromSchema, toSchema)
-    val schema = later.orElse(earlier).getOrElse(
-      readFiles(spark, (from ++ to).headOption.map(pathOf).toSeq, None).schema)
+    // both sides read under ONE schema and surface ONE set of names —
+    // the LATER version's (iceberg's read-old-snapshots-with-current-
+    // schema convention for CDC): without the alignment a diff
+    // straddling an ADD COLUMN would compare structs of different
+    // widths, and a CDC consumer straddling a RENAME would see two
+    // names. Zero files on a side read as the typed empty frame, so
+    // the diff of two emptied versions is empty and typed like any
+    // other diff of the table.
+    val later = if (vTo >= vFrom) toMeta else fromMeta
+    val (schema, laterMap) = (later.schema, later.colMap)
     def readSide(lines: Set[String]): DataFrame =
-      applyRenames(readFiles(spark, lines.toSeq.map(pathOf), Some(schema)),
+      applyRenames(readFiles(spark, lines.toSeq.map(pathOf), schema),
         laterMap)
     val payload = schema.fieldNames
       .map(p => toLogical(p, laterMap))
@@ -1216,10 +1132,10 @@ object SnapshotTable {
       val p = manifestPath(base, v)
       f.exists(p) && f.delete(p, false)
     }
-    val live: Set[String] = (math.max(0, cutoff) to latest)
+    val survivors = (math.max(0, cutoff) to latest)
       .filter(v => f.exists(manifestPath(base, v)))
-      .flatMap(v => fileLines(spark, base, v).map(_.split('\t')(1)))
-      .toSet
+      .map(v => parsedManifestAll(spark, base, v))
+    val live: Set[String] = survivors.flatMap(_.fileLines.map(pathOf)).toSet
     val dataDir = new Path(s"$base/data")
     var deleted = 0
     val ageCutoff = System.currentTimeMillis() - orphanMinAgeMs
@@ -1303,10 +1219,7 @@ object SnapshotTable {
     // go. Emptied per-commit dirs are swept non-recursively after.
     val cdcDir = new Path(s"$base/cdc")
     if (f.exists(cdcDir)) {
-      val liveCdc: Set[String] = (math.max(0, cutoff) to latest)
-        .filter(v => f.exists(manifestPath(base, v)))
-        .flatMap(v => parsedManifestAll(spark, base, v).cdcFiles)
-        .toSet
+      val liveCdc: Set[String] = survivors.flatMap(_.cdcFiles).toSet
       walkAll(cdcDir)
         .filter(s => !s.isDirectory && s.getPath.getName.endsWith(".parquet") &&
           !liveCdc.contains(s.getPath.toString) &&
@@ -1437,8 +1350,7 @@ object SnapshotTable {
       }
     // declared (evolved) schema + rename map ride every commit forward
     commit(spark, base, v + 1,
-      headersOf(schema0, meta.colMap, Some((numBuckets, keyCol)),
-        meta.checks, meta.cdf) ++ lines)
+      headersOf(meta.copy(buckets = (numBuckets, keyCol))) ++ lines)
     v + 1
   }
 
@@ -1465,7 +1377,7 @@ object SnapshotTable {
     * backward/forward compatible: 2 fields = bucket + path (every
     * pre-stats writer), 5 fields = + statsCol/min/max. */
   def fileEntries(spark: SparkSession, base: String, version: Int): Seq[FileEntry] =
-    fileLines(spark, base, version).map(parseEntry)
+    parsedManifestAll(spark, base, version).fileLines.map(parseEntry)
 
   /** MANIFEST-ONLY file pruning for `statsCol ∈ [lo, hi]`: keep a
     * file iff its manifest stats intersect the range — or it carries
@@ -1505,13 +1417,8 @@ object SnapshotTable {
     val m = parsedManifestAll(spark, base, version)
     val phys = toPhysical(statsCol, m.colMap)
     val kept = pruneEntries(m.fileLines.map(parseEntry), phys, lo, hi)
-    val df = applyRenames(
-      if (kept.nonEmpty || m.schema.isDefined) readFiles(spark, kept, m.schema)
-      // miss-path schema from ONE footer, not a full-table listing
-      else readFiles(spark, m.fileLines.headOption.map(pathOf).toSeq, None)
-        .limit(0),
-      m.colMap)
-    df.where(col(statsCol).between(lit(lo), lit(hi)))
+    applyRenames(readFiles(spark, kept, m.schema), m.colMap)
+      .where(col(statsCol).between(lit(lo), lit(hi)))
   }
 
   /** Per-file [min,max] of `column` from the parquet FOOTER (block
@@ -1604,8 +1511,7 @@ object SnapshotTable {
     val physKey = toPhysical(keyCol, m.colMap)
     val rows = readFiles(spark, m.fileLines.map(pathOf), m.schema)
     commit(spark, base, v + 1,
-      headersOf(m.schema, m.colMap, Some((numBuckets, physKey)),
-        m.checks, m.cdf) ++
+      headersOf(m.copy(buckets = (numBuckets, physKey))) ++
       writeDataFiles(spark, base, rows, physKey, numBuckets))
     v + 1
   }
@@ -1629,11 +1535,9 @@ object SnapshotTable {
     require(newNumBuckets >= 1, s"numBuckets must be >= 1, got $newNumBuckets")
     val m = parsedManifestAll(spark, base, v)
     val physKey = toPhysical(keyCol, m.colMap)
-    m.buckets.foreach { case (_, recordedKey) =>
-      require(recordedKey == physKey,
-        s"table $base is bucketed by $recordedKey; rebucket must keep " +
-        s"the key column (got $physKey)")
-    }
+    require(m.buckets._2 == physKey,
+      s"table $base is bucketed by ${m.buckets._2}; rebucket must keep " +
+      s"the key column (got $physKey)")
     compact(spark, base, keyCol, newNumBuckets)
   }
 
@@ -1701,13 +1605,11 @@ object SnapshotTable {
     // Checked before the probe action below so a missing evolved
     // column surfaces as THIS error, not an analysis failure inside
     // a CHECK expression that references it.
-    declared.foreach { st =>
-      val missing = st.fieldNames.filterNot(changes.columns.contains)
-      require(missing.isEmpty,
-        s"changes must carry every declared column of the evolved " +
-        s"table $base; missing: ${missing.mkString(", ")} " +
-        s"(null-fill explicitly if that is intended)")
-    }
+    val missing = declared.fieldNames.filterNot(changes.columns.contains)
+    require(missing.isEmpty,
+      s"changes must carry every declared column of the evolved " +
+      s"table $base; missing: ${missing.mkString(", ")} " +
+      s"(null-fill explicitly if that is intended)")
     // ONE fused probe action (optimization round 19 — VERDICT r18
     // item 5 folded the round-18 CHECK aggregate in too): per-key
     // counts roll up to per-BUCKET rows (≤ numBuckets collected),
@@ -1782,20 +1684,6 @@ object SnapshotTable {
         .unionByName(
           changes.where(col("op") === "U").select(payloadCols.map(col): _*))
     }
-    // measurement aid (round 19 — VERDICT r18 evidence ask): the
-    // graded DataFrame of a snapshot op reads the COMMITTED files, so
-    // its explain cannot show the merge's join strategy; when
-    // GRAFT_MERGE_PLAN_DIR is set, dump the merge plan itself (plan
-    // analysis only — no extra job) so the committed artifact proves
-    // the anti join's build side is a BroadcastExchange.
-    sys.env.get("GRAFT_MERGE_PLAN_DIR").foreach { dir =>
-      val p = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.createDirectories(p)
-      val tbl = base.substring(base.lastIndexOf('/') + 1)
-      java.nio.file.Files.write(p.resolve(s"merge_${tbl}_v${v + 1}.txt"),
-        merged.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
-    }
     // inserts landing in untouched buckets: merged includes them via
     // the change set itself (an insert's bucket is by definition in
     // changedBuckets, so its bucket's file — if any — was touched); an
@@ -1808,8 +1696,7 @@ object SnapshotTable {
     val (dataLines, cdcLines) = writeDataAndCdcFiles(spark, base, meta,
       merged, keyCol, numBuckets, changes)
     commit(spark, base, v + 1,
-      headersOf(declared, meta.colMap,
-        Some((numBuckets, keyCol)), meta.checks, meta.cdf) ++
+      headersOf(meta.copy(buckets = (numBuckets, keyCol))) ++
         cdcLines ++ untouched ++ dataLines)
     v + 1
     } finally { ch0.unpersist(); () }
@@ -1874,8 +1761,7 @@ object SnapshotTable {
         rows.where(!inBand), physKey, numBuckets,
         rows.where(inBand).withColumn("op", lit("D")))
       commit(spark, base, v + 1,
-        headersOf(m.schema, m.colMap,
-          Some((numBuckets, physKey)), m.checks, m.cdf) ++
+        headersOf(m.copy(buckets = (numBuckets, physKey))) ++
           cdcLines ++ skipped ++ dataLines)
       (v + 1, candidates.size, skipped.size)
     } finally { if (m.cdf) { rows.unpersist(); () } }

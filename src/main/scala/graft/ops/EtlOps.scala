@@ -2158,10 +2158,10 @@ object EtlOps {
     require(loud, "probing with a wrong bucket count must throw")
     val v2 = SnapshotTable.rebucket(spark, base, "o_orderkey", 32)
     // (b) each version keeps its own recorded addressing
-    require(SnapshotTable.recordedBuckets(spark, base, 1)
-        .exists(_._1 == 16), "v1 must stay addressed by 16 buckets")
-    require(SnapshotTable.recordedBuckets(spark, base, v2)
-        .exists(_._1 == 32), "v2 must be addressed by 32 buckets")
+    require(SnapshotTable.recordedBuckets(spark, base, 1)._1 == 16,
+      "v1 must stay addressed by 16 buckets")
+    require(SnapshotTable.recordedBuckets(spark, base, v2)._1 == 32,
+      "v2 must be addressed by 32 buckets")
     // (c) the lookup answers identically across the boundary, pruned
     // under each version's own count
     def lookup(v: Int, n: Int): DataFrame = {

@@ -117,7 +117,8 @@ class Round17OpsSpec extends SparkSpec {
     // manifest stats coexist on the same version
     val v4 = SnapshotTable.optimizeCluster(spark, base, "o_orderkey",
       "o_price", numBuckets = 2, subFiles = 2)
-    assert(SnapshotTable.declaredSchema(spark, base, v4).isDefined)
+    assert(SnapshotTable.declaredSchema(spark, base, v4).fieldNames.toSeq ==
+      Seq("o_orderkey", "o_price", "o_tag"))
     assert(SnapshotTable.fileEntries(spark, base, v4)
       .forall(_.statsCol.contains("o_price")))
     assert(SnapshotTable.asOf(spark, base, v4).columns.toSeq ==

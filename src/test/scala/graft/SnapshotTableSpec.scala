@@ -23,8 +23,13 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   private def manifestLines(base: String, v: Int): Seq[String] =
+    rawManifest(base, v).filterNot(_.startsWith("#")) // drop the headers
+
+  /** A manifest's lines as `commit` publishes them: headers and file
+    * lines, without the completeness trailer. */
+  private def rawManifest(base: String, v: Int): Seq[String] =
     scala.io.Source.fromFile(s"$base/manifest/v$v").getLines().toList
-      .filterNot(_.startsWith("#")) // drop the completeness trailer
+      .filterNot(_.startsWith("#eof "))
 
   test("mergeInto applies update/delete/insert row-exactly and bumps the version") {
     val base = freshBase()
@@ -651,8 +656,9 @@ class SnapshotTableSpec extends SparkSpec {
     val base = freshBase()
     SnapshotTable.create(spark, base, fixture(), "k", numBuckets = 8)
     val mf = new java.io.File(s"$base/manifest/v1")
-    val lines = manifestLines(base, 0)
-    assert(lines.size >= 3, "fixture must span several buckets")
+    val lines = rawManifest(base, 0)
+    val files = manifestLines(base, 0)
+    assert(files.size >= 3, "fixture must span several buckets")
     // stage the mid-write state by hand: a FLUSHED, MOTIONLESS
     // trailer-less prefix — exactly what a reader sees when the
     // publisher stalls mid-write
@@ -668,11 +674,11 @@ class SnapshotTableSpec extends SparkSpec {
     w.close()
     r2.join(5000)
     assert(!r2.isAlive && got.get != null, "reader must complete")
-    assert(got.get.size == lines.size,
-      s"reader returned the sealed list, not the prefix: ${got.get.size} of ${lines.size}")
+    assert(got.get.size == files.size,
+      s"reader returned the sealed list, not the prefix: ${got.get.size} of ${files.size}")
   }
 
-  test("create records the schema: asOf and changeFeed plan with 0 jobs and equal the inference fallback") {
+  test("create records the schema: asOf and changeFeed plan with 0 jobs and equal a footer-inferred read of their files") {
     // every shape the declared schema must report as the parquet
     // reader does: non-nullable top-level columns, a decimal, a
     // timestamp, and nested array/struct/map types
@@ -692,28 +698,29 @@ class SnapshotTableSpec extends SparkSpec {
       changes(Seq(1L, 2L, 3L), "U").unionByName(changes(Seq(4L), "D")), "k", 8)
     val v2 = SnapshotTable.mergeInto(spark, base,
       changes(Seq(2L, 40L), "U").unionByName(changes(Seq(5L, 6L), "D")), "k", 8)
-    // the same table, published under a second base with every
-    // #schema/#cdcschema line stripped: the reads infer from footers
-    val stripped = freshBase()
-    (0 to v2).foreach { v =>
-      val raw = scala.io.Source.fromFile(s"$base/manifest/v$v").getLines().toList
-      SnapshotTable.commit(spark, stripped, v, raw.filterNot(l =>
-        l.startsWith("#eof ") || l.startsWith("#schema\t") ||
-          l.startsWith("#cdcschema\t")))
-    }
+    // the reference arm: a plain footer-inferred parquet read of the
+    // same files — the live files for asOf, each version's cdc files
+    // (tagged with their version) for changeFeed
+    def cdcFiles(v: Int) = rawManifest(base, v)
+      .filter(_.startsWith("#cdcfile\t")).map(_.stripPrefix("#cdcfile\t"))
     def rowsOf(df: DataFrame) = df.collect().map(_.toSeq.map {
       case m: scala.collection.Map[_, _] => m.toSeq.sortBy(_.toString)
       case x => x
     }.toString).sorted.toSeq
-    Seq[(String, String => DataFrame)](
-      "asOf" -> (b => SnapshotTable.asOf(spark, b, v2)),
-      "changeFeed" -> (b => SnapshotTable.changeFeed(spark, b, v0, v2))
-    ).foreach { case (name, read) =>
-      val (declared, jobs) = jobsLaunched(read(base))
+    Seq[(String, () => DataFrame, () => DataFrame)](
+      ("asOf", () => SnapshotTable.asOf(spark, base, v2),
+        () => spark.read.parquet(SnapshotTable.liveFiles(spark, base, v2): _*)),
+      ("changeFeed", () => SnapshotTable.changeFeed(spark, base, v0, v2),
+        () => ((v0 + 1) to v2).map(v => spark.read.parquet(cdcFiles(v): _*)
+          .withColumn("_commit_version", lit(v))).reduce(_ unionByName _))
+    ).foreach { case (name, read, reference) =>
+      val (declared, jobs) = jobsLaunched(read())
       assert(jobs == 0, s"$name launched $jobs jobs to plan")
-      val (inferred, inferJobs) = jobsLaunched(read(stripped))
-      assert(inferJobs > 0, s"$name over the stripped manifests must infer")
-      assert(declared.schema == inferred.schema, name)
+      val inferred = reference().select(declared.columns.map(col): _*)
+      // _commit_version is a literal on the reference side, so only
+      // its nullability differs; every stored column must match
+      def stored(df: DataFrame) = df.drop("_commit_version").schema
+      assert(stored(declared) == stored(inferred), name)
       assert(rowsOf(declared) == rowsOf(inferred), name)
     }
     assert(SnapshotTable.changeFeed(spark, base, v0, v2).count() == 8)
@@ -764,7 +771,8 @@ class SnapshotTableSpec extends SparkSpec {
     val t0 = System.nanoTime()
     intercept[org.apache.hadoop.fs.ParentNotDirectoryException] {
       SnapshotTable.writeDataAndCdcFiles(spark, base,
-        SnapshotTable.ManifestMeta(Nil, None, Nil, cdf = true), fixture(), "k", 4,
+        SnapshotTable.ManifestMeta(Nil, fixture().schema, Nil, (4, "k"), cdf = true),
+        fixture(), "k", 4,
         spark.range(1).select(slow(col("id")).as("k")))
     }
     assert(!cdcWriterAlive(), "the cdc writer thread outlived a failed data write")
@@ -813,5 +821,70 @@ class SnapshotTableSpec extends SparkSpec {
     assert(SnapshotTable.asOf(spark, base, v6).where(col("k") === 1)
       .head.getLong(1) == 12L)
     assert(refused(v5, v6).contains(s"version $v6 "))
+  }
+
+  test("every public writer records #schema and #buckets: each version's schema, addressing and rows read") {
+    import spark.implicits._
+    val base = freshBase()
+    def changes(k: Long, v: Long) =
+      Seq((k, "U", v, "c", "n")).toDF("k", "op", "v", "grp2", "note")
+    SnapshotTable.create(spark, base, fixture(), "k", numBuckets = 4)
+    SnapshotTable.addColumn(spark, base, "note", "STRING")
+    SnapshotTable.renameColumn(spark, base, "grp", "grp2")
+    SnapshotTable.addCheckConstraint(spark, base, "pos", "v >= 0")
+    SnapshotTable.dropCheckConstraint(spark, base, "pos")
+    val vOn = SnapshotTable.enableChangeFeed(spark, base)
+    val vMerge = SnapshotTable.mergeInto(spark, base, changes(5L, 999L), "k", 4)
+    val vDel = SnapshotTable.deleteRange(spark, base, "k", "v",
+      java.math.BigDecimal.ZERO, java.math.BigDecimal.valueOf(50), 4)._1
+    SnapshotTable.optimizeCluster(spark, base, "k", "v", numBuckets = 4, subFiles = 2)
+    SnapshotTable.compact(spark, base, "k", numBuckets = 4)
+    SnapshotTable.rebucket(spark, base, "k", 8)
+    SnapshotTable.restore(spark, base, vMerge)
+    val br = freshBase()
+    SnapshotTable.cloneShallow(spark, base, br)
+    SnapshotTable.mergeInto(spark, br, changes(6L, 888L), "k", 4)
+    val head = SnapshotTable.mergeBack(spark, br)
+    assert(head == 12, "one version per writer after create")
+    for ((b, latest) <- Seq(base -> head, br -> 1); v <- 0 to latest) {
+      val cols = SnapshotTable.declaredSchema(spark, b, v).fieldNames.toSeq
+      assert(cols.take(3) == Seq("k", "v", "grp"), s"$b v$v: $cols")
+      assert(SnapshotTable.recordedBuckets(spark, b, v)._2 == "k", s"$b v$v")
+      assert(SnapshotTable.asOf(spark, b, v).count() > 0, s"$b v$v")
+    }
+    assert(SnapshotTable.recordedBuckets(spark, base, head - 2)._1 == 8)
+    assert(SnapshotTable.changeFeed(spark, base, vOn, vDel).count() == 1 + 5)
+    assert(SnapshotTable.asOf(spark, base, head).columns.toSeq ==
+      Seq("k", "v", "grp2", "note"))
+  }
+
+  test("a manifest missing a required header is refused by name, and mergeInto on it commits nothing") {
+    import spark.implicits._
+    val base = freshBase()
+    SnapshotTable.create(spark, base, fixture(), "k", numBuckets = 4)
+    val vOn = SnapshotTable.enableChangeFeed(spark, base)
+    val head = SnapshotTable.mergeInto(spark, base,
+      Seq((5L, "U", 999L, "u")).toDF("k", "op", "v", "grp"), "k", 4)
+    val probe = Seq(5L).toDF("k")
+    Seq[(String, String => Any)](
+      "#schema" -> (b => SnapshotTable.asOf(spark, b, head)),
+      "#buckets" -> (b => SnapshotTable.probeBuckets(spark, b, head, probe, "k", 4)),
+      "#cdcschema" -> (b => SnapshotTable.changeFeed(spark, b, vOn, head))
+    ).foreach { case (header, read) =>
+      // the table's manifests under a second base, each without `header`
+      val copy = freshBase()
+      (0 to head).foreach { v =>
+        SnapshotTable.commit(spark, copy, v,
+          rawManifest(base, v).filterNot(_.startsWith(header + "\t")))
+      }
+      val e = intercept[IllegalStateException](read(copy))
+      assert(e.getMessage.contains(s"v$head of $copy has no $header header"),
+        e.getMessage)
+      intercept[IllegalStateException] {
+        SnapshotTable.mergeInto(spark, copy,
+          Seq((7L, "U", 777L, "w")).toDF("k", "op", "v", "grp"), "k", 4)
+      }
+      assert(SnapshotTable.latestVersion(spark, copy) == head, header)
+    }
   }
 }
