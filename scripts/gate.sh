@@ -67,6 +67,23 @@ if [ -n "$serial" ]; then
   echo "gate: a driver action in EtlPipeline.scala, or writeCdcFiles called outside writeDataAndCdcFiles" >&2
   exit 1
 fi
+# one SQL twin per shared fixture: the snapshot-orders CTE
+# (EtlOps.snapshotOrdersSql) and the co-purchase CTE
+# (GraphOps.copurchaseSql) are each written once, and their oracles
+# append to them
+twins=""
+for cte in 'WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st' \
+           '"""WITH op AS ('; do
+  hits=$(grep -rnF -- "$cte" src/main/scala || true)
+  if [ "$(printf '%s\n' "$hits" | grep -c . || true)" -gt 1 ]; then
+    twins+="$hits"$'\n'
+  fi
+done
+if [ -n "$twins" ]; then
+  printf '%s' "$twins"
+  echo "gate: an oracle pastes a shared fixture CTE (append to snapshotOrdersSql or copurchaseSql instead)" >&2
+  exit 1
+fi
 sbt -batch compile test
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} \
   sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_out"

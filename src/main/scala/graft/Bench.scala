@@ -364,16 +364,21 @@ object Bench {
     def fpString(df: org.apache.spark.sql.DataFrame): String =
       Session.shape(df.queryExecution.executedPlan.toString)
         .toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(",")
-    // Stages each op's timed calls read (the `Staged.reads` hits
-    // between before and after; ops run one at a time, so the
-    // difference belongs to that call) — FULLBENCH's `staged_read`.
+    // Stages each op's timed calls read, and the op whose timed calls
+    // swap each stage in (the `Staged.reads` and `Staged.swaps` counts
+    // that grew between before and after; ops run one at a time, so
+    // the difference belongs to that call) — FULLBENCH's `staged_read`.
     val stagesRead = scala.collection.mutable.Map[String, Set[String]]()
+    val stagedBy = scala.collection.mutable.Map[String, String]()
+    def grown(before: Map[String, Long], after: Map[String, Long]): Iterable[String] =
+      after.collect { case (s, c) if c > before.getOrElse(s, 0L) => s }
     def bestOfN(name: String, n: Int): Option[Double] =
       (1 to n).flatMap { _ =>
-        val before = Staged.reads
+        val (readsBefore, swapsBefore) = (Staged.reads, Staged.swaps)
         val run = Session.timed(spark, name, sfDir)
-        val read = Staged.reads.collect { case (s, c) if c > before.getOrElse(s, 0L) => s }
+        val read = grown(readsBefore, Staged.reads)
         if (read.nonEmpty) stagesRead(name) = stagesRead.getOrElse(name, Set.empty) ++ read
+        grown(swapsBefore, Staged.swaps).foreach(stagedBy(_) = name)
         run.map { case (t, df) =>
           if (!planFps.contains(name))
             planFps(name) = try fpString(df) catch { case _: Throwable => "" }
@@ -515,12 +520,9 @@ object Bench {
       // item): these ops' timed calls read a table staged in
       // graft.Staged, so their per-op rows measure the staged-read
       // consumer, NOT the lineage that built the stage. Each stage
-      // names the op whose own timed row carries its build cost
-      // (graph_family_stage rebuilds and swaps the co-purchase stages
-      // every invocation), or null when no op prices it yet.
-      val stagedBy = Map("copurchase_edges" -> "graph_family_stage",
-        "copurchase_deg" -> "graph_family_stage",
-        "copurchase_wedges" -> "graph_family_stage")
+      // names the op whose own timed row carries its build cost (the
+      // op whose timed calls swapped it in), or null when no op
+      // prices it yet.
       val stageRow = stagesRead.values.flatten.toSeq.distinct.sorted.map(st =>
         "\"" + st + "\": " + stagedBy.get(st).fold("null")("\"" + _ + "\""))
         .mkString("{", ", ", "}")

@@ -34,6 +34,7 @@ object Staged {
   private val current = new ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
   private val retired = new ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
   private val hits = new ConcurrentHashMap[String, LongAdder]()
+  private val swapCounts = new ConcurrentHashMap[String, LongAdder]()
 
   /** Stage `name` of `corpus`: the current entry, or `build` checkpointed
     * and installed. NOT computeIfAbsent: a builder may itself read
@@ -62,12 +63,20 @@ object Staged {
     * the one it replaces and releases the one retired before. */
   def swap(spark: SparkSession, name: String, corpus: String, fresh: DataFrame): Unit = {
     evictStopped()
+    swapCounts.computeIfAbsent(name, _ => new LongAdder).increment()
     val k = (spark, name, corpus)
     Option(current.put(k, fresh)).flatMap(r => Option(retired.put(k, r))).foreach(release)
   }
 
   /** Hits per stage name so far, over every session. */
-  def reads: Map[String, Long] = hits.asScala.map { case (n, c) => n -> c.sum }.toMap
+  def reads: Map[String, Long] = sums(hits)
+
+  /** [[swap]]s per stage name so far, over every session: the op whose
+    * call swaps a stage is the one that prices its build. */
+  def swaps: Map[String, Long] = sums(swapCounts)
+
+  private def sums(m: ConcurrentHashMap[String, LongAdder]): Map[String, Long] =
+    m.asScala.map { case (n, c) => n -> c.sum }.toMap
 
   private def evictStopped(): Unit =
     Seq(current, retired).foreach(_.entrySet().removeIf(

@@ -864,30 +864,14 @@ object EtlOps {
       (floor(abs(t) * 10000 + 0.5) > 19600).as("significant"))
   }
 
-  /** #212 — snapshot-versioned table with MERGE + time travel, over
-    * [[graft.api.SnapshotTable]] (manifest-based versioned parquet —
-    * the lakehouse slice the engine otherwise lacks: versioned reads
-    * for reproducible training runs, snapshot-isolated readers, and
-    * copy-on-write MERGE whose write cost is O(changed buckets), not
-    * O(table)). v0 = the %5≠0 orders; one MERGE applies updates
-    * (%7=1: status→'X', price+100), deletes (%7=2) and inserts (the
-    * held-out %5=0, %7=3 keys) in a single change set; the graded
-    * output reads BOTH versions via `asOf` AFTER the merge committed
-    * — time travel is the semantics under test, and the v0 row
-    * proves the old snapshot is byte-stable under a later commit.
-    * File-reference reuse (untouched buckets carried by manifest
-    * reference, not rewritten) is pinned in SnapshotTableSpec, where
-    * paths are observable. Scale: manifests are metadata (one line
-    * per live file), MERGE reads only changed buckets' files — the
-    * iceberg cost model re-expressed on plain parquet + one atomic
-    * rename, with the S3-catalog caveat documented on the API. */
   /** Shared fixture for #212/#214: v0 = the %5≠0 orders snapshotted
     * into a fresh 16-bucket SnapshotTable, then ONE MERGE with
     * updates (%7=1: status→'X', price+100), deletes (%7=2) and
     * inserts (the held-out %5=0, %7=3 keys). Returns the table base
     * path with versions 0 and 1 committed. The snapshot ops and
-    * StreamOps' change-feed op (#305) build on it, and their oracles
-    * derive from this single derivation. */
+    * StreamOps' change-feed op (#305) build on it. Its SQL twin is
+    * [[snapshotOrdersSql]], the `o`/`v0`/`v1` CTE every one of their
+    * oracles starts with; SnapshotOrdersSpec holds the two equal. */
   private[ops] def buildSnapshotOrders(spark: SparkSession, sf: String): String = {
     // Each invocation builds a fresh table on purpose — the secondary
     // bench times the MERGE's copy-on-write cost, so a cached table
@@ -903,6 +887,23 @@ object EtlOps {
       "o_orderkey", numBuckets = 16)
     base
   }
+
+  /** [[buildSnapshotOrders]] in DuckDB SQL: `v0` and `v1` are the
+    * table's two versions over (k, st, price). Each snapshot oracle
+    * appends its own CTEs and SELECT to this text. */
+  private[ops] val snapshotOrdersSql: String =
+    """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
+      |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
+      |           FROM orders),
+      |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
+      |v1 AS (
+      |  SELECT k,
+      |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
+      |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
+      |         ELSE price END AS price
+      |  FROM v0 WHERE k % 7 <> 2
+      |  UNION ALL
+      |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3)""".stripMargin
 
   /** The canonical v0→v1 change set over the projected orders frame
     * (o_orderkey, o_orderstatus, o_price) — updates (%5≠0 ∧ %7=1:
@@ -931,16 +932,52 @@ object EtlOps {
       .where(col("op").isNotNull)
   }
 
-  def etlSnapshotMergeTimetravel(spark: SparkSession, sf: String): DataFrame = {
-    val base = buildSnapshotOrders(spark, sf)
-    def snap(v: Int): DataFrame =
-      graft.api.SnapshotTable.asOf(spark, base, v)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("o_price")).cast("double").as("total_price"),
-          sum(when(col("o_orderstatus") === "X", 1L).otherwise(0L)).as("n_updated"))
-        .select(lit(v).as("version"), col("n_rows"), col("total_price"), col("n_updated"))
-    snap(0).unionAll(snap(1)).orderBy(col("version"))
-  }
+  /** The content aggregate the snapshot ops grade: `n_rows` and
+    * `total_price` (the DECIMAL price sum as a double), then `extra`. */
+  private def ordersContent(df: DataFrame, extra: Column*): DataFrame =
+    df.agg(count(lit(1)).as("n_rows"),
+      (sum(col("o_price")).cast("double").as("total_price") +: extra): _*)
+
+  /** Rows the fixture's merge set to status 'X'. */
+  private val nUpdated: Column =
+    sum(when(col("o_orderstatus") === "X", 1L).otherwise(0L)).as("n_updated")
+
+  /** One (version, n_rows, total_price, n_updated) row per version of
+    * the table at `base`, ordered by version. */
+  private def versionRows(spark: SparkSession, base: String, versions: Int*)
+      : DataFrame =
+    versions.map(v => ordersContent(
+        graft.api.SnapshotTable.asOf(spark, base, v), nUpdated)
+        .select(lit(v).as("version"), col("n_rows"), col("total_price"),
+          col("n_updated")))
+      .reduce(_ unionAll _).orderBy(col("version"))
+
+  /** An all-'U' change set: the `cohort` rows of `df` with `price` and
+    * `status` as their new o_price and o_orderstatus. */
+  private[ops] def upserts(df: DataFrame, cohort: Column, price: Column,
+      status: Column = col("o_orderstatus")): DataFrame =
+    df.where(cohort).select(col("o_orderkey"), lit("U").as("op"),
+      status.as("o_orderstatus"), price.as("o_price"))
+
+  /** #212 — snapshot-versioned table with MERGE + time travel, over
+    * [[graft.api.SnapshotTable]] (manifest-based versioned parquet —
+    * the lakehouse slice the engine otherwise lacks: versioned reads
+    * for reproducible training runs, snapshot-isolated readers, and
+    * copy-on-write MERGE whose write cost is O(changed buckets), not
+    * O(table)). v0 = the %5≠0 orders; one MERGE applies updates
+    * (%7=1: status→'X', price+100), deletes (%7=2) and inserts (the
+    * held-out %5=0, %7=3 keys) in a single change set; the graded
+    * output reads BOTH versions via `asOf` AFTER the merge committed
+    * — time travel is the semantics under test, and the v0 row
+    * proves the old snapshot is byte-stable under a later commit.
+    * File-reference reuse (untouched buckets carried by manifest
+    * reference, not rewritten) is pinned in SnapshotTableSpec, where
+    * paths are observable. Scale: manifests are metadata (one line
+    * per live file), MERGE reads only changed buckets' files — the
+    * iceberg cost model re-expressed on plain parquet + one atomic
+    * rename, with the S3-catalog caveat documented on the API. */
+  def etlSnapshotMergeTimetravel(spark: SparkSession, sf: String): DataFrame =
+    versionRows(spark, buildSnapshotOrders(spark, sf), 0, 1)
 
   /** #263 — snapshot-table COMPACTION as a graded round-trip
     * (round 15; iceberg's rewrite_data_files re-expressed on the
@@ -964,15 +1001,7 @@ object EtlOps {
     val after = graft.api.SnapshotTable.liveFiles(spark, base, v2).size
     require(after < before && after <= 4,
       s"compaction must bin-pack the layout: $before -> $after files")
-    def snap(v: Int): DataFrame =
-      graft.api.SnapshotTable.asOf(spark, base, v)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("o_price")).cast("double").as("total_price"),
-          sum(when(col("o_orderstatus") === "X", 1L).otherwise(0L))
-            .as("n_updated"))
-        .select(lit(v).as("version"), col("n_rows"), col("total_price"),
-          col("n_updated"))
-    snap(1).unionAll(snap(v2)).orderBy(col("version"))
+    versionRows(spark, base, 1, v2)
   }
 
   /** #214 — incremental read (CDC) between table versions over
@@ -1928,9 +1957,7 @@ object EtlOps {
       s"probe <= $probeHi must skip at least half the files: " +
       s"$skippable/${stats.length}")
     def snap(v: Int): DataFrame =
-      graft.api.SnapshotTable.asOf(spark, base, v)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("o_price")).cast("double").as("total_price"),
+      ordersContent(graft.api.SnapshotTable.asOf(spark, base, v),
           min(col("o_price")).cast("double").as("min_price"),
           max(col("o_price")).cast("double").as("max_price"))
         .select(lit(v).as("version"), col("n_rows"), col("total_price"),
@@ -1938,27 +1965,6 @@ object EtlOps {
     snap(1).unionAll(snap(v2)).orderBy(col("version"))
   }
 
-  /** #291 — manifest-stats pruned range scan on the snapshot table
-    * (round 17; VERDICT r16 ask 3 — the iceberg manifest-statistics
-    * posture: #286 proved the FOOTERS carry usable [min,max] zone
-    * maps, but footer pruning still opens every file at plan time;
-    * iceberg-class tables record per-file stats IN THE MANIFEST so
-    * planning prunes from metadata alone): v2 =
-    * [[graft.api.SnapshotTable.optimizeCluster]] — whose manifest
-    * now carries per-file [min,max] of the cluster column, gathered
-    * from the just-written footers at commit time — then a price-band
-    * read via [[graft.api.SnapshotTable.asOfRange]], which keeps only
-    * files whose MANIFEST range intersects the band (no footer of a
-    * skipped file is ever opened; stats-less files are always kept —
-    * correctness over pruning). The op PROVES pruning inline: the
-    * kept list must be a strict nonempty subset of the live files,
-    * and every skipped file's manifest range must be disjoint from
-    * the band. Graded output = the band aggregate (`pruned` pins the
-    * strict-subset fact into the hash-checked row); oracle = the same
-    * band off orders. Scale: planning cost is manifest-size (driver
-    * metadata), scan cost is kept-files only — on a clustered table
-    * that is ~(band width / bucket range) of the data, the entire
-    * point of recording stats at OPTIMIZE time. */
   /** #292 — snapshot-table schema evolution round-trip (round 17;
     * VERDICT r16 ask 4 — the lakehouse ADD COLUMN:
     * [[graft.api.SnapshotTable.addColumn]] publishes a new version
@@ -1991,8 +1997,7 @@ object EtlOps {
     def snap(v: Int): DataFrame = {
       val df = graft.api.SnapshotTable.asOf(spark, base, v)
       val hasTier = df.columns.contains("o_tier")
-      df.agg(count(lit(1)).as("n_rows"),
-          sum(col("o_price")).cast("double").as("total_price"),
+      ordersContent(df,
           (if (hasTier) count(col("o_tier")) else lit(0L)).as("n_tier_set"),
           (if (hasTier) count(when(col("o_tier") === "high", lit(1)))
            else lit(0L)).as("n_tier_high"))
@@ -2003,6 +2008,27 @@ object EtlOps {
     snap(1).unionAll(snap(v2)).unionAll(snap(v3)).orderBy(col("version"))
   }
 
+  /** #291 — manifest-stats pruned range scan on the snapshot table
+    * (round 17; VERDICT r16 ask 3 — the iceberg manifest-statistics
+    * posture: #286 proved the FOOTERS carry usable [min,max] zone
+    * maps, but footer pruning still opens every file at plan time;
+    * iceberg-class tables record per-file stats IN THE MANIFEST so
+    * planning prunes from metadata alone): v2 =
+    * [[graft.api.SnapshotTable.optimizeCluster]] — whose manifest
+    * now carries per-file [min,max] of the cluster column, gathered
+    * from the just-written footers at commit time — then a price-band
+    * read via [[graft.api.SnapshotTable.asOfRange]], which keeps only
+    * files whose MANIFEST range intersects the band (no footer of a
+    * skipped file is ever opened; stats-less files are always kept —
+    * correctness over pruning). The op PROVES pruning inline: the
+    * kept list must be a strict nonempty subset of the live files,
+    * and every skipped file's manifest range must be disjoint from
+    * the band. Graded output = the band aggregate (`pruned` pins the
+    * strict-subset fact into the hash-checked row); oracle = the same
+    * band off orders. Scale: planning cost is manifest-size (driver
+    * metadata), scan cost is kept-files only — on a clustered table
+    * that is ~(band width / bucket range) of the data, the entire
+    * point of recording stats at OPTIMIZE time. */
   def etlSnapshotStatsPruned(spark: SparkSession, sf: String): DataFrame = {
     val base = buildSnapshotOrders(spark, sf)
     val v2 = graft.api.SnapshotTable.optimizeCluster(
@@ -2021,9 +2047,8 @@ object EtlOps {
           (e.max.get.compareTo(lo) < 0 || e.min.get.compareTo(hi) > 0),
           s"skipped file ${e.path} has a manifest range overlapping the band")
       }
-    graft.api.SnapshotTable.asOfRange(spark, base, v2, "o_price", lo, hi)
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("o_price")).cast("double").as("total_price"),
+    ordersContent(
+        graft.api.SnapshotTable.asOfRange(spark, base, v2, "o_price", lo, hi),
         min(col("o_price")).cast("double").as("min_price"),
         max(col("o_price")).cast("double").as("max_price"))
       .select(lit(true).as("pruned"), col("n_rows"), col("total_price"),
@@ -2055,18 +2080,14 @@ object EtlOps {
     require(SnapshotTable.liveFiles(spark, dst, 0) ==
             SnapshotTable.liveFiles(spark, base, 1),
       "shallow clone must reference the source's files verbatim")
-    val changes = SnapshotTable.asOf(spark, dst, 0)
-      .where(col("o_orderkey") % 17 === 0)
-      .select(col("o_orderkey"), lit("U").as("op"), col("o_orderstatus"),
-        (col("o_price") + lit(9)).cast(DEC2).as("o_price"))
-    SnapshotTable.mergeInto(spark, dst, changes, "o_orderkey",
-      numBuckets = 16)
+    SnapshotTable.mergeInto(spark, dst, upserts(
+        SnapshotTable.asOf(spark, dst, 0), col("o_orderkey") % 17 === 0,
+        (col("o_price") + lit(9)).cast(DEC2)),
+      "o_orderkey", numBuckets = 16)
     require(SnapshotTable.latestVersion(spark, base) == 1,
       "a branch merge must never advance the source")
     def snap(label: String, b: String, v: Int): DataFrame =
-      SnapshotTable.asOf(spark, b, v)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("o_price")).cast("double").as("total_price"))
+      ordersContent(SnapshotTable.asOf(spark, b, v))
         .select(lit(label).as("table"), col("n_rows"), col("total_price"))
     snap("branch", dst, 1).unionAll(snap("source", base, 1))
       .orderBy(col("table"))
@@ -2098,12 +2119,10 @@ object EtlOps {
     val dst2 = graft.Tables.scratch("graft_snaptbl_mb2")
     SnapshotTable.cloneShallow(spark, base, dst)
     SnapshotTable.cloneShallow(spark, base, dst2) // same branch point (v1)
-    val changes = SnapshotTable.asOf(spark, dst, 0)
-      .where(col("o_orderkey") % 17 === 0)
-      .select(col("o_orderkey"), lit("U").as("op"), col("o_orderstatus"),
-        (col("o_price") + lit(9)).cast(DEC2).as("o_price"))
-    SnapshotTable.mergeInto(spark, dst, changes, "o_orderkey",
-      numBuckets = 16)
+    SnapshotTable.mergeInto(spark, dst, upserts(
+        SnapshotTable.asOf(spark, dst, 0), col("o_orderkey") % 17 === 0,
+        (col("o_price") + lit(9)).cast(DEC2)),
+      "o_orderkey", numBuckets = 16)
     val v2 = SnapshotTable.mergeBack(spark, dst)
     require(v2 == 2, s"fast-forward must publish parent latest+1, got $v2")
     val parentHead = SnapshotTable.asOf(spark, base, v2)
@@ -2117,9 +2136,7 @@ object EtlOps {
       catch { case _: SnapshotTable.VersionConflictException => true }
     require(conflicted,
       "merge-back after the parent moved must raise VersionConflictException")
-    parentHead
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("o_price")).cast("double").as("total_price"))
+    ordersContent(parentHead)
       .select(lit(true).as("merged_back"), lit(2).as("parent_version"),
         col("n_rows"), col("total_price"))
   }
@@ -2213,8 +2230,8 @@ object EtlOps {
     val liveV2 = SnapshotTable.liveFiles(spark, base, v2)
     val oldOnly = SnapshotTable.liveFiles(spark, base, 0).toSet -- liveV2.toSet
     require(oldOnly.nonEmpty, "fixture must leave superseded files to collect")
-    val headBefore = SnapshotTable.asOf(spark, base, v2)
-      .agg(count(lit(1)), sum(col("o_price")).cast("double")).collect()(0)
+    val headBefore = ordersContent(SnapshotTable.asOf(spark, base, v2))
+      .collect()(0)
     val (droppedManifests, deletedFiles) =
       SnapshotTable.vacuum(spark, base, keepVersions = 1)
     require(droppedManifests == 2,
@@ -2231,15 +2248,11 @@ object EtlOps {
       try { SnapshotTable.asOf(spark, base, 0); false }
       catch { case scala.util.control.NonFatal(_) => true }
     require(expiredLoud, "reading an expired version must fail loudly")
-    val headAfter = SnapshotTable.asOf(spark, base, v2)
-      .agg(count(lit(1)), sum(col("o_price")).cast("double")).collect()(0)
+    val headAfter = ordersContent(SnapshotTable.asOf(spark, base, v2))
+      .collect()(0)
     require(headBefore == headAfter,
       "vacuum must not change the kept version's content")
-    SnapshotTable.asOf(spark, base, v2)
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("o_price")).cast("double").as("total_price"),
-        sum(when(col("o_orderstatus") === "X", 1L).otherwise(0L))
-          .as("n_updated"))
+    ordersContent(SnapshotTable.asOf(spark, base, v2), nUpdated)
       .select(lit(true).as("vacuumed"), lit(2).as("kept_version"),
         col("n_rows"), col("total_price"), col("n_updated"))
   }
@@ -2276,14 +2289,11 @@ object EtlOps {
     require(refusedAdd && SnapshotTable.latestVersion(spark, base) == v2,
       "an ADD existing rows violate must refuse and commit nothing")
     val head = SnapshotTable.asOf(spark, base, v2)
-    val bump = head.where(col("o_orderkey") % 11 === 0)
-      .select(col("o_orderkey"), lit("U").as("op"), col("o_orderstatus"),
-        (col("o_price") + lit(1)).cast(DEC2).as("o_price"))
+    val bump = upserts(head, col("o_orderkey") % 11 === 0,
+      (col("o_price") + lit(1)).cast(DEC2))
     val v3 = SnapshotTable.mergeInto(spark, base, bump, "o_orderkey",
       numBuckets = 16)
-    val bad = head.where(col("o_orderkey") % 11 === 1)
-      .select(col("o_orderkey"), lit("U").as("op"), col("o_orderstatus"),
-        lit(-1).cast(DEC2).as("o_price"))
+    val bad = upserts(head, col("o_orderkey") % 11 === 1, lit(-1).cast(DEC2))
     val refusedMerge =
       try {
         SnapshotTable.mergeInto(spark, base, bad, "o_orderkey",
@@ -2294,22 +2304,18 @@ object EtlOps {
     require(refusedMerge && SnapshotTable.latestVersion(spark, base) == v3,
       "a violating MERGE must refuse before writing and not advance")
     // SQL CHECK three-valued logic: NULL is not FALSE — this commits
-    val nullify = head.where(col("o_orderkey") % 1000 === 7)
-      .select(col("o_orderkey"), lit("U").as("op"), col("o_orderstatus"),
-        lit(null).cast(DEC2).as("o_price"))
+    val nullify = upserts(head, col("o_orderkey") % 1000 === 7,
+      lit(null).cast(DEC2))
     val v4 = SnapshotTable.mergeInto(spark, base, nullify, "o_orderkey",
       numBuckets = 16)
     require(SnapshotTable.checkConstraints(spark, base, 1).isEmpty &&
       SnapshotTable.checkConstraints(spark, base, v4)
         .map(_._1) == Seq("price_nonneg"),
       "the constraint set must be versioned with the manifest")
-    SnapshotTable.asOf(spark, base, v4)
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("o_price")).cast("double").as("total_price"),
+    ordersContent(SnapshotTable.asOf(spark, base, v4),
         sum(when(col("o_price").isNull, 1L).otherwise(0L))
           .as("n_null_price"),
-        sum(when(col("o_orderstatus") === "X", 1L).otherwise(0L))
-          .as("n_updated"))
+        nUpdated)
       .select(lit(true).as("enforced"), lit(4).as("version"),
         col("n_rows"), col("total_price"), col("n_null_price"),
         col("n_updated"))
@@ -2352,12 +2358,10 @@ object EtlOps {
             numBuckets = 16)
         }
       }
-    val fa = writer(h => h.where(col("o_orderkey") % 3 === 1)
-      .select(col("o_orderkey"), lit("U").as("op"), col("o_orderstatus"),
-        (col("o_price") + lit(5)).cast(DEC2).as("o_price")))
-    val fb = writer(h => h.where(col("o_orderkey") % 3 === 2)
-      .select(col("o_orderkey"), lit("U").as("op"),
-        lit("C").as("o_orderstatus"), col("o_price")))
+    val fa = writer(upserts(_, col("o_orderkey") % 3 === 1,
+      (col("o_price") + lit(5)).cast(DEC2)))
+    val fb = writer(upserts(_, col("o_orderkey") % 3 === 2, col("o_price"),
+      lit("C")))
     val timeout = scala.concurrent.duration.Duration(5, "min")
     val (va, vb) =
       try (scala.concurrent.Await.result(fa, timeout),
@@ -2376,13 +2380,10 @@ object EtlOps {
     require(Transforms.multisetEqual(head, expected),
       "the concurrent schedule must equal the sequential fold of both " +
       "changes (serializability)")
-    head
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("o_price")).cast("double").as("total_price"),
+    ordersContent(head,
         sum(when(col("o_orderstatus") === "C", 1L).otherwise(0L))
           .as("n_status_c"),
-        sum(when(col("o_orderstatus") === "X", 1L).otherwise(0L))
-          .as("n_updated"))
+        nUpdated)
       .select(lit(3).as("version"), col("n_rows"), col("total_price"),
         col("n_status_c"), col("n_updated"))
   }
@@ -2445,26 +2446,20 @@ object EtlOps {
     }
     val beforeBad = SnapshotTable.asOf(spark, base,
       SnapshotTable.latestVersion(spark, base))
-    val badPublished = stageAuditPublish("bad", h =>
-      h.where(col("o_orderkey") % 23 === 0)
-        .select(col("o_orderkey"), lit("U").as("op"),
-          col("o_orderstatus"), lit(-7).cast(DEC2).as("o_price")))
+    val badPublished = stageAuditPublish("bad",
+      upserts(_, col("o_orderkey") % 23 === 0, lit(-7).cast(DEC2)))
     require(!badPublished, "a failing audit must never publish")
     val afterBad = SnapshotTable.asOf(spark, base,
       SnapshotTable.latestVersion(spark, base))
     require(Transforms.multisetEqual(afterBad, beforeBad),
       "a refused batch must leave the parent bit-identical")
-    val goodPublished = stageAuditPublish("good", h =>
-      h.where(col("o_orderkey") % 19 === 0)
-        .select(col("o_orderkey"), lit("U").as("op"),
-          col("o_orderstatus"),
-          (col("o_price") + lit(3)).cast(DEC2).as("o_price")))
+    val goodPublished = stageAuditPublish("good",
+      upserts(_, col("o_orderkey") % 19 === 0,
+        (col("o_price") + lit(3)).cast(DEC2)))
     require(goodPublished &&
       SnapshotTable.latestVersion(spark, base) == 2,
       "a passing audit must fast-forward the parent")
-    SnapshotTable.asOf(spark, base, 2)
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("o_price")).cast("double").as("total_price"),
+    ordersContent(SnapshotTable.asOf(spark, base, 2),
         sum(when(col("o_orderkey") % 19 === 0, 1L).otherwise(0L))
           .as("n_audited_cohort"))
       .select(lit(true).as("published"), lit(false).as("bad_published"),
@@ -2492,15 +2487,7 @@ object EtlOps {
     require(graft.api.SnapshotTable.liveFiles(spark, base, v2) ==
             graft.api.SnapshotTable.liveFiles(spark, base, 0),
       "RESTORE must be metadata-only (the target's file list, verbatim)")
-    def snap(v: Int): DataFrame =
-      graft.api.SnapshotTable.asOf(spark, base, v)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("o_price")).cast("double").as("total_price"),
-          sum(when(col("o_orderstatus") === "X", 1L).otherwise(0L))
-            .as("n_updated"))
-        .select(lit(v).as("version"), col("n_rows"), col("total_price"),
-          col("n_updated"))
-    snap(0).unionAll(snap(1)).unionAll(snap(2)).orderBy(col("version"))
+    versionRows(spark, base, 0, 1, 2)
   }
 
   /** #294 — RENAME COLUMN schema evolution on the snapshot table
@@ -2589,15 +2576,11 @@ object EtlOps {
         (e.max.get.compareTo(lo) < 0 || e.min.get.compareTo(hi) > 0))
       .foreach(e => require(after.contains(e.path),
         s"band-disjoint file ${e.path} must be carried by reference"))
-    graft.api.SnapshotTable.asOf(spark, base, v3)
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("o_price")).cast("double").as("total_price"),
-        min(col("o_price")).cast("double").as("min_price"),
-        max(col("o_price")).cast("double").as("max_price"),
-        count(when(col("o_price").between(lit(lo), lit(hi)), lit(1)))
-          .as("n_in_band"))
-      .select(col("n_rows"), col("total_price"), col("min_price"),
-        col("max_price"), col("n_in_band"))
+    ordersContent(graft.api.SnapshotTable.asOf(spark, base, v3),
+      min(col("o_price")).cast("double").as("min_price"),
+      max(col("o_price")).cast("double").as("max_price"),
+      count(when(col("o_price").between(lit(lo), lit(hi)), lit(1)))
+        .as("n_in_band"))
   }
 
   /** #297 — bucket-pruned point lookup on the snapshot table (round
@@ -2689,10 +2672,7 @@ object EtlOps {
     // graded output reads the HEAD (one scan): the requires above
     // prove it equals the reconstruction, so the oracle grades the
     // fold without re-running its lineage
-    head.agg(count(lit(1)).as("n_rows"),
-        sum(col("o_price")).cast("double").as("total_price"),
-        sum(when(col("o_orderstatus") === "X", 1L).otherwise(0L))
-          .as("n_updated"))
+    ordersContent(head, nUpdated)
       .select(lit(true).as("cdc_followed"), col("n_rows"),
         col("total_price"), col("n_updated"))
   }
@@ -5056,18 +5036,7 @@ object EtlOps {
         |FROM pn JOIN pa ON pn.nation = pa.nation
         |ORDER BY pn.nation""".stripMargin,
     "etl_snapshot_merge_timetravel" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |           FROM orders),
-        |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
-        |v1 AS (
-        |  SELECT k,
-        |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
-        |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v0 WHERE k % 7 <> 2
-        |  UNION ALL
-        |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3)
+      (snapshotOrdersSql + """
         |SELECT 0 AS version, count(*) AS n_rows,
         |  CAST(sum(price) AS DOUBLE) AS total_price,
         |  CAST(sum(CASE WHEN st = 'X' THEN 1 ELSE 0 END) AS BIGINT)
@@ -5077,20 +5046,9 @@ object EtlOps {
         |SELECT 1, count(*), CAST(sum(price) AS DOUBLE),
         |  CAST(sum(CASE WHEN st = 'X' THEN 1 ELSE 0 END) AS BIGINT)
         |FROM v1
-        |ORDER BY version""".stripMargin,
+        |ORDER BY version""".stripMargin),
     "etl_snapshot_optimize_cluster" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |           FROM orders),
-        |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
-        |v1 AS (
-        |  SELECT k,
-        |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
-        |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v0 WHERE k % 7 <> 2
-        |  UNION ALL
-        |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3)
+      (snapshotOrdersSql + """
         |SELECT 1 AS version, count(*) AS n_rows,
         |  CAST(sum(price) AS DOUBLE) AS total_price,
         |  CAST(min(price) AS DOUBLE) AS min_price,
@@ -5100,20 +5058,9 @@ object EtlOps {
         |SELECT 2, count(*), CAST(sum(price) AS DOUBLE),
         |  CAST(min(price) AS DOUBLE), CAST(max(price) AS DOUBLE)
         |FROM v1
-        |ORDER BY version""".stripMargin,
+        |ORDER BY version""".stripMargin),
     "etl_snapshot_add_column" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |           FROM orders),
-        |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
-        |v1 AS (
-        |  SELECT k,
-        |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
-        |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v0 WHERE k % 7 <> 2
-        |  UNION ALL
-        |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3),
+      (snapshotOrdersSql + """,
         |v3 AS (
         |  SELECT k, st, price,
         |    CASE WHEN k % 11 = 0 THEN
@@ -5129,39 +5076,17 @@ object EtlOps {
         |UNION ALL
         |SELECT 3, 4, count(*), CAST(sum(price) AS DOUBLE),
         |  count(tier), count(CASE WHEN tier = 'high' THEN 1 END) FROM v3
-        |ORDER BY version""".stripMargin,
+        |ORDER BY version""".stripMargin),
     "etl_snapshot_stats_pruned" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |           FROM orders),
-        |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
-        |v1 AS (
-        |  SELECT k,
-        |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
-        |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v0 WHERE k % 7 <> 2
-        |  UNION ALL
-        |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3)
+      (snapshotOrdersSql + """
         |SELECT TRUE AS pruned, count(*) AS n_rows,
         |  CAST(sum(price) AS DOUBLE) AS total_price,
         |  CAST(min(price) AS DOUBLE) AS min_price,
         |  CAST(max(price) AS DOUBLE) AS max_price
         |FROM v1
-        |WHERE price BETWEEN 50000.00 AND 150000.00""".stripMargin,
+        |WHERE price BETWEEN 50000.00 AND 150000.00""".stripMargin),
     "etl_snapshot_clone_branch" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |           FROM orders),
-        |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
-        |v1 AS (
-        |  SELECT k,
-        |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
-        |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v0 WHERE k % 7 <> 2
-        |  UNION ALL
-        |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3),
+      (snapshotOrdersSql + """,
         |br AS (
         |  SELECT k, st,
         |    CASE WHEN k % 17 = 0 THEN CAST(price + 9 AS DECIMAL(18,2))
@@ -5172,20 +5097,9 @@ object EtlOps {
         |FROM br
         |UNION ALL
         |SELECT 'source', count(*), CAST(sum(price) AS DOUBLE) FROM v1
-        |ORDER BY "table"""".stripMargin,
+        |ORDER BY "table"""".stripMargin),
     "etl_snapshot_branch_mergeback" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |           FROM orders),
-        |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
-        |v1 AS (
-        |  SELECT k,
-        |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
-        |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v0 WHERE k % 7 <> 2
-        |  UNION ALL
-        |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3),
+      (snapshotOrdersSql + """,
         |br AS (
         |  SELECT k, st,
         |    CASE WHEN k % 17 = 0 THEN CAST(price + 9 AS DECIMAL(18,2))
@@ -5193,56 +5107,23 @@ object EtlOps {
         |  FROM v1)
         |SELECT TRUE AS merged_back, 2 AS parent_version,
         |  count(*) AS n_rows, CAST(sum(price) AS DOUBLE) AS total_price
-        |FROM br""".stripMargin,
+        |FROM br""".stripMargin),
     "etl_snapshot_rebucket" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |           FROM orders),
-        |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
-        |v1 AS (
-        |  SELECT k,
-        |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
-        |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v0 WHERE k % 7 <> 2
-        |  UNION ALL
-        |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3)
+      (snapshotOrdersSql + """
         |SELECT k AS o_orderkey, st AS o_orderstatus,
         |  CAST(price AS DOUBLE) AS o_price, 32 AS num_buckets
         |FROM v1
         |WHERE k IN (SELECT k FROM v1 ORDER BY k LIMIT 5)
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin),
     "etl_snapshot_vacuum" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |           FROM orders),
-        |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
-        |v1 AS (
-        |  SELECT k,
-        |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
-        |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v0 WHERE k % 7 <> 2
-        |  UNION ALL
-        |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3)
+      (snapshotOrdersSql + """
         |SELECT TRUE AS vacuumed, 2 AS kept_version, count(*) AS n_rows,
         |  CAST(sum(price) AS DOUBLE) AS total_price,
         |  CAST(sum(CASE WHEN st = 'X' THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_updated
-        |FROM v1""".stripMargin,
+        |FROM v1""".stripMargin),
     "etl_snapshot_check_constraint" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |           FROM orders),
-        |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
-        |v1 AS (
-        |  SELECT k,
-        |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
-        |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v0 WHERE k % 7 <> 2
-        |  UNION ALL
-        |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3),
+      (snapshotOrdersSql + """,
         |v3 AS (
         |  SELECT k, st,
         |    CASE WHEN k % 11 = 0 THEN CAST(price + 1 AS DECIMAL(18,2))
@@ -5258,20 +5139,9 @@ object EtlOps {
         |    AS n_null_price,
         |  CAST(sum(CASE WHEN st = 'X' THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_updated
-        |FROM v4""".stripMargin,
+        |FROM v4""".stripMargin),
     "etl_snapshot_concurrent_merge" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |           FROM orders),
-        |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
-        |v1 AS (
-        |  SELECT k,
-        |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
-        |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v0 WHERE k % 7 <> 2
-        |  UNION ALL
-        |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3),
+      (snapshotOrdersSql + """,
         |vf AS (
         |  SELECT k,
         |    CASE WHEN k % 3 = 2 THEN 'C' ELSE st END AS st,
@@ -5284,20 +5154,9 @@ object EtlOps {
         |    AS n_status_c,
         |  CAST(sum(CASE WHEN st = 'X' THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_updated
-        |FROM vf""".stripMargin,
+        |FROM vf""".stripMargin),
     "etl_snapshot_write_audit_publish" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |           FROM orders),
-        |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
-        |v1 AS (
-        |  SELECT k,
-        |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
-        |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v0 WHERE k % 7 <> 2
-        |  UNION ALL
-        |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3),
+      (snapshotOrdersSql + """,
         |wap AS (
         |  SELECT k, st,
         |    CASE WHEN k % 19 = 0 THEN CAST(price + 3 AS DECIMAL(18,2))
@@ -5308,38 +5167,16 @@ object EtlOps {
         |  CAST(sum(price) AS DOUBLE) AS total_price,
         |  CAST(sum(CASE WHEN k % 19 = 0 THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_audited_cohort
-        |FROM wap""".stripMargin,
+        |FROM wap""".stripMargin),
     "etl_snapshot_point_lookup" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |           FROM orders),
-        |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
-        |v1 AS (
-        |  SELECT k,
-        |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
-        |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v0 WHERE k % 7 <> 2
-        |  UNION ALL
-        |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3)
+      (snapshotOrdersSql + """
         |SELECT k AS o_orderkey, st AS o_orderstatus,
         |  CAST(price AS DOUBLE) AS o_price
         |FROM v1
         |WHERE k IN (SELECT k FROM v1 ORDER BY k LIMIT 5)
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin),
     "etl_snapshot_cdc_follow" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |           FROM orders),
-        |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
-        |v1 AS (
-        |  SELECT k,
-        |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
-        |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v0 WHERE k % 7 <> 2
-        |  UNION ALL
-        |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3),
+      (snapshotOrdersSql + """,
         |v2 AS (
         |  SELECT k, st,
         |    CASE WHEN k % 9 = 4 THEN CAST(price + 7 AS DECIMAL(18,2))
@@ -5349,20 +5186,9 @@ object EtlOps {
         |  CAST(sum(price) AS DOUBLE) AS total_price,
         |  CAST(sum(CASE WHEN st = 'X' THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_updated
-        |FROM v2""".stripMargin,
+        |FROM v2""".stripMargin),
     "etl_snapshot_restore" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |           FROM orders),
-        |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
-        |v1 AS (
-        |  SELECT k,
-        |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
-        |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v0 WHERE k % 7 <> 2
-        |  UNION ALL
-        |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3)
+      (snapshotOrdersSql + """
         |SELECT 0 AS version, count(*) AS n_rows,
         |  CAST(sum(price) AS DOUBLE) AS total_price,
         |  CAST(sum(CASE WHEN st = 'X' THEN 1 ELSE 0 END) AS BIGINT)
@@ -5376,20 +5202,9 @@ object EtlOps {
         |SELECT 2, count(*), CAST(sum(price) AS DOUBLE),
         |  CAST(sum(CASE WHEN st = 'X' THEN 1 ELSE 0 END) AS BIGINT)
         |FROM v0
-        |ORDER BY version""".stripMargin,
+        |ORDER BY version""".stripMargin),
     "etl_snapshot_rename_column" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |           FROM orders),
-        |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
-        |v1 AS (
-        |  SELECT k,
-        |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
-        |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v0 WHERE k % 7 <> 2
-        |  UNION ALL
-        |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3),
+      (snapshotOrdersSql + """,
         |v3 AS (
         |  SELECT k, st,
         |    CASE WHEN k % 13 = 0 THEN CAST(price + 50 AS DECIMAL(18,2))
@@ -5402,20 +5217,9 @@ object EtlOps {
         |SELECT 2, 'o_amount', count(*), CAST(sum(price) AS DOUBLE) FROM v1
         |UNION ALL
         |SELECT 3, 'o_amount', count(*), CAST(sum(price) AS DOUBLE) FROM v3
-        |ORDER BY version""".stripMargin,
+        |ORDER BY version""".stripMargin),
     "etl_snapshot_delete_where" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |           FROM orders),
-        |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
-        |v1 AS (
-        |  SELECT k,
-        |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
-        |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v0 WHERE k % 7 <> 2
-        |  UNION ALL
-        |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3),
+      (snapshotOrdersSql + """,
         |v3 AS (SELECT * FROM v1
         |       WHERE price NOT BETWEEN 60000.00 AND 120000.00)
         |SELECT count(*) AS n_rows,
@@ -5424,20 +5228,9 @@ object EtlOps {
         |  CAST(max(price) AS DOUBLE) AS max_price,
         |  count(CASE WHEN price BETWEEN 60000.00 AND 120000.00
         |        THEN 1 END) AS n_in_band
-        |FROM v3""".stripMargin,
+        |FROM v3""".stripMargin),
     "etl_snapshot_compact" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |           FROM orders),
-        |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
-        |v1 AS (
-        |  SELECT k,
-        |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
-        |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v0 WHERE k % 7 <> 2
-        |  UNION ALL
-        |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3)
+      (snapshotOrdersSql + """
         |SELECT 1 AS version, count(*) AS n_rows,
         |  CAST(sum(price) AS DOUBLE) AS total_price,
         |  CAST(sum(CASE WHEN st = 'X' THEN 1 ELSE 0 END) AS BIGINT)
@@ -5447,7 +5240,7 @@ object EtlOps {
         |SELECT 2, count(*), CAST(sum(price) AS DOUBLE),
         |  CAST(sum(CASE WHEN st = 'X' THEN 1 ELSE 0 END) AS BIGINT)
         |FROM v1
-        |ORDER BY version""".stripMargin,
+        |ORDER BY version""".stripMargin),
     "ts_yoy_growth" ->
       """WITH m AS (
         |  SELECT EXTRACT(YEAR FROM l_shipdate) AS yr,

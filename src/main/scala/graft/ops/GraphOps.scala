@@ -254,6 +254,20 @@ object GraphOps {
       .where(col("w") >= 2)
   }
 
+  /** [[copurchaseEdges]] in DuckDB SQL, with its undirected form
+    * `und` and degree table `deg`: the CTE the co-purchase oracles
+    * start from (`graph_kcore`'s MATERIALIZED variant excepted). */
+  private val copurchaseSql: String =
+    """WITH op AS (
+      |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+      |edges AS (
+      |  SELECT a.p AS u, b.p AS v, count(*) AS w
+      |  FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
+      |  GROUP BY 1, 2 HAVING count(*) >= 2),
+      |und AS (SELECT u AS x, v AS y FROM edges
+      |        UNION ALL SELECT v, u FROM edges),
+      |deg AS (SELECT x, count(*) AS d FROM und GROUP BY x)""".stripMargin
+
   /** Both orientations (x, y) of an undirected u < v edge list. */
   private def undirected(e: DataFrame): DataFrame =
     e.select(col("u").as("x"), col("v").as("y"))
@@ -712,15 +726,7 @@ object GraphOps {
 
   val oracle: Map[String, String] = ListMap(
     "graph_family_stage" ->
-      """WITH op AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |edges AS (
-        |  SELECT a.p AS u, b.p AS v, count(*) AS w
-        |  FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |und AS (SELECT u AS x, v AS y FROM edges
-        |        UNION ALL SELECT v, u FROM edges),
-        |deg AS (SELECT x, count(*) AS d FROM und GROUP BY x),
+      (copurchaseSql + """,
         |cand AS (
         |  SELECT a.x AS cu, b.x AS cv
         |  FROM und a JOIN und b ON a.y = b.y AND a.x < b.x)
@@ -729,18 +735,10 @@ object GraphOps {
         |  (SELECT CAST(sum(w) AS BIGINT) FROM edges) AS support_sum,
         |  (SELECT count(*) FROM deg) AS n_nodes,
         |  (SELECT CAST(sum(d) AS BIGINT) FROM deg) AS degree_sum,
-        |  (SELECT count(*) FROM cand) AS n_wedges""".stripMargin,
+        |  (SELECT count(*) FROM cand) AS n_wedges""".stripMargin),
     "graph_shortest_paths" -> shortestPathsOracle,
     "graph_clustering_coefficient" ->
-      """WITH op AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |edges AS (
-        |  SELECT a.p AS u, b.p AS v, count(*) AS w
-        |  FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |und AS (SELECT u AS x, v AS y FROM edges
-        |        UNION ALL SELECT v, u FROM edges),
-        |deg AS (SELECT x, count(*) AS d FROM und GROUP BY x),
+      (copurchaseSql + """,
         |cand AS (
         |  SELECT a.x AS cu, b.x AS cv, a.y AS cw
         |  FROM und a JOIN und b ON a.y = b.y AND a.x < b.x),
@@ -757,17 +755,9 @@ object GraphOps {
         |  WHERE deg.d >= 2)
         |SELECT node, CAST(d AS BIGINT) AS degree, CAST(t AS BIGINT) AS triangles,
         |  CAST(c8 AS DOUBLE) / 100000000 AS clustering_coeff
-        |FROM s ORDER BY c8 DESC, node LIMIT 20""".stripMargin,
+        |FROM s ORDER BY c8 DESC, node LIMIT 20""".stripMargin),
     "graph_degree_assortativity" ->
-      """WITH op AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |edges AS (
-        |  SELECT a.p AS u, b.p AS v, count(*) AS w
-        |  FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |und AS (SELECT u AS x, v AS y FROM edges
-        |        UNION ALL SELECT v, u FROM edges),
-        |deg AS (SELECT x, count(*) AS d FROM und GROUP BY x),
+      (copurchaseSql + """,
         |s AS (
         |  SELECT count(*) AS n,
         |    sum(du.d) AS sx, sum(dv.d) AS sy, sum(du.d * dv.d) AS sxy,
@@ -785,18 +775,10 @@ object GraphOps {
         |  round((nd * sxy - sx * sy)
         |    / (sqrt(nd * sxx - sx * sx) * sqrt(nd * syy - sy * sy)), 6)
         |    AS assortativity
-        |FROM d ORDER BY n_endpoints""".stripMargin,
+        |FROM d ORDER BY n_endpoints""".stripMargin),
     "graph_kcore" -> kcoreOracle,
     "graph_jaccard_links" ->
-      """WITH op AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |edges AS (
-        |  SELECT a.p AS u, b.p AS v, count(*) AS w
-        |  FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |und AS (SELECT u AS x, v AS y FROM edges
-        |        UNION ALL SELECT v, u FROM edges),
-        |deg AS (SELECT x, count(*) AS d FROM und GROUP BY x),
+      (copurchaseSql + """,
         |cand AS (
         |  SELECT a.x AS cu, b.x AS cv, count(*) AS common
         |  FROM und a JOIN und b ON a.y = b.y AND a.x < b.x
@@ -814,17 +796,9 @@ object GraphOps {
         |SELECT cu AS u, cv AS v, CAST(common AS BIGINT) AS common,
         |  CAST(deg_u AS BIGINT) AS deg_u, CAST(deg_v AS BIGINT) AS deg_v,
         |  CAST(j8 AS DOUBLE) / 100000000 AS jaccard
-        |FROM s ORDER BY j8 DESC, cu, cv LIMIT 20""".stripMargin,
+        |FROM s ORDER BY j8 DESC, cu, cv LIMIT 20""".stripMargin),
     "graph_adamic_adar" ->
-      """WITH op AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |edges AS (
-        |  SELECT a.p AS u, b.p AS v, count(*) AS w
-        |  FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |und AS (SELECT u AS x, v AS y FROM edges
-        |        UNION ALL SELECT v, u FROM edges),
-        |deg AS (SELECT x, count(*) AS d FROM und GROUP BY x),
+      (copurchaseSql + """,
         |cand AS (
         |  SELECT a.x AS cu, b.x AS cv, a.y AS cw
         |  FROM und a JOIN und b ON a.y = b.y AND a.x < b.x),
@@ -840,7 +814,7 @@ object GraphOps {
         |  LEFT JOIN edges e ON e.u = aa.cu AND e.v = aa.cv
         |  WHERE e.u IS NULL)
         |SELECT cu AS u, cv AS v, common, CAST(s AS DOUBLE) AS aa_score
-        |FROM nonedge ORDER BY s DESC, cu, cv LIMIT 20""".stripMargin,
+        |FROM nonedge ORDER BY s DESC, cu, cv LIMIT 20""".stripMargin),
     "graph_pagerank" ->
       (s"WITH $edgesCte," +
        """

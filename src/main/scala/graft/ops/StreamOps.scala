@@ -362,10 +362,8 @@ object StreamOps {
     require(SnapshotTable.changeFeed(spark, base, vOn - 1, vOn)
       .count() == 0, "a metadata commit must contribute zero feed rows")
     // v3: fed MERGE; v4: fed DELETE WHERE (the 'D' pre-image path)
-    val bump = SnapshotTable.asOf(spark, base, vOn)
-      .where(col("o_orderkey") % 13 === 0)
-      .select(col("o_orderkey"), lit("U").as("op"), col("o_orderstatus"),
-        (col("o_price") + lit(7)).cast(DEC2).as("o_price"))
+    val bump = EtlOps.upserts(SnapshotTable.asOf(spark, base, vOn),
+      col("o_orderkey") % 13 === 0, (col("o_price") + lit(7)).cast(DEC2))
     val v3 = SnapshotTable.mergeInto(spark, base, bump, "o_orderkey",
       numBuckets = 16)
     val (v4, _, _) = SnapshotTable.deleteRange(spark, base, "o_orderkey",
@@ -410,18 +408,7 @@ object StreamOps {
 
   val oracle: Map[String, String] = ListMap(
     "stream_snapshot_change_feed" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |           FROM orders),
-        |v0 AS (SELECT * FROM o WHERE k % 5 <> 0),
-        |v1 AS (
-        |  SELECT k,
-        |    CASE WHEN k % 7 = 1 THEN 'X' ELSE st END AS st,
-        |    CASE WHEN k % 7 = 1 THEN CAST(price + 100 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v0 WHERE k % 7 <> 2
-        |  UNION ALL
-        |  SELECT k, st, price FROM o WHERE k % 5 = 0 AND k % 7 = 3),
+      (EtlOps.snapshotOrdersSql + """,
         |v3 AS (
         |  SELECT k, st,
         |    CASE WHEN k % 13 = 0 THEN CAST(price + 7 AS DECIMAL(18,2))
@@ -433,7 +420,7 @@ object StreamOps {
         |UNION ALL
         |SELECT 4, 'D', count(*), CAST(sum(k) AS BIGINT)
         |FROM v3 WHERE price BETWEEN 0 AND 10000
-        |ORDER BY commit_version""".stripMargin,
+        |ORDER BY commit_version""".stripMargin),
     "stream_snapshot_sink" ->
       """WITH r AS (
         |  SELECT user_id, event_type, value, ts,

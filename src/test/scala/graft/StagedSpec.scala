@@ -49,6 +49,7 @@ class StagedSpec extends SparkSpec {
       rddIds(g)
     }
     assert(gens.forall(_.nonEmpty))
+    assert(Staged.swaps(name) == 3L)
     val live = persisted
     assert(gens(0).forall(id => !live(id)), "first generation still persisted")
     assert(gens.drop(1).flatten.forall(live), "current or retired generation released")
@@ -56,10 +57,12 @@ class StagedSpec extends SparkSpec {
   }
 
   test("graph_family_stage 3x holds at most two generations of the co-purchase stages") {
-    val before = persisted
+    val (before, swapsBefore) = (persisted, Staged.swaps)
     for (_ <- 1 to 3) assert(SparkEntry.queries("graph_family_stage")(spark, sf001).count() == 1)
     val added = persisted -- before
     assert(added.size <= 2 * 3, s"${added.size} new persisted RDDs after three stagings")
+    for (st <- Seq("copurchase_edges", "copurchase_deg", "copurchase_wedges"))
+      assert(Staged.swaps(st) - swapsBefore.getOrElse(st, 0L) == 3L, s"$st swaps")
   }
 
   test("a lost concurrent first build leaves exactly one persisted checkpoint") {
