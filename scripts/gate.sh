@@ -84,6 +84,15 @@ if [ -n "$twins" ]; then
   echo "gate: an oracle pastes a shared fixture CTE (append to snapshotOrdersSql or copurchaseSql instead)" >&2
   exit 1
 fi
+# one job counter: graft.Session's tag-keyed listener (Session.counted,
+# Session.timed) is the only listener and the only listener-bus user
+listeners=$(grep -rnE 'addSparkListener|listenerBus' src |
+  grep -v '^src/main/scala/graft/Session\.scala:' || true)
+if [ -n "$listeners" ]; then
+  printf '%s\n' "$listeners"
+  echo "gate: a Spark listener outside graft.Session (count jobs with Session.counted)" >&2
+  exit 1
+fi
 sbt -batch compile test
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} \
   sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_out"

@@ -16,6 +16,10 @@ package graft
   * to FULLBENCH.json (committed, diffable round-over-round), and
   * emits a dense centisecond array line so the evidence also lives
   * in the driver's stdout-tail artifact.
+  *
+  * Each op's jobs and stages in its last timed call go to FULLBENCH.json
+  * (`counts`); a filtered run (`runMain graft.Bench <op>…`) prints them
+  * as one `op` line per op instead.
   */
 object Bench {
 
@@ -353,38 +357,41 @@ object Bench {
     // A query whose count() throws records None — a failure marker in
     // the JSON (null), never its misleading time-to-exception.
     // Executed-plan fingerprint per op (round 16 — VERDICT r15 ask 2):
-    // captured OUTSIDE the timed window on the first successful
-    // attempt, recorded in FULLBENCH.json, and diffed against the
-    // previous committed sweep so a named time regression self-triages
-    // — plan_changed:false means identical join strategies / shuffle
-    // counts, i.e. a host stall (the r15 layout_zorder_pruning false
-    // alarm), plan_changed:true means a genuine planner change worth
-    // bisecting. AQE is off in this session, so executedPlan is final.
-    val planFps = scala.collection.mutable.Map[String, String]()
-    def fpString(df: org.apache.spark.sql.DataFrame): String =
+    // captured OUTSIDE the timed window from the last successful
+    // attempt of the first pass, recorded in FULLBENCH.json, and diffed
+    // against the previous committed sweep so a named time regression
+    // self-triages — plan_changed:false means identical join strategies
+    // / shuffle counts, i.e. a host stall (the r15 layout_zorder_pruning
+    // false alarm), plan_changed:true means a genuine planner change
+    // worth bisecting. AQE is off in this session, so executedPlan is final.
+    val planFps = scala.collection.mutable.Map[String, Map[String, Int]]()
+    def shapeOf(df: org.apache.spark.sql.DataFrame): Map[String, Int] =
       Session.shape(df.queryExecution.executedPlan.toString)
-        .toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(",")
+    def fpString(shape: Map[String, Int]): String =
+      shape.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(",")
     // Stages each op's timed calls read, and the op whose timed calls
     // swap each stage in (the `Staged.reads` and `Staged.swaps` counts
     // that grew between before and after; ops run one at a time, so
-    // the difference belongs to that call) — FULLBENCH's `staged_read`.
+    // the difference belongs to that op) — FULLBENCH's `staged_read`.
     val stagesRead = scala.collection.mutable.Map[String, Set[String]]()
     val stagedBy = scala.collection.mutable.Map[String, String]()
     def grown(before: Map[String, Long], after: Map[String, Long]): Iterable[String] =
       after.collect { case (s, c) if c > before.getOrElse(s, 0L) => s }
-    def bestOfN(name: String, n: Int): Option[Double] =
-      (1 to n).flatMap { _ =>
-        val (readsBefore, swapsBefore) = (Staged.reads, Staged.swaps)
-        val run = Session.timed(spark, name, sfDir)
-        val read = grown(readsBefore, Staged.reads)
-        if (read.nonEmpty) stagesRead(name) = stagesRead.getOrElse(name, Set.empty) ++ read
-        grown(swapsBefore, Staged.swaps).foreach(stagedBy(_) = name)
-        run.map { case (t, df) =>
-          if (!planFps.contains(name))
-            planFps(name) = try fpString(df) catch { case _: Throwable => "" }
-          t
-        }
-      }.minOption
+    // the tally of each op's last timed call: its jobs and stages
+    val tallies = scala.collection.mutable.Map[String, Session.Tally]()
+    def bestOfN(name: String, n: Int): Option[Double] = {
+      val (readsBefore, swapsBefore) = (Staged.reads, Staged.swaps)
+      val best = Session.bestOf(spark, name, sfDir, n)
+      val read = grown(readsBefore, Staged.reads)
+      if (read.nonEmpty) stagesRead(name) = stagesRead.getOrElse(name, Set.empty) ++ read
+      grown(swapsBefore, Staged.swaps).foreach(stagedBy(_) = name)
+      best.map { case (t, last) =>
+        tallies(name) = last.tally
+        if (!planFps.contains(name))
+          try planFps(name) = shapeOf(last.df) catch { case _: Throwable => () }
+        t
+      }
+    }
     def toJson(rs: Seq[(String, Option[Double])]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + v.fold("null")(_.toString) }
         .mkString("{", ",", "}")
@@ -412,6 +419,15 @@ object Bench {
     // the full-sweep remainder: two passes of best-of-1, per-query min
     // (same stall-window rationale as twoPass, lighter per-pass cost)
     val remMins = twoPass(remainder, 1)
+    // each op's jobs and stages in its last timed call, read before the
+    // AQE-on pass stops this session (one marker job settles them all)
+    val counts = tallies.map { case (n, t) => n -> t.counts }.toMap
+    def countsJson(n: String): String =
+      counts.get(n).fold("null")(c => s"""{"jobs":${c.jobs},"stages":${c.stages}}""")
+    if (only.nonEmpty) (keep(headline) ++ keep(secondary) ++ adhoc).foreach { n =>
+      println(s"""{"metric":"op","op":"$n","best_sec":${mins(n).fold("null")(t => f"$t%.3f")},""" +
+        s""""counts":${countsJson(n)}}""")
+    }
     val failed = (results ++ sec).collect { case (k, None) => k }
     // a suite with a crashed query must not grade FASTER than a working
     // one: any failure poisons that suite's total to null (the per-query
@@ -423,23 +439,34 @@ object Bench {
     // ON, so its cost is measured every round instead of assumed. Two
     // passes, per-query min over them (an earlier "AQE-on gap" of 4.02
     // vs 2.70 s turned out to be this row's former best-of-1 protocol
-    // plus end-of-JVM GC pressure, not AQE — graft.AqeProbe
-    // measured AQE-on <= AQE-off per query in BOTH session orderings
-    // with zero structural plan changes; see BASELINE.md "AQE-on gap").
+    // plus end-of-JVM GC pressure, not AQE — a both-orderings re-probe
+    // measured AQE-on <= AQE-off per query with zero structural plan
+    // changes; see BASELINE.md "AQE-on gap").
     // Per-query times are emitted (not just the total) so a future
-    // AQE-sensitive plan regression is attributable to its query.
+    // AQE-sensitive plan regression is attributable to its query, with
+    // each query's AQE-on plan shape from its last run and the queries
+    // whose join or shuffle-exchange counts differ from the AQE-off
+    // fingerprint. That shape is the adaptive plan of the DataFrame as
+    // built: count() runs its own QueryExecution, so re-optimizations
+    // made while it ran are not in it.
     // Only meaningful for the full-suite run (driver invocation).
-    val (aqeOn, aqeWarmFailed): (Seq[(String, Option[Double])], Seq[String]) =
-      if (only.nonEmpty) (Nil, Nil) else {
+    val (aqeOn, aqeWarmFailed, aqeShapes) =
+      if (only.nonEmpty) (Nil, Nil, Map.empty[String, Map[String, Int]]) else {
         spark.stop()
         val s2 = Session.local(cpus, "spark.sql.adaptive.enabled" -> "true")
         try {
           val wf = Session.warm(s2, headline, warmDir)
-          def pass() = headline.map(n => n -> Session.timed(s2, n, sfDir).map(_._1)).toMap
+          def pass() = headline.map(n => n -> Session.timed(s2, n, sfDir)).toMap
           val (p1, p2) = (pass(), pass())
-          (headline.map(n => n -> (p1(n).toSeq ++ p2(n).toSeq).minOption), wf)
+          val shapes = headline.flatMap(n =>
+            p2(n).orElse(p1(n)).map(r => n -> shapeOf(r.df))).toMap
+          (headline.map(n => n -> (p1(n).toSeq ++ p2(n).toSeq).map(_.sec).minOption), wf, shapes)
         } finally s2.stop()
       }
+    val aqePlanChanged = headline.filter(n => (aqeShapes.get(n), planFps.get(n)) match {
+      case (Some(on), Some(off)) => (off - "aqeRead").exists { case (k, v) => on(k) != v }
+      case _ => false
+    })
     // ops whose untimed warm-up threw, in either session (each already
     // reported on stderr with its message)
     val warmAll = (warmFailed ++ aqeWarmFailed).distinct
@@ -476,7 +503,7 @@ object Bench {
       s""""ratio":${ratio.fold("null")(r => f"$r%.3f")},""" +
       s""""pass":${pass.fold("null")(_.toString)},""" +
       s""""datapath_gate":$datapathGate,"datapath_gate_source":"BASELINE.md r17 slope comparator (graft.DatapathBench)",""" +
-      s""""aqe_on":${toJson(aqeOn)},""" +
+      s""""aqe_on":${toJson(aqeOn)},"aqe_on_plan_changed":${jsonList(aqePlanChanged)},""" +
       s""""aqe_on_total":${aqeOnTotal.fold("null")(t => f"$t%.3f")},"sf":"$sfDir"}""")
     // Full-sweep artifact + dense line (round 14 — VERDICT r13 item 1):
     // per-op times for ALL registered operators every round. Full
@@ -509,8 +536,7 @@ object Bench {
       val regJson = regressions.map { case (n, p0, t) =>
         // plan_changed: null when either side lacks a fingerprint
         // (first fingerprinted round, or a failed capture)
-        val pc = (prevFps.get(n).filter(_.nonEmpty),
-                  planFps.get(n).filter(_.nonEmpty)) match {
+        val pc = (prevFps.get(n).filter(_.nonEmpty), planFps.get(n).map(fpString)) match {
           case (Some(a), Some(b)) => (a != b).toString
           case _ => "null"
         }
@@ -541,9 +567,17 @@ object Bench {
         .append(s"""  "total_sec": ${fullTotal.fold("null")(t => f"$t%.3f")},\n""")
         .append(s"""  "slowest10": {${slow10.map { case (n, v) => "\"" + n + "\":" + f"$v%.3f" }.mkString(",")}},\n""")
         .append(s"""  "regressions_vs_prev": $regJson,\n""")
+        .append(s"""  "aqe_on_plan_changed": ${jsonList(aqePlanChanged)},\n""")
+        .append("  \"aqe_on_fp\": {\n")
+        .append(headline.map(n =>
+          s"""    "$n": "${aqeShapes.get(n).fold("")(fpString)}"""").mkString(",\n"))
+        .append("\n  },\n")
+        .append("  \"counts\": {\n")
+        .append(names.map(n => s"""    "$n": ${countsJson(n)}""").mkString(",\n"))
+        .append("\n  },\n")
         .append("  \"plan_fp\": {\n")
         .append(names.map(n =>
-          s"""    "$n": "${planFps.getOrElse(n, "")}"""").mkString(",\n"))
+          s"""    "$n": "${planFps.get(n).fold("")(fpString)}"""").mkString(",\n"))
         .append("\n  },\n")
         .append("  \"times_sec\": {\n")
         .append(names.map(n => s"""    "$n": ${all(n).fold("null")(v => f"$v%.4f")}""").mkString(",\n"))

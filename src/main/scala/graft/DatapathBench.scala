@@ -46,8 +46,8 @@ object DatapathBench {
     val cpus = Session.cpus
     val spark = Session.local(cpus, "spark.sql.adaptive.enabled" -> "false") // match Bench
     spark.sparkContext.setLogLevel("ERROR")
-    def bestOf3(name: String, dir: String): Double =
-      (1 to 3).flatMap(_ => Session.timed(spark, name, dir)).map(_._1).min
+    def bestOf3(name: String, dir: String): Option[Double] =
+      Session.bestOf(spark, name, dir, 3).map(_._1)
     // one untimed warm pass (codegen + JIT) at the LO point per op,
     // then the two timed points back-to-back so the session state the
     // slope subtracts away is as identical as possible
@@ -55,13 +55,16 @@ object DatapathBench {
       Session.warm(spark, Seq(name), lo)
       val tLo = bestOf3(name, lo)
       val tHi = bestOf3(name, hi)
-      (name, tLo, tHi, tHi - tLo)
+      (name, tLo, tHi, for (a <- tLo; b <- tHi) yield b - a)
     }
+    def num(v: Option[Double]) = v.fold("null")(x => f"$x%.3f")
     val js = rows.map { case (n, a, b, s) =>
-      f""""$n":{"t_lo":$a%.3f,"t_hi":$b%.3f,"slope":$s%.3f}"""
+      s""""$n":{"t_lo":${num(a)},"t_hi":${num(b)},"slope":${num(s)}}"""
     }.mkString(",")
-    val tot = rows.map(_._4).sum
-    println(f"""{"metric":"graft_datapath_slope","value":$tot%.3f,"unit":"sec","lo":"$lo","hi":"$hi","cpus":$cpus,"ops":{$js%s}}""")
+    // an op that failed at either point poisons the total (Bench's
+    // totalOrNull): a partial sum would read as a faster data path
+    val tot = if (rows.exists(_._4.isEmpty)) None else Some(rows.flatMap(_._4).sum)
+    println(s"""{"metric":"graft_datapath_slope","value":${num(tot)},"unit":"sec","lo":"$lo","hi":"$hi","cpus":$cpus,"ops":{$js}}""")
     spark.stop()
   }
 }

@@ -9,6 +9,9 @@ package graft
   *
   *   sbt "runMain graft.Plans /root/testdata/sf0.001 PLANS.md"
   *
+  * An optional op-name tail (`runMain graft.Plans <sf> <out> <op>…`)
+  * writes only those ops' plans, e.g. a before/after pair of one op.
+  *
   * The plan text is environment-stable (sf0.001 fixture paths are
   * the only local detail) so diffs of this file review as plan
   * changes, not noise.
@@ -141,6 +144,8 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
+    val names = if (args.length > 2) args.drop(2).toSeq else selection
+    names.foreach(n => require(SparkEntry.queries.contains(n), s"unknown op $n"))
     val spark = Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
@@ -173,7 +178,7 @@ object Plans {
     sb.append("In every case the probe side streams once and the loop cost is\n")
     sb.append("O(corpus × metadata), never fact × fact; PlanShapeSpec pins\n")
     sb.append("that no FACT-to-FACT nested loop exists anywhere.\n")
-    selection.foreach { name =>
+    names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       // expression/plan ids are fresh per session — normalize them so
       // regeneration diffs show plan changes, not id churn
@@ -191,7 +196,7 @@ object Plans {
     }
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       sb.toString.getBytes("UTF-8"))
-    println(s"[plans] wrote ${selection.size} plans to $out")
+    println(s"[plans] wrote ${names.size} plans to $out")
     spark.stop()
   }
 }

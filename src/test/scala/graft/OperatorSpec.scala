@@ -337,4 +337,31 @@ class OperatorSpec extends SparkSpec {
     assert(viaAgg.exceptAll(viaWindow).count() == 0)
     assert(viaWindow.exceptAll(viaAgg).count() == 0)
   }
+
+  test("Session.timed counts its own call's jobs and stages, the same on every call") {
+    def counts() = Session.timed(spark, "join_anti", sf001).get.tally.counts
+    counts() // a first load also infers the tables' schemas (Tables' memo)
+    val first = counts()
+    assert(counts() == first)
+    assert(first.stages >= first.jobs && first.jobs >= 1, first)
+    // a thread started before the call does not inherit its tag: the
+    // jobs it launches while the call runs are not the call's
+    val running = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val untagged = new java.util.concurrent.atomic.AtomicInteger()
+    val other = new Thread(() => while (running.get) {
+      spark.range(10).count(); untagged.incrementAndGet(); ()
+    })
+    other.start()
+    try {
+      while (untagged.get == 0) Thread.sleep(5)
+      val before = untagged.get
+      val during = Session.timed(spark, "join_anti", sf001).get.tally
+      assert(untagged.get > before, "no untagged job ran during the call")
+      assert(during.counts == first)
+    } finally { running.set(false); other.join() }
+  }
+
+  test("Session.bestOf is None when every attempt fails") {
+    assert(Session.bestOf(spark, "no_such_op", sf001, 3).isEmpty)
+  }
 }

@@ -30,10 +30,16 @@ class PermutationInvarianceSpec extends SparkSpec {
   }
 
   test("every graded query returns identical rows at shuffle.partitions=1 vs 32") {
-    val s1 = spark.newSession()
+    val (s1, s32) = (spark.newSession(), spark.newSession())
     s1.conf.set("spark.sql.shuffle.partitions", "1")
-    val s32 = spark.newSession()
     s32.conf.set("spark.sql.shuffle.partitions", "32")
+    // strict codegen: a stage whose generated code fails to compile
+    // (janino's 64 KB method limit, constant-pool overflow) throws
+    // instead of silently running interpreted, so this sweep is the
+    // codegen audit of every graded query too
+    Seq(s1, s32).foreach(_.conf.set("spark.sql.codegen.fallback", "false"))
+    assert(Seq(s1, s32).map(_.conf.get("spark.sql.codegen.fallback")) == Seq("false", "false"),
+      "the sweep must run with strict codegen")
     // 12 queries in flight (the Verify pattern; raised from 4 in the
     // round-19 gate-budget pass — the sweep is the suite's single
     // largest row at 132 s and its ops are independent: distinct temp

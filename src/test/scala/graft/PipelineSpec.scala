@@ -98,9 +98,9 @@ class PipelineSpec extends SparkSpec {
     // jobs are the checkpoint and the sink write
     val graded = spark.newSession()
     graded.conf.set("spark.sql.adaptive.enabled", "false")
-    val (again, jobs) = jobsLaunched(EtlPipeline.run(graded, raw, sink))
+    val (again, c) = Session.counted(spark)(EtlPipeline.run(graded, raw, sink))
     assert(again == s)
-    assert(jobs <= 2, s"re-run launched $jobs jobs")
+    assert(c.jobs <= 2, s"re-run launched ${c.jobs} jobs")
   }
 
   test("an empty batch observes zero counts, with and without AQE") {

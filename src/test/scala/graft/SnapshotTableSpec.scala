@@ -714,8 +714,8 @@ class SnapshotTableSpec extends SparkSpec {
         () => ((v0 + 1) to v2).map(v => spark.read.parquet(cdcFiles(v): _*)
           .withColumn("_commit_version", lit(v))).reduce(_ unionByName _))
     ).foreach { case (name, read, reference) =>
-      val (declared, jobs) = jobsLaunched(read())
-      assert(jobs == 0, s"$name launched $jobs jobs to plan")
+      val (declared, c) = Session.counted(spark)(read())
+      assert(c.jobs == 0, s"$name launched ${c.jobs} jobs to plan")
       val inferred = reference().select(declared.columns.map(col): _*)
       // _commit_version is a literal on the reference side, so only
       // its nullability differs; every stored column must match

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,36 +28,5 @@ trait SparkSpec extends AnyFunSuite {
     val dir = Tables.scratch(prefix)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     dir
-  }
-
-  /** Runs `body` and counts the Spark jobs it launched on this thread:
-    * they carry a fresh local-property tag, and a tagged marker job run
-    * last proves the listener saw every earlier job (the listener bus
-    * delivers events in order). */
-  def jobsLaunched[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("graft.test.tag")) match {
-          case Some(`tag`) => jobs.incrementAndGet(): Unit
-          case Some(t) if t == s"$tag:marker" => markerSeen.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.test.tag", tag)
-      val out = body
-      sc.setLocalProperty("graft.test.tag", s"$tag:marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job unseen")
-      (out, jobs.get)
-    } finally {
-      sc.setLocalProperty("graft.test.tag", null)
-      sc.removeSparkListener(listener)
-    }
   }
 }

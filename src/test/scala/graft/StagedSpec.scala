@@ -35,9 +35,9 @@ class StagedSpec extends SparkSpec {
     val name = fresh()
     val first = Staged(spark, name, "c")(spark.range(5).toDF())
     assert(Staged.reads.get(name).isEmpty, "a miss is not a read")
-    val (second, jobs) = jobsLaunched(Staged(spark, name, "c")(sys.error("rebuilt")))
+    val (second, c) = Session.counted(spark)(Staged(spark, name, "c")(sys.error("rebuilt")))
     assert(second eq first)
-    assert(jobs == 0, s"hit launched $jobs jobs")
+    assert(c.jobs == 0, s"hit launched ${c.jobs} jobs")
     assert(Staged.reads(name) == 1L)
   }
 

@@ -20,10 +20,12 @@ class StreamingSpec extends SparkSpec {
     * an external kill of the run. */
   private def driveBounded(q: org.apache.spark.sql.streaming.StreamingQuery,
                            timeoutSec: Int = 120): Unit = {
-    val fut = StreamingSpec.driveExecutor.submit(
-      new java.util.concurrent.Callable[Unit] {
-        override def call(): Unit = q.processAllAvailable()
-      })
+    // its own daemon thread per drive: a wedged drive that ignores the
+    // interrupt is abandoned and costs only its own test
+    val fut = new java.util.concurrent.FutureTask[Unit](() => q.processAllAvailable())
+    val t = new Thread(fut, "drive-bounded")
+    t.setDaemon(true)
+    t.start()
     try fut.get(timeoutSec.toLong, java.util.concurrent.TimeUnit.SECONDS)
     catch {
       case _: java.util.concurrent.TimeoutException =>
@@ -1181,16 +1183,6 @@ class StreamingSpec extends SparkSpec {
         all.contains((3, "U", 3L)), s"v3's delta must arrive: ${all.toSeq}")
     } finally q.stop()
   }
-}
-
-/** One reusable daemon thread for [[StreamingSpec.driveBounded]] — a
-  * per-call Thread would add thousands of short-lived native threads
-  * across the suite (and tripped pthread_create EAGAIN under load). */
-object StreamingSpec {
-  val driveExecutor: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-      val t = new Thread(r, "drive-bounded"); t.setDaemon(true); t
-    })
 }
 
 /** Props-bearing event row for the #262 streaming replay (EventRow

@@ -153,10 +153,10 @@ class TablesSpec extends SparkSpec {
 
   test("schema memo: a repeat load of an unchanged table launches no Spark job") {
     val dir = writeLineitem()
-    val (first, jobs1) = jobsLaunched(Tables.lineitem(spark, dir))
-    val (second, jobs2) = jobsLaunched(Tables.lineitem(spark, dir))
-    assert(jobs1 == 1, s"first load launched $jobs1 jobs")
-    assert(jobs2 == 0, s"repeat load launched $jobs2 jobs")
+    val (first, c1) = Session.counted(spark)(Tables.lineitem(spark, dir))
+    val (second, c2) = Session.counted(spark)(Tables.lineitem(spark, dir))
+    assert(c1.jobs == 1, s"first load launched ${c1.jobs} jobs")
+    assert(c2.jobs == 0, s"repeat load launched ${c2.jobs} jobs")
     assert(first.schema == second.schema)
     assert(first.collect().toSeq == second.collect().toSeq)
   }
@@ -180,9 +180,9 @@ class TablesSpec extends SparkSpec {
     val before = spark.conf.getOption(key)
     try {
       Tables.lineitem(spark, dir)
-      assert(jobsLaunched(Tables.lineitem(spark, dir))._2 == 0)
+      assert(Session.counted(spark)(Tables.lineitem(spark, dir))._2.jobs == 0)
       spark.conf.set(key, (!spark.conf.get(key).toBoolean).toString)
-      assert(jobsLaunched(Tables.lineitem(spark, dir))._2 == 1)
+      assert(Session.counted(spark)(Tables.lineitem(spark, dir))._2.jobs == 1)
     } finally before match {
       case Some(v) => spark.conf.set(key, v)
       case None    => spark.conf.unset(key)
