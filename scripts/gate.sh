@@ -67,23 +67,37 @@ if [ -n "$serial" ]; then
   echo "gate: a driver action in EtlPipeline.scala, or writeCdcFiles called outside writeDataAndCdcFiles" >&2
   exit 1
 fi
-# one SQL twin per shared fixture: the snapshot-orders CTE
-# (EtlOps.snapshotOrdersSql) and the co-purchase CTE
-# (GraphOps.copurchaseSql) are each written once, and their oracles
-# append to them
-twins=""
-for cte in 'WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st' \
-           '"""WITH op AS ('; do
-  hits=$(grep -rnF -- "$cte" src/main/scala || true)
-  if [ "$(printf '%s\n' "$hits" | grep -c . || true)" -gt 1 ]; then
-    twins+="$hits"$'\n'
-  fi
-done
-if [ -n "$twins" ]; then
-  printf '%s' "$twins"
-  echo "gate: an oracle pastes a shared fixture CTE (append to snapshotOrdersSql or copurchaseSql instead)" >&2
-  exit 1
-fi
+# one definition per shared sub-computation: no run of 6 code lines
+# (at least 150 characters in total) may occur at two places under
+# src/main/scala. Lines are trimmed; blank lines, comments (`//`, `*`,
+# `/*`), imports and lone closers are skipped. A shared Spark prefix
+# is a function, a shared oracle CTE a `...Sql` fragment that the
+# oracles append to (EtlOps.snapshotOrdersSql, GraphOps.copurchaseSql)
+python3 - src/main/scala <<'PY'
+import collections, os, re, sys
+N, MIN_CHARS = 6, 150
+closer = re.compile(r'^[)}\]]+[,;]?$')
+runs = collections.defaultdict(list)
+for d, _, fs in sorted(os.walk(sys.argv[1])):
+    for f in sorted(fs):
+        if not f.endswith('.scala'):
+            continue
+        path = os.path.join(d, f)
+        kept = [(n, t) for n, t in enumerate(
+                    (l.strip() for l in open(path, encoding='utf-8')), 1)
+                if t and not t.startswith(('//', '*', '/*', 'import'))
+                and not closer.match(t)]
+        for k in range(len(kept) - N + 1):
+            run = tuple(t for _, t in kept[k:k + N])
+            if sum(map(len, run)) >= MIN_CHARS:
+                runs[run].append('%s:%d' % (path, kept[k][0]))
+copies = [(run, at) for run, at in runs.items() if len(at) > 1]
+for run, at in copies:
+    print('copy of "%s" at %s' % (run[0][:60], ', '.join(at)))
+if copies:
+    sys.exit('gate: %d runs of %d lines occur twice under %s (define them once)'
+             % (len(copies), N, sys.argv[1]))
+PY
 # one job counter: graft.Session's tag-keyed listener (Session.counted,
 # Session.timed) is the only listener and the only listener-bus user
 listeners=$(grep -rnE 'addSparkListener|listenerBus' src |

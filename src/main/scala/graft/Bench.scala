@@ -17,9 +17,9 @@ package graft
   * emits a dense centisecond array line so the evidence also lives
   * in the driver's stdout-tail artifact.
   *
-  * Each op's jobs and stages in its last timed call go to FULLBENCH.json
-  * (`counts`); a filtered run (`runMain graft.Bench <op>…`) prints them
-  * as one `op` line per op instead.
+  * Each op's jobs, stages and Janino compiles in its last timed call go
+  * to FULLBENCH.json (`counts`); a filtered run (`runMain graft.Bench
+  * <op>…`) prints them as one `op` line per op instead.
   */
 object Bench {
 
@@ -377,7 +377,7 @@ object Bench {
     val stagedBy = scala.collection.mutable.Map[String, String]()
     def grown(before: Map[String, Long], after: Map[String, Long]): Iterable[String] =
       after.collect { case (s, c) if c > before.getOrElse(s, 0L) => s }
-    // the tally of each op's last timed call: its jobs and stages
+    // the tally of each op's last timed call: its jobs, stages and compiles
     val tallies = scala.collection.mutable.Map[String, Session.Tally]()
     def bestOfN(name: String, n: Int): Option[Double] = {
       val (readsBefore, swapsBefore) = (Staged.reads, Staged.swaps)
@@ -419,11 +419,12 @@ object Bench {
     // the full-sweep remainder: two passes of best-of-1, per-query min
     // (same stall-window rationale as twoPass, lighter per-pass cost)
     val remMins = twoPass(remainder, 1)
-    // each op's jobs and stages in its last timed call, read before the
-    // AQE-on pass stops this session (one marker job settles them all)
+    // each op's jobs, stages and compiles in its last timed call, read
+    // before the AQE-on pass stops this session (one marker job settles them all)
     val counts = tallies.map { case (n, t) => n -> t.counts }.toMap
     def countsJson(n: String): String =
-      counts.get(n).fold("null")(c => s"""{"jobs":${c.jobs},"stages":${c.stages}}""")
+      counts.get(n).fold("null")(c =>
+        s"""{"jobs":${c.jobs},"stages":${c.stages},"compiles":${c.compiles}}""")
     if (only.nonEmpty) (keep(headline) ++ keep(secondary) ++ adhoc).foreach { n =>
       println(s"""{"metric":"op","op":"$n","best_sec":${mins(n).fold("null")(t => f"$t%.3f")},""" +
         s""""counts":${countsJson(n)}}""")

@@ -19,65 +19,19 @@ package graft
 object Plans {
 
   /** Queries whose plan shape carries the 100 TB argument: the 12
-    * graded headline entries plus the operators whose design notes
-    * in SURVEY/SCALE promise a specific shape (bucketed zero-exchange
-    * join, DPP subquery, banded dedups, vocab-side BPE explode …). */
-  val selection: Seq[String] = Bench.headline ++ Seq(
-    "join_bucketed_colocated",
-    "join_partition_pruned",
+    * graded headline entries, Bench's secondary plan-regression guards,
+    * plus the operators whose design notes in SURVEY/SCALE promise a
+    * specific shape (bucketed zero-exchange join, DPP subquery, banded
+    * dedups, vocab-side BPE explode …). */
+  val selection: Seq[String] = Bench.headline ++ Bench.secondary ++ Seq(
     "scan_pruned_pushdown",
-    "dedup_minhash_near",
-    "dedup_embedding_cosine",
-    "dedup_semantic_cluster",
-    "sim_ann_ivf",
-    "sim_ann_pq",
-    "text_ngram_novelty",
     "text_bpe_pair_counts",
-    "events_attribution_lasttouch",
-    "stream_join_interval",
-    "agg_bitmap_distinct",
     "etl_forward_fill",
-    "events_retention_cohort",
-    "events_rolling_active",
-    "events_markov_transitions",
-    "multimodal_phash_dedup",
-    "dedup_minhash_containment",
-    "agg_hll_sketch_merge",
-    "sim_maxsim_multivec",
-    "agg_theta_audience_overlap",
-    "agg_kll_quantile_merge",
-    "etl_profile_columns",
-    "etl_profile_approx",
-    "sim_mmr_diversify",
-    "layout_zorder_pruning",
-    "agg_freq_sketch_topk",
-    "sim_hybrid_rrf",
-    "sim_bm25_rank",
-    "sim_ann_lsh_rp",
-    "sim_ann_ivfpq",
-    "events_uplift_deciles",
-    "graph_jaccard_links",
     "events_fdr_bh",
     "etl_psi_drift",
-    "agg_pareto_share",
     "events_cem_att",
-    "join_grid_neighbors",
-    "events_bootstrap_ci",
-    "agg_ks_test",
-    "agg_gini_concentration",
-    "agg_rfm_segments",
-    "etl_entity_resolution",
-    "text_bpe_train_merges",
-    "graph_label_propagation",
-    "etl_snapshot_incremental",
-    "text_bpe_encode",
     "agg_mannwhitney_u",
-    "dedup_substring_window",
-    "graph_adamic_adar",
     "text_kneser_ney_lm",
-    "agg_winsorized_mean",
-    "text_filter_funnel",
-    "graph_kcore",
     // round 14 (#248-#253)
     "agg_skew_kurtosis",
     "win_drawdown_max",

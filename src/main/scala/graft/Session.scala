@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
@@ -70,8 +71,12 @@ object Session {
     "aqeRead" -> "AQEShuffleRead".r.findAllIn(plan).size
   )
 
-  /** Jobs and stages Spark ran for one call. */
-  final case class Counts(jobs: Int, stages: Int)
+  /** Jobs and stages Spark ran for one call, and the Janino
+    * compilations (generated classes that missed Spark's codegen cache)
+    * made while it ran. The compile count is JVM-wide, so it belongs to
+    * the call only when no other call runs at the same time (Bench
+    * times one op at a time). */
+  final case class Counts(jobs: Int, stages: Int, compiles: Long)
 
   /** The jobs and stages started under one call's local-property tag,
     * on its thread and on threads it starts (they inherit the tag).
@@ -84,10 +89,11 @@ object Session {
     private[Session] val jobs, stages = new AtomicInteger
     private[Session] val started = new CountDownLatch(1)
     @volatile private[Session] var finished, settled = false
+    @volatile private[Session] var compiles = 0L
     def counts: Counts = {
       require(finished, "counts of a call that is still running")
       if (!settled) settle(sc)
-      Counts(jobs.get, stages.get)
+      Counts(jobs.get, stages.get, compiles)
     }
   }
 
@@ -130,8 +136,13 @@ object Session {
     counter(sc).open.put(tag, tally)
     val prev = sc.getLocalProperty(TagKey)
     sc.setLocalProperty(TagKey, tag)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     try body(tally)
-    finally { sc.setLocalProperty(TagKey, prev); tally.finished = true }
+    finally {
+      sc.setLocalProperty(TagKey, prev)
+      tally.compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+      tally.finished = true
+    }
   }
 
   /** Runs `body` and counts the Spark jobs and stages it launched. */

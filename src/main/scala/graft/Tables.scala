@@ -59,6 +59,23 @@ object Tables {
     * scale of `c` is <= s). */
   def dec(c: Column, p: Int, s: Int): Column = c.cast(DecimalType(p, s))
 
+  /** `c` rounded half-up to 6 dp as floor(c·10⁶ + 0.5)/10⁶: the
+    * fixed-point display idiom, which DuckDB evaluates with the same
+    * IEEE steps (SQL `round` differs between the engines on exact
+    * ties). */
+  def fp6(c: Column): Column = floor(c * 1000000 + 0.5) / 1000000.0
+
+  /** [[fp6]] at 4 dp. */
+  def fp4(c: Column): Column = floor(c * 10000 + 0.5) / 10000.0
+
+  /** A double term snapped to an 8-dp DECIMAL grid, so sums of terms
+    * are exact and order-independent in both engines. */
+  def grid8(c: Column, precision: Int = 18): Column =
+    round(c, 8).cast(DecimalType(precision, 8))
+
+  /** The corpus tokenizer: `text` split on single spaces. */
+  def words: Column = split(col("text"), " ")
+
   /** The experimentation battery's deterministic two-arm hash coin:
     * arm A ⇔ even first md5 nibble of the user id. ONE definition
     * (review r17: previously restated verbatim at ~14 call sites

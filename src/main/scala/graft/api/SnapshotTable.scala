@@ -886,14 +886,25 @@ object SnapshotTable {
         payload :+
         org.apache.spark.sql.types.StructField("_commit_version",
           org.apache.spark.sql.types.IntegerType, nullable = true)))
-    metas.filter(_._2.cdcFiles.nonEmpty).foldLeft(empty) {
-      case (acc, (v, m)) =>
-        val d = applyRenames(readFiles(spark, m.cdcFiles, m.cdcSchema.get),
-            mHead.colMap)
-          .withColumn("_commit_version", lit(v))
-        // ADD COLUMN evolution: older deltas lack the new column and
-        // null-fill, the same read semantics as the table itself
-        acc.unionByName(d, allowMissingColumns = true)
+    // one scan per delta schema (one scan unless the range spans an
+    // ADD COLUMN). Each row's `_commit_version` is looked up from its
+    // cdc directory in a map literal, which generated code takes by
+    // reference; an integer literal per version would be written into
+    // the generated Java, and each newly read version would compile
+    // new classes
+    val withCdc = metas.filter(_._2.cdcFiles.nonEmpty)
+    withCdc.map(_._2.cdcSchema.get).distinct.foldLeft(empty) { (acc, schema) =>
+      val group = withCdc.filter(_._2.cdcSchema.get == schema)
+      val versionOfDir = typedLit(group.flatMap { case (v, m) =>
+        m.cdcFiles.map(f => new Path(f).getParent.getName -> v) }.toMap)
+      val d = applyRenames(
+          readFiles(spark, group.flatMap(_._2.cdcFiles), schema)
+            .withColumn("_commit_version", element_at(versionOfDir,
+              regexp_extract(col("_metadata.file_path"), "/cdc/([^/]+)/[^/]+$", 1))),
+          mHead.colMap)
+      // ADD COLUMN evolution: older deltas lack the new column and
+      // null-fill, the same read semantics as the table itself
+      acc.unionByName(d, allowMissingColumns = true)
     }
   }
 

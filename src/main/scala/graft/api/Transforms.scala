@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.TopKAgg
 import org.apache.spark.sql.graft.VectorExprs.{vecDot, vecNorm}
+import graft.Tables.{fp6, grid8}
 
 /** graft's reusable, corpus-independent transformation API — the
   * "reusable Spark transformation functions over DataFrames" the
@@ -1196,10 +1197,9 @@ object Transforms {
     val p = (d(col("n_base")) + 1.0) / (d(col("t_base")) + d(col("n_bins")))
     val q = (d(col("n_cur")) + 1.0) / (d(col("t_cur")) + d(col("n_bins")))
     val terms = binned.crossJoin(broadcast(tot))
-      .withColumn("term8", round((p - q) * log(p / q), 8).cast("decimal(18,8)"))
+      .withColumn("term8", grid8((p - q) * log(p / q)))
     val psi = terms.agg(sum(col("term8")).cast("double").as("psi"))
       .withColumn("drifted", col("psi") > lit(threshold))
-    def fp6(cc: Column) = floor(cc * 1000000 + 0.5) / 1000000.0
     terms.crossJoin(broadcast(psi))
       .select(col("bin"), col("n_base"), col("n_cur"),
         fp6(p).as("share_base"), fp6(q).as("share_cur"),

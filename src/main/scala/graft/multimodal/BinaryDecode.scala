@@ -233,16 +233,22 @@ object BinaryDecode {
     // surface as Range's opaque executor-side "step cannot be 0", and
     // a negative stride silently returned no frames
     require(everyN >= 1, s"everyN must be >= 1, got $everyN")
+    gifFrames(bytes, everyN) { (f, img) =>
+      FrameMeta(id, f, img.getWidth * img.getHeight, pixSum(img))
+    }
+  }
+
+  /** Every `everyN`-th frame of a GIF container through one ImageIO
+    * reader, disposed on every path; an empty payload has no frames. */
+  private def gifFrames[A](bytes: Array[Byte], everyN: Int)(
+      frame: (Int, BufferedImage) => A): Seq[A] = {
     if (bytes.isEmpty) return Seq.empty
     val reader = ImageIO.getImageReadersByFormatName("gif").next()
     val ios = ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
     try {
       reader.setInput(ios)
       val n = reader.getNumImages(true)
-      (0 until n by everyN).map { f =>
-        val img = reader.read(f)
-        FrameMeta(id, f, img.getWidth * img.getHeight, pixSum(img))
-      }
+      (0 until n by everyN).map(f => frame(f, reader.read(f)))
     } finally { reader.dispose(); ios.close() }
   }
 
@@ -255,30 +261,21 @@ object BinaryDecode {
     * the shot-boundary detector's input (#210). Same reader lifecycle
     * as [[frameSample]]; stride 1 because consecutive-frame deltas
     * are the whole point. */
-  def frameChannels(id: Long, bytes: Array[Byte]): Seq[FrameChan] = {
-    if (bytes.isEmpty) return Seq.empty
-    val reader = ImageIO.getImageReadersByFormatName("gif").next()
-    val ios = ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
-    try {
-      reader.setInput(ios)
-      val n = reader.getNumImages(true)
-      (0 until n).map { f =>
-        val img = reader.read(f)
-        var (rs, gs, bs) = (0L, 0L, 0L)
-        var y = 0
-        while (y < img.getHeight) {
-          var x = 0
-          while (x < img.getWidth) {
-            val rgb = img.getRGB(x, y)
-            rs += (rgb >> 16) & 0xff; gs += (rgb >> 8) & 0xff; bs += rgb & 0xff
-            x += 1
-          }
-          y += 1
+  def frameChannels(id: Long, bytes: Array[Byte]): Seq[FrameChan] =
+    gifFrames(bytes, 1) { (f, img) =>
+      var (rs, gs, bs) = (0L, 0L, 0L)
+      var y = 0
+      while (y < img.getHeight) {
+        var x = 0
+        while (x < img.getWidth) {
+          val rgb = img.getRGB(x, y)
+          rs += (rgb >> 16) & 0xff; gs += (rgb >> 8) & 0xff; bs += rgb & 0xff
+          x += 1
         }
-        FrameChan(id, f, img.getWidth * img.getHeight, rs, gs, bs)
+        y += 1
       }
-    } finally { reader.dispose(); ios.close() }
-  }
+      FrameChan(id, f, img.getWidth * img.getHeight, rs, gs, bs)
+    }
 
   def frameChannelsBatch(
       rows: Iterator[(Long, Array[Byte])]): Iterator[FrameChan] =
@@ -493,17 +490,8 @@ object BinaryDecode {
     * format fields come from the parsed `AudioFormat`, samples from
     * the decoded PCM stream. Fails loudly on an undecodable payload
     * (same policy as [[decodeOne]]). */
-  def decodeWavOne(id: Long, bytes: Array[Byte]): AudioMeta = {
-    val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-      new ByteArrayInputStream(bytes))
-    try {
-      val fmt = in.getFormat
-      require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
-        s"doc $id: unexpected WAV format $fmt")
-      val data = in.readAllBytes()
-      val bb = java.nio.ByteBuffer.wrap(data).order(
-        if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
-        else java.nio.ByteOrder.LITTLE_ENDIAN)
+  def decodeWavOne(id: Long, bytes: Array[Byte]): AudioMeta =
+    wavSamples(id, bytes) { (fmt, bb) =>
       var sumAbs = 0L
       var peak = 0
       var n = 0
@@ -514,6 +502,24 @@ object BinaryDecode {
         n += 1
       }
       AudioMeta(id, fmt.getSampleRate.toInt, n, sumAbs, peak)
+    }
+
+  /** Opens one WAV payload via `javax.sound.sampled`, requires 16-bit
+    * mono PCM and hands its format and decoded samples (a buffer in
+    * the stream's byte order) to `body`; the stream is closed on every
+    * path. */
+  private def wavSamples[A](id: Long, bytes: Array[Byte])(
+      body: (javax.sound.sampled.AudioFormat, java.nio.ByteBuffer) => A): A = {
+    val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
+      new ByteArrayInputStream(bytes))
+    try {
+      val fmt = in.getFormat
+      require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
+        s"doc $id: unexpected WAV format $fmt")
+      val data = in.readAllBytes()
+      body(fmt, java.nio.ByteBuffer.wrap(data).order(
+        if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
+        else java.nio.ByteOrder.LITTLE_ENDIAN))
     } finally in.close()
   }
 
@@ -531,17 +537,8 @@ object BinaryDecode {
     * windows (same `javax.sound.sampled` path and format checks as
     * [[decodeWavOne]] — a malformed container fails loudly). */
   def decodeWavWindowsOne(id: Long, bytes: Array[Byte],
-                          win: Int): Seq[AudioWindow] = {
-    val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-      new ByteArrayInputStream(bytes))
-    try {
-      val fmt = in.getFormat
-      require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
-        s"doc $id: unexpected WAV format $fmt")
-      val data = in.readAllBytes()
-      val bb = java.nio.ByteBuffer.wrap(data).order(
-        if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
-        else java.nio.ByteOrder.LITTLE_ENDIAN)
+                          win: Int): Seq[AudioWindow] =
+    wavSamples(id, bytes) { (_, bb) =>
       val out = scala.collection.mutable.ArrayBuffer.empty[AudioWindow]
       var wIdx = 0
       var n = 0
@@ -556,8 +553,7 @@ object BinaryDecode {
       }
       if (n > 0) out += AudioWindow(id, wIdx, n, sumAbs)
       out.toSeq
-    } finally in.close()
-  }
+    }
 
   /** Partition-wise windowed WAV decode of (id, payload) batches. */
   def decodeWavWindowsBatch(rows: Iterator[(Long, Array[Byte])],

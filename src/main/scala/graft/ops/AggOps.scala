@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import scala.collection.immutable.ListMap
@@ -610,7 +610,6 @@ object AggOps {
     val nx = cells.groupBy(col("x")).agg(sum(col("n_xy")).as("n_x"))
     val ny = cells.groupBy(col("y")).agg(sum(col("n_xy")).as("n_y"))
     val tot = cells.agg(sum(col("n_xy")).as("n"))
-    def grid8(c: Column): Column = round(c, 8).cast("decimal(18,8)")
     val mi = cells.join(broadcast(nx), "x").join(broadcast(ny), "y")
       .crossJoin(broadcast(tot))
       .agg(round(sum(grid8(
@@ -680,7 +679,6 @@ object AggOps {
 
   /** Per-cell (obs−exp)²/exp on the #215 8dp DECIMAL grid. */
   private def chi2Term: Column = {
-    def grid8(c: Column): Column = round(c, 8).cast("decimal(18,8)")
     val expd = col("rt").cast("double") * col("ct").cast("double") /
       col("n").cast("double")
     val dev = col("obs").cast("double") - expd
@@ -769,6 +767,55 @@ object AggOps {
       .orderBy(col("nation_key"))
   }
 
+  /** Per-value counts of the two #183 md5 arms over events' 2dp
+    * value: one row per distinct `v` with `na` / `nb` (the KS and
+    * Mann–Whitney distinct-value table). */
+  private def abCountsByValue(spark: SparkSession, sf: String): DataFrame = {
+    val arm = when(
+      expArm2IsA,
+      lit("A")).otherwise(lit("B"))
+    events(spark, sf)
+      .select(money(col("value")).as("v"), arm.as("arm"))
+      .groupBy(col("v"))
+      .agg(sum(when(col("arm") === "A", 1L).otherwise(0L)).as("na"),
+           sum(when(col("arm") === "B", 1L).otherwise(0L)).as("nb"))
+  }
+
+  /** The #203 distributed prefix over a distinct-value table `byV`
+    * (value column `v`, bucket column `bkt`): for each `(count, bucket
+    * total, offset)` name triple, the count summed per bucket and its
+    * exclusive running sum over the metadata-scale bucket table,
+    * broadcast back onto `byV` (bucket key `bkt_o`). Returns the
+    * joined table and the per-bucket local window ordered by `v`,
+    * ending `frameEnd` rows from the current one (0 inclusive, −1
+    * exclusive) — never a single-partition window over the values. */
+  private def bucketOffsets(byV: DataFrame, v: String,
+      counts: Seq[(String, String, String)],
+      frameEnd: Long): (DataFrame, WindowSpec) = {
+    val totals = byV.groupBy(col("bkt")).agg(
+      sum(col(counts.head._1)).as(counts.head._2),
+      counts.tail.map { case (c, b, _) => sum(col(c)).as(b) }: _*)
+    val wKey = coalesce(pmod(col("bkt"), lit(1)), lit(0L))
+    val wOff = Window.partitionBy(wKey).orderBy(col("bkt"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offs = counts.foldLeft(totals) { case (df, (_, b, off)) =>
+        df.withColumn(off, coalesce(sum(col(b)).over(wOff), lit(0L)))
+      }
+      .select(col("bkt").as("bkt_o") +: counts.map(c => col(c._3)): _*)
+    val wLoc = Window.partitionBy(col("bkt")).orderBy(col(v))
+      .rowsBetween(Window.unboundedPreceding, frameEnd)
+    (byV.join(broadcast(offs), col("bkt") <=> col("bkt_o")), wLoc)
+  }
+
+  /** #216's rank base: `cb`, the number of rows with a smaller value,
+    * beside each row of the distinct-value table `byV` (count `t`), so
+    * 2·avgrank(v) = 2·cb + t + 1 is an exact integer. */
+  private def countBefore(byV: DataFrame, v: String): DataFrame = {
+    val (withOffs, wLoc) = bucketOffsets(byV, v, Seq(("t", "bt", "off")), -1)
+    withOffs
+      .withColumn("cb", col("off") + coalesce(sum(col("t")).over(wLoc), lit(0L)))
+  }
+
   /** #203 — two-sample Kolmogorov–Smirnov test (round 12; the
     * distribution-shift detector behind every data-drift monitor —
     * #175's t-test sees mean shifts, KS sees ANY shape change):
@@ -786,29 +833,13 @@ object AggOps {
     * over the value table), then a 1-row max. At 100 TB the distinct
     * table is the only corpus-scale exchange. */
   def aggKsTest(spark: SparkSession, sf: String): DataFrame = {
-    val arm = when(
-      expArm2IsA,
-      lit("A")).otherwise(lit("B"))
-    val byV = events(spark, sf)
-      .select(money(col("value")).as("v"), arm.as("arm"))
-      .groupBy(col("v"))
-      .agg(sum(when(col("arm") === "A", 1L).otherwise(0L)).as("na"),
-           sum(when(col("arm") === "B", 1L).otherwise(0L)).as("nb"))
+    val byV = abCountsByValue(spark, sf)
       .withColumn("bkt", floor(col("v") / 10))
     // distributed prefix-sums of the two arm counts: per-bucket local
     // cumsum + exclusive offsets over the metadata-scale bucket table
-    val totals = byV.groupBy(col("bkt"))
-      .agg(sum(col("na")).as("bna"), sum(col("nb")).as("bnb"))
-    val wKey = coalesce(pmod(col("bkt"), lit(1)), lit(0L))
-    val wOff = Window.partitionBy(wKey).orderBy(col("bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = totals
-      .withColumn("offa", coalesce(sum(col("bna")).over(wOff), lit(0L)))
-      .withColumn("offb", coalesce(sum(col("bnb")).over(wOff), lit(0L)))
-      .select(col("bkt").as("bkt_o"), col("offa"), col("offb"))
-    val wLoc = Window.partitionBy(col("bkt")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val cum = byV.join(broadcast(offs), col("bkt") <=> col("bkt_o"))
+    val (withOffs, wLoc) = bucketOffsets(byV, "v",
+      Seq(("na", "bna", "offa"), ("nb", "bnb", "offb")), 0)
+    val cum = withOffs
       .withColumn("cuma", col("offa") + sum(col("na")).over(wLoc))
       .withColumn("cumb", col("offb") + sum(col("nb")).over(wLoc))
     val tot = byV.agg(sum(col("na")).as("n_a"), sum(col("nb")).as("n_b"))
@@ -854,29 +885,12 @@ object AggOps {
     * fold. At 100 TB the distinct table is the only corpus-scale
     * exchange, same as KS. */
   def aggMannwhitneyU(spark: SparkSession, sf: String): DataFrame = {
-    val arm = when(
-      expArm2IsA,
-      lit("A")).otherwise(lit("B"))
-    val byV = events(spark, sf)
-      .select(money(col("value")).as("v"), arm.as("arm"))
-      .groupBy(col("v"))
-      .agg(sum(when(col("arm") === "A", 1L).otherwise(0L)).as("na"),
-           sum(when(col("arm") === "B", 1L).otherwise(0L)).as("nb"))
+    val byV = abCountsByValue(spark, sf)
       .withColumn("t", col("na") + col("nb"))
       .withColumn("bkt", floor(col("v") / 10))
     // distributed prefix-sum of the combined count: per-bucket local
     // cumsum (exclusive) + broadcast bucket offsets — #203's idiom
-    val totals = byV.groupBy(col("bkt")).agg(sum(col("t")).as("bt"))
-    val wKey = coalesce(pmod(col("bkt"), lit(1)), lit(0L))
-    val wOff = Window.partitionBy(wKey).orderBy(col("bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = totals
-      .withColumn("off", coalesce(sum(col("bt")).over(wOff), lit(0L)))
-      .select(col("bkt").as("bkt_o"), col("off"))
-    val wLoc = Window.partitionBy(col("bkt")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val cum = byV.join(broadcast(offs), col("bkt") <=> col("bkt_o"))
-      .withColumn("cb", col("off") + coalesce(sum(col("t")).over(wLoc), lit(0L)))
+    val cum = countBefore(byV, "v")
     val folded = cum.agg(
       sum(col("na")).as("n_a"), sum(col("nb")).as("n_b"),
       sum(dec(col("na"), 38, 0) * (col("cb") * 2 + col("t") + 1)).as("r2a"),
@@ -1106,7 +1120,6 @@ object AggOps {
     val bounds = wb.agg(
       max(when(col("rk") === k95, col("v"))).as("var95"),
       max(when(col("rk") === k99, col("v"))).as("var99"))
-    def fp6(c: Column): Column = floor(c * 1000000 + 0.5) / 1000000.0
     wb.crossJoin(broadcast(bounds))
       .groupBy(col("n"), col("var95"), col("var99"))
       .agg(sum(when(col("rk") > k95, col("v"))).as("t95"),
@@ -1139,17 +1152,8 @@ object AggOps {
     * permutation of equal values leaves Σi·xᵢ unchanged within the
     * tie block… the tiebreak exists so the RANK ITSELF is
     * deterministic). */
-  def aggGiniConcentration(spark: SparkSession, sf: String): DataFrame = {
-    val rev = orders(spark, sf)
-      .groupBy(col("o_custkey"))
-      .agg(sum(money(col("o_totalprice"))).as("rev"))
-    val ranked = graft.api.Transforms.globalRowNumber(rev,
-        struct(col("rev"), col("o_custkey")),
-        floor(col("rev") / 100000L))
-      .withColumnRenamed("__row_number", "rk")
-    val tot = ranked.agg(count(lit(1)).as("n_customers"),
-      sum(col("rev")).as("tot"))
-    ranked.crossJoin(broadcast(tot))
+  def aggGiniConcentration(spark: SparkSession, sf: String): DataFrame =
+    rankedRevenue(spark, sf)
       .agg(first(col("n_customers")).as("n_customers"),
         first(col("tot")).as("tot"),
         sum(dec(col("rk") * col("rev"), 38, 2)).as("ranksum"),
@@ -1161,6 +1165,22 @@ object AggOps {
               (col("n_customers") * col("tot").cast("double")), 6).as("gini"),
         round(col("top_rev").cast("double") / col("tot").cast("double"), 6)
           .as("top_decile_share"))
+
+  /** Per-customer exact revenue `rev` ranked `rk` 1..n under the
+    * (rev, custkey) total order by the #36 distributed row number,
+    * crossed with the 1-row totals (`n_customers`, `tot`) — the shared
+    * base of #204's Gini and the Pareto share curve. */
+  private def rankedRevenue(spark: SparkSession, sf: String): DataFrame = {
+    val rev = orders(spark, sf)
+      .groupBy(col("o_custkey"))
+      .agg(sum(money(col("o_totalprice"))).as("rev"))
+    val ranked = graft.api.Transforms.globalRowNumber(rev,
+        struct(col("rev"), col("o_custkey")),
+        floor(col("rev") / 100000L))
+      .withColumnRenamed("__row_number", "rk")
+    val tot = ranked.agg(count(lit(1)).as("n_customers"),
+      sum(col("rev")).as("tot"))
+    ranked.crossJoin(broadcast(tot))
   }
 
   /** #205 — RFM customer segmentation (round 12; the
@@ -1293,17 +1313,7 @@ object AggOps {
            sum(when(col("g") === 2, 1L).otherwise(0L)).as("nc"))
       .withColumn("t", col("na") + col("nb") + col("nc"))
       .withColumn("bkt", floor(col("v") / 10))
-    val totals = byV.groupBy(col("bkt")).agg(sum(col("t")).as("bt"))
-    val wKey = coalesce(pmod(col("bkt"), lit(1)), lit(0L))
-    val wOff = Window.partitionBy(wKey).orderBy(col("bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = totals
-      .withColumn("off", coalesce(sum(col("bt")).over(wOff), lit(0L)))
-      .select(col("bkt").as("bkt_o"), col("off"))
-    val wLoc = Window.partitionBy(col("bkt")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val cum = byV.join(broadcast(offs), col("bkt") <=> col("bkt_o"))
-      .withColumn("cb", col("off") + coalesce(sum(col("t")).over(wLoc), lit(0L)))
+    val cum = countBefore(byV, "v")
     val r2 = col("cb") * 2 + col("t") + 1
     val folded = cum.agg(
       sum(col("na")).as("n_a"), sum(col("nb")).as("n_b"),
@@ -1353,19 +1363,7 @@ object AggOps {
     def rank2(vals: DataFrame, vc: String, bktWidth: Int): DataFrame = {
       val byV = vals.groupBy(col(vc)).agg(count(lit(1)).as("t"))
         .withColumn("bkt", floor(col(vc) / bktWidth))
-      val totals = byV.groupBy(col("bkt")).agg(sum(col("t")).as("bt"))
-      val wKey = coalesce(pmod(col("bkt"), lit(1)), lit(0L))
-      val wOff = Window.partitionBy(wKey).orderBy(col("bkt"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offs = totals
-        .withColumn("off", coalesce(sum(col("bt")).over(wOff), lit(0L)))
-        .select(col("bkt").as("bkt_o"), col("off"))
-      val wLoc = Window.partitionBy(col("bkt")).orderBy(col(vc))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      byV.join(broadcast(offs), col("bkt") <=> col("bkt_o"))
-        .withColumn("cb",
-          col("off") + coalesce(sum(col("t")).over(wLoc), lit(0L)))
-        .select(col(vc), (col("cb") * 2 + col("t") + 1).as(s"r2_$vc"))
+      countBefore(byV, vc).select(col(vc), (col("cb") * 2 + col("t") + 1).as(s"r2_$vc"))
     }
     val rx = rank2(rows.select(col("vx")), "vx", 10)
     val ry = rank2(rows.select(col("vy")), "vy", 10000)
@@ -1438,7 +1436,6 @@ object AggOps {
         countDistinct(col("st")).cast("long").as("n_rows"),
         countDistinct(col("pri")).cast("long").as("n_cols"),
         sum(chi2Term).cast("double").as("chi2"))
-    def fp6(c: Column) = floor(c * 1000000 + 0.5) / 1000000.0
     agg.select(col("n_orders"), col("n_rows"), col("n_cols"), col("chi2"),
       fp6(sqrt(col("chi2") / (col("n_orders").cast("double") *
         (least(col("n_rows"), col("n_cols")) - 1).cast("double"))))
@@ -1489,21 +1486,12 @@ object AggOps {
     * aggregate + the prefix-rank machinery + a 1-row fold unpivoted
     * to 4 rows — #204's posture with a stack. */
   def aggParetoShare(spark: SparkSession, sf: String): DataFrame = {
-    val rev = orders(spark, sf)
-      .groupBy(col("o_custkey"))
-      .agg(sum(money(col("o_totalprice"))).as("rev"))
-    val ranked = graft.api.Transforms.globalRowNumber(rev,
-        struct(col("rev"), col("o_custkey")),
-        floor(col("rev") / 100000L))
-      .withColumnRenamed("__row_number", "rk")
-    val tot = ranked.agg(count(lit(1)).as("n_customers"),
-      sum(col("rev")).as("tot"))
     val ps = Seq(1, 5, 10, 20)
     val conds = ps.map(p => sum(when(
       col("rk") > col("n_customers") - expr(s"(n_customers * $p + 99) DIV 100"),
       col("rev"))).as(s"top_$p"))
     val heads = Seq(first(col("n_customers")).as("n"), first(col("tot")).as("t"))
-    val a = ranked.crossJoin(broadcast(tot))
+    val a = rankedRevenue(spark, sf)
       .agg(heads.head, (heads.tail ++ conds): _*)
     val stackExpr = ps
       .map(p => s"$p, (n * $p + 99) DIV 100, CAST(top_$p AS DOUBLE)")
@@ -1925,6 +1913,71 @@ object AggOps {
        |ORDER BY col_x, col_y""".stripMargin
   }
 
+  /** ROLLUP / CUBE (`kind`) of lineitem's two flags with GROUPING ids. */
+  private def groupingSql(kind: String): String =
+    s"""SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
+      |  coalesce(l_linestatus, 'ALL') AS linestatus,
+      |  CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
+      |  CAST(GROUPING(l_linestatus) AS INT) AS g_ls,
+      |  count(*) AS n_rows,
+      |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+      |FROM lineitem GROUP BY $kind(l_returnflag, l_linestatus)
+      |ORDER BY returnflag, linestatus""".stripMargin
+
+  /** The orders status × priority contingency table: observed counts,
+    * row and column totals, the grand total `n`, and every cell with
+    * its zero-filled count — the χ² and Cramér's V oracles append. */
+  private val contingencySql: String =
+    """WITH observed AS (
+      |  SELECT o_orderstatus AS st, o_orderpriority AS pri,
+      |    count(*) AS obs
+      |  FROM orders GROUP BY 1, 2),
+      |rt AS (SELECT st, sum(obs) AS rt FROM observed GROUP BY st),
+      |ct AS (SELECT pri, sum(obs) AS ct FROM observed GROUP BY pri),
+      |tot AS (SELECT sum(obs) AS n FROM observed),
+      |cells AS (
+      |  SELECT rt.st, ct.pri, rt.rt, ct.ct, coalesce(o.obs, 0) AS obs
+      |  FROM rt CROSS JOIN ct
+      |  LEFT JOIN observed o ON o.st = rt.st AND o.pri = ct.pri)""".stripMargin
+
+  /** Σ of the 8-dp-gridded Pearson χ² cell terms over
+    * [[contingencySql]]'s cells, its continuation lines indented by
+    * `indent`. */
+  private def chi2SumSql(indent: String): String =
+    """CAST(sum(CAST(round(
+      |  (CAST(obs AS DOUBLE)
+      |     - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE))
+      |  * (CAST(obs AS DOUBLE)
+      |     - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE))
+      |  / (CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE)),
+      |  8) AS DECIMAL(18,8))) AS DOUBLE)""".stripMargin.replace("\n", "\n" + indent)
+
+  /** The two #183 md5 arms over events' 2dp value (`arm`, `v`): the CTE
+    * the experiment oracles start with. */
+  private[ops] val abArmSql: String =
+    """WITH e AS (
+      |  SELECT CASE WHEN (ascii(substr(md5(CAST(user_id AS VARCHAR)), 1, 1))
+      |                    % 2) = 0
+      |         THEN 'A' ELSE 'B' END AS arm,
+      |    CAST(value AS DECIMAL(18,2)) AS v
+      |  FROM events)""".stripMargin
+
+  /** The three md5 arms `g` (0, 1, 2) over events' 2dp value `v`: the
+    * k-sample tests' twin of [[arm3]]. */
+  private val arm3Sql: String =
+    """WITH e AS (
+      |  SELECT ascii(substr(md5(CAST(user_id AS VARCHAR)), 1, 1)) % 3 AS g,
+      |    CAST(value AS DECIMAL(18,2)) AS v
+      |  FROM events)""".stripMargin
+
+  /** [[abArmSql]] plus `byv`, the per-value arm counts `na` / `nb`. */
+  private val abByValueSql: String = abArmSql + """,
+      |byv AS (
+      |  SELECT v,
+      |    sum(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS na,
+      |    sum(CASE WHEN arm = 'B' THEN 1 ELSE 0 END) AS nb
+      |  FROM e GROUP BY v)""".stripMargin
+
   val oracle: Map[String, String] = ListMap(
     "agg_delta_method_ratio" ->
       """WITH pu AS (
@@ -2136,24 +2189,8 @@ object AggOps {
         |  count(DISTINCT l_suppkey) AS n_supps,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
-    "agg_rollup" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-        |  coalesce(l_linestatus, 'ALL') AS linestatus,
-        |  CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
-        |  CAST(GROUPING(l_linestatus) AS INT) AS g_ls,
-        |  count(*) AS n_rows,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY returnflag, linestatus""".stripMargin,
-    "agg_cube" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-        |  coalesce(l_linestatus, 'ALL') AS linestatus,
-        |  CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
-        |  CAST(GROUPING(l_linestatus) AS INT) AS g_ls,
-        |  count(*) AS n_rows,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY returnflag, linestatus""".stripMargin,
+    "agg_rollup" -> groupingSql("ROLLUP"),
+    "agg_cube" -> groupingSql("CUBE"),
     "agg_grouping_sets" -> groupingSetsSql,
     "agg_stats" ->
       """SELECT l_returnflag,
@@ -2337,37 +2374,14 @@ object AggOps {
         |  FROM ny CROSS JOIN tot)
         |SELECT mi, h_x, h_y, round(mi / sqrt(h_x * h_y), 4) AS nmi
         |FROM mi CROSS JOIN hx CROSS JOIN hy""".stripMargin,
-    "agg_chi2_independence" ->
-      """WITH observed AS (
-        |  SELECT o_orderstatus AS st, o_orderpriority AS pri,
-        |    count(*) AS obs
-        |  FROM orders GROUP BY 1, 2),
-        |rt AS (SELECT st, sum(obs) AS rt FROM observed GROUP BY st),
-        |ct AS (SELECT pri, sum(obs) AS ct FROM observed GROUP BY pri),
-        |tot AS (SELECT sum(obs) AS n FROM observed),
-        |cells AS (
-        |  SELECT rt.st, ct.pri, rt.rt, ct.ct, coalesce(o.obs, 0) AS obs
-        |  FROM rt CROSS JOIN ct
-        |  LEFT JOIN observed o ON o.st = rt.st AND o.pri = ct.pri)
+    "agg_chi2_independence" -> (contingencySql + s"""
         |SELECT CAST(max(n) AS BIGINT) AS n_orders,
         |  count(*) AS n_cells,
         |  CAST((count(DISTINCT st) - 1) * (count(DISTINCT pri) - 1) AS INT)
         |    AS dof,
-        |  CAST(sum(CAST(round(
-        |    (CAST(obs AS DOUBLE)
-        |       - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE))
-        |    * (CAST(obs AS DOUBLE)
-        |       - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE))
-        |    / (CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE)),
-        |    8) AS DECIMAL(18,8))) AS DOUBLE) AS chi2,
-        |  CAST(sum(CAST(round(
-        |    (CAST(obs AS DOUBLE)
-        |       - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE))
-        |    * (CAST(obs AS DOUBLE)
-        |       - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE))
-        |    / (CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE)),
-        |    8) AS DECIMAL(18,8))) AS DOUBLE) > 15.5073 AS significant
-        |FROM cells CROSS JOIN tot""".stripMargin,
+        |  ${chi2SumSql("  ")} AS chi2,
+        |  ${chi2SumSql("  ")} > 15.5073 AS significant
+        |FROM cells CROSS JOIN tot""".stripMargin),
     "agg_mutual_information" ->
       """WITH cells AS (
         |  SELECT event_type AS t,
@@ -2413,35 +2427,18 @@ object AggOps {
         |  CAST(sum(CAST(s8 AS HUGEINT) * s8) AS DOUBLE) / 1e16 AS hhi,
         |  CAST(max(s8) AS DOUBLE) / 1e8 AS top_share
         |FROM s GROUP BY nation_key ORDER BY nation_key""".stripMargin,
-    "agg_cramers_v" ->
-      """WITH observed AS (
-        |  SELECT o_orderstatus AS st, o_orderpriority AS pri,
-        |    count(*) AS obs
-        |  FROM orders GROUP BY 1, 2),
-        |rt AS (SELECT st, sum(obs) AS rt FROM observed GROUP BY st),
-        |ct AS (SELECT pri, sum(obs) AS ct FROM observed GROUP BY pri),
-        |tot AS (SELECT sum(obs) AS n FROM observed),
-        |cells AS (
-        |  SELECT rt.st, ct.pri, rt.rt, ct.ct, coalesce(o.obs, 0) AS obs
-        |  FROM rt CROSS JOIN ct
-        |  LEFT JOIN observed o ON o.st = rt.st AND o.pri = ct.pri),
+    "agg_cramers_v" -> (contingencySql + s""",
         |f AS (
         |  SELECT CAST(max(n) AS BIGINT) AS n_orders,
         |    CAST(count(DISTINCT st) AS BIGINT) AS n_rows,
         |    CAST(count(DISTINCT pri) AS BIGINT) AS n_cols,
-        |    CAST(sum(CAST(round(
-        |      (CAST(obs AS DOUBLE)
-        |         - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE))
-        |      * (CAST(obs AS DOUBLE)
-        |         - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE))
-        |      / (CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE)),
-        |      8) AS DECIMAL(18,8))) AS DOUBLE) AS chi2
+        |    ${chi2SumSql("    ")} AS chi2
         |  FROM cells CROSS JOIN tot)
         |SELECT n_orders, n_rows, n_cols, chi2,
         |  floor(sqrt(chi2 / (CAST(n_orders AS DOUBLE)
         |      * CAST(least(n_rows, n_cols) - 1 AS DOUBLE)))
         |    * 1000000 + 0.5) / 1000000.0 AS cramers_v
-        |FROM f""".stripMargin,
+        |FROM f""".stripMargin),
     "agg_corr_matrix" -> corrMatrixOracle,
     "agg_tail_risk" ->
       """WITH v AS (
@@ -2491,18 +2488,7 @@ object AggOps {
         |        * 1000000 + 0.5) / 1000000.0 AS mean_trimmed
         |FROM r CROSS JOIN t CROSS JOIN b
         |GROUP BY n, lo, hi""".stripMargin,
-    "agg_mannwhitney_u" ->
-      """WITH e AS (
-        |  SELECT CASE WHEN (ascii(substr(md5(CAST(user_id AS VARCHAR)), 1, 1))
-        |                    % 2) = 0
-        |         THEN 'A' ELSE 'B' END AS arm,
-        |    CAST(value AS DECIMAL(18,2)) AS v
-        |  FROM events),
-        |byv AS (
-        |  SELECT v,
-        |    sum(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS na,
-        |    sum(CASE WHEN arm = 'B' THEN 1 ELSE 0 END) AS nb
-        |  FROM e GROUP BY v),
+    "agg_mannwhitney_u" -> (abByValueSql + """,
         |cum AS (
         |  SELECT v, na, nb, na + nb AS t,
         |    coalesce(sum(na + nb) OVER (ORDER BY v
@@ -2528,19 +2514,8 @@ object AggOps {
         |        ((n_a + n_b + 1) - CAST(tie3 AS DOUBLE) /
         |           ((n_a + n_b) * CAST(n_a + n_b - 1 AS DOUBLE)))))
         |    > 1.959964 AS reject_h0
-        |FROM f""".stripMargin,
-    "agg_ks_test" ->
-      """WITH e AS (
-        |  SELECT CASE WHEN (ascii(substr(md5(CAST(user_id AS VARCHAR)), 1, 1))
-        |                    % 2) = 0
-        |         THEN 'A' ELSE 'B' END AS arm,
-        |    CAST(value AS DECIMAL(18,2)) AS v
-        |  FROM events),
-        |byv AS (
-        |  SELECT v,
-        |    sum(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS na,
-        |    sum(CASE WHEN arm = 'B' THEN 1 ELSE 0 END) AS nb
-        |  FROM e GROUP BY v),
+        |FROM f""".stripMargin),
+    "agg_ks_test" -> (abByValueSql + """,
         |cum AS (
         |  SELECT v,
         |    sum(na) OVER (ORDER BY v
@@ -2558,7 +2533,7 @@ object AggOps {
         |  CAST(max(abs(cuma * n_b - cumb * n_a)) AS DOUBLE) / (n_a * n_b) >
         |    1.3581015157406195 * sqrt(CAST(n_a + n_b AS DOUBLE) / (n_a * n_b))
         |    AS reject_h0
-        |FROM cum CROSS JOIN t GROUP BY n_a, n_b""".stripMargin,
+        |FROM cum CROSS JOIN t GROUP BY n_a, n_b""".stripMargin),
     "agg_gini_concentration" ->
       """WITH rev AS (
         |  SELECT o_custkey, sum(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
@@ -2596,11 +2571,7 @@ object AggOps {
         |  round(CAST(sum(spend) AS DOUBLE) / count(*), 4) AS avg_spend,
         |  round(CAST(sum(recency_days) AS DOUBLE) / count(*), 4) AS avg_recency
         |FROM q GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "agg_anova_f" ->
-      """WITH e AS (
-        |  SELECT ascii(substr(md5(CAST(user_id AS VARCHAR)), 1, 1)) % 3 AS g,
-        |    CAST(value AS DECIMAL(18,2)) AS v
-        |  FROM events),
+    "agg_anova_f" -> (arm3Sql + """,
         |m AS (
         |  SELECT
         |    count(CASE WHEN g = 0 THEN 1 END) AS n_a,
@@ -2634,12 +2605,8 @@ object AggOps {
         |    AS f_stat,
         |  ((sjsq - s * s / nn) / 2) / ((q - sjsq) / (nn - 3)) > 2.995732
         |    AS reject_h0
-        |FROM d""".stripMargin,
-    "agg_kruskal_wallis" ->
-      """WITH e AS (
-        |  SELECT ascii(substr(md5(CAST(user_id AS VARCHAR)), 1, 1)) % 3 AS g,
-        |    CAST(value AS DECIMAL(18,2)) AS v
-        |  FROM events),
+        |FROM d""".stripMargin),
+    "agg_kruskal_wallis" -> (arm3Sql + """,
         |byv AS (
         |  SELECT v,
         |    sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS na,
@@ -2677,7 +2644,7 @@ object AggOps {
         |    / (1.0 - tie3 / (nn * nn * nn - nn)), 6) AS h_tie_corrected,
         |  (12.0 / (nn * (nn + 1)) * (rsq / 4.0) - 3.0 * (nn + 1))
         |    / (1.0 - tie3 / (nn * nn * nn - nn)) > 5.991465 AS reject_h0
-        |FROM d""".stripMargin,
+        |FROM d""".stripMargin),
     "agg_spearman_corr" ->
       """WITH r AS (
         |  SELECT CAST(l_quantity AS DECIMAL(18,2)) AS vx,

@@ -23,8 +23,6 @@ import graft.Tables._
   */
 object CorpusOps {
 
-  private def words: Column = split(col("text"), " ")
-
   // ---------------------------------------------------------------
   // #112 repetition filter (Gopher-style)
   // ---------------------------------------------------------------
@@ -899,7 +897,7 @@ object CorpusOps {
       .cast("decimal(18,8)").cast("double")
     val kn = c.join(uni, "w1").join(cont, "w2").crossJoin(broadcast(bt))
       .select(col("w1"), col("w2"), pd.as("p"))
-    val nll = round(log(col("p")) * lit(-1), 8).cast("decimal(18,8)")
+    val nll = grid8(log(col("p")) * lit(-1))
     // the model table is vocab-scale (bigram TYPES, not tokens) — ride
     // it as a broadcast so scoring is a map over the per-source TYPE
     // table, never a second pass over the corpus stream (the
@@ -1127,7 +1125,7 @@ object CorpusOps {
       .agg(count(lit(1)).as("n_words"),
         sum(col("n_tokens")).as("total_tokens"),
         sum(col("n_chars")).as("total_chars"),
-        round(sum(col("n_chars")).cast("double") / sum(col("n_tokens")), 4)
+        fp4(sum(col("n_chars")).cast("double") / sum(col("n_tokens")))
           .as("chars_per_token"))
       .orderBy(col("source"))
   }
@@ -1669,8 +1667,8 @@ object CorpusOps {
          |SELECT source, count(*) AS n_words,
          |  CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
          |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
-         |  round(CAST(sum(n_chars) AS DOUBLE) / sum(n_tokens), 4)
-         |    AS chars_per_token
+         |  floor(CAST(sum(n_chars) AS DOUBLE) / sum(n_tokens) * 10000 + 0.5)
+         |    / 10000.0 AS chars_per_token
          |FROM t GROUP BY source ORDER BY source""".stripMargin),
   )
 }

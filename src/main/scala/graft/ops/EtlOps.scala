@@ -270,7 +270,6 @@ object EtlOps {
       count(lit(1)).as("n_users"),
       sum(col("x")).cast("double").as("sxa"),
       sum(col("y")).cast("double").as("sya"))
-    def fp4(c: Column): Column = floor(c * 10000 + 0.5) / 10000.0
     val n = col("n").cast("double")
     val thetaNum = n * col("sxy") - col("sx") * col("sy")
     val thetaDen = n * col("sxx") - col("sx") * col("sx")
@@ -393,6 +392,23 @@ object EtlOps {
       .orderBy(col("lang"))
   }
 
+  /** The attribution ops' two touch frames over events: purchases
+    * (`purchase_id`, `user_id`, `p_us`) and clicks (`click_id`,
+    * `user_id`, `c_us`, `campaign` = the props JSON's `k`), times in
+    * exact integer micros. */
+  private def purchasesAndClicks(spark: SparkSession,
+      sf: String): (DataFrame, DataFrame) = {
+    val ev = events(spark, sf)
+    val purchases = ev.where(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id"),
+              unix_micros(col("ts")).as("p_us"))
+    val clicks = ev.where(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id"),
+              unix_micros(col("ts")).as("c_us"),
+              get_json_object(col("props"), "$.k").cast("int").as("campaign"))
+    (purchases, clicks)
+  }
+
   /** #144 — last-touch attribution (round 7): every purchase is
     * credited to the user's most recent STRICTLY-earlier click, and
     * the click's campaign id (the `k` of its props JSON) becomes the
@@ -408,14 +424,7 @@ object EtlOps {
     * clicks × purchases — the as-of working set, never cross-user.
     * The attribution gap is exact integer micros. */
   def eventsAttributionLasttouch(spark: SparkSession, sf: String): DataFrame = {
-    val ev = events(spark, sf)
-    val purchases = ev.where(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-              unix_micros(col("ts")).as("p_us"))
-    val clicks = ev.where(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-              unix_micros(col("ts")).as("c_us"),
-              get_json_object(col("props"), "$.k").cast("int").as("campaign"))
+    val (purchases, clicks) = purchasesAndClicks(spark, sf)
     val attributed = purchases.join(clicks, "user_id")
       .where(col("c_us") < col("p_us"))
       .groupBy(col("purchase_id"))
@@ -748,6 +757,41 @@ object EtlOps {
       .orderBy(col("user_id"))
   }
 
+  /** Per-event-type moments of the two #183 md5 arms over events'
+    * 2dp value — one scan, one (type, arm) aggregate, then the arms
+    * pivoted to `n_a`/`n_b` and double `sv_*`/`svv_*` columns. A type
+    * whose users all hashed into one arm has no readout and is dropped
+    * (the oracles' inner join of the two arm CTEs). */
+  private def abArmMoments(spark: SparkSession, sf: String): DataFrame = {
+    val grp = when(expArm2IsA,
+                   lit("A")).otherwise(lit("B"))
+    val s = events(spark, sf)
+      .select(col("event_type"), money(col("value")).as("v"), grp.as("grp"))
+      .groupBy(col("event_type"), col("grp"))
+      .agg(count(lit(1)).as("n"),
+           sum(col("v")).as("sv"),
+           sum(col("v") * col("v")).as("svv"))
+    def arm(g: String, c: Column) = max(when(col("grp") === g, c))
+    s.groupBy(col("event_type")).agg(
+      arm("A", col("n")).as("n_a"), arm("B", col("n")).as("n_b"),
+      arm("A", col("sv").cast("double")).as("sv_a"),
+      arm("B", col("sv").cast("double")).as("sv_b"),
+      arm("A", col("svv").cast("double")).as("svv_a"),
+      arm("B", col("svv").cast("double")).as("svv_b"))
+      .where(col("n_a").isNotNull && col("n_b").isNotNull)
+  }
+
+  /** Arm A's mean minus arm B's over [[abArmMoments]]. */
+  private def abMeanDiff: Column = col("sv_a") / col("n_a") - col("sv_b") / col("n_b")
+
+  /** Welch's statistic over [[abArmMoments]]: the mean difference over
+    * the unpooled standard error. */
+  private def welchStat: Column = {
+    val va = (col("svv_a") - col("sv_a") * col("sv_a") / col("n_a")) / (col("n_a") - 1)
+    val vb = (col("svv_b") - col("sv_b") * col("sv_b") / col("n_b")) / (col("n_b") - 1)
+    abMeanDiff / sqrt(va / col("n_a") + vb / col("n_b"))
+  }
+
   /** #175 — A/B experiment readout with Welch's t: users assigned to
     * arms by a deterministic hash (md5 first-nibble parity — the
     * stable experiment-assignment everyone reimplements; same
@@ -766,33 +810,11 @@ object EtlOps {
     * exact-moment formulation is the 100 TB shape — never a collect
     * of samples. */
   def eventsAbTtest(spark: SparkSession, sf: String): DataFrame = {
-    val grp = when(expArm2IsA,
-                   lit("A")).otherwise(lit("B"))
-    val s = events(spark, sf)
-      .select(col("event_type"), money(col("value")).as("v"), grp.as("grp"))
-      .groupBy(col("event_type"), col("grp"))
-      .agg(count(lit(1)).as("n"),
-           sum(col("v")).as("sv"),
-           sum(col("v") * col("v")).as("svv"))
-    def arm(g: String, c: Column) = max(when(col("grp") === g, c))
-    val piv = s.groupBy(col("event_type")).agg(
-      arm("A", col("n")).as("n_a"), arm("B", col("n")).as("n_b"),
-      arm("A", col("sv").cast("double")).as("sv_a"),
-      arm("B", col("sv").cast("double")).as("sv_b"),
-      arm("A", col("svv").cast("double")).as("svv_a"),
-      arm("B", col("svv").cast("double")).as("svv_b"))
-    def fpRound4(c: Column): Column = floor(c * 10000 + 0.5) / 10000.0
-    val ma = col("sv_a") / col("n_a")
-    val mb = col("sv_b") / col("n_b")
-    val va = (col("svv_a") - col("sv_a") * col("sv_a") / col("n_a")) / (col("n_a") - 1)
-    val vb = (col("svv_b") - col("sv_b") * col("sv_b") / col("n_b")) / (col("n_b") - 1)
-    val t = (ma - mb) / sqrt(va / col("n_a") + vb / col("n_b"))
-    // a type whose users all hashed into one arm has no readout —
-    // matches the oracle's inner join of the two arm CTEs
-    piv.where(col("n_a").isNotNull && col("n_b").isNotNull)
+    val t = welchStat
+    abArmMoments(spark, sf)
       .select(col("event_type"), col("n_a"), col("n_b"),
-        fpRound4(ma - mb).as("mean_diff"),
-        fpRound4(t).as("t_stat"),
+        fp4(abMeanDiff).as("mean_diff"),
+        fp4(t).as("t_stat"),
         (floor(abs(t) * 10000 + 0.5) > 19600).as("significant"))
       .orderBy(col("event_type"))
   }
@@ -845,7 +867,6 @@ object EtlOps {
       cell("A", "post", col("svv").cast("double")).as("svv_a_post"),
       cell("B", "pre", col("svv").cast("double")).as("svv_b_pre"),
       cell("B", "post", col("svv").cast("double")).as("svv_b_post"))
-    def fpRound4(c: Column): Column = floor(c * 10000 + 0.5) / 10000.0
     def m(s: String) = col(s"sv_$s") / col(s"n_$s")
     def vn(s: String) =
       ((col(s"svv_$s") - col(s"sv_$s") * col(s"sv_$s") / col(s"n_$s")) /
@@ -855,12 +876,12 @@ object EtlOps {
       sqrt(vn("a_pre") + vn("a_post") + vn("b_pre") + vn("b_post"))
     piv.select(
       col("n_a_pre"), col("n_a_post"), col("n_b_pre"), col("n_b_post"),
-      fpRound4(m("a_pre")).as("m_a_pre"),
-      fpRound4(m("a_post")).as("m_a_post"),
-      fpRound4(m("b_pre")).as("m_b_pre"),
-      fpRound4(m("b_post")).as("m_b_post"),
-      fpRound4(did).as("did"),
-      fpRound4(t).as("t_stat"),
+      fp4(m("a_pre")).as("m_a_pre"),
+      fp4(m("a_post")).as("m_a_post"),
+      fp4(m("b_pre")).as("m_b_pre"),
+      fp4(m("b_post")).as("m_b_post"),
+      fp4(did).as("did"),
+      fp4(t).as("t_stat"),
       (floor(abs(t) * 10000 + 0.5) > 19600).as("significant"))
   }
 
@@ -1300,32 +1321,11 @@ object EtlOps {
     * BH windows run over the m-row METADATA-scale test table (#201's
     * argument). */
   def eventsFdrBh(spark: SparkSession, sf: String): DataFrame = {
-    val grp = when(
-      expArm2IsA,
-      lit("A")).otherwise(lit("B"))
-    val s = events(spark, sf)
-      .select(col("event_type"), money(col("value")).as("v"), grp.as("grp"))
-      .groupBy(col("event_type"), col("grp"))
-      .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
-           sum(col("v") * col("v")).as("svv"))
-    def arm(g: String, c: Column) = max(when(col("grp") === g, c))
-    val piv = s.groupBy(col("event_type")).agg(
-        arm("A", col("n")).as("n_a"), arm("B", col("n")).as("n_b"),
-        arm("A", col("sv").cast("double")).as("sv_a"),
-        arm("B", col("sv").cast("double")).as("sv_b"),
-        arm("A", col("svv").cast("double")).as("svv_a"),
-        arm("B", col("svv").cast("double")).as("svv_b"))
-      .where(col("n_a").isNotNull && col("n_b").isNotNull)
-    val ma = col("sv_a") / col("n_a")
-    val mb = col("sv_b") / col("n_b")
-    val va = (col("svv_a") - col("sv_a") * col("sv_a") / col("n_a")) /
-      (col("n_a") - 1)
-    val vb = (col("svv_b") - col("sv_b") * col("sv_b") / col("n_b")) /
-      (col("n_b") - 1)
-    val z = (ma - mb) / sqrt(va / col("n_a") + vb / col("n_b"))
-    val scored = piv.select(col("event_type"), col("n_a"), col("n_b"),
-      (floor(z * 1000000 + 0.5) / 1000000.0).as("z_welch"),
-      floor(normTwoSided(z) * 1e10).cast("long").as("p10"))
+    val z = welchStat
+    val scored = abArmMoments(spark, sf)
+      .select(col("event_type"), col("n_a"), col("n_b"),
+        fp6(z).as("z_welch"),
+        floor(normTwoSided(z) * 1e10).cast("long").as("p10"))
     // the BH step-up is the generic platform helper (round 13 —
     // Transforms.bhSelect); at α = 5/100 its integer threshold
     // reduces to the p10·m ≤ rank·5·10⁸ the oracle replicates
@@ -1375,7 +1375,6 @@ object EtlOps {
     // Φ(dd): 1 − tail/2 for dd ≥ 0, tail/2 below (normTwoSided = 2(1−Φ(|d|)))
     val half = normTwoSided(dd) / 2.0
     val phi = when(dd >= 0, lit(1.0) - half).otherwise(half)
-    def fp6(c: Column) = floor(c * 1000000 + 0.5) / 1000000.0
     arms.select(col("n_a"), col("c_a"), col("n_b"), col("c_b"),
       fp6(meanA).as("post_mean_a"), fp6(meanB).as("post_mean_b"),
       fp6(meanB - meanA).as("lift"),
@@ -1453,7 +1452,6 @@ object EtlOps {
     val dec10 = ntileBySketch(perUser, col("score"),
         struct(col("score"), col("user_id")), 10)
       .withColumnRenamed("ntile", "decile")
-    def fp6(c: Column) = floor(c * 1000000 + 0.5) / 1000000.0
     // a decile whose users all hashed into one arm has no rate for the
     // other (NULL, mirrored in the oracle) — seen at tiny SF
     val rateA = when(col("n_a") > 0, col("conv_a").cast("double") / col("n_a"))
@@ -1546,12 +1544,10 @@ object EtlOps {
     def d(c: Column) = c.cast("double")
     val meanT = d(col("s_t")) / col("n_t")
     val meanC = d(col("s_c")) / col("n_c")
-    def grid8(c: Column) = round(c, 8).cast("decimal(28,8)")
-    val terms = strata.withColumn("term8", grid8(col("n_t") * (meanT - meanC)))
+    val terms = strata.withColumn("term8", grid8(col("n_t") * (meanT - meanC), 28))
     val att = terms.agg(sum(col("term8")).as("tsum"), sum(col("n_t")).as("nt"))
       .select((col("tsum").cast("double") / col("nt")).as("att_raw"),
               col("nt").as("n_treated_matched"))
-    def fp6(c: Column) = floor(c * 1000000 + 0.5) / 1000000.0
     terms.crossJoin(broadcast(att))
       .select(col("stratum"), col("n_t"), col("n_c"),
         fp6(meanT).as("mean_t"), fp6(meanC).as("mean_c"),
@@ -1694,14 +1690,7 @@ object EtlOps {
     * doubles). Shape: user-keyed equi-join (never cross-user),
     * purchase-keyed aggregate, campaign aggregate. */
   def eventsTimeToConvert(spark: SparkSession, sf: String): DataFrame = {
-    val ev = events(spark, sf)
-    val purchases = ev.where(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        unix_micros(col("ts")).as("p_us"))
-    val clicks = ev.where(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        unix_micros(col("ts")).as("c_us"),
-        get_json_object(col("props"), "$.k").cast("int").as("campaign"))
+    val (purchases, clicks) = purchasesAndClicks(spark, sf)
     val lags = purchases.join(clicks, "user_id")
       .where(col("c_us") < col("p_us") &&
              col("c_us") >= col("p_us") - lit(7L * 86400L * 1000000L))
@@ -3317,7 +3306,6 @@ object EtlOps {
       .withColumn("share", col("n_obs").cast("double") / col("n"))
       .withColumn("expected",
         log(lit(1.0) + lit(1.0) / col("digit").cast("int")) / log(lit(10.0)))
-    def grid8(c: Column): Column = round(c, 8).cast("decimal(18,8)")
     val chi = wb.agg(
       sum(grid8((col("share") - col("expected")) *
                 (col("share") - col("expected")) / col("expected") *
@@ -3542,6 +3530,62 @@ object EtlOps {
       |  trend, se.dow, seasonal,
       |  round(CAST(dsum AS DOUBLE) - trend - seasonal, 4) AS residual
       |FROM se JOIN sm USING (dow) ORDER BY day""".stripMargin
+
+  /** Click touches `c` (`click_id`, `user_id`, `c_us`, `campaign` =
+    * the props JSON's `k`), micros since the epoch. */
+  private val clicksSql: String =
+    """c AS (
+      |  SELECT event_id AS click_id, user_id,
+      |    epoch_us(CAST(ts AS TIMESTAMP)) AS c_us,
+      |    CAST(json_extract_string(props, '$.k') AS INT) AS campaign
+      |  FROM events WHERE event_type = 'click')""".stripMargin
+
+  /** Purchases `p` (`purchase_id`, `user_id`, `p_us`) and
+    * [[clicksSql]]: the twin of [[purchasesAndClicks]]. */
+  private val purchasesAndClicksSql: String =
+    """WITH p AS (
+      |  SELECT event_id AS purchase_id, user_id,
+      |    epoch_us(CAST(ts AS TIMESTAMP)) AS p_us
+      |  FROM events WHERE event_type = 'purchase'),
+      |""".stripMargin + clicksSql
+
+  /** The day-split user panel: events `ev` with their UTC `day` and
+    * `evCols`, the span `sp` (d0, d1), and the per-user CTE `pu` up to
+    * its first column — the user's event count in the first half of
+    * the span, which the caller names and follows with its own. */
+  private def daySplitSql(evCols: String): String =
+    s"""WITH ev AS (
+      |  SELECT user_id,
+      |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
+      |    $evCols
+      |  FROM events),
+      |sp AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
+      |pu AS (
+      |  SELECT user_id,
+      |    CAST(sum(CASE WHEN date_diff('day', d0, day) * 2 <
+      |                       date_diff('day', d0, d1) + 1
+      |                  THEN 1 ELSE 0 END) AS BIGINT)""".stripMargin
+
+  /** Row count, price total and updated-row count of snapshot versions
+    * 0 and 1, unioned (the time-travel readout). */
+  private val versionTotalsSql: String = snapshotOrdersSql + """
+      |SELECT 0 AS version, count(*) AS n_rows,
+      |  CAST(sum(price) AS DOUBLE) AS total_price,
+      |  CAST(sum(CASE WHEN st = 'X' THEN 1 ELSE 0 END) AS BIGINT)
+      |    AS n_updated
+      |FROM v0
+      |UNION ALL
+      |SELECT 1, count(*), CAST(sum(price) AS DOUBLE),
+      |  CAST(sum(CASE WHEN st = 'X' THEN 1 ELSE 0 END) AS BIGINT)
+      |FROM v1""".stripMargin
+
+  /** The branch `br` of version 1: every 17th order's price + 9. */
+  private val branchSql: String = snapshotOrdersSql + """,
+      |br AS (
+      |  SELECT k, st,
+      |    CASE WHEN k % 17 = 0 THEN CAST(price + 9 AS DECIMAL(18,2))
+      |         ELSE price END AS price
+      |  FROM v1)""".stripMargin
 
   val oracle: Map[String, String] = ListMap(
     "etl_dq_suggest" ->
@@ -3782,16 +3826,7 @@ object EtlOps {
         |SELECT CAST(row_number() OVER (ORDER BY source, lang) AS BIGINT) AS sk,
         |  source, lang, n_docs
         |FROM dim ORDER BY sk""".stripMargin,
-    "events_time_to_convert" ->
-      """WITH p AS (
-        |  SELECT event_id AS purchase_id, user_id,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS p_us
-        |  FROM events WHERE event_type = 'purchase'),
-        |c AS (
-        |  SELECT event_id AS click_id, user_id,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS c_us,
-        |    CAST(json_extract_string(props, '$.k') AS INT) AS campaign
-        |  FROM events WHERE event_type = 'click'),
+    "events_time_to_convert" -> (purchasesAndClicksSql + """,
         |t AS (
         |  SELECT p.purchase_id, p.p_us, c.click_id, c.c_us, c.campaign,
         |    row_number() OVER (PARTITION BY p.purchase_id
@@ -3807,7 +3842,7 @@ object EtlOps {
         |    AS p50_minutes,
         |  round(percentile_cont(0.9) WITHIN GROUP (ORDER BY lag_min), 4)
         |    AS p90_minutes
-        |FROM lags GROUP BY campaign ORDER BY campaign""".stripMargin,
+        |FROM lags GROUP BY campaign ORDER BY campaign""".stripMargin),
     "ts_sma_crossover" ->
       """WITH daily AS (
         |  SELECT CAST(date_trunc('day', l_shipdate) AS DATE) AS day,
@@ -4052,16 +4087,7 @@ object EtlOps {
       """SELECT lang, count(*) AS n_docs,
         |  CAST(sum(n_chars) AS BIGINT) AS total_chars
         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "events_attribution_lasttouch" ->
-      """WITH p AS (
-        |  SELECT event_id AS purchase_id, user_id,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS p_us
-        |  FROM events WHERE event_type = 'purchase'),
-        |c AS (
-        |  SELECT event_id AS click_id, user_id,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS c_us,
-        |    CAST(json_extract_string(props, '$.k') AS INT) AS campaign
-        |  FROM events WHERE event_type = 'click'),
+    "events_attribution_lasttouch" -> (purchasesAndClicksSql + """,
         |cand AS (
         |  SELECT p.purchase_id, c.click_id, c.campaign, c.c_us,
         |    row_number() OVER (PARTITION BY p.purchase_id
@@ -4070,18 +4096,14 @@ object EtlOps {
         |SELECT p.purchase_id, p.user_id, cand.click_id, cand.campaign,
         |  p.p_us - cand.c_us AS gap_us
         |FROM p LEFT JOIN cand ON cand.purchase_id = p.purchase_id AND cand.rn = 1
-        |ORDER BY p.purchase_id""".stripMargin,
+        |ORDER BY p.purchase_id""".stripMargin),
     "events_attribution_position" ->
-      """WITH p AS (
+      ("""WITH p AS (
         |  SELECT event_id AS purchase_id, user_id,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS p_us,
         |    CAST(value AS DECIMAL(18,2)) AS pv
         |  FROM events WHERE event_type = 'purchase'),
-        |c AS (
-        |  SELECT event_id AS click_id, user_id,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS c_us,
-        |    CAST(json_extract_string(props, '$.k') AS INT) AS campaign
-        |  FROM events WHERE event_type = 'click'),
+        |""".stripMargin + clicksSql + """,
         |t AS (
         |  SELECT p.purchase_id, p.pv, c.click_id, c.campaign, c.c_us
         |  FROM p JOIN c ON c.user_id = p.user_id
@@ -4111,7 +4133,7 @@ object EtlOps {
         |  CAST(sum(credit8) AS DOUBLE) / 100000000.0 AS total_credit,
         |  CAST(sum(CAST(pv * credit8 AS DECIMAL(38,2))) AS DOUBLE)
         |    / 100000000.0 AS credited_revenue
-        |FROM cr GROUP BY campaign ORDER BY campaign""".stripMargin,
+        |FROM cr GROUP BY campaign ORDER BY campaign""".stripMargin),
     "ts_cross_correlation" ->
       """WITH daily AS (
         |  SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
@@ -4275,18 +4297,7 @@ object EtlOps {
         |          - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
         |    * 10000 + 0.5) / 10000.0 AS corr14
         |FROM s WHERE rn >= 14 ORDER BY day""".stripMargin,
-    "events_uplift_deciles" ->
-      """WITH ev AS (
-        |  SELECT user_id,
-        |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
-        |    event_type
-        |  FROM events),
-        |sp AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
-        |pu AS (
-        |  SELECT user_id,
-        |    CAST(sum(CASE WHEN date_diff('day', d0, day) * 2 <
-        |                       date_diff('day', d0, d1) + 1
-        |                  THEN 1 ELSE 0 END) AS BIGINT) AS score,
+    "events_uplift_deciles" -> (daySplitSql("event_type") + """ AS score,
         |    CAST(max(CASE WHEN NOT (date_diff('day', d0, day) * 2 <
         |                            date_diff('day', d0, d1) + 1)
         |                   AND event_type = 'purchase'
@@ -4315,19 +4326,8 @@ object EtlOps {
         |  floor((CASE WHEN n_b > 0 THEN CAST(conv_b AS DOUBLE) / n_b END
         |       - CASE WHEN n_a > 0 THEN CAST(conv_a AS DOUBLE) / n_a END)
         |    * 1000000 + 0.5) / 1000000.0 AS uplift
-        |FROM g ORDER BY decile""".stripMargin,
-    "events_cem_att" ->
-      """WITH ev AS (
-        |  SELECT user_id,
-        |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
-        |    event_type, CAST(value AS DECIMAL(18,2)) AS v
-        |  FROM events),
-        |sp AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
-        |pu AS (
-        |  SELECT user_id,
-        |    CAST(sum(CASE WHEN date_diff('day', d0, day) * 2 <
-        |                       date_diff('day', d0, d1) + 1
-        |                  THEN 1 ELSE 0 END) AS BIGINT) AS pre_events,
+        |FROM g ORDER BY decile""".stripMargin),
+    "events_cem_att" -> (daySplitSql("event_type, CAST(value AS DECIMAL(18,2)) AS v") + """ AS pre_events,
         |    sum(CASE WHEN NOT (date_diff('day', d0, day) * 2 <
         |                       date_diff('day', d0, d1) + 1)
         |              AND event_type = 'purchase'
@@ -4365,7 +4365,7 @@ object EtlOps {
         |    * 1000000 + 0.5) / 1000000.0 AS diff,
         |  n_treated_matched,
         |  floor(att_raw * 1000000 + 0.5) / 1000000.0 AS att
-        |FROM tm CROSS JOIN f ORDER BY stratum""".stripMargin,
+        |FROM tm CROSS JOIN f ORDER BY stratum""".stripMargin),
     "etl_psi_drift" ->
       """WITH o AS (
         |  SELECT CAST(o_orderdate AS DATE) AS day,
@@ -4886,13 +4886,7 @@ object EtlOps {
         |SELECT CAST(day AS TIMESTAMP) AS day, CAST(dsum AS DOUBLE) AS daily,
         |  round(cusum_raw, 4) AS cusum, fr = 1 AS is_changepoint
         |FROM f ORDER BY day""".stripMargin,
-    "events_power_mde" ->
-      """WITH e AS (
-        |  SELECT CASE WHEN (ascii(substr(md5(CAST(user_id AS VARCHAR)), 1, 1))
-        |                    % 2) = 0
-        |         THEN 'A' ELSE 'B' END AS arm,
-        |    CAST(value AS DECIMAL(18,2)) AS v
-        |  FROM events),
+    "events_power_mde" -> (AggOps.abArmSql + """,
         |a AS (
         |  SELECT arm, count(*) AS n, sum(v) AS sv,
         |         sum(CAST(v * v AS DECIMAL(22,4))) AS svv
@@ -4924,7 +4918,7 @@ object EtlOps {
         |      * (1.959963984540054 + 0.8416212335729143)
         |      / ((effect_pct / 100.0 * mean_pooled)
         |         * (effect_pct / 100.0 * mean_pooled))) AS BIGINT) AS powered
-        |FROM x ORDER BY effect_pct""".stripMargin,
+        |FROM x ORDER BY effect_pct""".stripMargin),
     "ts_autocorrelation" ->
       """WITH daily AS (
         |  SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
@@ -5035,17 +5029,7 @@ object EtlOps {
         |    AS match_precision
         |FROM pn JOIN pa ON pn.nation = pa.nation
         |ORDER BY pn.nation""".stripMargin,
-    "etl_snapshot_merge_timetravel" ->
-      (snapshotOrdersSql + """
-        |SELECT 0 AS version, count(*) AS n_rows,
-        |  CAST(sum(price) AS DOUBLE) AS total_price,
-        |  CAST(sum(CASE WHEN st = 'X' THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_updated
-        |FROM v0
-        |UNION ALL
-        |SELECT 1, count(*), CAST(sum(price) AS DOUBLE),
-        |  CAST(sum(CASE WHEN st = 'X' THEN 1 ELSE 0 END) AS BIGINT)
-        |FROM v1
+    "etl_snapshot_merge_timetravel" -> (versionTotalsSql + """
         |ORDER BY version""".stripMargin),
     "etl_snapshot_optimize_cluster" ->
       (snapshotOrdersSql + """
@@ -5085,26 +5069,14 @@ object EtlOps {
         |  CAST(max(price) AS DOUBLE) AS max_price
         |FROM v1
         |WHERE price BETWEEN 50000.00 AND 150000.00""".stripMargin),
-    "etl_snapshot_clone_branch" ->
-      (snapshotOrdersSql + """,
-        |br AS (
-        |  SELECT k, st,
-        |    CASE WHEN k % 17 = 0 THEN CAST(price + 9 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v1)
+    "etl_snapshot_clone_branch" -> (branchSql + """
         |SELECT 'branch' AS "table", count(*) AS n_rows,
         |  CAST(sum(price) AS DOUBLE) AS total_price
         |FROM br
         |UNION ALL
         |SELECT 'source', count(*), CAST(sum(price) AS DOUBLE) FROM v1
         |ORDER BY "table"""".stripMargin),
-    "etl_snapshot_branch_mergeback" ->
-      (snapshotOrdersSql + """,
-        |br AS (
-        |  SELECT k, st,
-        |    CASE WHEN k % 17 = 0 THEN CAST(price + 9 AS DECIMAL(18,2))
-        |         ELSE price END AS price
-        |  FROM v1)
+    "etl_snapshot_branch_mergeback" -> (branchSql + """
         |SELECT TRUE AS merged_back, 2 AS parent_version,
         |  count(*) AS n_rows, CAST(sum(price) AS DOUBLE) AS total_price
         |FROM br""".stripMargin),
@@ -5187,17 +5159,7 @@ object EtlOps {
         |  CAST(sum(CASE WHEN st = 'X' THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_updated
         |FROM v2""".stripMargin),
-    "etl_snapshot_restore" ->
-      (snapshotOrdersSql + """
-        |SELECT 0 AS version, count(*) AS n_rows,
-        |  CAST(sum(price) AS DOUBLE) AS total_price,
-        |  CAST(sum(CASE WHEN st = 'X' THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_updated
-        |FROM v0
-        |UNION ALL
-        |SELECT 1, count(*), CAST(sum(price) AS DOUBLE),
-        |  CAST(sum(CASE WHEN st = 'X' THEN 1 ELSE 0 END) AS BIGINT)
-        |FROM v1
+    "etl_snapshot_restore" -> (versionTotalsSql + """
         |UNION ALL
         |SELECT 2, count(*), CAST(sum(price) AS DOUBLE),
         |  CAST(sum(CASE WHEN st = 'X' THEN 1 ELSE 0 END) AS BIGINT)

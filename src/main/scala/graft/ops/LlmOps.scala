@@ -23,8 +23,6 @@ import org.apache.spark.sql.graft.VectorExprs.vecDot
   */
 object LlmOps {
 
-  private def words: Column = split(col("text"), " ")
-
   // ---------------------------------------------------------------
   // #71/#72 SimHash
   // ---------------------------------------------------------------
@@ -961,7 +959,6 @@ object LlmOps {
           (col("nsh_q") + col("nsh_d") - col("ninter")), 4).as("jac"))
     val sparse = topKPerGroup(jac, col("q_id"), col("jac"), col("doc_id"), 10)
       .select(col("group").as("q_id"), col("id").as("doc_id"), col("rnk").as("rs"))
-    def fp6(c: Column): Column = floor(c * 1000000 + 0.5) / 1000000.0
     val fused = dense.join(sparse, Seq("q_id", "doc_id"), "full")
       .select(col("q_id"), col("doc_id"),
         fp6(coalesce(lit(1.0) / (lit(60) + col("rd")), lit(0.0)) +
@@ -1108,10 +1105,9 @@ object LlmOps {
     "text_pii_scan" -> (textPiiScan _),
   )
 
-  /** DuckDB fragment: simhash → bands → verified pairs → recursive
-    * transitive closure → `comp(node, component)`. Shared by #91's
-    * oracle and #114 dedup_keep_best (CorpusOps). */
-  private[ops] val componentsSqlCte: String =
+  /** DuckDB fragment: simhash → 16-bit bands → band-sharing candidate
+    * pairs `cand(d1, d2, s1, s2)`, d1 < d2 (#90's banding). */
+  private val simhashCandSql: String =
     s"""$simhashSqlCte,
        |bands AS (
        |  SELECT doc_id, simhash, j AS band_id,
@@ -1122,7 +1118,13 @@ object LlmOps {
        |         x.simhash AS s1, y.simhash AS s2
        |  FROM bands x JOIN bands y
        |    ON x.band_id = y.band_id AND x.band_val = y.band_val
-       |   AND x.doc_id < y.doc_id),
+       |   AND x.doc_id < y.doc_id)""".stripMargin
+
+  /** DuckDB fragment: simhash → bands → verified pairs → recursive
+    * transitive closure → `comp(node, component)`. Shared by #91's
+    * oracle and #114 dedup_keep_best (CorpusOps). */
+  private[ops] val componentsSqlCte: String =
+    simhashCandSql + """,
        |e AS (SELECT d1, d2 FROM cand WHERE bit_count(xor(s1, s2)) <= 3),
        |edges AS (SELECT d1 AS src, d2 AS dst FROM e
        |          UNION ALL SELECT d2, d1 FROM e),
@@ -1141,25 +1143,52 @@ object LlmOps {
       |sh AS (SELECT doc_id, w[CAST(i AS INT)] || ' ' || w[CAST(i AS INT) + 1] || ' ' || w[CAST(i AS INT) + 2] AS shingle FROM s),
       |sets AS (SELECT DISTINCT doc_id, shingle FROM sh)""".stripMargin
 
+  /** The synthetic-image generator's twin: each document's image size
+    * `d` (doc_id, width, height), over the documents `where` keeps. */
+  private def pixelDimsSql(where: String): String =
+    s"""WITH d AS (
+      |  SELECT doc_id,
+      |         CAST(1 + doc_id % 16 AS INT) AS width,
+      |         CAST(1 + (doc_id // 16) % 16 AS INT) AS height
+      |  FROM documents$where)""".stripMargin
+
+  /** [[pixelDimsSql]] for every document plus its pixel coordinates
+    * `c` (doc_id, x, y) — the base of the image-statistic oracles. */
+  private val pixelGridSql: String = pixelDimsSql("") + """,
+      |px AS (
+      |  SELECT doc_id, width, unnest(range(0, width * height)) AS i
+      |  FROM d),
+      |c AS (SELECT doc_id, i % width AS x, i // width AS y FROM px)""".stripMargin
+
+  /** Oracle of the PNG decoders: per document (restricted by `where`)
+    * its size, the output columns `cols`, and `pix_sum`, the sum of all
+    * three channels over every pixel. */
+  private[ops] def pixelSumSql(where: String, cols: String): String =
+    pixelDimsSql(where) + s""",
+      |px AS (
+      |  SELECT doc_id, width, height,
+      |         unnest(range(0, width * height)) AS i
+      |  FROM d),
+      |c AS (
+      |  SELECT doc_id, width, height, i % width AS x, i // width AS y
+      |  FROM px)
+      |SELECT doc_id, width, height,$cols
+      |       CAST(SUM((doc_id * 31 + x * 7 + y * 13) % 256
+      |              + (doc_id * 17 + x * 5 + y * 11) % 256
+      |              + (doc_id * 13 + x * 3 + y * 19) % 256) AS BIGINT)
+      |         AS pix_sum
+      |FROM c GROUP BY doc_id, width, height
+      |ORDER BY doc_id""".stripMargin
+
   val oracle: Map[String, String] = ListMap(
     "text_simhash" ->
       s"""WITH $simhashSqlCte
          |SELECT doc_id, simhash FROM sim ORDER BY doc_id""".stripMargin,
     "dedup_simhash_band" ->
-      s"""WITH $simhashSqlCte,
-         |bands AS (
-         |  SELECT doc_id, simhash, j AS band_id,
-         |    CAST((simhash >> (16 * CAST(j AS INT))) & 65535 AS INT) AS band_val
-         |  FROM sim, (SELECT unnest(range(0, 4)) AS j)),
-         |cand AS (
-         |  SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2,
-         |         x.simhash AS s1, y.simhash AS s2
-         |  FROM bands x JOIN bands y
-         |    ON x.band_id = y.band_id AND x.band_val = y.band_val
-         |   AND x.doc_id < y.doc_id)
+      ("WITH " + simhashCandSql + """
          |SELECT d1, d2, CAST(bit_count(xor(s1, s2)) AS INT) AS hamming
          |FROM cand WHERE bit_count(xor(s1, s2)) <= 3
-         |ORDER BY d1, d2""".stripMargin,
+         |ORDER BY d1, d2""".stripMargin),
     "dedup_cluster_components" ->
       s"""WITH RECURSIVE $componentsSqlCte
          |SELECT node AS doc_id, component, node = component AS is_canonical
@@ -1254,30 +1283,11 @@ object LlmOps {
         |  count(*) AS n_grams
         |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     "sim_ann_ivf" ->
-      """WITH v AS (
+      s"""WITH v AS (
         |  SELECT vec_id, generate_subscripts(embedding, 1) AS idx,
         |    CAST(unnest(embedding) AS DOUBLE) AS e
         |  FROM embeddings),
-        |vn AS (SELECT vec_id, sqrt(sum(e * e)) AS vnrm FROM v GROUP BY vec_id),
-        |seeds AS (
-        |  SELECT vec_id AS c_id,
-        |    row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cl
-        |  FROM embeddings
-        |  QUALIFY row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
-        |    <= (SELECT ceil(sqrt(count(*))) FROM embeddings)),
-        |cn AS (SELECT s.cl, s.c_id, vn.vnrm AS cnrm
-        |       FROM seeds s JOIN vn ON vn.vec_id = s.c_id),
-        |d AS (
-        |  SELECT a.vec_id, s.cl, sum(a.e * b.e) AS dp
-        |  FROM v a JOIN v b ON a.idx = b.idx
-        |  JOIN seeds s ON s.c_id = b.vec_id
-        |  GROUP BY a.vec_id, s.cl),
-        |assignr AS (
-        |  SELECT d.vec_id, d.cl,
-        |    row_number() OVER (PARTITION BY d.vec_id
-        |      ORDER BY round(d.dp / (vn.vnrm * cn.cnrm), 4) DESC, d.cl) AS rn
-        |  FROM d JOIN vn ON vn.vec_id = d.vec_id JOIN cn ON cn.cl = d.cl),
-        |assign AS (SELECT vec_id, cl AS bucket FROM assignr WHERE rn = 1),
+        |${VecOps.ivfAssignSql("", "d")},
         |probe AS (SELECT vec_id, cl AS bucket FROM assignr WHERE rn <= 2),
         |pairs AS (
         |  SELECT av.vec_id AS a_id, bv.vec_id AS b_id,
@@ -1369,16 +1379,7 @@ object LlmOps {
     // the PNG generator uses ('89504E47' = the PNG magic the real
     // payload must start with); matching pix_sum proves the Spark
     // side decoded real pixels, not header fields
-    "multimodal_image_entropy" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |         CAST(1 + doc_id % 16 AS INT) AS width,
-        |         CAST(1 + (doc_id // 16) % 16 AS INT) AS height
-        |  FROM documents),
-        |px AS (
-        |  SELECT doc_id, width, unnest(range(0, width * height)) AS i
-        |  FROM d),
-        |c AS (SELECT doc_id, i % width AS x, i // width AS y FROM px),
+    "multimodal_image_entropy" -> (pixelGridSql + """,
         |g AS (
         |  SELECT doc_id,
         |    CAST((((doc_id * 31 + x * 7 + y * 13) % 256
@@ -1400,7 +1401,7 @@ object LlmOps {
         |SELECT doc_id, CAST(min(n) AS BIGINT) AS n_px,
         |  CAST(count(*) AS INT) AS n_buckets,
         |  round(-CAST(sum(term) AS DOUBLE) + 0.0, 6) AS entropy
-        |FROM terms GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM terms GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     "multimodal_audio_vad" ->
       """WITH d AS (
         |  SELECT doc_id, (doc_id % 5 + 1) * 100 AS n FROM documents),
@@ -1428,16 +1429,7 @@ object LlmOps {
         |  CAST(sum(CASE WHEN is_active THEN ns ELSE 0 END) AS BIGINT)
         |    AS active_samples
         |FROM seg GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "multimodal_channel_histogram" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |         CAST(1 + doc_id % 16 AS INT) AS width,
-        |         CAST(1 + (doc_id // 16) % 16 AS INT) AS height
-        |  FROM documents),
-        |px AS (
-        |  SELECT doc_id, width, unnest(range(0, width * height)) AS i
-        |  FROM d),
-        |c AS (SELECT doc_id, i % width AS x, i // width AS y FROM px),
+    "multimodal_channel_histogram" -> (pixelGridSql + """,
         |v AS (
         |  SELECT 0 AS channel,
         |    CAST((doc_id * 31 + x * 7 + y * 13) % 256 AS BIGINT) AS val
@@ -1455,28 +1447,9 @@ object LlmOps {
         |t AS (SELECT CAST(sum(n_px) AS BIGINT) AS n FROM g)
         |SELECT channel, bucket, n_px,
         |  round(CAST(n_px AS DOUBLE) * 3 / n, 6) AS share
-        |FROM g CROSS JOIN t ORDER BY channel, bucket""".stripMargin,
-    "multimodal_binary" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |         CAST(1 + doc_id % 16 AS INT) AS width,
-        |         CAST(1 + (doc_id // 16) % 16 AS INT) AS height
-        |  FROM documents),
-        |px AS (
-        |  SELECT doc_id, width, height,
-        |         unnest(range(0, width * height)) AS i
-        |  FROM d),
-        |c AS (
-        |  SELECT doc_id, width, height, i % width AS x, i // width AS y
-        |  FROM px)
-        |SELECT doc_id, width, height, 3 AS channels,
-        |       '89504E47' AS header_hex,
-        |       CAST(SUM((doc_id * 31 + x * 7 + y * 13) % 256
-        |              + (doc_id * 17 + x * 5 + y * 11) % 256
-        |              + (doc_id * 13 + x * 3 + y * 19) % 256) AS BIGINT)
-        |         AS pix_sum
-        |FROM c GROUP BY doc_id, width, height
-        |ORDER BY doc_id""".stripMargin,
+        |FROM g CROSS JOIN t ORDER BY channel, bucket""".stripMargin),
+    "multimodal_binary" -> pixelSumSql("", """ 3 AS channels,
+        |       '89504E47' AS header_hex,""".stripMargin),
     "multimodal_audio_features" ->
       """WITH d AS (
         |  SELECT doc_id, (doc_id % 5 + 1) * 100 AS n FROM documents),

@@ -657,26 +657,7 @@ object ScanOps {
     // arithmetic (same oracle shape as #80 multimodal_binary): a hash
     // match proves file write -> binaryFile scan -> imageio decode
     // preserved every pixel of every file
-    "source_binary_files" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |         CAST(1 + doc_id % 16 AS INT) AS width,
-        |         CAST(1 + (doc_id // 16) % 16 AS INT) AS height
-        |  FROM documents WHERE doc_id < 100),
-        |px AS (
-        |  SELECT doc_id, width, height,
-        |         unnest(range(0, width * height)) AS i
-        |  FROM d),
-        |c AS (
-        |  SELECT doc_id, width, height, i % width AS x, i // width AS y
-        |  FROM px)
-        |SELECT doc_id, width, height,
-        |       CAST(SUM((doc_id * 31 + x * 7 + y * 13) % 256
-        |              + (doc_id * 17 + x * 5 + y * 11) % 256
-        |              + (doc_id * 13 + x * 3 + y * 19) % 256) AS BIGINT)
-        |         AS pix_sum
-        |FROM c GROUP BY doc_id, width, height
-        |ORDER BY doc_id""".stripMargin,
+    "source_binary_files" -> LlmOps.pixelSumSql(" WHERE doc_id < 100", ""),
     "source_parquet_evolution" ->
       """SELECT CAST(1 AS BIGINT) AS batch, count(*) AS n_rows,
         |  CAST(0 AS BIGINT) AS n_with_len, CAST(0 AS BIGINT) AS total_len,

@@ -34,9 +34,6 @@ import org.apache.spark.sql.graft.VectorExprs.vecNorm
   */
 object TextOps {
 
-  /** split-on-space tokens. */
-  private def words: Column = split(col("text"), " ")
-
   /** Exact double dot product of two (float- or double-typed) array
     * columns: sequential left fold, deterministic element order. */
   private def dot(a: Column, b: Column): Column =
@@ -495,15 +492,7 @@ object TextOps {
         |  round(sum(xa * xb) / (sqrt(sum(xa * xa)) * sqrt(sum(xb * xb))), 4)
         |    AS cos_sim
         |FROM u GROUP BY a_id, b_id ORDER BY a_id""".stripMargin,
-    "sim_knn_topk" ->
-      """WITH u AS (
-        |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-        |n AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM u GROUP BY vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        |    CAST(unnest(a.embedding) AS DOUBLE) AS xa,
-        |    CAST(unnest(b.embedding) AS DOUBLE) AS xb
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id),
+    "sim_knn_topk" -> (VecOps.vecPairsSql + """ ON a.vec_id <> b.vec_id),
         |d AS (SELECT a_id, b_id, sum(xa * xb) AS dp FROM p GROUP BY a_id, b_id),
         |c AS (
         |  SELECT d.a_id, d.b_id, round(d.dp / (na.nrm * nb.nrm), 4) AS cos_sim
@@ -513,7 +502,7 @@ object TextOps {
         |    row_number() OVER (PARTITION BY a_id ORDER BY cos_sim DESC, b_id) AS rnk
         |  FROM c)
         |SELECT a_id, rnk, b_id, cos_sim FROM r WHERE rnk <= 5
-        |ORDER BY a_id, rnk""".stripMargin,
+        |ORDER BY a_id, rnk""".stripMargin),
     "sim_centroid_classify" ->
       """WITH ce AS (
         |  SELECT label AS cl, generate_subscripts(embedding, 1) AS idx,

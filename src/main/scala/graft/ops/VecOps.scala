@@ -446,7 +446,6 @@ object VecOps {
   private[graft] def mmrRerank(short: DataFrame, psim: DataFrame,
       lambda: Double, mu: Double, picks: Int): DataFrame = {
     require(picks >= 1, s"picks must be >= 1, got $picks")
-    def fp4(c: Column): Column = floor(c * 10000 + 0.5) / 10000.0
     def argmax(df: DataFrame, carry: Seq[String]): DataFrame =
       df.groupBy((col("q_id") +: carry.map(col)): _*)
         .agg(max_by(struct(col("i_id"), col("score")),
@@ -633,6 +632,49 @@ object VecOps {
     "sim_ann_ivfpq"         -> (simAnnIvfPq _),
   )
 
+  /** Oracle twin of the IVF assignment ([[graft.api.Transforms.ivfAssignProbe]])
+    * over `v` (vec_id, idx, e): norms `vn`, the ⌈√n⌉ seeds `seeds` in
+    * md5 order of the vec id (suffixed by `salt`), their norms `cn`,
+    * the vector × seed dot products in CTE `dot`, the ranked
+    * assignment `assignr` and each vector's nearest bucket `assign`. */
+  private[ops] def ivfAssignSql(salt: String, dot: String): String = {
+    val key = "CAST(vec_id AS VARCHAR)" + (if (salt.isEmpty) "" else s" || '$salt'")
+    s"""vn AS (SELECT vec_id, sqrt(sum(e * e)) AS vnrm FROM v GROUP BY vec_id),
+      |seeds AS (
+      |  SELECT vec_id AS c_id,
+      |    row_number() OVER (ORDER BY md5($key), vec_id) - 1 AS cl
+      |  FROM embeddings
+      |  QUALIFY row_number() OVER (ORDER BY md5($key), vec_id)
+      |    <= (SELECT ceil(sqrt(count(*))) FROM embeddings)),
+      |cn AS (SELECT s.cl, s.c_id, vn.vnrm AS cnrm
+      |       FROM seeds s JOIN vn ON vn.vec_id = s.c_id),
+      |$dot AS (
+      |  SELECT a.vec_id, s.cl, sum(a.e * b.e) AS dp
+      |  FROM v a JOIN v b ON a.idx = b.idx
+      |  JOIN seeds s ON s.c_id = b.vec_id
+      |  GROUP BY a.vec_id, s.cl),
+      |assignr AS (
+      |  SELECT $dot.vec_id, $dot.cl,
+      |    row_number() OVER (PARTITION BY $dot.vec_id
+      |      ORDER BY round($dot.dp / (vn.vnrm * cn.cnrm), 4) DESC, $dot.cl) AS rn
+      |  FROM $dot JOIN vn ON vn.vec_id = $dot.vec_id JOIN cn ON cn.cl = $dot.cl),
+      |assign AS (SELECT vec_id, cl AS bucket FROM assignr WHERE rn = 1)""".stripMargin
+  }
+
+  /** Oracle prefix of the brute-force pair scorers: vectors unnested to
+    * `u` (vec_id, x), norms `n`, and the pair CTE `p` (a_id, b_id, xa,
+    * xb) up to its join of embeddings `a` and `b`, whose condition the
+    * caller supplies (and closes `p` after). */
+  private[ops] val vecPairsSql: String =
+    """WITH u AS (
+      |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
+      |n AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM u GROUP BY vec_id),
+      |p AS (
+      |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+      |    CAST(unnest(a.embedding) AS DOUBLE) AS xa,
+      |    CAST(unnest(b.embedding) AS DOUBLE) AS xb
+      |  FROM embeddings a JOIN embeddings b""".stripMargin
+
   /** Shared oracle CTE: embeddings unnested to (vec_id, idx, e) plus
     * the (vec_id, sub, idx, e) subspace view (sub = (idx-1) DIV 8). */
   private val unnestCte =
@@ -702,26 +744,7 @@ object VecOps {
   val oracle: Map[String, String] = ListMap(
     "sim_ann_ivfpq" ->
       s"""WITH $unnestCte,
-        |vn AS (SELECT vec_id, sqrt(sum(e * e)) AS vnrm FROM v GROUP BY vec_id),
-        |seeds AS (
-        |  SELECT vec_id AS c_id,
-        |    row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cl
-        |  FROM embeddings
-        |  QUALIFY row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
-        |    <= (SELECT ceil(sqrt(count(*))) FROM embeddings)),
-        |cn AS (SELECT s.cl, s.c_id, vn.vnrm AS cnrm
-        |       FROM seeds s JOIN vn ON vn.vec_id = s.c_id),
-        |dctr AS (
-        |  SELECT a.vec_id, s.cl, sum(a.e * b.e) AS dp
-        |  FROM v a JOIN v b ON a.idx = b.idx
-        |  JOIN seeds s ON s.c_id = b.vec_id
-        |  GROUP BY a.vec_id, s.cl),
-        |assignr AS (
-        |  SELECT dctr.vec_id, dctr.cl,
-        |    row_number() OVER (PARTITION BY dctr.vec_id
-        |      ORDER BY round(dctr.dp / (vn.vnrm * cn.cnrm), 4) DESC, dctr.cl) AS rn
-        |  FROM dctr JOIN vn ON vn.vec_id = dctr.vec_id JOIN cn ON cn.cl = dctr.cl),
-        |assign AS (SELECT vec_id, cl AS bucket FROM assignr WHERE rn = 1),
+        |${ivfAssignSql("", "dctr")},
         |probe AS (SELECT vec_id, cl AS bucket FROM assignr WHERE rn <= 2),
         |$pqCbCtes,
         |cand AS (
@@ -788,26 +811,7 @@ object VecOps {
         |FROM ranked WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
     "dedup_semantic_cluster" ->
       s"""WITH $unnestCte,
-        |vn AS (SELECT vec_id, sqrt(sum(e * e)) AS vnrm FROM v GROUP BY vec_id),
-        |seeds AS (
-        |  SELECT vec_id AS c_id,
-        |    row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR) || '#sd'), vec_id) - 1 AS cl
-        |  FROM embeddings
-        |  QUALIFY row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR) || '#sd'), vec_id)
-        |    <= (SELECT ceil(sqrt(count(*))) FROM embeddings)),
-        |cn AS (SELECT s.cl, s.c_id, vn.vnrm AS cnrm
-        |       FROM seeds s JOIN vn ON vn.vec_id = s.c_id),
-        |d AS (
-        |  SELECT a.vec_id, s.cl, sum(a.e * b.e) AS dp
-        |  FROM v a JOIN v b ON a.idx = b.idx
-        |  JOIN seeds s ON s.c_id = b.vec_id
-        |  GROUP BY a.vec_id, s.cl),
-        |assignr AS (
-        |  SELECT d.vec_id, d.cl,
-        |    row_number() OVER (PARTITION BY d.vec_id
-        |      ORDER BY round(d.dp / (vn.vnrm * cn.cnrm), 4) DESC, d.cl) AS rn
-        |  FROM d JOIN vn ON vn.vec_id = d.vec_id JOIN cn ON cn.cl = d.cl),
-        |assign AS (SELECT vec_id, cl AS bucket FROM assignr WHERE rn = 1),
+        |${ivfAssignSql("#sd", "d")},
         |pairs AS (
         |  SELECT x.vec_id AS a_id, y.vec_id AS b_id
         |  FROM assign x JOIN assign y
@@ -853,15 +857,7 @@ object VecOps {
         |      ORDER BY maxsim DESC, did) AS BIGINT) AS rnk
         |  FROM sc)
         |WHERE rnk <= 3 ORDER BY qid, rnk""".stripMargin,
-    "sim_mmr_diversify" ->
-      """WITH u AS (
-        |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-        |n AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM u GROUP BY vec_id),
-        |p AS (
-        |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        |    CAST(unnest(a.embedding) AS DOUBLE) AS xa,
-        |    CAST(unnest(b.embedding) AS DOUBLE) AS xb
-        |  FROM embeddings a JOIN embeddings b
+    "sim_mmr_diversify" -> (vecPairsSql + """
         |    ON a.vec_id % 25 = 0 AND b.vec_id % 25 <> 0),
         |d AS (SELECT a_id, b_id, sum(xa * xb) AS dp FROM p GROUP BY a_id, b_id),
         |c AS (SELECT d.a_id, d.b_id, round(d.dp / (na.nrm * nb.nrm), 4) AS rel
@@ -926,7 +922,7 @@ object VecOps {
         |  SELECT q_id, 1 AS rnk, sel1 AS doc_id, score1 AS mmr_score FROM s3
         |  UNION ALL SELECT q_id, 2, sel2, score2 FROM s3
         |  UNION ALL SELECT q_id, 3, sel3, score3 FROM s3)
-        |ORDER BY q_id, rnk""".stripMargin,
+        |ORDER BY q_id, rnk""".stripMargin),
     "sim_ann_lsh_rp" ->
       """WITH d AS (SELECT max(len(embedding)) AS dim FROM embeddings),
         |pl AS (

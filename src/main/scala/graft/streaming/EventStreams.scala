@@ -155,7 +155,7 @@ object EventStreams {
                        ttl: java.time.Duration): Dataset[UserRunningCount] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
-      .transformWithState(new TtlCountProcessor(ttl),
+      .transformWithState(new RunningCountProcessor(TTLConfig(ttl)),
         TimeMode.ProcessingTime(), OutputMode.Update())
   }
 
@@ -236,7 +236,7 @@ object EventStreams {
     * append-only feed whose (cohort_day, day_offset) count IS the
     * retention matrix. State per user: one int + one day list bounded
     * by the analysis horizon (production adds a TTL for the horizon —
-    * the [[TtlCountProcessor]] pattern). Same ordered-replay caveat
+    * the [[runningCountsTtl]] pattern). Same ordered-replay caveat
     * as [[markovPairsTws]]: cohort day is exact when replay is
     * event-time-ordered. Days are epoch days OF THE UTC CALENDAR
     * (`floorDiv(epoch_ms, 86400000)`), matching the batch operator's
@@ -522,17 +522,20 @@ class SessionPathProcessor
   * session, emitted by the expired event-time timer. */
 case class SessionClose(user_id: Long, n_events: Long, closed_at_ms: Long)
 
-/** Per-user running-count processor for [[EventStreams.runningCountsTws]]:
-  * one named `ValueState[Long]` per key, no TTL, no timers — the
-  * minimal complete example of the Spark 4 StatefulProcessor
-  * lifecycle (init → handleInputRows per key per micro-batch). */
-class RunningCountProcessor
+/** Per-user running-count processor for [[EventStreams.runningCountsTws]]
+  * and [[EventStreams.runningCountsTtl]]: one named `ValueState[Long]`
+  * per key, no timers — the minimal complete example of the Spark 4
+  * StatefulProcessor lifecycle (init → handleInputRows per key per
+  * micro-batch). `ttl` is the state's wall-clock TTL (none by
+  * default): a read after expiry sees no state, so an idle user's
+  * count restarts from zero. */
+class RunningCountProcessor(ttl: TTLConfig = TTLConfig.NONE)
     extends StatefulProcessor[Long, EventRow, UserRunningCount] {
   @transient private var count: ValueState[Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     count = getHandle.getValueState[Long]("count",
-      org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+      org.apache.spark.sql.Encoders.scalaLong, ttl)
 
   override def handleInputRows(user: Long, rows: Iterator[EventRow],
       timerValues: TimerValues): Iterator[UserRunningCount] = {
@@ -606,29 +609,6 @@ class SessionTimeoutProcessor(gapMs: Long)
     count.clear()
     armed.clear()
     Iterator.single(SessionClose(user, n, expired.getExpiryTimeInMs))
-  }
-}
-
-/** TTL'd-state processor for [[EventStreams.runningCountsTtl]]: the
-  * same per-user counter as [[RunningCountProcessor]] but its
-  * ValueState carries a wall-clock TTL — a read after expiry sees no
-  * state, so an idle user's count restarts from zero. */
-class TtlCountProcessor(ttl: java.time.Duration)
-    extends StatefulProcessor[Long, EventRow, UserRunningCount] {
-  @transient private var count: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    count = getHandle.getValueState[Long]("count",
-      org.apache.spark.sql.Encoders.scalaLong, TTLConfig(ttl))
-
-  override def handleInputRows(user: Long, rows: Iterator[EventRow],
-      timerValues: TimerValues): Iterator[UserRunningCount] = {
-    var n = if (count.exists()) count.get() else 0L
-    val out = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).map { e =>
-      n += 1; UserRunningCount(user, e.event_id, n)
-    }
-    count.update(n)
-    out.iterator
   }
 }
 

@@ -7,6 +7,27 @@ import graft.ops._
   * (#112–#114, CorpusOps). */
 class CorpusOpsSpec extends SparkSpec {
 
+  test("text_bpe_encode rounds an exact 4dp tie like its DuckDB oracle") {
+    import spark.implicits._
+    // 758 "th" words (one merge: 1 token, 2 chars) and 3621 "xz" words
+    // (no merge: 2 tokens, 2 chars) give 8758 chars over 8000 tokens,
+    // 1.09475 exactly: the double just below the tie, which the
+    // oracle's floor(x * 10000 + 0.5) / 10000.0 puts at 1.0947 while
+    // Spark's decimal round(x, 4) gives 1.0948
+    val dir = tempDir("graft_bpe_tie")
+    val text = (Seq.fill(758)("th") ++ Seq.fill(3621)("xz")).mkString(" ")
+    Seq((1L, text, "en", "src5", text.length.toLong))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    val r = CorpusOps.textBpeEncode(spark, dir).collect().head
+    assert((r.getAs[Long]("total_chars"), r.getAs[Long]("total_tokens")) ==
+      ((8758L, 8000L)))
+    assert(r.getAs[Double]("chars_per_token") == 1.0947)
+    assert(math.floor(8758.0 / 8000 * 10000 + 0.5) / 10000.0 == 1.0947)
+    assert(spark.range(1).select(round(lit(8758.0) / lit(8000L), 4))
+      .head().getDouble(0) == 1.0948)
+  }
+
   test("repetition filter: closed form on planted repetitive/clean docs") {
     import spark.implicits._
     // "x y x y x y" — bigrams: (x y)*3, (y x)*2 → top frac 3/5;

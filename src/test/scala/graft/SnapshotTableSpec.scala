@@ -726,6 +726,34 @@ class SnapshotTableSpec extends SparkSpec {
     assert(SnapshotTable.changeFeed(spark, base, v0, v2).count() == 8)
   }
 
+  test("changeFeed compiles no new code for a version not read before") {
+    import spark.implicits._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val base = freshBase()
+    SnapshotTable.create(spark, base, fixture(), "k", numBuckets = 4)
+    val v0 = SnapshotTable.enableChangeFeed(spark, base)
+    val vs = (1 to 4).map { i =>
+      SnapshotTable.mergeInto(spark, base,
+        Seq((i.toLong, "U", 1000L + i, "u"), (50L + i, "D", 0L, ""))
+          .toDF("k", "op", "v", "grp"), "k", numBuckets = 4)
+    }
+    def read(from: Int, to: Int) = SnapshotTable.changeFeed(spark, base, from, to)
+      .select("k", "op", "_commit_version").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
+    // warm-up: the feed's first read compiles its classes
+    assert(read(v0, vs(0)) == Set((1L, "U", vs(0)), (51L, "D", vs(0))))
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    vs.sliding(2).foreach { case Seq(prev, v) =>
+      val before = compiles.getCount
+      val i = v - v0
+      assert(read(prev, v) == Set((i.toLong, "U", v), (50L + i, "D", v)))
+      assert(compiles.getCount == before, s"reading version $v compiled new code")
+    }
+    // a multi-version range tags each row with its own version
+    assert(read(v0, vs.last).map(r => r._1 -> r._3) ==
+      (1 to 4).flatMap(i => Seq(i.toLong -> (v0 + i), (50L + i) -> (v0 + i))).toSet)
+  }
+
   private def cdcWriterAlive(): Boolean = {
     import scala.jdk.CollectionConverters._
     Thread.getAllStackTraces.keySet.asScala
